@@ -59,6 +59,7 @@ from .train_blocks import (
     build_blocks as _build_blocks,
     lloyd_partial_sums as _lloyd_partial_sums,
     make_round6 as _make_round6,
+    micro_mean as _micro_mean,
 )
 
 IVF_K = 8
@@ -267,7 +268,7 @@ def lloyd_converged(
                 )
             new = [
                 [
-                    round6((int(sums[c][d]) / 1e6) / counts[c])
+                    round6(_micro_mean(sums[c][d], counts[c]))
                     for d in range(dim)
                 ]
                 for c in range(k)
@@ -351,7 +352,7 @@ def lloyd_capped(
             sums, counts = _lloyd_partial_sums(blocks, cents)
             new = [
                 [
-                    round6((int(sums[c][d]) / 1e6) / int(counts[c]))
+                    round6(_micro_mean(sums[c][d], int(counts[c])))
                     if counts[c]
                     else cents[c][d]  # empty cells carry over
                     for d in range(dim)

@@ -268,7 +268,6 @@ def pq_train_codebooks(
     tol_micro: int = PQ_TRAIN_TOL_MICRO,
     max_iter: int = PQ_TRAIN_MAX_ITER,
     train_df: DataFrame | None = None,
-    cache_token: str | None = None,  # ignored since r13 (memo removed)
     sample_cap: int | None = PQ_TRAIN_SAMPLE_CAP,
 ) -> tuple[list[list[list[float]]], list[int], dict[int, list[list[float]]]]:
     """TRAINED per-subspace codebooks: Lloyd's k-means run independently

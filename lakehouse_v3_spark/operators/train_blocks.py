@@ -183,6 +183,18 @@ def pq_partial_sums(blocks, cbs_by_s: dict[int, list[list[float]]], w: int):
     return merged
 
 
+def micro_mean(sum_micro: int, n: int) -> float:
+    """Cell-mean component before ROUND: the decimal(38,6) sum (held as
+    exact int micro-units) cast to double, divided by the member count —
+    Spark's ``CAST(SUM(decimal) AS DOUBLE) / COUNT(*)``. The Fraction
+    gives the correctly rounded double of the decimal, as the JVM cast
+    does; ``int / 1e6`` would round twice and drift once sums pass 2^53
+    micro-units."""
+    from fractions import Fraction
+
+    return float(Fraction(int(sum_micro), 1_000_000)) / n
+
+
 def make_round6(spark):
     """ROUND(x, 6) with Spark's double semantics:
     ``BigDecimal.valueOf(x).setScale(6, HALF_UP).doubleValue()``.

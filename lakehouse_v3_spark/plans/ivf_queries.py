@@ -605,7 +605,6 @@ def _ivfpq_spark(spark, sf_dir, residual: bool):
             sf_dir,
             vec_col="rv",
             train_df=resid_all,
-            cache_token="residual",
         )
         corpus = encode_codes(
             resid_all.filter(F.col("vec_id") >= 10), cbs, vec_col="rv"
@@ -1091,7 +1090,7 @@ def ivfpq_residual_quantization_audit(spark, sf_dir):
         F.col("r.rv").alias("rv"),
     )
     cbs_res, _, _ = pq_train_codebooks(
-        spark, sf_dir, vec_col="rv", train_df=resid_all, cache_token="residual"
+        spark, sf_dir, vec_col="rv", train_df=resid_all
     )
     res_err = (
         encode_codes(resid_all.filter(F.col("vec_id") >= 10), cbs_res, vec_col="rv")

@@ -1158,9 +1158,11 @@ def bloom_runtime_filter_join(spark, sf_dir):
     # contract).
     with _PLAN_CONF_LOCK:
         saved = {k: spark.conf.get(k, None) for k in confs}
-        for k, v in confs.items():
-            spark.conf.set(k, v)
         try:
+            # inside the try: a set that throws part-way still restores
+            # the keys already set
+            for k, v in confs.items():
+                spark.conf.set(k, v)
             # force planning NOW, inside the conf window; the Dataset
             # caches its QueryExecution so later actions reuse this
             # plan. Private-API pin: guarded by a fails-loudly probe —

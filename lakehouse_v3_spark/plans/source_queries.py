@@ -44,7 +44,6 @@ def pyds_synthetic_pushdown(spark, sf_dir):
     applies the same filter post-scan. ``sf_dir`` is unused — the
     source is its own (deterministic) data."""
     register_synthetic_source(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     df = (
         spark.read.format("synthetic_events")
         .option("n_rows", _N_ROWS)

@@ -106,8 +106,13 @@ class _stream_run_partitions:
                 "on one SparkSession — run streaming drains serially or "
                 "scope them to separate sessions"
             )
-        self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
+        try:
+            self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
+            self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
+        except BaseException:
+            # __exit__ never runs when __enter__ raises
+            self._lock.release()
+            raise
         return self._n
 
     def __exit__(self, *exc):

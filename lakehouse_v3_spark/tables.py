@@ -12,11 +12,12 @@ surface and picks the best available backend:
     atomic-by-rename overwrite, MERGE rewritten as full-outer
     source-wins join (operators/joins.merge_upsert), compaction as a
     repartition rewrite — plus (r7) a Delta-style OPTIMISTIC-
-    CONCURRENCY commit log (txn_append/txn_overwrite/txn_read):
-    versioned commits with atomic claims, append retry, loud
-    overwrite conflicts, torn-read-free readers. See the commit-log
-    section below; DELTA_ATTEMPT.md documents why the real Delta jars
-    are unobtainable in this container.
+    CONCURRENCY commit log (txn_append/txn_overwrite/txn_read), the
+    one versioned-table path: versioned commits with atomic claims,
+    append retry, loud overwrite conflicts, torn-read-free readers,
+    time travel, restore, CDC diff and bounded-retention vacuum. See
+    the commit-log section below; DELTA_ATTEMPT.md documents why the
+    real Delta jars are unobtainable in this container.
 
 Scale notes: appends are partitioned writes (partition pruning on read);
 compaction targets the small-file problem (reference: VACUUM RETAIN 0
@@ -27,7 +28,6 @@ after overwrite, uber/drop_dup.py:96-101) — here sized by
 from __future__ import annotations
 
 import abc
-import contextlib
 import json
 import os
 import shutil
@@ -363,10 +363,10 @@ class TableManager:
         self.backend = backend or ("delta" if _delta_available() else "parquet")
         self.claim_backend = claim_backend or PosixLinkClaim()
         # Probed state is keyed by DIRECTORY, not a single flag (r9
-        # ADVICE, low): the snapshot head-log dir and the txn-log dir —
-        # and different tables — can live on different mounts (e.g. one
-        # table on a FUSE object-store mount); each claim directory must
-        # pass its own capability probe before its first claim.
+        # ADVICE, low): different tables can live on different mounts
+        # (e.g. one table on a FUSE object-store mount); each claim
+        # directory must pass its own capability probe before its first
+        # claim.
         self._claim_probed: set[str] = set()
         os.makedirs(self.warehouse_dir, exist_ok=True)
 
@@ -670,7 +670,7 @@ class TableManager:
     def _data_files(root: str):
         """Yield table DATA parquet files relative to ``root``,
         excluding every reserved/metadata subtree (``_txn_data``,
-        ``_txn_log``, ``_snapshots``, ``_delta_log``, dot-temps…) —
+        ``_txn_log``, ``_delta_log``, dot-temps…) —
         Spark's own rule that `_`/`.`-prefixed paths are invisible to
         a table scan (r8 advisory: the stats walk must never index a
         txn uuid dir's superseded rows as table files)."""
@@ -740,7 +740,7 @@ class TableManager:
         # drop the sidecar via _invalidate): any on-disk parquet DATA
         # file the manifest doesn't know about is UNPRUNABLE and always
         # read — skipping is an optimization, never allowed to lose
-        # rows. Reserved subtrees (_txn_data, _snapshots, _delta_log…)
+        # rows. Reserved subtrees (_txn_data, _txn_log, _delta_log…)
         # are NOT table files and stay out of both the manifest and the
         # on-disk set (r8 advisory).
         on_disk = set(self._data_files(root))
@@ -807,245 +807,6 @@ class TableManager:
                 df = df.filter(F.col(c) <= F.lit(hi))
         return df, len(files), total
 
-    # -- snapshots / time travel ----------------------------------------
-    # A minimal transaction-log protocol on plain parquet, standing in
-    # for Delta's log where delta-spark isn't available (TESTDATA.md):
-    # each snapshot is an immutable version directory; commit is ONE
-    # atomic claim of the next HEAD-log record through the SAME
-    # pluggable ClaimBackend as the txn log (one commit protocol; a
-    # conditional-put of the next HEAD-log key on object storage).
-    # Readers resolve HEAD once (max-seq record) and
-    # then only touch immutable paths, so concurrent writers can never
-    # show them a torn table; rollback is an O(1) pointer move, not a
-    # data rewrite.
-
-    def _snap_dir(self, table: str) -> str:
-        return f"{self.path(table)}/_snapshots"
-
-    def _head_log_dir(self, table: str) -> str:
-        return f"{self._snap_dir(table)}/_head_log"
-
-    def _head_record(self, table: str) -> dict | None:
-        """Latest HEAD-log record (max sequence number), or None before
-        the first snapshot commit. HEAD moves are an append-only log of
-        tiny ``{seq, version}`` records, each created atomically via
-        :class:`ClaimBackend` — the SAME commit primitive as the txn
-        log (r8 verdict item #1: one commit protocol, not two), so the
-        snapshot story ports to object storage with the same
-        conditional-put and nothing else."""
-        d = self._head_log_dir(table)
-        if os.path.isdir(d):
-            # Readers hold NO lock (that is the protocol's point), so the
-            # max-seq record listed here can be unlinked between scandir
-            # and open by a concurrent commit + vacuum_snapshots head-log
-            # compaction (r9 ADVICE, medium). Retry the list-and-open: a
-            # vanished max means a NEWER record exists (compaction only
-            # removes superseded records), so the re-scan converges.
-            for _ in range(64):
-                names = [
-                    e.name for e in os.scandir(d) if e.name.endswith(".json")
-                ]
-                if not names:
-                    break
-                try:
-                    with open(f"{d}/{max(names)}", encoding="utf-8") as f:
-                        return json.load(f)
-                except FileNotFoundError:
-                    continue
-        # back-compat (r9 review): tables committed before the claimed
-        # head log used a single _HEAD pointer file — honor it when the
-        # log is empty so pre-migration warehouses keep their HEAD; the
-        # next _commit_head seeds the log at seq 0 and supersedes it
-        try:
-            with open(
-                f"{self._snap_dir(table)}/_HEAD", encoding="utf-8"
-            ) as f:
-                return {"seq": -1, "version": int(json.load(f)["version"])}
-        except FileNotFoundError:
-            return None
-
-    def _commit_head(self, table: str, version: int) -> None:
-        """Move HEAD to ``version`` by claiming the next head-log seq
-        through the pluggable ClaimBackend. Writers are serialized by
-        ``_snapshot_lock`` on one host; a cross-host racer that steals
-        the seq makes this fail LOUDLY instead of silently clobbering
-        (the flock can't see other hosts — the claim can)."""
-        d = self._head_log_dir(table)
-        os.makedirs(d, exist_ok=True)
-        if d not in self._claim_probed:
-            self.claim_backend.probe(d)
-            self._claim_probed.add(d)
-        head = self._head_record(table)
-        seq = (head["seq"] + 1) if head else 0
-        payload = json.dumps({"seq": seq, "version": version}).encode("utf-8")
-        if not self.claim_backend.put_if_absent(
-            payload, f"{d}/{seq:020d}.json"
-        ):
-            raise ConcurrentWriteError(
-                f"snapshot HEAD move for {table!r} lost the claim at "
-                f"seq {seq} — a writer outside this host's snapshot "
-                "lock committed concurrently"
-            )
-
-    @contextlib.contextmanager
-    def _snapshot_lock(self, table: str):
-        """Exclusive advisory lock serializing snapshot WRITERS on one
-        host. Version allocation is read-then-write (max retained + 1),
-        so two unserialized writers can allocate the same version and
-        race on the vdir rename + HEAD swap. Readers need no lock (they
-        only follow _HEAD, which is swapped atomically). Advisory flock
-        covers local/NFSv4 filesystems; on an object store (no rename,
-        no flock) snapshot commits need an external coordinator — the
-        same single-committer constraint Delta solves with its log."""
-        snap = self._snap_dir(table)
-        os.makedirs(snap, exist_ok=True)
-        import fcntl
-
-        with open(f"{snap}/.lock", "w") as lock_f:
-            fcntl.flock(lock_f, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(lock_f, fcntl.LOCK_UN)
-
-    def write_snapshot(self, df: DataFrame, table: str) -> int:
-        """Write a new immutable version and atomically move HEAD to it.
-        Returns the committed version number. Concurrent writers are
-        serialized by ``_snapshot_lock`` (held across allocate → write →
-        HEAD swap, so the allocated version can't be stolen mid-write)."""
-        snap = self._snap_dir(table)
-        with self._snapshot_lock(table):
-            # next version = max RETAINED version + 1 (not HEAD + 1: after a
-            # restore_snapshot HEAD points backwards but newer version dirs
-            # still exist and must not be clobbered)
-            history = self.snapshot_history(table)
-            version = (history[-1] + 1) if history else 0
-            vdir = f"{snap}/v{version}"
-            tmp = f"{snap}/.tmp-v{version}"
-            df.write.format("parquet").mode("overwrite").save(tmp)
-            os.replace(tmp, vdir)  # data visible only under its final name
-            try:
-                self._commit_head(table, version)  # THE commit point (claimed)
-            except ConcurrentWriteError:
-                # The vdir was renamed into place but its commit lost the
-                # claim (cross-host racer the flock can't see). It was
-                # never published via HEAD — remove it so time travel
-                # can't serve an uncommitted version and vacuum never
-                # retains it as one of keep_last (r9 ADVICE, low).
-                shutil.rmtree(vdir, ignore_errors=True)
-                raise
-        return version
-
-    def snapshot_version(self, table: str) -> int | None:
-        """Current HEAD version (None before the first commit)."""
-        head = self._head_record(table)
-        return None if head is None else int(head["version"])
-
-    def read_snapshot(self, table: str, version: int | None = None) -> DataFrame:
-        """Time-travel read: HEAD by default, or any retained version."""
-        if version is None:
-            version = self.snapshot_version(table)
-            if version is None:
-                raise FileNotFoundError(f"no snapshots for table {table}")
-        return self.spark.read.parquet(f"{self._snap_dir(table)}/v{version}")
-
-    def snapshot_history(self, table: str) -> list[int]:
-        """Retained versions, oldest first (DESCRIBE HISTORY analogue)."""
-        snap = self._snap_dir(table)
-        if not os.path.isdir(snap):
-            return []
-        return sorted(
-            int(e.name[1:])
-            for e in os.scandir(snap)
-            if e.is_dir() and e.name.startswith("v")
-        )
-
-    def restore_snapshot(self, table: str, version: int) -> None:
-        """Rollback = move HEAD to an older retained version. O(1): no
-        data is copied; the newer versions stay readable until vacuumed."""
-        with self._snapshot_lock(table):
-            if version not in self.snapshot_history(table):
-                raise FileNotFoundError(f"version {version} not retained for {table}")
-            self._commit_head(table, version)
-
-    def snapshot_diff(
-        self, table: str, v_old: int, v_new: int, key: list[str]
-    ) -> DataFrame:
-        """Change Data Feed analogue: per-key insert/update/delete rows
-        between two retained versions. Each side is fingerprinted in its
-        scan projection (xxhash64 over the shared non-key columns), so
-        the diff is ONE key-partitioned full-outer join of (key, 64-bit
-        fp) pairs — no row payloads cross the shuffle, which is what
-        keeps a 100 TB version diff shuffle-light. Assumes key-compatible
-        schemas; columns present on only one side are ignored."""
-        old = self.read_snapshot(table, v_old)
-        new = self.read_snapshot(table, v_new)
-        shared = [c for c in new.columns if c in old.columns and c not in key]
-
-        def fingerprint(df: DataFrame):
-            cols = [
-                F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in shared
-            ]
-            return df.select(
-                *key, F.xxhash64(*cols).alias("_fp") if cols else F.lit(0).alias("_fp")
-            )
-
-        o = fingerprint(old).alias("o")
-        n = fingerprint(new).alias("n")
-        cond = [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in key]
-        change = (
-            F.when(F.col("o._fp").isNull(), "insert")
-            .when(F.col("n._fp").isNull(), "delete")
-            .when(F.col("o._fp") != F.col("n._fp"), "update")
-        )
-        return (
-            o.join(n, cond, "full_outer")
-            .select(
-                *[F.coalesce(F.col(f"n.{k}"), F.col(f"o.{k}")).alias(k) for k in key],
-                change.alias("change_type"),
-            )
-            .filter(F.col("change_type").isNotNull())
-        )
-
-    def vacuum_snapshots(self, table: str, keep_last: int = 2) -> list[int]:
-        """Drop old versions beyond ``keep_last``, never dropping HEAD.
-        Returns the versions removed (Delta VACUUM analogue — bounded
-        storage growth while time travel stays available for the
-        retained window)."""
-        with self._snapshot_lock(table):
-            head = self.snapshot_version(table)
-            versions = self.snapshot_history(table)
-            keep = set(versions[-keep_last:]) | ({head} if head is not None else set())
-            removed = []
-            for v in versions:
-                if v not in keep:
-                    shutil.rmtree(f"{self._snap_dir(table)}/v{v}")
-                    removed.append(v)
-            # compact the HEAD log to its max-seq record (the only one
-            # _head_record ever reads) — the append-only log of HEAD
-            # moves must not grow without bound on a long-lived table
-            # (r9 review); safe under the writer lock because the next
-            # _commit_head allocates max+1 regardless of holes below it
-            d = self._head_log_dir(table)
-            if os.path.isdir(d):
-                names = sorted(
-                    e.name for e in os.scandir(d) if e.name.endswith(".json")
-                )
-                # keep the top TWO records, not one (r10, ADVICE): a
-                # lockless reader that listed the old max right before a
-                # commit landed would otherwise find its record unlinked;
-                # keeping max-1 widens the race window the reader-side
-                # retry (above, _head_record) has to cover.
-                for name in names[:-2]:
-                    os.unlink(f"{d}/{name}")
-                    # claim-marker hygiene: a marker-based backend
-                    # (ConditionalPutClaim) leaves a sibling .claim dir
-                    # per record — drop it with its record so the
-                    # compacted log stays bounded
-                    with contextlib.suppress(OSError):
-                        os.rmdir(f"{d}/{name}.claim")
-        return removed
-
     # -- optimistic-concurrency commit log (r6 verdict item #3) ----------
     # The one Delta ACID behavior the parquet emulation lacked:
     # OPTIMISTIC conflict detection between concurrent writers, with no
@@ -1070,7 +831,10 @@ class TableManager:
     #
     # Readers replay the log's contiguous prefix and read only the
     # referenced immutable uuid dirs — a concurrent reader can never
-    # see a torn table, only version N or N+1. Reference contract:
+    # see a torn table, only version N or N+1. The log is the table's
+    # only version history: time travel (txn_read(version=)), RESTORE
+    # (txn_restore), the change feed (txn_diff) and bounded retention
+    # (txn_vacuum(keep_last=)) all replay it. Reference contract:
     # Delta MERGE/append ACID (alphavantage/bronze2_to_silver.py:
     # 141-152); DELTA_ATTEMPT.md documents why the real jars are
     # unobtainable here.
@@ -1107,17 +871,34 @@ class TableManager:
                     out.append(json.load(f))
         return out
 
+    @staticmethod
+    def _txn_replay(records: list[dict]):
+        """Yield ``(version, live data dirs)`` after each commit record,
+        in version order: an overwrite replaces the live set, an append
+        extends it."""
+        live: list[str] = []
+        for rec in records:
+            live = list(rec["add"]) if rec["op"] == "overwrite" else live + rec["add"]
+            yield rec["version"], live
+
+    def _txn_live(
+        self, records: list[dict], version: int | None = None
+    ) -> list[str] | None:
+        """Live data dirs at ``version`` (the latest commit when None);
+        None when no commit is that old."""
+        live = None
+        for v, dirs in self._txn_replay(records):
+            if version is not None and v > version:
+                break
+            live = dirs
+        return live
+
     def _txn_state(self, table: str) -> tuple[int | None, list[str]]:
         """(latest version, live data dirs) by replaying the log."""
-        live: list[str] = []
-        version = None
-        for rec in self._txn_read_log(table):
-            version = rec["version"]
-            if rec["op"] == "overwrite":
-                live = list(rec["add"])
-            else:
-                live.extend(rec["add"])
-        return version, live
+        records = self._txn_read_log(table)
+        if not records:
+            return None, []
+        return records[-1]["version"], self._txn_live(records)
 
     def _txn_try_commit(self, table: str, record: dict) -> bool:
         """Atomically claim ``record['version']`` via the pluggable
@@ -1209,20 +990,23 @@ class TableManager:
         if read_version is ...:
             read_version = self.txn_version(table)
         rel = self._txn_write_data(df, table)
+        return self._txn_commit_overwrite(table, [rel], read_version)
+
+    def _txn_commit_overwrite(
+        self, table: str, add: list[str], read_version: int | None
+    ) -> int:
+        """Claim ``read_version + 1`` with an overwrite record whose live
+        set becomes ``add``; ConcurrentWriteError if the claim loses."""
         # remove-set = the live set AT the snapshot (replay commits
         # ≤ read_version), never at write time
-        live: list[str] = []
-        for r in self._txn_read_log(table):
-            if read_version is None or r["version"] > read_version:
-                continue
-            live = (
-                list(r["add"]) if r["op"] == "overwrite" else live + list(r["add"])
-            )
+        remove = []
+        if read_version is not None:
+            remove = self._txn_live(self._txn_read_log(table), read_version) or []
         rec = {
             "version": (read_version if read_version is not None else -1) + 1,
             "op": "overwrite",
-            "add": [rel],
-            "remove": live,
+            "add": add,
+            "remove": remove,
             "readVersion": read_version,
         }
         if not self._txn_try_commit(table, rec):
@@ -1238,20 +1022,71 @@ class TableManager:
         then touches only immutable uuid dirs — a concurrent writer can
         never tear this view. ``version`` time-travels to an older
         commit."""
-        records = self._txn_read_log(table)
-        if version is not None:
-            records = [r for r in records if r["version"] <= version]
-        if not records:
+        live = self._txn_live(self._txn_read_log(table), version)
+        if live is None:
             raise FileNotFoundError(f"no commits for table {table}")
-        live: list[str] = []
-        for rec in records:
-            live = list(rec["add"]) if rec["op"] == "overwrite" else live + list(rec["add"])
         root = self.path(table)
         # mergeSchema: commits may append columns over time (the S8
         # mergeSchema contract extends to the txn path — Delta appends
         # evolve schema the same way)
         return self.spark.read.option("mergeSchema", "true").parquet(
             *[f"{root}/{rel}" for rel in live]
+        )
+
+    def txn_restore(self, table: str, version: int) -> int:
+        """RESTORE TABLE ... TO VERSION AS OF: commit ONE overwrite
+        record whose add-set is the live set at ``version`` — no data is
+        copied (Delta's RESTORE does the same), and every later version
+        stays time-travelable until vacuumed. Raises FileNotFoundError
+        for a version the log does not hold or whose files txn_vacuum
+        removed, and ConcurrentWriteError when another commit lands
+        first (the overwrite rule). Returns the new version."""
+        records = self._txn_read_log(table)
+        if version not in {r["version"] for r in records}:
+            raise FileNotFoundError(f"version {version} not committed for {table}")
+        live = self._txn_live(records, version)
+        root = self.path(table)
+        if not all(os.path.isdir(f"{root}/{rel}") for rel in live):
+            raise FileNotFoundError(f"version {version} of {table} was vacuumed")
+        return self._txn_commit_overwrite(table, live, records[-1]["version"])
+
+    def txn_diff(
+        self, table: str, v_old: int, v_new: int, key: list[str]
+    ) -> DataFrame:
+        """Change Data Feed analogue: per-key insert/update/delete rows
+        between two committed versions. Each side is fingerprinted in its
+        scan projection (xxhash64 over the shared non-key columns), so
+        the diff is ONE key-partitioned full-outer join of (key, 64-bit
+        fp) pairs — no row payloads cross the shuffle, which is what
+        keeps a 100 TB version diff shuffle-light. Assumes key-compatible
+        schemas; columns present on only one side are ignored."""
+        old = self.txn_read(table, v_old)
+        new = self.txn_read(table, v_new)
+        shared = [c for c in new.columns if c in old.columns and c not in key]
+
+        def fingerprint(df: DataFrame):
+            cols = [
+                F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in shared
+            ]
+            return df.select(
+                *key, F.xxhash64(*cols).alias("_fp") if cols else F.lit(0).alias("_fp")
+            )
+
+        o = fingerprint(old).alias("o")
+        n = fingerprint(new).alias("n")
+        cond = [F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}")) for k in key]
+        change = (
+            F.when(F.col("o._fp").isNull(), "insert")
+            .when(F.col("n._fp").isNull(), "delete")
+            .when(F.col("o._fp") != F.col("n._fp"), "update")
+        )
+        return (
+            o.join(n, cond, "full_outer")
+            .select(
+                *[F.coalesce(F.col(f"n.{k}"), F.col(f"o.{k}")).alias(k) for k in key],
+                change.alias("change_type"),
+            )
+            .filter(F.col("change_type").isNotNull())
         )
 
     def txn_compact(
@@ -1289,20 +1124,25 @@ class TableManager:
     TXN_VACUUM_RETENTION_S = 7 * 24 * 3600.0
 
     def txn_vacuum(
-        self, table: str, retention_seconds: float = TXN_VACUUM_RETENTION_S
+        self,
+        table: str,
+        keep_last: int = 1,
+        retention_seconds: float = TXN_VACUUM_RETENTION_S,
     ) -> list[str]:
-        """Drop uuid data dirs no longer needed by the LATEST version
-        (time travel to vacuumed versions stops working, like Delta
-        VACUUM). Returns the removed dirs.
+        """Drop uuid data dirs no longer needed by any of the last
+        ``keep_last`` versions (time travel and restore to older
+        versions stop working, like Delta VACUUM). Returns the removed
+        dirs.
 
         Two classes of dead dir, removed under different rules (r7
         advisory — the old no-retention version could rmtree an
         IN-FLIGHT writer's data between its ``_txn_write_data`` and its
         claim, yielding a committed version whose files are gone):
 
-        - **superseded**: referenced by some commit record but not by
-          the latest state (an overwritten add-set). Committed history
-          — safe to drop at any age; only time travel loses them.
+        - **superseded**: referenced by some commit record but live in
+          none of the last ``keep_last`` versions (an overwritten
+          add-set). Committed history — safe to drop at any age; only
+          time travel loses them.
         - **never-committed**: present on disk, referenced by NO commit
           record. Either in-flight (a writer between data-write and
           claim) or orphaned by a crashed/conflicted writer. Dropped
@@ -1313,12 +1153,19 @@ class TableManager:
         """
         import time
 
+        if keep_last < 1:
+            raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         records = self._txn_read_log(table)
-        _, live = self._txn_state(table)
         data_root = f"{self.path(table)}/_txn_data"
         if not os.path.isdir(data_root):
             return []
-        live_names = {rel.split("/", 1)[1] for rel in live}
+        oldest_kept = records[-1]["version"] - keep_last + 1 if records else 0
+        live_names = {
+            rel.split("/", 1)[1]
+            for v, dirs in self._txn_replay(records)
+            if v >= oldest_kept
+            for rel in dirs
+        }
         committed_names = {
             rel.split("/", 1)[1] for r in records for rel in r["add"]
         }

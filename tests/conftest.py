@@ -16,10 +16,15 @@ if REPO_DIR not in sys.path:
 # crash/resume sagas, multi-process lock matrices and property sweeps)
 # outgrew the driver's timeout, so a healthy tree kept reading
 # tests_ok=false. The ~20 slowest integration tests below (~20 min,
-# measured with --durations=50) are skipped unless SPARK_GRAFT_HEAVY=1;
-# the default run keeps EVERY oracle-parity test, every plan/value
-# pin, and one end-to-end DAG test. CI/round evidence runs the heavy
-# tier explicitly: SPARK_GRAFT_HEAVY=1 python -m pytest tests/ -q
+# measured with --durations=50) are skipped unless SPARK_GRAFT_HEAVY=1.
+# The default run keeps every catalog oracle-parity test
+# (test_oracle_parity.py), every plan pin and one end-to-end DAG test,
+# but NOT three oracle/bit-exact checks that sit in this list:
+# test_pq_primary_oracle_complete_at_sf01,
+# test_exact_percentiles_bitexact_vs_builtin and
+# test_exact_group_percentiles_bitexact_vs_builtin. A green default run
+# therefore says nothing about those three; run the heavy tier
+# explicitly to cover them: SPARK_GRAFT_HEAVY=1 python -m pytest tests/ -q
 # ---------------------------------------------------------------------------
 
 _HEAVY_TESTS = {
@@ -41,7 +46,6 @@ _HEAVY_TESTS = {
     "test_scheduled_crash_does_not_lose_the_next_interval",
     "test_scheduled_uber_backfill_matches_batch_run",
     "test_uber_maintain_bounds_bronze_file_counts",
-    "test_two_process_snapshot_writers_serialize",
     "test_two_process_appends_conflict_and_reads",
     "test_register_persistent_survives_session",
     "test_pq_primary_oracle_complete_at_sf01",
@@ -83,3 +87,43 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+class _FailingConf:
+    """Session-conf wrapper whose ``fail_at``-th ``set`` raises (and
+    whose other calls pass through) — fault injection for conf windows."""
+
+    def __init__(self, conf, fail_at: int):
+        self._conf = conf
+        self._sets_left = fail_at
+
+    def get(self, *args):
+        return self._conf.get(*args)
+
+    def unset(self, key):
+        self._conf.unset(key)
+
+    def set(self, key, value):
+        self._sets_left -= 1
+        if self._sets_left == 0:
+            raise RuntimeError(f"injected conf.set failure on {key}")
+        self._conf.set(key, value)
+
+
+class _SessionWithConf:
+    """A SparkSession stand-in: ``conf`` replaced, all else delegated."""
+
+    def __init__(self, spark, conf):
+        self._spark = spark
+        self.conf = conf
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+
+@pytest.fixture
+def failing_conf_session(spark):
+    """``make(fail_at)`` → a session whose ``fail_at``-th conf.set raises."""
+    return lambda fail_at: _SessionWithConf(
+        spark, _FailingConf(spark.conf, fail_at)
+    )

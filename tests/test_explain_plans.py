@@ -8,6 +8,7 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_v3_spark.plans import load_all
@@ -424,6 +425,30 @@ def test_bloom_runtime_filter_injected(spark, sf_dir):
     )
 
 
+def test_bloom_conf_window_restores_when_conf_set_raises(
+    spark, sf_dir, failing_conf_session
+):
+    """A conf.set that throws part-way through the bloom join's conf
+    window must restore the keys already set and free the plan-conf
+    lock: the session conf is unchanged afterwards."""
+    from lakehouse_v3_spark.plans.scale_extras import _PLAN_CONF_LOCK
+
+    keys = (
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+        "spark.sql.autoBroadcastJoinThreshold",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    # the first set lands, the second raises
+    with pytest.raises(RuntimeError, match="injected"):
+        load_all()["bloom_runtime_filter_join"].fn(
+            failing_conf_session(2), sf_dir
+        )
+    assert _PLAN_CONF_LOCK.acquire(blocking=False), "plan-conf lock held"
+    _PLAN_CONF_LOCK.release()
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
 def test_bloom_pin_fails_loudly(spark, sf_dir):
     """The bloom join pins its physical plan through a PRIVATE py4j
     surface (_jdf.queryExecution().executedPlan()). If a Spark
@@ -439,8 +464,6 @@ def test_bloom_pin_fails_loudly(spark, sf_dir):
        when the call chain breaks (simulated by an object whose _jdf
        access explodes, which is exactly what an API move looks like).
     """
-    import pytest
-
     from lakehouse_v3_spark.plans.scale_extras import _pin_executed_plan
 
     df = load_all()["bloom_runtime_filter_join"].fn(spark, sf_dir)

@@ -168,3 +168,28 @@ def test_stream_run_partitions_restores_session_conf(spark):
         with _stream_run_partitions(spark, 1):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_run_partitions_releases_lock_when_conf_set_raises(
+    spark, failing_conf_session
+):
+    """A conf.set that throws inside __enter__ must not leave the window
+    lock held (every later drain would then fail as 'concurrent') nor
+    change the session conf."""
+    from lakehouse_v3_spark.plans.streaming_queries import (
+        _stream_run_partitions,
+    )
+
+    lock = _stream_run_partitions._lock
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(RuntimeError, match="injected"):
+        with _stream_run_partitions(failing_conf_session(1), 1):
+            pass  # pragma: no cover
+    free = lock.acquire(blocking=False)
+    lock.release()  # ours, or the leaked hold: later tests need it free
+    assert free, "window lock still held after __enter__ raised"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # and the next window opens normally
+    with _stream_run_partitions(spark, 1) as n:
+        assert n == 1
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before

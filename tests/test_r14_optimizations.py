@@ -29,6 +29,7 @@ def test_lloyd_blocks_iteration_matches_dataframe_recipe(spark, sf_dir):
         build_blocks,
         lloyd_partial_sums,
         make_round6,
+        micro_mean,
     )
 
     k = 8
@@ -48,7 +49,7 @@ def test_lloyd_blocks_iteration_matches_dataframe_recipe(spark, sf_dir):
                 old_counts[r["cid"]] = int(r["n_assigned"])
             sums, counts = lloyd_partial_sums(blocks, cents)
             new = [
-                [round6((int(sums[c][d]) / 1e6) / int(counts[c])) for d in range(dim)]
+                [round6(micro_mean(sums[c][d], int(counts[c]))) for d in range(dim)]
                 for c in range(k)
             ]
             assert [int(c) for c in counts] == old_counts
@@ -56,6 +57,53 @@ def test_lloyd_blocks_iteration_matches_dataframe_recipe(spark, sf_dir):
             cents = new
     finally:
         blocks.unpersist()
+
+
+def test_lloyd_component_exact_past_2_53_micro_units(spark):
+    """Cell sums past 2^53 micro-units: the Lloyd component must equal
+    Spark's own decimal(38,6) → double cast divided by the count (the
+    _lloyd_update recipe), which ``int / 1e6`` misses by double
+    rounding. Synthetic blocks: two well-separated cells whose micro
+    matrix carries ~10^9-scale values."""
+    from decimal import Decimal
+
+    import numpy as np
+
+    from lakehouse_v3_spark.operators.train_blocks import (
+        lloyd_partial_sums,
+        micro_mean,
+    )
+
+    rng = np.random.RandomState(7)
+    dim = 16
+    cents = [[0.0] * dim, [100.0] * dim]
+    blocks = []
+    for n_rows in (3, 4, 6):
+        cell = rng.randint(0, 2, size=n_rows)
+        M = cell[:, None] * 100.0 + rng.uniform(-1, 1, size=(n_rows, dim))
+        Mm = rng.randint(2**53 // 8, 2**53 // 3, size=(n_rows, dim), dtype=np.int64)
+        blocks.append((M, Mm))
+    sums, counts = lloyd_partial_sums(spark.sparkContext.parallelize(blocks, 3), cents)
+    assert int(sums.max()) > 2**53 and min(counts) > 0
+
+    cells = [
+        (c, d, str(Decimal(int(sums[c][d])).scaleb(-6)), int(counts[c]))
+        for c in range(2)
+        for d in range(dim)
+    ]
+    spark_vals = {
+        (r.c, r.d): r.v
+        for r in spark.createDataFrame(cells, "c int, d int, s string, n long")
+        .selectExpr("c", "d", "CAST(CAST(s AS DECIMAL(38,6)) AS DOUBLE) / n AS v")
+        .collect()
+    }
+    got = {(c, d): micro_mean(sums[c][d], int(counts[c])) for c, d, _, _ in cells}
+    assert got == spark_vals
+    # the data does exercise the double-rounding drift of int / 1e6
+    assert any(
+        (int(sums[c][d]) / 1e6) / int(counts[c]) != spark_vals[(c, d)]
+        for c, d, _, _ in cells
+    )
 
 
 def test_pq_blocks_iteration_matches_dataframe_recipe(spark, sf_dir):

@@ -187,7 +187,7 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 def test_streaming_merge_into_snapshots(spark, tmp_path):
     """End-to-end lakehouse loop: stream micro-batches MERGE-upsert into
-    a TableManager table, each batch committing a snapshot version —
+    a TableManager table, each batch committing a log version —
     time travel then exposes the state after every batch (the Delta
     'streaming upsert + history' pattern on the parquet backend)."""
     from lakehouse_v3_spark.operators.joins import merge_upsert
@@ -200,14 +200,16 @@ def test_streaming_merge_into_snapshots(spark, tmp_path):
     def process(batch_df, _bid):
         if batch_df.isEmpty():
             return
-        ver = tm.snapshot_version("silver.state")
+        # read-modify-write: the commit is pinned to the version read,
+        # so a concurrent commit makes it raise instead of being lost
+        ver = tm.txn_version("silver.state")
         if ver is None:
-            tm.write_snapshot(batch_df, "silver.state")
+            tm.txn_overwrite(batch_df, "silver.state", read_version=None)
         else:
             merged = merge_upsert(
-                tm.read_snapshot("silver.state"), batch_df, ["user_id"]
+                tm.txn_read("silver.state", ver), batch_df, ["user_id"]
             ).select("user_id", "v")
-            tm.write_snapshot(merged, "silver.state")
+            tm.txn_overwrite(merged, "silver.state", read_version=ver)
 
     def drain():
         stream = spark.readStream.schema("user_id long, v string").parquet(str(src))
@@ -226,13 +228,13 @@ def test_streaming_merge_into_snapshots(spark, tmp_path):
         .coalesce(1).write.mode("append").parquet(str(src))
     drain()
 
-    head = {r.user_id: r.v for r in tm.read_snapshot("silver.state").collect()}
+    head = {r.user_id: r.v for r in tm.txn_read("silver.state").collect()}
     assert head == {1: "a", 2: "B", 3: "c"}
-    v0 = {r.user_id: r.v for r in tm.read_snapshot("silver.state", 0).collect()}
+    v0 = {r.user_id: r.v for r in tm.txn_read("silver.state", 0).collect()}
     assert v0 == {1: "a", 2: "b"}  # pre-merge state still time-travelable
     changes = {
         r.user_id: r.change_type
-        for r in tm.snapshot_diff("silver.state", 0, 1, ["user_id"]).collect()
+        for r in tm.txn_diff("silver.state", 0, 1, ["user_id"]).collect()
     }
     assert changes == {2: "update", 3: "insert"}
 

@@ -151,46 +151,47 @@ def test_exists_shallow_marker_check(spark, tmp_path):
 
 
 def test_snapshot_time_travel_and_restore(spark, tmp_path):
-    """Versioned snapshots: HEAD follows the latest commit, any retained
-    version is readable, restore is a pointer move, vacuum keeps HEAD."""
+    """Versioned table on the commit log: reads follow the latest
+    commit, any unvacuumed version is readable, restore is one commit
+    that copies no data, vacuum keeps whatever the latest version uses."""
+    import pytest
+
     from lakehouse_v3_spark.tables import TableManager
 
     tm = TableManager(spark, str(tmp_path / "wh"))
-    v0 = tm.write_snapshot(
+    v0 = tm.txn_overwrite(
         spark.createDataFrame([(1, "a")], "id long, s string"), "silver.t"
     )
-    v1 = tm.write_snapshot(
+    v1 = tm.txn_overwrite(
         spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string"), "silver.t"
     )
     assert (v0, v1) == (0, 1)
-    assert tm.snapshot_version("silver.t") == 1
-    assert tm.read_snapshot("silver.t").count() == 2          # HEAD
-    assert tm.read_snapshot("silver.t", 0).count() == 1        # time travel
-    assert tm.snapshot_history("silver.t") == [0, 1]
+    assert tm.txn_version("silver.t") == 1
+    assert tm.txn_read("silver.t").count() == 2          # latest
+    assert tm.txn_read("silver.t", 0).count() == 1        # time travel
 
-    tm.restore_snapshot("silver.t", 0)                         # O(1) rollback
-    assert tm.read_snapshot("silver.t").count() == 1
+    assert tm.txn_restore("silver.t", 0) == 2             # rollback commit
+    assert tm.txn_read("silver.t").count() == 1
+    assert tm.txn_read("silver.t", 1).count() == 2        # v1 untouched
 
-    # writing after a rollback must NOT clobber the still-retained v1:
-    # next version is max(retained)+1
-    v2 = tm.write_snapshot(
+    v3 = tm.txn_overwrite(
         spark.createDataFrame([(9, "z")], "id long, s string"), "silver.t"
     )
-    assert v2 == 2
-    assert tm.snapshot_version("silver.t") == 2
-    assert tm.read_snapshot("silver.t", 1).count() == 2  # v1 untouched
+    assert v3 == 3 and tm.txn_read("silver.t").count() == 1
 
-    tm.restore_snapshot("silver.t", 0)
-    removed = tm.vacuum_snapshots("silver.t", keep_last=1)
-    # HEAD (v0) survives even though it is not in the last-1 window
-    assert 0 not in removed and tm.read_snapshot("silver.t").count() == 1
-    assert tm.snapshot_history("silver.t") == sorted(set([0, 2]))
+    tm.txn_restore("silver.t", 0)                         # v4
+    removed = tm.txn_vacuum("silver.t")
+    # v0's data is live again at the latest version, so it survives;
+    # only the v1 and v3 add-sets go
+    assert len(removed) == 2
+    assert [r.id for r in tm.txn_read("silver.t").collect()] == [1]
 
-    import pytest
     with pytest.raises(FileNotFoundError):
-        tm.read_snapshot("silver.never")
+        tm.txn_read("silver.never")
     with pytest.raises(FileNotFoundError):
-        tm.restore_snapshot("silver.t", 99)
+        tm.txn_restore("silver.t", 99)
+    with pytest.raises(FileNotFoundError):
+        tm.txn_restore("silver.t", 1)                     # vacuumed
 
 
 def test_snapshot_diff_cdc(spark, tmp_path):
@@ -199,14 +200,14 @@ def test_snapshot_diff_cdc(spark, tmp_path):
     from lakehouse_v3_spark.tables import TableManager
 
     tm = TableManager(spark, str(tmp_path / "wh"))
-    tm.write_snapshot(
+    tm.txn_overwrite(
         spark.createDataFrame(
             [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
             "id long, s string, v double",
         ),
         "silver.cdc",
     )
-    tm.write_snapshot(
+    tm.txn_overwrite(
         spark.createDataFrame(
             [(1, "a", 10.0), (2, "B", 20.0), (4, "d", 40.0)],
             "id long, s string, v double",
@@ -215,7 +216,7 @@ def test_snapshot_diff_cdc(spark, tmp_path):
     )
     changes = {
         r.id: r.change_type
-        for r in tm.snapshot_diff("silver.cdc", 0, 1, ["id"]).collect()
+        for r in tm.txn_diff("silver.cdc", 0, 1, ["id"]).collect()
     }
     assert changes == {2: "update", 3: "delete", 4: "insert"}
 

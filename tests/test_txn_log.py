@@ -382,68 +382,70 @@ def test_txn_compact_preserves_rows_and_history(spark, tmp_path):
     assert len(removed) == 4
 
 
-def test_snapshot_head_commits_through_claim_backend(spark, tmp_path):
-    """r8 verdict item #1 (second half): the snapshot HEAD move is a
-    claimed head-log record through the SAME pluggable ClaimBackend as
-    the txn log — ONE commit protocol, no os.replace side door. A
-    recording backend must see every HEAD move (2 commits + 1
-    restore), and the snapshot surface must behave identically."""
-    from lakehouse_v3_spark.tables import PosixLinkClaim
-
-    calls = []
-
-    class Recording(PosixLinkClaim):
-        def put_if_absent(self, payload, final_path):
-            calls.append(final_path)
-            return super().put_if_absent(payload, final_path)
-
-    mgr = TableManager(
-        spark, str(tmp_path / "wh"), backend="parquet",
-        claim_backend=Recording(),
-    )
-    v0 = mgr.write_snapshot(spark.range(3), "t")
-    v1 = mgr.write_snapshot(spark.range(5), "t")
-    assert (v0, v1) == (0, 1)
-    assert mgr.snapshot_version("t") == 1
-    assert mgr.read_snapshot("t").count() == 5
-    mgr.restore_snapshot("t", 0)
-    assert mgr.snapshot_version("t") == 0
-    assert mgr.read_snapshot("t").count() == 3
-    # a post-restore write allocates ABOVE the retained max, as before
-    v2 = mgr.write_snapshot(spark.range(7), "t")
-    assert v2 == 2 and mgr.read_snapshot("t").count() == 7
-    head_moves = [
-        c for c in calls if "_head_log" in c and c.endswith(".json")
-    ]
-    assert len(head_moves) == 4  # 3 commits + 1 restore
-
-
-def test_snapshot_head_lost_claim_raises(spark, tmp_path):
-    """A HEAD-log seq stolen by a writer outside this host's snapshot
-    flock (cross-host racer) defeats the claim and raises
-    ConcurrentWriteError — never a silent clobber of the racer's HEAD
-    move (the flock can't see other hosts; the claim can)."""
+def test_txn_restore_copies_no_data(spark, tmp_path):
+    """RESTORE is one overwrite commit whose add-set is the old
+    version's live set: no new _txn_data dir, old content back, later
+    versions still time-travelable."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.write_snapshot(spark.range(3), "t")  # seq 0
-    real_put = mgr.claim_backend.put_if_absent
-    stolen = {"done": False}
+    mgr.txn_append(spark.range(3), "t")  # v0
+    mgr.txn_append(spark.range(3, 5), "t")  # v1
+    mgr.txn_overwrite(spark.range(100, 107), "t")  # v2
+    data_root = f"{mgr.path('t')}/_txn_data"
+    dirs_before = sorted(os.listdir(data_root))
+    v = mgr.txn_restore("t", 1)
+    assert v == 3 and mgr.txn_version("t") == 3
+    assert sorted(os.listdir(data_root)) == dirs_before
+    assert sorted(r.id for r in mgr.txn_read("t").collect()) == list(range(5))
+    assert mgr.txn_read("t", version=2).count() == 7
+    # the restore commit is an ordinary overwrite record
+    rec = mgr._txn_read_log("t")[-1]
+    assert rec["op"] == "overwrite" and rec["readVersion"] == 2
+    assert rec["add"] == mgr._txn_live(mgr._txn_read_log("t"), 1)
+    # appends after a restore extend the restored set
+    mgr.txn_append(spark.range(50, 51), "t")
+    assert mgr.txn_read("t").count() == 6
 
-    def steal_seq(payload, final_path):
-        # racer claims the SAME head-log seq in the head-read → claim
-        # window (a cross-host writer the flock cannot serialize)
-        if "_head_log" in final_path and not stolen["done"]:
-            stolen["done"] = True
-            assert real_put(b'{"seq": 1, "version": 0}', final_path)
-        return real_put(payload, final_path)
 
-    mgr.claim_backend.put_if_absent = steal_seq
-    try:
-        with pytest.raises(ConcurrentWriteError, match="HEAD"):
-            mgr.write_snapshot(spark.range(5), "t")
-    finally:
-        mgr.claim_backend.put_if_absent = real_put
-    # the racer's HEAD move survives untouched
-    assert mgr.snapshot_version("t") == 0
+def test_txn_restore_to_vacuumed_version_raises(spark, tmp_path):
+    """A version whose files txn_vacuum removed, or one the log never
+    held, cannot be restored — FileNotFoundError, and no commit."""
+    mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
+    mgr.txn_overwrite(spark.range(3), "t")  # v0
+    mgr.txn_overwrite(spark.range(5), "t")  # v1
+    assert len(mgr.txn_vacuum("t")) == 1  # v0's dir
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        mgr.txn_restore("t", 0)
+    for missing in (2, 99, -1):
+        with pytest.raises(FileNotFoundError, match="not committed"):
+            mgr.txn_restore("t", missing)
+    with pytest.raises(FileNotFoundError):
+        mgr.txn_restore("never", 0)
+    assert mgr.txn_version("t") == 1
+    assert mgr.txn_read("t").count() == 5
+
+
+def test_txn_vacuum_keep_last_keeps_previous_version(spark, tmp_path):
+    """keep_last=2 retains every dir live in the last two versions:
+    time travel and restore to the previous version keep working, only
+    older superseded dirs are dropped."""
+    mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
+    mgr.txn_overwrite(spark.range(2), "t")  # v0
+    mgr.txn_append(spark.range(2, 3), "t")  # v1 (v0's dir still live)
+    mgr.txn_overwrite(spark.range(10, 14), "t")  # v2
+    mgr.txn_overwrite(spark.range(20, 25), "t")  # v3
+    live_v1 = {
+        rel.split("/", 1)[1] for rel in mgr._txn_live(mgr._txn_read_log("t"), 1)
+    }
+    removed = mgr.txn_vacuum("t", keep_last=2)
+    assert set(removed) == live_v1  # v0+v1 dirs; v2 and v3 kept
+    assert mgr.txn_read("t", version=2).count() == 4
+    assert mgr.txn_read("t").count() == 5
+    with pytest.raises(Exception):
+        mgr.txn_read("t", version=1).count()
+    assert mgr.txn_restore("t", 2) == 4
+    assert mgr.txn_read("t").count() == 4
+    with pytest.raises(ValueError):
+        mgr.txn_vacuum("t", keep_last=0)
 
 
 # -- the two-OS-process acceptance test ----------------------------------
@@ -582,154 +584,10 @@ def F_count():
     return F.count(F.lit(1)).alias("n")
 
 
-_SNAPSHOT_WRITER_SCRIPT = textwrap.dedent(
-    """
-    import sys
-    sys.path.insert(0, {repo!r})
-    from pyspark.sql import SparkSession, functions as F
-    from lakehouse_v3_spark.tables import (
-        TableManager, PosixLinkClaim, RenameNoReplaceClaim,
-        ConditionalPutClaim,
-    )
-
-    wh, marker, claim_name = sys.argv[1], sys.argv[2], sys.argv[3]
-    claim = {{"posix_link": PosixLinkClaim,
-              "rename_noreplace": RenameNoReplaceClaim,
-              "conditional_put": ConditionalPutClaim}}[claim_name]()
-    spark = (SparkSession.builder.master("local[2]")
-             .config("spark.sql.shuffle.partitions", "2")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    mgr = TableManager(spark, wh, backend="parquet", claim_backend=claim)
-    for b in range(3):
-        df = spark.range(10).select(
-            F.lit(marker + "-" + str(b)).alias("batch"), F.col("id"))
-        v = mgr.write_snapshot(df, "t")
-        print("snap", marker, b, "as v", v, flush=True)
-    print("SNAPSHOTTER_OK", flush=True)
-    spark.stop()
-    """
-)
-
-
-def test_two_process_snapshot_writers_serialize(spark, tmp_path, claim_impl):
-    """The claimed HEAD-log protocol under REAL cross-process
-    concurrency (both ClaimBackends): two OS processes each commit 3
-    snapshots of the same table. Versions must come out dense (0..5,
-    no clobbers, no holes), the HEAD log's seq records dense, HEAD
-    must point at a retained version, and every retained version must
-    be a complete readable table."""
-    wh = str(tmp_path / "wh")
-    procs = [
-        subprocess.Popen(
-            [sys.executable, "-c",
-             _SNAPSHOT_WRITER_SCRIPT.format(repo=REPO_DIR), wh, m,
-             claim_impl],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
-            env=dict(os.environ),
-        )
-        for m in ("alpha", "beta")
-    ]
-    outs = [p.communicate(timeout=240) for p in procs]
-    for (out, err), p in zip(outs, procs):
-        assert p.returncode == 0, err[-2000:]
-        assert "SNAPSHOTTER_OK" in out
-
-    mgr = TableManager(spark, wh, backend="parquet")
-    assert mgr.snapshot_history("t") == [0, 1, 2, 3, 4, 5]
-    head = mgr.snapshot_version("t")
-    assert head in mgr.snapshot_history("t")
-    # head-log seq records are dense (every HEAD move was a clean claim)
-    log_dir = mgr._head_log_dir("t")
-    seqs = sorted(
-        int(e.name[:-5]) for e in os.scandir(log_dir)
-        if e.name.endswith(".json")
-    )
-    assert seqs == list(range(6)), seqs
-    # every retained version reads back complete (10 rows, one batch)
-    for v in mgr.snapshot_history("t"):
-        df = mgr.read_snapshot("t", v)
-        assert df.count() == 10
-        assert df.select("batch").distinct().count() == 1
-
-
-def test_legacy_head_pointer_still_resolves(spark, tmp_path):
-    """Back-compat (r9 review): a warehouse written before the claimed
-    head log used a single _HEAD pointer file — it must keep resolving,
-    and the next commit must supersede it through the log."""
-    import json as _json
-
-    mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    # forge the pre-migration layout: version dirs + _HEAD, no head log
-    snap = mgr._snap_dir("t")
-    for v, n in ((0, 3), (1, 5)):
-        spark.range(n).write.parquet(f"{snap}/v{v}")
-    with open(f"{snap}/_HEAD", "w", encoding="utf-8") as f:
-        _json.dump({"version": 1}, f)
-    assert mgr.snapshot_version("t") == 1
-    assert mgr.read_snapshot("t").count() == 5
-    mgr.restore_snapshot("t", 0)  # first claimed HEAD move (seq 0)
-    assert mgr.snapshot_version("t") == 0
-    v2 = mgr.write_snapshot(spark.range(7), "t")
-    assert v2 == 2 and mgr.read_snapshot("t").count() == 7
-
-
-def test_vacuum_snapshots_compacts_head_log(spark, tmp_path):
-    """The append-only HEAD log must not grow without bound:
-    vacuum_snapshots keeps only the top-TWO records (max-seq is the one
-    _head_record reads; max-1 widens the lockless-reader race window —
-    r9 ADVICE), and subsequent commits continue above them."""
-    mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    for i in range(4):
-        mgr.write_snapshot(spark.range(i + 1), "t")
-    d = mgr._head_log_dir("t")
-    assert sum(n.endswith(".json") for n in os.listdir(d)) == 4
-    mgr.vacuum_snapshots("t", keep_last=2)
-    logs = sorted(n for n in os.listdir(d) if n.endswith(".json"))
-    assert logs == [f"{2:020d}.json", f"{3:020d}.json"]
-    # marker-based backends: compacted records take their claim markers
-    # with them (bounded log, any backend)
-    assert sum(n.endswith(".claim") for n in os.listdir(d)) <= 2
-    assert mgr.snapshot_version("t") == 3
-    assert mgr.write_snapshot(spark.range(9), "t") == 4  # seq continues
-    assert mgr.snapshot_version("t") == 4
-
-
-def test_head_record_retries_on_compacted_max(spark, tmp_path, monkeypatch):
-    """r9 ADVICE (medium): a lockless reader's listed max-seq record can
-    be unlinked between scandir and open by a concurrent commit +
-    head-log compaction. _head_record must re-scan (a vanished max
-    implies a NEWER record exists), never crash with FileNotFoundError."""
-    import lakehouse_v3_spark.tables as T
-
-    mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.write_snapshot(spark.range(3), "t")  # seq 0
-    mgr.write_snapshot(spark.range(5), "t")  # seq 1
-    d = mgr._head_log_dir("t")
-
-    real_scandir = os.scandir
-    state = {"raced": False}
-
-    class FakeEntry:
-        name = f"{99:020d}.json"  # listed, then "compacted away"
-
-    def racing_scandir(path, *a, **kw):
-        entries = list(real_scandir(path, *a, **kw))
-        if os.path.abspath(str(path)) == os.path.abspath(d) and not state["raced"]:
-            state["raced"] = True
-            entries.append(FakeEntry())  # stale listing: max vanishes
-        return iter(entries)
-
-    monkeypatch.setattr(T.os, "scandir", racing_scandir)
-    head = mgr._head_record("t")
-    assert state["raced"] and head == {"seq": 1, "version": 1}
-
-
 def test_claim_probe_is_per_directory(spark, tmp_path):
     """r9 ADVICE (low): the capability probe must run once per claim
-    DIRECTORY, not once per TableManager — tables (and the snapshot
-    head-log vs txn-log dirs) can span mounts with different claim
-    support."""
+    DIRECTORY, not once per TableManager — tables can span mounts with
+    different claim support."""
     from lakehouse_v3_spark.tables import PosixLinkClaim
 
     probed = []
@@ -746,42 +604,10 @@ def test_claim_probe_is_per_directory(spark, tmp_path):
     mgr.txn_append(spark.range(1), "t1")        # txn-log dir of t1
     mgr.txn_append(spark.range(1), "t1")        # same dir: no new probe
     mgr.txn_append(spark.range(1), "t2")        # txn-log dir of t2
-    mgr.write_snapshot(spark.range(1), "t1")    # head-log dir of t1
-    assert len(probed) == 3 and len(set(probed)) == 3
+    mgr.txn_overwrite(spark.range(1), "t2")     # same dir: no new probe
+    assert len(probed) == 2 and len(set(probed)) == 2
     assert mgr._txn_log_dir("t1") in probed
     assert mgr._txn_log_dir("t2") in probed
-    assert mgr._head_log_dir("t1") in probed
-
-
-def test_lost_head_claim_removes_uncommitted_vdir(spark, tmp_path):
-    """r9 ADVICE (low): when write_snapshot's HEAD commit loses the
-    claim, the just-renamed version dir was never published — it must
-    not linger in snapshot_history (time travel serving uncommitted
-    data) nor count toward vacuum's keep_last."""
-    mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.write_snapshot(spark.range(3), "t")  # v0, seq 0
-    real_put = mgr.claim_backend.put_if_absent
-    stolen = {"done": False}
-
-    def steal_seq(payload, final_path):
-        if "_head_log" in final_path and not stolen["done"]:
-            stolen["done"] = True
-            assert real_put(b'{"seq": 1, "version": 0}', final_path)
-        return real_put(payload, final_path)
-
-    mgr.claim_backend.put_if_absent = steal_seq
-    try:
-        with pytest.raises(ConcurrentWriteError, match="HEAD"):
-            mgr.write_snapshot(spark.range(5), "t")
-    finally:
-        mgr.claim_backend.put_if_absent = real_put
-    # the never-committed v1 is gone: not readable, not in history
-    assert mgr.snapshot_history("t") == [0]
-    with pytest.raises(Exception):
-        mgr.read_snapshot("t", version=1).count()
-    # and the next write re-allocates version 1 cleanly
-    assert mgr.write_snapshot(spark.range(7), "t") == 1
-    assert mgr.read_snapshot("t").count() == 7
 
 
 # -- conditional-put (mock object store) fault injection ------------------

@@ -191,14 +191,14 @@ def test_stats_walk_excludes_reserved_subtrees(spark, tmp_path):
     # txn traffic on the same table path: one superseded + one live set
     tm.txn_append(spark.range(500, 600).selectExpr("id AS x", "id*2 AS y"), "t")
     tm.txn_overwrite(spark.range(700, 710).selectExpr("id AS x", "id*2 AS y"), "t")
-    tm.write_snapshot(df, "t")  # _snapshots subtree too
+    tm.txn_restore("t", 0)  # restore commit: the overwrite dir is dead too
     tm._write_stats("t", ["x"])
     import json as _json
 
     with open(tm._stats_path("t"), encoding="utf-8") as f:
         manifest = _json.load(f)
     assert all(
-        not rel.startswith(("_txn_data", "_txn_log", "_snapshots"))
+        not rel.startswith(("_txn_data", "_txn_log"))
         for rel in manifest["files"]
     ), sorted(manifest["files"])
     # pruning sees only the 100 table rows — never dead txn versions

@@ -32,13 +32,16 @@ def lloyd_old_iter(e, cents):
 
 
 def lloyd_new_iter(blocks, cents, round6):
-    from lakehouse_v3_spark.operators.train_blocks import lloyd_partial_sums
+    from lakehouse_v3_spark.operators.train_blocks import (
+        lloyd_partial_sums,
+        micro_mean,
+    )
 
     k, dim = len(cents), len(cents[0])
     sums, counts = lloyd_partial_sums(blocks, cents)
     new = [
         [
-            round6((int(sums[c][d]) / 1e6) / int(counts[c]))
+            round6(micro_mean(sums[c][d], int(counts[c])))
             if counts[c]
             else None
             for d in range(dim)
