@@ -20,6 +20,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
+from ..io_utils import local_frame
+
 
 @dataclass(frozen=True)
 class CompletenessRule:
@@ -71,7 +73,7 @@ def completeness_rules_to_df(spark: SparkSession, rules: list[CompletenessRule])
          r.description, r.is_active)
         for r in rules
     ]
-    return spark.createDataFrame(rows, COMPLETENESS_CONFIG_SCHEMA)
+    return local_frame(spark, rows, COMPLETENESS_CONFIG_SCHEMA)
 
 
 def validity_rules_to_df(spark: SparkSession, rules: list[ValidityRule]):
@@ -80,7 +82,7 @@ def validity_rules_to_df(spark: SparkSession, rules: list[ValidityRule]):
          r.description, r.is_active)
         for r in rules
     ]
-    return spark.createDataFrame(rows, VALIDITY_CONFIG_SCHEMA)
+    return local_frame(spark, rows, VALIDITY_CONFIG_SCHEMA)
 
 
 def completeness_rules_from_df(df) -> list[CompletenessRule]:

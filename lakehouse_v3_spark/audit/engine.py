@@ -21,6 +21,7 @@ sample is capped (999) distributed with slice(sort_array(collect_list))
 
 from __future__ import annotations
 
+import datetime
 import json
 from functools import reduce
 
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..io_utils import local_frame
 from .config import CompletenessRule, ValidityRule
 
 AUDIT_PASS = 1
@@ -149,10 +151,9 @@ def _run(spark, tables, rules, kind: str) -> DataFrame:
             by_table.setdefault(r.table, []).append(r)
 
     out_rows: list[Row] = []
-    now = None  # stamped once per run, below
-    import datetime
-
-    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    # stamped once per run; aware, because Spark reads a naive datetime
+    # as host-local time
+    now = datetime.datetime.now(datetime.timezone.utc)
 
     for table, table_rules in by_table.items():
         df = tables.get(table)
@@ -213,4 +214,4 @@ def _run(spark, tables, rules, kind: str) -> DataFrame:
                     dt_checked_at=now,
                 )
             )
-    return spark.createDataFrame(out_rows, RESULT_SCHEMA)
+    return local_frame(spark, out_rows, RESULT_SCHEMA)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .io_utils import local_frame
+
 _PID = "_lh_pid"
 
 
@@ -208,7 +210,7 @@ def with_grouped_cumsum(
             [part.schema[c] for c in group_cols]
             + [StructField(_PID, IntegerType()), StructField("_goff", LongType())]
         )
-        offs = spark.createDataFrame(rows, off_schema)
+        offs = local_frame(spark, rows, off_schema)
         w = (
             Window.partitionBy(_PID, *group_cols)
             .orderBy(*[F.col(c) for c in order_cols])

@@ -23,11 +23,13 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io_utils import local_frame
 from .tables import TableManager
 
 
 def _utcnow() -> datetime.datetime:
-    return datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    # aware: Spark reads a naive datetime as host-local time
+    return datetime.datetime.now(datetime.timezone.utc)
 
 
 class LastKeyCheckpoint:
@@ -50,8 +52,8 @@ class LastKeyCheckpoint:
         return row[0]["last_key"] if row else None
 
     def set(self, key: str) -> None:
-        df = self.tm.spark.createDataFrame(
-            [(_utcnow(), key)], "run_at timestamp, last_key string"
+        df = local_frame(
+            self.tm.spark, [(_utcnow(), key)], "run_at timestamp, last_key string"
         )
         self.tm.append(df, self.table)
 

@@ -83,6 +83,7 @@ from pyspark.sql import functions as F
 from ..functions.text import STOPWORDS, tokens
 from ..ids import with_grouped_cumsum
 from ..incremental import FileLogCheckpoint, list_files
+from ..io_utils import local_frame
 from ..operators.dedup import (
     doc_shingle_sets,
     jaccard_verify,
@@ -361,7 +362,8 @@ def emb_cluster_model(embeddings: DataFrame) -> list[list[float]]:
 def centroid_frame(spark, cents: list[list[float]]) -> DataFrame:
     """(cluster, centroid) rows from the model list — the persistable
     clustering artifact (k rows, broadcast-sized)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, c) for i, c in enumerate(cents)],
         "cluster INT, centroid ARRAY<DOUBLE>",
     )
@@ -828,7 +830,7 @@ def _read_or_empty(spark, tm: TableManager, table: str, schema: str) -> DataFram
     first tick (and the rebuild replay) runs against empty state."""
     if tm.exists(table):
         return tm.read(table)
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, [], schema)
 
 
 def incremental_pair_update(
@@ -1055,9 +1057,7 @@ def curation_dag(
                     return {"new_files": 0, "mode": "resume",
                             "pending": pending}
                 raise Skip(f"no landing files for interval [{start}, {end})")
-            listing = spark.createDataFrame(
-                [(p,) for p in pruned], "path STRING"
-            )
+            listing = local_frame(spark, [(p,) for p in pruned], "path STRING")
         else:
             listing = list_files(spark, landing_dir, suffix=".parquet")
         new = log.new_files(listing).select("path")
@@ -1154,7 +1154,7 @@ def curation_dag(
             _DELTA, {"tick": str(int(tm.properties(_DELTA).get("tick", "0")) + 1)}
         )
         tm.overwrite(
-            spark.createDataFrame([(int(new_wm),)], "max_doc_id LONG"),
+            local_frame(spark, [(int(new_wm),)], "max_doc_id LONG"),
             "curation.state_watermark",
         )
         # the file log commits LAST (r11 ADVICE high): a crash anywhere
@@ -1487,7 +1487,8 @@ def curation_dag(
             ("decontaminate", tm.read("curation.silver_clean").count()),
             ("leakage", final.count()),
         ]
-        funnel = spark.createDataFrame(
+        funnel = local_frame(
+            spark,
             [(i, name, int(n)) for i, (name, n) in enumerate(rows)],
             "stage_idx INT, stage STRING, n_docs BIGINT",
         )

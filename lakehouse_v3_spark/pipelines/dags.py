@@ -67,6 +67,48 @@ _AUDIT_MAINTAINED = (
 # UBER: ingest >> csv_to_delta >> bronze2_to_silver >> silver_to_gold
 # ---------------------------------------------------------------------------
 
+def _uber_layers(dag_id: str, ingest, tm: TableManager, retries: int,
+                 retry_delay: float) -> Dag:
+    """The uber DAG below its ``ingest`` task, shared by :func:`uber_dag`
+    and :func:`scheduled_uber_dag`: ``ingest >> csv_to_delta >>
+    bronze2_to_silver >> silver_to_gold >> maintain``, each later layer
+    a full recompute of its upstream table."""
+
+    def csv_to_delta(ctx):
+        raw = tm.read("uber.bronze1").drop("_ingest_file")
+        tm.overwrite(uber.bronze2(raw), "uber.bronze2")
+
+    def bronze2_to_silver(ctx):
+        tm.overwrite(uber.silver(tm.read("uber.bronze2")), "uber.silver")
+
+    def silver_to_gold(ctx):
+        sv = tm.read("uber.silver")
+        tm.overwrite(uber.gold_booking_stats(sv), "uber.gold_booking_stats")
+        tm.overwrite(uber.gold_rushhour_stats(sv), "uber.gold_rushhour_stats")
+        tm.overwrite(
+            uber.gold_cancellation_stats(sv), "uber.gold_cancellation_stats"
+        )
+        tm.overwrite(uber.gold_payment_stats(sv), "uber.gold_payment_stats")
+
+    dag = Dag(dag_id, lock_dir=tm.warehouse_dir)
+    dag.task("ingest", ingest, retries=retries, retry_delay=retry_delay)
+    dag.task("csv_to_delta", csv_to_delta, upstream=("ingest",),
+             retries=retries, retry_delay=retry_delay)
+    dag.task("bronze2_to_silver", bronze2_to_silver,
+             upstream=("csv_to_delta",), retries=retries,
+             retry_delay=retry_delay)
+    dag.task("silver_to_gold", silver_to_gold,
+             upstream=("bronze2_to_silver",), retries=retries,
+             retry_delay=retry_delay)
+    # maintenance rides every run (none_failed: a no-new-files Skip
+    # upstream must not cascade) and self-skips under the file bound; a
+    # backfill of N intervals appends N file-sets to bronze1
+    dag.task("maintain", maintain_task(tm, _UBER_MAINTAINED),
+             upstream=("silver_to_gold",), retries=retries,
+             retry_delay=retry_delay, trigger_rule="none_failed")
+    return dag
+
+
 def uber_dag(
     spark,
     raw_dir: str,
@@ -96,38 +138,7 @@ def uber_dag(
         log.record(new)
         return {"new_files": len(paths)}
 
-    def csv_to_delta(ctx):
-        raw = tm.read("uber.bronze1").drop("_ingest_file")
-        tm.overwrite(uber.bronze2(raw), "uber.bronze2")
-
-    def bronze2_to_silver(ctx):
-        tm.overwrite(uber.silver(tm.read("uber.bronze2")), "uber.silver")
-
-    def silver_to_gold(ctx):
-        sv = tm.read("uber.silver")
-        tm.overwrite(uber.gold_booking_stats(sv), "uber.gold_booking_stats")
-        tm.overwrite(uber.gold_rushhour_stats(sv), "uber.gold_rushhour_stats")
-        tm.overwrite(
-            uber.gold_cancellation_stats(sv), "uber.gold_cancellation_stats"
-        )
-        tm.overwrite(uber.gold_payment_stats(sv), "uber.gold_payment_stats")
-
-    dag = Dag("uber", lock_dir=tm.warehouse_dir)
-    dag.task("ingest", ingest, retries=retries, retry_delay=retry_delay)
-    dag.task("csv_to_delta", csv_to_delta, upstream=("ingest",),
-             retries=retries, retry_delay=retry_delay)
-    dag.task("bronze2_to_silver", bronze2_to_silver,
-             upstream=("csv_to_delta",), retries=retries,
-             retry_delay=retry_delay)
-    dag.task("silver_to_gold", silver_to_gold,
-             upstream=("bronze2_to_silver",), retries=retries,
-             retry_delay=retry_delay)
-    # maintenance rides every run (none_failed: a no-new-files Skip
-    # upstream must not cascade) and self-skips under the file bound
-    dag.task("maintain", maintain_task(tm, _UBER_MAINTAINED),
-             upstream=("silver_to_gold",), retries=retries,
-             retry_delay=retry_delay, trigger_rule="none_failed")
-    return dag
+    return _uber_layers("uber", ingest, tm, retries, retry_delay)
 
 
 def _interval_csv_files(raw_dir: str, start, end, suffix: str = ".csv") -> list[str]:
@@ -266,38 +277,7 @@ def scheduled_uber_dag(
             "files_read": sorted(paths),
         }
 
-    def csv_to_delta(ctx):
-        raw = tm.read("uber.bronze1").drop("_ingest_file")
-        tm.overwrite(uber.bronze2(raw), "uber.bronze2")
-
-    def bronze2_to_silver(ctx):
-        tm.overwrite(uber.silver(tm.read("uber.bronze2")), "uber.silver")
-
-    def silver_to_gold(ctx):
-        sv = tm.read("uber.silver")
-        tm.overwrite(uber.gold_booking_stats(sv), "uber.gold_booking_stats")
-        tm.overwrite(uber.gold_rushhour_stats(sv), "uber.gold_rushhour_stats")
-        tm.overwrite(
-            uber.gold_cancellation_stats(sv), "uber.gold_cancellation_stats"
-        )
-        tm.overwrite(uber.gold_payment_stats(sv), "uber.gold_payment_stats")
-
-    dag = Dag("uber_scheduled", lock_dir=tm.warehouse_dir)
-    dag.task("ingest", ingest, retries=retries, retry_delay=retry_delay)
-    dag.task("csv_to_delta", csv_to_delta, upstream=("ingest",),
-             retries=retries, retry_delay=retry_delay)
-    dag.task("bronze2_to_silver", bronze2_to_silver,
-             upstream=("csv_to_delta",), retries=retries,
-             retry_delay=retry_delay)
-    dag.task("silver_to_gold", silver_to_gold,
-             upstream=("bronze2_to_silver",), retries=retries,
-             retry_delay=retry_delay)
-    # same maintenance discipline as the unscheduled DAG: a backfill
-    # of N intervals appends N file-sets to bronze1; maintain bounds it
-    dag.task("maintain", maintain_task(tm, _UBER_MAINTAINED),
-             upstream=("silver_to_gold",), retries=retries,
-             retry_delay=retry_delay, trigger_rule="none_failed")
-    return dag
+    return _uber_layers("uber_scheduled", ingest, tm, retries, retry_delay)
 
 
 # ---------------------------------------------------------------------------

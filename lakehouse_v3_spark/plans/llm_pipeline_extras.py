@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io_utils import load
+from ..io_utils import load, local_frame
 from ..operators.dedup import md5_int, word_shingles
 from ..partitioning import fan_out_scan as _fan_out_scan
 from . import register
@@ -801,8 +801,8 @@ def bpe_train_merges(spark, sf_dir):
         if stale is not None:
             stale.unpersist(blocking=False)
         prev.unpersist(blocking=False)
-    return spark.createDataFrame(
-        merges, "merge_idx INT, pair STRING, pair_count LONG"
+    return local_frame(
+        spark, merges, "merge_idx INT, pair STRING, pair_count LONG"
     )
 
 

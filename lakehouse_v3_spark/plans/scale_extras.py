@@ -16,7 +16,7 @@ import threading
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..io_utils import load
+from ..io_utils import load, local_frame
 from ..partitioning import fan_out_scan
 from ..operators.dedup import md5_int
 from ..operators.similarity import near_dup_pairs
@@ -486,7 +486,8 @@ def _ranks_fused(df, seg_col: str, order_col: str, tiebreak_col: str):
             row_cum += r["_rows"]
             dense_cum += r["_nd"] - adj
             prev_hi = r["_hi"]
-    offs = spark.createDataFrame(
+    offs = local_frame(
+        spark,
         rows,
         f"{seg_col} {df.schema[seg_col].dataType.simpleString()}, "
         f"{_PID} INT, _roff LONG, _doff LONG, _nseg LONG",
@@ -1080,7 +1081,8 @@ def quantiles_exact_distributed(spark, sf_dir):
     # n comes back from the histogram's own first (min, max, count)
     # pass — no separate count() scan (r6 verdict item #7)
     vals, n = exact_percentiles(o, "o_totalprice", _QUANT_PS, return_count=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p, v, n) for p, v in zip(_QUANT_PS, vals)],
         "pct double, value double, n_rows long",
     )

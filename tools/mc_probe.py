@@ -1,6 +1,6 @@
 """Multi-core idle canary (round 13 addition to the BASELINE protocol).
 
-The single-core CPU loop in idle_probe.py misses host-level MULTI-CORE
+A single-core CPU loop (the old idle probe) misses host-level MULTI-CORE
 interference (vCPU overcommit): it read ~0.68 s while a 32-way bench
 showed uniform 1.4-4x stalls on untouched queries. This probe times the
 SAME loop on every core concurrently; on a quiet host the parallel
