@@ -45,6 +45,7 @@ import os
 import tempfile
 import threading
 import time
+import warnings
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
@@ -194,7 +195,10 @@ class Dag:
         """Execute the DAG. ``max_workers>1`` runs independent ready
         tasks concurrently (threads — Spark actions are JVM-side, so
         the GIL is not the bottleneck; the cluster interleaves their
-        stages). Holds the dag_id flock for the whole run."""
+        stages). Pool threads run tasks under the caller's Spark local
+        properties (job group, description, scheduler pool), so a
+        ``cancelJobGroup`` reaches every task's jobs. Holds the dag_id
+        flock for the whole run."""
         order = self._toposort()
         report = DagRunReport(self.dag_id)
         lock_path = os.path.join(self._lock_dir, f"dagrun_{self.dag_id}.lock")
@@ -206,6 +210,7 @@ class Dag:
                 if max_workers > 1
                 else None
             )
+            run_one = _with_local_properties(self._run_one) if pool else None
             try:
                 while remaining or running:
                     progressed = False
@@ -222,7 +227,7 @@ class Dag:
                             report.tasks[name] = self._run_one(spec, ctx)
                             progressed = True
                         else:
-                            running[pool.submit(self._run_one, spec, ctx)] = name
+                            running[pool.submit(run_one, spec, ctx)] = name
                             progressed = True
                     if running:
                         done, _ = wait(
@@ -236,6 +241,22 @@ class Dag:
                 if pool is not None:
                     pool.shutdown(wait=True)
         return report
+
+
+def _with_local_properties(fn):
+    """``fn`` wrapped to run under the calling thread's Spark local
+    properties. PySpark pins each Python thread to its own JVM thread,
+    and a pool thread's JVM thread does not inherit the caller's job
+    group, description or scheduler pool. Without an active
+    SparkContext there is nothing to carry: ``fn`` is returned."""
+    from pyspark import SparkContext, inheritable_thread_target
+
+    if SparkContext._active_spark_context is None:
+        return fn
+    with warnings.catch_warnings():
+        # the warning is about session tags, which this package never sets
+        warnings.filterwarnings("ignore", "Spark session is not provided")
+        return inheritable_thread_target(fn)
 
 
 class _dag_lock:

@@ -159,6 +159,25 @@ def test_parallel_branches_run_concurrently():
     assert rep.ok and rep.tasks["join"].result == "done"
 
 
+def test_parallel_tasks_run_in_the_callers_job_group(spark):
+    """Pool threads carry the caller's Spark local properties, so every
+    task's jobs belong to the caller's job group (and cancelJobGroup
+    reaches them), as they do with max_workers=1."""
+    sc = spark.sparkContext
+    d = _dag()
+    for name in ("a", "b", "c"):
+        d.task(name, lambda c: spark.range(10).count())
+    sc.setJobGroup("dag-outer-group", "parallel dag run")
+    try:
+        rep = d.run(max_workers=2)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert rep.ok
+    assert len(sc.statusTracker().getJobIdsForGroup("dag-outer-group")) >= 3
+
+
 def test_ctx_is_threaded():
     d = _dag()
     d.task("a", lambda c: c["x"] + 1)

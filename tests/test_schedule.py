@@ -271,6 +271,20 @@ _ROWS = [
 ]
 
 
+def _uber_landing() -> str:
+    """``_ROWS`` in the reference collectors' Hive-style landing layout
+    (date=YYYY-MM-DD dirs, airflow/tasks/uber/ingestion.py:147-166)."""
+    raw = tempfile.mkdtemp(prefix="uber_raw_")
+    by_day: dict[str, list[str]] = {}
+    for row in _ROWS:
+        by_day.setdefault(row.split(",", 1)[0], []).append(row)
+    for day, rows in by_day.items():
+        os.makedirs(os.path.join(raw, f"date={day}"))
+        with open(os.path.join(raw, f"date={day}", "part-0.csv"), "w") as f:
+            f.write(_CSV_HEADER + "\n" + "\n".join(rows) + "\n")
+    return raw
+
+
 def _gold_rows(tm, table):
     df = tm.read(table)
     return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
@@ -280,16 +294,7 @@ def test_scheduled_uber_backfill_matches_batch_run(spark):
     from lakehouse_v3_spark.pipelines.dags import scheduled_uber_dag, uber_dag
     from lakehouse_v3_spark.tables import TableManager
 
-    # landing zone in the reference collectors' Hive-style layout
-    # (date=YYYY-MM-DD dirs, airflow/tasks/uber/ingestion.py:147-166)
-    raw = tempfile.mkdtemp(prefix="uber_raw_")
-    by_day: dict[str, list[str]] = {}
-    for row in _ROWS:
-        by_day.setdefault(row.split(",", 1)[0], []).append(row)
-    for day, rows in by_day.items():
-        os.makedirs(os.path.join(raw, f"date={day}"))
-        with open(os.path.join(raw, f"date={day}", "part-0.csv"), "w") as f:
-            f.write(_CSV_HEADER + "\n" + "\n".join(rows) + "\n")
+    raw = _uber_landing()
 
     # batch reference run: one uber_dag pass over everything
     tm_batch = TableManager(
@@ -340,6 +345,66 @@ def test_scheduled_uber_backfill_matches_batch_run(spark):
     assert [lg for lg, _ in out2] == [D(2024, 5, 4)]
     assert out2[0][1].states()["ingest"] == "skipped"
     assert _gold_rows(tm_sched, "uber.gold_booking_stats") == before
+
+
+def test_repeated_uber_tick_and_audit_reuse_generated_code(spark):
+    """The session's generated-code cache holds the working set of a
+    scheduled uber tick plus an audit run: repeating both over a fresh
+    copy of the same warehouse compiles only the per-run timestamp
+    literals again (current_timestamp() is inlined as a Java
+    constant). With Spark's default 100-entry cache the classes evict
+    each other and the second run recompiled ~250 of them."""
+    import shutil
+    import time
+
+    from lakehouse_v3_spark.audit.config import CompletenessRule, ValidityRule
+    from lakehouse_v3_spark.pipelines.dags import (
+        audit_dag,
+        scheduled_uber_dag,
+        uber_dag,
+    )
+    from lakehouse_v3_spark.tables import TableManager
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2048"
+    raw = _uber_landing()
+    # history: day 1 through the file-log DAG, as a long-lived
+    # deployment would hold it before the next scheduled tick
+    snapshot = tempfile.mkdtemp(prefix="uber_wh_hist_")
+    assert uber_dag(
+        spark, os.path.join(raw, "date=2024-05-01"),
+        TableManager(spark, snapshot, backend="parquet"), retries=0,
+    ).run().ok
+    comp = [CompletenessRule(1, "silver", ("Booking_ID", "Booking_Value"),
+                             ("Booking_ID",))]
+    val = [ValidityRule(2, "silver", "Ride_Distance > 10", ("Booking_ID",))]
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    # the counter is live: a never-seen literal is a never-seen class
+    before = compiles.getCount()
+    spark.range(1).selectExpr(f"id * {time.time_ns()} AS x").collect()
+    assert compiles.getCount() > before
+    per_run = []
+    for _ in range(2):
+        wh = os.path.join(tempfile.mkdtemp(prefix="uber_wh_run_"), "wh")
+        shutil.copytree(snapshot, wh)
+        tm = TableManager(spark, wh, backend="parquet")
+        before = compiles.getCount()
+        out = ScheduledDag(
+            scheduled_uber_dag(spark, raw, tm),
+            Schedule(start=D(2024, 5, 2), interval=timedelta(days=1)),
+            state_dir=os.path.join(wh, "_schedule"),
+        ).tick(D(2024, 5, 3, 1, 0))
+        assert [lg for lg, _ in out] == [D(2024, 5, 2)]
+        assert out[0][1].ok, out[0][1].states()
+        rep = audit_dag(
+            spark, {"silver": tm.read("uber.silver")}, comp, val, tm,
+            transport=lambda msg: None, retries=0,
+        ).run(max_workers=2)
+        assert rep.ok, rep.states()
+        per_run.append(compiles.getCount() - before)
+    assert per_run[1] <= 8, per_run
 
 
 def test_concurrent_ticks_run_each_logical_date_exactly_once():
