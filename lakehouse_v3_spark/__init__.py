@@ -17,6 +17,11 @@ Layout:
     streaming/      structured-streaming ingest patterns
     audit/          config-driven data-quality engine
     pipelines/      medallion pipeline compositions (uber/coin/stocks/news)
+    worker_imports.py  workers skip re-reading unchanged zips per task
 """
 
+from .worker_imports import install as _install_zip_guard
+
 __version__ = "0.1.0"
+
+_install_zip_guard()

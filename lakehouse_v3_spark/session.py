@@ -40,13 +40,17 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_lakehouse_pkg_shipped", False):
         return
+    import atexit
+    import shutil
     import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.mkdtemp(prefix="lakehouse-pyfiles-"), "lakehouse_v3_spark.zip"
-    )
+    zdir = tempfile.mkdtemp(prefix="lakehouse-pyfiles-")
+    # addPyFile serves the zip from this dir to every executor fetch for
+    # the life of the context, so it goes at interpreter exit, not at stop
+    atexit.register(shutil.rmtree, zdir, ignore_errors=True)
+    zpath = os.path.join(zdir, "lakehouse_v3_spark.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in sorted(files):
