@@ -783,7 +783,7 @@ def run_funnel(
 # the CURRENT table at action time, so a retry after a partial commit
 # appends nothing twice), batch-derived frames are localCheckpointed
 # BEFORE any append they feed, and derived tables are deterministic
-# overwrites (atomic swap).
+# overwrites (one commit each).
 
 # maintenance (r11 verdict item #2): the APPEND-ONLY tables — one
 # small file-set lands per tick, so file counts grow linearly with
@@ -801,6 +801,23 @@ _MAINTAINED_TABLES = (
     "curation.near_dup_pairs",
     "curation.emb_members",
     "curation.emb_pairs",
+)
+# overwritten every tick (or once): one commit each, never compacted,
+# but vacuumed so each tick's overwrite does not leave a copy behind
+_OVERWRITTEN_TABLES = (
+    "curation.bronze_delta",
+    "curation.state_watermark",
+    "curation.quality_delta",
+    "curation.exact_delta",
+    "curation.neardup_delta",
+    "curation.cluster_centroids",
+    "curation.sem_drops",
+    "curation.silver_clean",
+    "curation.gold_split",
+    "curation.gold_corpus",
+    "curation.gold_packed",
+    "curation.gold_summary",
+    "curation.gold_funnel",
 )
 MAINTAIN_FILE_BOUND = 64  # compact a table when its data files exceed this
 
@@ -958,10 +975,10 @@ def curation_dag(
     - **crash-recoverable** (r11 ADVICE high): the file log is
       committed LAST inside ingest (after bronze, the delta and the
       watermark), and batch consumption is tracked PER STAGE — ingest
-      stamps a monotone ``tick`` counter on the delta's properties
-      sidecar, each downstream task self-skips iff its own
+      stamps a monotone ``tick`` counter on the delta's table
+      properties, each downstream task self-skips iff its own
       ``consumed_<stage>`` marker equals the current tick (driver-side
-      JSON reads, zero Spark jobs) and stamps the marker only AFTER
+      commit-log reads, zero Spark jobs) and stamps the marker only AFTER
       its body committed. Tasks run under ``trigger_rule=
       "none_failed"``, so an ingest Skip no longer swallows an
       unconsumed delta: a run that crashed after ingest (or anywhere
@@ -1012,7 +1029,7 @@ def curation_dag(
 
     def _unconsumed() -> list[str]:
         """Stages whose consumed-marker lags the current delta tick —
-        pure driver-side sidecar reads, zero Spark jobs."""
+        pure driver-side commit-log reads, zero Spark jobs."""
         t = _tick()
         if t is None:
             return []
@@ -1142,8 +1159,7 @@ def curation_dag(
             # fold (r12 ADVICE medium, interval-scoped only): the
             # crashed run's unconsumed delta PLUS this interval's new
             # batch become one tick. localCheckpoint materializes the
-            # union before the overwrite swaps the delta dir out from
-            # under its own scan.
+            # union before the overwrite replaces the delta it scans.
             mode = "fold"
             tm.overwrite(
                 tm.read(_DELTA).unionByName(raw).localCheckpoint(), _DELTA
@@ -1303,7 +1319,7 @@ def curation_dag(
         # parallelism is ~n/CLUSTER_TARGET_ROWS blocks.
         nd_delta = tm.read("curation.neardup_delta")
         if not tm.exists("curation.cluster_centroids"):
-            # trained_n on the sidecar is what the ingest staleness
+            # trained_n in the properties is what the ingest staleness
             # check compares the growing feature table against
             # (RETRAIN_GROWTH_FACTOR); a retrain arrives here again
             # via the rebuild path having dropped the centroid table
@@ -1500,13 +1516,14 @@ def curation_dag(
         missing" #3): every append-only table takes one small file-set
         per tick, so a month of daily ticks is hundreds of file-sets
         per table — the classic small-file problem. This task counts
-        each table's data files (a driver-side walk, no Spark job) and,
-        when a table exceeds MAINTAIN_FILE_BOUND, rewrites it to
-        ⌈rows/1M⌉ files (TableManager.compact — the OPTIMIZE analogue)
-        and vacuums stray temp dirs — the reference's own VACUUM
+        each table's live data files (from its commit log, no Spark
+        job) and, when a table exceeds MAINTAIN_FILE_BOUND, rewrites it
+        to ⌈rows/1M⌉ files (TableManager.compact — the OPTIMIZE
+        analogue); every table the DAG writes is vacuumed (the
+        overwritten ones included) — the reference's own VACUUM
         discipline (uber/drop_dup.py:96-101) applied to the state
-        layer. The bound IS the cadence: steady-state ticks walk a few
-        directories and Skip; every ~bound ticks one table pays one
+        layer. The bound IS the cadence: steady-state ticks read a few
+        logs and Skip; every ~bound ticks one table pays one
         deterministic overwrite (idempotent under crash-retry — a
         replay just compacts again or finds the count low). Compaction
         never changes table CONTENTS, so incremental ≡ full-recompute
@@ -1516,14 +1533,16 @@ def curation_dag(
         too); the bound is read at CALL time so tests can patch it."""
         from .maintenance import run_maintain
 
-        return run_maintain(tm, _MAINTAINED_TABLES, MAINTAIN_FILE_BOUND)
+        return run_maintain(
+            tm, _MAINTAINED_TABLES, MAINTAIN_FILE_BOUND, _OVERWRITTEN_TABLES
+        )
 
     def _staged(name: str, body):
         """Per-stage consumption wrapper (r11 ADVICE high): run iff the
         current delta tick hasn't been consumed by THIS stage yet, and
         stamp the marker only after the body committed — so a crash
         anywhere re-runs exactly the unconsumed suffix of the chain on
-        the next DAG run. The check is two sidecar JSON reads: the
+        the next DAG run. The check is two commit-log reads: the
         steady-state all-consumed tick stays at zero Spark jobs.
         ``ctx["_fail_tasks"]`` is the crash-injection test seam."""
 

@@ -45,12 +45,19 @@ from .maintenance import maintain_task
 
 # append-only bronze grows one file-set per run (the reference VACUUMs
 # this zone itself, uber/drop_dup.py:96-101); the derived layers are
-# atomic-swap overwrites, listed so maintain also sweeps their stray
-# temp dirs
+# overwritten every run, listed so maintain also vacuums the commit
+# dirs each overwrite supersedes
 _UBER_MAINTAINED = (
     "uber.bronze1",
     "uber.bronze2",
     "uber.silver",
+)
+# one small overwrite per run each: vacuumed, never compacted
+_UBER_GOLD = (
+    "uber.gold_booking_stats",
+    "uber.gold_rushhour_stats",
+    "uber.gold_cancellation_stats",
+    "uber.gold_payment_stats",
 )
 
 _AUDIT_MAINTAINED = (
@@ -103,7 +110,8 @@ def _uber_layers(dag_id: str, ingest, tm: TableManager, retries: int,
     # maintenance rides every run (none_failed: a no-new-files Skip
     # upstream must not cascade) and self-skips under the file bound; a
     # backfill of N intervals appends N file-sets to bronze1
-    dag.task("maintain", maintain_task(tm, _UBER_MAINTAINED),
+    dag.task("maintain",
+             maintain_task(tm, _UBER_MAINTAINED, vacuum_only=_UBER_GOLD),
              upstream=("silver_to_gold",), retries=retries,
              retry_delay=retry_delay, trigger_rule="none_failed")
     return dag
@@ -362,8 +370,8 @@ def audit_dag(
     dag.task("005_send_alert_hourly", send_alert_hourly,
              upstream=("004_fact_completeness", "004_fact_validity"),
              retries=retries)
-    # result tables are rewritten per run; maintain sweeps their stray
-    # temp dirs and bounds any backend that accumulates (none_failed:
+    # result tables are rewritten per run; maintain vacuums their
+    # superseded commit dirs and bounds any that accumulate (none_failed:
     # an alert-less Skip in 005 is independent — maintain keys on the
     # 004 facts only)
     dag.task("maintain", maintain_task(tm, _AUDIT_MAINTAINED),

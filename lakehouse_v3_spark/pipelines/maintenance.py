@@ -10,19 +10,23 @@ audit).
 
 Design (unchanged from the r12 curation task, now shared):
 
-- the file count check is a DRIVER-SIDE directory walk — zero Spark
+- the file count is read from the table's commit log — zero Spark
   jobs on the steady-state run where everything is within bound;
 - when a table exceeds the bound it is rewritten to ⌈rows/1M⌉ files
-  (``TableManager.compact``, the OPTIMIZE analogue) and stray temp
-  dirs are vacuumed;
+  (``TableManager.compact``, the OPTIMIZE analogue);
+- every visited table is vacuumed (a log replay plus one listing, no
+  Spark job), so the commit dirs each overwrite supersedes do not pile
+  up between compactions. A DAG passes the tables it overwrites every
+  run as ``vacuum_only``: one commit per run never needs compacting,
+  but without a vacuum each run would leave a full copy on disk;
 - the bound IS the cadence: every ~bound runs one table pays one
   deterministic overwrite, idempotent under crash-retry (a replay
   compacts again or finds the count low);
 - compaction never changes table CONTENTS, so every
   incremental ≡ full-recompute equivalence holds across it.
 
-At 100 TB the same task shape holds: the walk touches file METADATA
-only (object-store LIST), and compaction is per-table, so a DAG with
+At 100 TB the same task shape holds: the count reads the log, not the
+data files, and compaction is per-table, so a DAG with
 many tables amortizes one table's rewrite per run rather than paying
 them all at once.
 """
@@ -36,33 +40,42 @@ from ..tables import TableManager
 MAINTAIN_FILE_BOUND = 64
 
 
-def run_maintain(tm: TableManager, tables, file_bound: int) -> dict:
-    """One maintenance sweep over ``tables``: compact + vacuum every
-    existing table whose data-file count exceeds ``file_bound``;
-    raises :class:`Skip` (zero Spark jobs) when all are within bound.
-    Returns ``{"compacted": {table: {"before": n, "after": m}}}``."""
+def run_maintain(
+    tm: TableManager, tables, file_bound: int, vacuum_only=()
+) -> dict:
+    """One maintenance sweep: compact every existing table of ``tables``
+    whose live data-file count exceeds ``file_bound``, then vacuum every
+    existing table of ``tables`` and ``vacuum_only``; raises
+    :class:`Skip` (zero Spark jobs) when nothing was compacted. Returns
+    ``{"compacted": {table: {"before": n, "after": m}}}``."""
     compacted = {}
     for t in tables:
         if not tm.exists(t):
             continue
-        n_files = sum(1 for _ in tm._data_files(tm.path(t)))
+        n_files = len(tm.files(t))
         if n_files > file_bound:
             compacted[t] = {"before": n_files, "after": tm.compact(t)}
+        tm.vacuum(t)
+    for t in vacuum_only:
+        if tm.exists(t):
             tm.vacuum(t)
     if not compacted:
         raise Skip(f"all tables within {file_bound} data files")
     return {"compacted": compacted}
 
 
-def maintain_task(tm: TableManager, tables, file_bound: "int | None" = None):
-    """Task-body factory for a DAG ``maintain`` task over ``tables``.
+def maintain_task(
+    tm: TableManager, tables, file_bound: "int | None" = None, vacuum_only=()
+):
+    """Task-body factory for a DAG ``maintain`` task over ``tables``
+    (and ``vacuum_only``, see :func:`run_maintain`).
     ``file_bound=None`` resolves the module's MAINTAIN_FILE_BOUND at
     CALL time (so tests can monkeypatch the global); an explicit int
     pins it."""
-    tables = tuple(tables)
+    tables, vacuum_only = tuple(tables), tuple(vacuum_only)
 
     def maintain(ctx):
         bound = MAINTAIN_FILE_BOUND if file_bound is None else int(file_bound)
-        return run_maintain(tm, tables, bound)
+        return run_maintain(tm, tables, bound, vacuum_only)
 
     return maintain

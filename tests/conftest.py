@@ -65,10 +65,8 @@ def pytest_collection_modifyitems(config, items):
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from lakehouse_v3_spark.session import get_spark
-
-    import tempfile
 
     spark = get_spark(
         app_name="lakehouse_v3_spark-tests",
@@ -77,7 +75,7 @@ def spark():
         driver_memory=os.environ.get("SPARK_GRAFT_TEST_DRIVER_MEM", "8g"),
         extra_conf={
             # keep saveAsTable/bucketing tests out of the repo dir
-            "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark-wh-"),
+            "spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("spark-wh")),
         },
     )
     yield spark

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -129,10 +128,10 @@ def _expected_counts(docs) -> dict[str, int]:
     }
 
 
-def test_curation_dag_end_to_end_skip_and_incremental(spark):
-    landing = tempfile.mkdtemp(prefix="curation_land_")
+def test_curation_dag_end_to_end_skip_and_incremental(spark, tmp_path_factory):
+    landing = str(tmp_path_factory.mktemp("curation_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="curation_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("curation_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -292,14 +291,25 @@ def _funnel_tables_equal_full(spark, tm):
     }
 
 
-def test_incremental_ticks_equal_full_recompute(spark):
+def _assert_overwrites_vacuumed(tm):
+    """Every table the DAG writes is maintained, and every one it
+    overwrites each tick holds only its live commit dir after the
+    maintain task: disk use stays flat across ticks."""
+    written = {f"curation.{d}" for d in os.listdir(tm.path("curation"))}
+    maintained = set(C._MAINTAINED_TABLES) | set(C._OVERWRITTEN_TABLES)
+    assert written <= maintained, written - maintained
+    for t in written & set(C._OVERWRITTEN_TABLES):
+        assert len(os.listdir(os.path.join(tm.path(t), "_txn_data"))) == 1, t
+
+
+def test_incremental_ticks_equal_full_recompute(spark, tmp_path_factory):
     """Three monotone ticks through the incremental DAG converge to the
     EXACT tables one run_funnel over the union corpus produces — the §5
     property-gate pattern (like test_schedule's backfill ≡ batch), at
     frame level for every silver/gold table including the pair set."""
-    landing = tempfile.mkdtemp(prefix="cur_inc_land_")
+    landing = str(tmp_path_factory.mktemp("cur_inc_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_inc_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_inc_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -327,14 +337,14 @@ def test_incremental_ticks_equal_full_recompute(spark):
         _funnel_tables_equal_full(spark, tm)
 
 
-def test_rebuild_on_nonmonotone_batch(spark):
+def test_rebuild_on_nonmonotone_batch(spark, tmp_path_factory):
     """A tick violating the max-id watermark contract (arriving ids at
     or below the stored max) cannot be patched incrementally — ingest
     must detect it, report mode='rebuild', and replay the corpus; the
     tables still end exactly equal to the full recompute."""
-    landing = tempfile.mkdtemp(prefix="cur_rb_land_")
+    landing = str(tmp_path_factory.mktemp("cur_rb_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_rb_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_rb_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -351,7 +361,7 @@ def test_rebuild_on_nonmonotone_batch(spark):
     _funnel_tables_equal_full(spark, tm)
 
 
-def test_incremental_pair_update_plan_is_batch_scoped(spark):
+def test_incremental_pair_update_plan_is_batch_scoped(spark, tmp_path_factory):
     """The verified-pair lineage on an incremental tick must scan ONLY
     the batch delta and the two index tables — never bronze_docs /
     silver_exact / the documents fixture (the r10 scale finding: a
@@ -360,7 +370,7 @@ def test_incremental_pair_update_plan_is_batch_scoped(spark):
     import io as _io
     from contextlib import redirect_stdout
 
-    wh = tempfile.mkdtemp(prefix="cur_plan_wh_")
+    wh = str(tmp_path_factory.mktemp("cur_plan_wh"))
     tm = TableManager(spark, wh, backend="parquet")
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -393,15 +403,15 @@ def test_incremental_pair_update_plan_is_batch_scoped(spark):
 # r10 verdict item #3: embedding stages composed into the pipeline
 # ---------------------------------------------------------------------------
 
-def test_embedding_stages_dag_equals_funnel(spark):
+def test_embedding_stages_dag_equals_funnel(spark, tmp_path_factory):
     """With the embeddings feature table, the DAG grows a semantic_dedup
     task (SemDeDup centroid-policy pruning over incrementally-maintained
     emb pairs) and the embedding-cosine leakage drop — and over two
     incremental ticks still converges to exactly
     run_funnel(embeddings=...) on the union corpus."""
-    landing = tempfile.mkdtemp(prefix="cur_emb_land_")
+    landing = str(tmp_path_factory.mktemp("cur_emb_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_emb_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_emb_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -424,6 +434,7 @@ def test_embedding_stages_dag_equals_funnel(spark):
             # the emb probe was batch-scoped too
             assert sem["batch_docs"] == tm.read("curation.neardup_delta").count()
             assert sem["batch_docs"] < tm.read("curation.silver_neardup").count()
+    _assert_overwrites_vacuumed(tm)
 
     f = C.run_funnel(
         tm.read("curation.bronze_docs"), materialize_pairs=True, embeddings=emb
@@ -468,15 +479,15 @@ def test_embedding_stages_dag_equals_funnel(spark):
 # anywhere down the chain) must fold the batch on the next DAG run
 # ---------------------------------------------------------------------------
 
-def test_crash_after_ingest_resumes_and_converges(spark):
+def test_crash_after_ingest_resumes_and_converges(spark, tmp_path_factory):
     """Ingest commits, then the first downstream stage 'crashes'
     (injected). Before r12 a re-run made ingest Skip and every stage
     upstream-skip — the batch's delta was never folded (permanent
     silent divergence). Now the re-run resumes: ingest reports
     mode='resume' and the unconsumed stages execute."""
-    landing = tempfile.mkdtemp(prefix="cur_crash_land_")
+    landing = str(tmp_path_factory.mktemp("cur_crash_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_crash_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_crash_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -510,13 +521,13 @@ def test_crash_after_ingest_resumes_and_converges(spark):
     assert rep4.ok and set(rep4.states().values()) == {"skipped"}
 
 
-def test_crash_mid_chain_resumes_only_unconsumed_suffix(spark):
+def test_crash_mid_chain_resumes_only_unconsumed_suffix(spark, tmp_path_factory):
     """A crash at leakage_drop: the re-run must SKIP the stages that
     already consumed the tick (their markers match) and run exactly
     the unconsumed suffix."""
-    landing = tempfile.mkdtemp(prefix="cur_crash2_land_")
+    landing = str(tmp_path_factory.mktemp("cur_crash2_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_crash2_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_crash2_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -540,13 +551,13 @@ def test_crash_mid_chain_resumes_only_unconsumed_suffix(spark):
     _funnel_tables_equal_full(spark, tm)
 
 
-def test_redelivery_rebuild_dedupes_bronze(spark):
+def test_redelivery_rebuild_dedupes_bronze(spark, tmp_path_factory):
     """r11 ADVICE #3: a non-monotone tick that RE-DELIVERS already
     ingested doc_ids must not leave duplicate rows in bronze, and the
     rebuild replay must converge to run_funnel over distinct docs."""
-    landing = tempfile.mkdtemp(prefix="cur_redel_land_")
+    landing = str(tmp_path_factory.mktemp("cur_redel_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_redel_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_redel_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -572,11 +583,11 @@ def test_redelivery_rebuild_dedupes_bronze(spark):
 # bounded across many ticks and compaction never changes contents
 # ---------------------------------------------------------------------------
 
-def test_maintain_bounds_state_table_file_counts(spark, monkeypatch):
+def test_maintain_bounds_state_table_file_counts(spark, monkeypatch, tmp_path_factory):
     monkeypatch.setattr(C, "MAINTAIN_FILE_BOUND", 10)
-    landing = tempfile.mkdtemp(prefix="cur_maint_land_")
+    landing = str(tmp_path_factory.mktemp("cur_maint_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_maint_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_maint_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -595,11 +606,12 @@ def test_maintain_bounds_state_table_file_counts(spark, monkeypatch):
             compact_runs += 1
             assert rep.tasks["maintain"].result["compacted"]
     assert compact_runs >= 1, "bound 10 never triggered across 6 ticks"
+    _assert_overwrites_vacuumed(tm)
     # file counts bounded: nothing sits above bound + one tick's worth
     slack = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for t in C._MAINTAINED_TABLES:
         if tm.exists(t):
-            n = sum(1 for _ in tm._data_files(tm.path(t)))
+            n = len(tm.files(t))
             assert n <= 10 + slack, (t, n)
     # compaction never changed CONTENTS: incremental ≡ full recompute
     _funnel_tables_equal_full(spark, tm)
@@ -608,15 +620,15 @@ def test_maintain_bounds_state_table_file_counts(spark, monkeypatch):
     assert set(rep.states().values()) == {"skipped"}
 
 
-def test_crash_then_new_files_does_not_lose_the_pending_batch(spark):
+def test_crash_then_new_files_does_not_lose_the_pending_batch(spark, tmp_path_factory):
     """The sharpest crash-recovery corner: batch A's run crashes after
     ingest, then batch B LANDS before anyone re-runs. Ingest must fold
     A first (resume — ignoring B, whose files stay unlogged) and pick
     B up on the following run; overwriting the unconsumed delta with B
     would lose A's silver contributions permanently."""
-    landing = tempfile.mkdtemp(prefix="cur_crash3_land_")
+    landing = str(tmp_path_factory.mktemp("cur_crash3_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_crash3_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_crash3_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -654,16 +666,16 @@ def test_crash_then_new_files_does_not_lose_the_pending_batch(spark):
 # r12 verdict item #2: cluster-model retrain-on-growth policy
 # ---------------------------------------------------------------------------
 
-def test_cluster_model_retrains_when_feature_table_outgrows(spark):
+def test_cluster_model_retrains_when_feature_table_outgrows(spark, tmp_path_factory):
     """The persisted SemDeDup cluster model retrains through the
     REBUILD path once the feature table reaches RETRAIN_GROWTH_FACTOR
     x its training-time row count (`trained_n` sidecar property);
     below the factor the model stays frozen (the documented lag), and
     the retrain tick re-converges the DAG to run_funnel on the grown
     feature table."""
-    landing = tempfile.mkdtemp(prefix="cur_retrain_land_")
+    landing = str(tmp_path_factory.mktemp("cur_retrain_land"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_retrain_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_retrain_wh")), backend="parquet"
     )
     src = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang"

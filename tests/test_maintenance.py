@@ -8,7 +8,6 @@ tables are unchanged across compaction."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -34,10 +33,14 @@ def _row(i: int) -> str:
 
 
 def _n_files(tm: TableManager, table: str) -> int:
-    return sum(1 for _ in tm._data_files(tm.path(table)))
+    return len(tm.files(table))
 
 
-def test_uber_maintain_bounds_bronze_file_counts(spark, monkeypatch):
+def _commit_dirs(tm: TableManager, table: str) -> int:
+    return len(os.listdir(os.path.join(tm.path(table), "_txn_data")))
+
+
+def test_uber_maintain_bounds_bronze_file_counts(spark, monkeypatch, tmp_path_factory):
     """12 runs of the uber DAG, one landing file each, bound 3: bronze1
     takes ≥1 new data file per run, so without maintain the count
     reaches 12+; with it the count never exceeds bound + one run's
@@ -46,9 +49,9 @@ def test_uber_maintain_bounds_bronze_file_counts(spark, monkeypatch):
     monkeypatch.setattr(M, "MAINTAIN_FILE_BOUND", 3)
     from lakehouse_v3_spark.pipelines.dags import uber_dag
 
-    raw = tempfile.mkdtemp(prefix="uber_maint_raw_")
+    raw = str(tmp_path_factory.mktemp("uber_maint_raw"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="uber_maint_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("uber_maint_wh")), backend="parquet"
     )
     compaction_runs = 0
     gold_before_compaction = None
@@ -73,13 +76,22 @@ def test_uber_maintain_bounds_bronze_file_counts(spark, monkeypatch):
             assert len(gold) >= len(gold_before_compaction) or gold
         gold_before_compaction = gold
     assert compaction_runs >= 2, "bound 3 over 12 runs must compact"
+    # every table the DAG writes is maintained, and every one that is
+    # overwritten each run holds only its live commit dir: disk use
+    # stays flat across runs
+    from lakehouse_v3_spark.pipelines.dags import _UBER_GOLD, _UBER_MAINTAINED
+
+    written = {f"uber.{d}" for d in os.listdir(tm.path("uber"))}
+    assert written == set(_UBER_MAINTAINED) | set(_UBER_GOLD)
+    for t in written - {"uber.bronze1"}:
+        assert _commit_dirs(tm, t) == 1, t
     # content check: bronze has every ingested booking exactly once
     assert tm.read("uber.bronze1").count() == 36
 
 
-def test_audit_dag_has_maintain_task(spark):
+def test_audit_dag_has_maintain_task(spark, tmp_path_factory):
     """The audit DAG carries the same maintain task; with per-run
-    overwritten tables it self-skips (within bound) but still runs."""
+    overwritten tables it self-skips (within bound) but still vacuums."""
     from lakehouse_v3_spark.audit.config import CompletenessRule
     from lakehouse_v3_spark.pipelines.dags import audit_dag
 
@@ -90,32 +102,40 @@ def test_audit_dag_has_maintain_task(spark):
 
     df = spark.createDataFrame([(1, "a"), (2, None)], "id LONG, name STRING")
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="audit_maint_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("audit_maint_wh")), backend="parquet"
     )
-    rep = audit_dag(
-        spark,
-        {"t": df},
-        [CompletenessRule(1, "t", ("name",), ("id",))],
-        [],
-        tm,
-        transport,
-        retries=0,
-    ).run()
-    assert rep.ok, rep.states()
-    assert rep.states()["maintain"] == "skipped"
+    for _ in range(2):
+        rep = audit_dag(
+            spark,
+            {"t": df},
+            [CompletenessRule(1, "t", ("name",), ("id",))],
+            [],
+            tm,
+            transport,
+            retries=0,
+        ).run()
+        assert rep.ok, rep.states()
+        assert rep.states()["maintain"] == "skipped"
+    # the second run's overwrites left one commit dir per table
+    written = os.listdir(tm.path("audit"))
+    assert written and all(_commit_dirs(tm, f"audit.{t}") == 1 for t in written)
 
 
-def test_run_maintain_compacts_only_tables_over_bound(spark):
+def test_run_maintain_compacts_only_tables_over_bound(spark, tmp_path_factory):
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="maint_unit_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("maint_unit_wh")), backend="parquet"
     )
     small = spark.range(10).coalesce(1).toDF("id")
     for _ in range(3):
         tm.append(small, "m.small")
     for _ in range(8):
         tm.append(small, "m.big")
-    out = M.run_maintain(tm, ("m.small", "m.big", "m.absent"), 5)
+    for _ in range(2):  # the second commit supersedes the first's dir
+        tm.overwrite(small, "m.ow")
+    out = M.run_maintain(tm, ("m.small", "m.big", "m.ow", "m.absent"), 5)
     assert set(out["compacted"]) == {"m.big"}
+    # every visited table was vacuumed, compacted or not
+    assert all(tm.vacuum(t) == [] for t in ("m.small", "m.big", "m.ow"))
     assert _n_files(tm, "m.big") < out["compacted"]["m.big"]["before"]
     # contents unchanged
     assert tm.read("m.big").count() == 80
@@ -125,3 +145,46 @@ def test_run_maintain_compacts_only_tables_over_bound(spark):
 
     with pytest.raises(Skip):
         M.run_maintain(tm, ("m.small", "m.big"), 5)
+
+
+def test_run_maintain_vacuums_overwritten_tables(spark, tmp_path_factory):
+    """``vacuum_only`` tables are never compacted but are vacuumed, so a
+    table overwritten every run keeps one commit dir and a bounded log."""
+    from lakehouse_v3_spark.orchestrate import Skip
+
+    tm = TableManager(
+        spark, str(tmp_path_factory.mktemp("maint_ow_wh")), backend="parquet"
+    )
+    wide = spark.range(40).repartition(8).toDF("id")
+    for _ in range(3):
+        tm.overwrite(wide, "m.gold")
+        tm.set_properties("m.gold", {"k": "v"})
+    with pytest.raises(Skip):
+        M.run_maintain(tm, (), 5, vacuum_only=("m.gold", "m.absent"))
+    assert _commit_dirs(tm, "m.gold") == 1
+    assert _n_files(tm, "m.gold") == 8  # over the bound, not compacted
+    assert tm.version("m.gold") == 5
+    assert len(os.listdir(os.path.join(tm.path("m.gold"), "_txn_log"))) <= 2 * 2
+    assert tm.read("m.gold").count() == 40
+
+
+def _table_literals(module, zone: str) -> set:
+    import re
+
+    with open(module.__file__, encoding="utf-8") as f:
+        return set(re.findall(rf'"({zone}\.[a-z0-9_]+)"', f.read()))
+
+
+def test_every_dag_table_is_maintained():
+    """Each table a DAG names is compacted or vacuumed by its maintain
+    task: an overwritten table left out would keep a full copy on disk
+    per run."""
+    from lakehouse_v3_spark.pipelines import curation as C
+    from lakehouse_v3_spark.pipelines import dags as D
+
+    assert _table_literals(C, "curation") == (
+        set(C._MAINTAINED_TABLES) | set(C._OVERWRITTEN_TABLES)
+    )
+    assert _table_literals(D, "uber") == set(D._UBER_MAINTAINED) | set(D._UBER_GOLD)
+    assert _table_literals(D, "audit") == set(D._AUDIT_MAINTAINED)
+    assert not set(C._MAINTAINED_TABLES) & set(C._OVERWRITTEN_TABLES)

@@ -6,7 +6,6 @@ idempotent re-runs of the uber medallion chain and the audit graph."""
 from __future__ import annotations
 
 import os
-import tempfile
 import threading
 
 import pytest
@@ -19,17 +18,17 @@ from lakehouse_v3_spark.orchestrate import (
 )
 
 
-def _dag(name="t"):
-    return Dag(name, lock_dir=tempfile.mkdtemp(prefix="daglock_"))
+def _dag(tmp_path_factory, name="t"):
+    return Dag(name, lock_dir=str(tmp_path_factory.mktemp("daglock")))
 
 
 # ---------------------------------------------------------------------------
 # runner semantics
 # ---------------------------------------------------------------------------
 
-def test_dependency_order_and_results():
+def test_dependency_order_and_results(tmp_path_factory):
     seen = []
-    d = _dag()
+    d = _dag(tmp_path_factory)
     d.task("a", lambda c: seen.append("a"))
     d.task("b", lambda c: seen.append("b"), upstream=("a",))
     d.task("c", lambda c: seen.append("c"), upstream=("a",))
@@ -40,7 +39,7 @@ def test_dependency_order_and_results():
     assert rep.states() == {k: "success" for k in "abcd"}
 
 
-def test_retries_then_success_and_exhaustion():
+def test_retries_then_success_and_exhaustion(tmp_path_factory):
     calls = {"flaky": 0, "dead": 0}
 
     def flaky(ctx):
@@ -53,7 +52,7 @@ def test_retries_then_success_and_exhaustion():
         calls["dead"] += 1
         raise RuntimeError("permanent")
 
-    d = _dag()
+    d = _dag(tmp_path_factory)
     d.task("flaky", flaky, retries=5)
     d.task("dead", dead, retries=2)
     d.task("after_dead", lambda c: None, upstream=("dead",))
@@ -68,9 +67,9 @@ def test_retries_then_success_and_exhaustion():
     assert not rep.ok
 
 
-def test_skip_propagates_unless_none_failed():
+def test_skip_propagates_unless_none_failed(tmp_path_factory):
     ran = []
-    d = _dag()
+    d = _dag(tmp_path_factory)
     d.task("src", lambda c: (_ for _ in ()).throw(Skip("no new data")))
     d.task("mid", lambda c: ran.append("mid"), upstream=("src",))
     d.task("end", lambda c: ran.append("end"), upstream=("mid",))
@@ -85,9 +84,9 @@ def test_skip_propagates_unless_none_failed():
     assert rep.ok  # skipped-only runs count as clean
 
 
-def test_independent_branch_survives_failure():
+def test_independent_branch_survives_failure(tmp_path_factory):
     ran = []
-    d = _dag()
+    d = _dag(tmp_path_factory)
     d.task("bad", lambda c: 1 / 0)
     d.task("good", lambda c: ran.append("good"))
     d.task("after_good", lambda c: ran.append("after_good"),
@@ -97,8 +96,8 @@ def test_independent_branch_survives_failure():
     assert ran == ["good", "after_good"]
 
 
-def test_cycle_detection():
-    d = _dag()
+def test_cycle_detection(tmp_path_factory):
+    d = _dag(tmp_path_factory)
     d.task("a", lambda c: None)
     d.task("b", lambda c: None, upstream=("a",))
     d._tasks["a"].upstream = ("b",)  # forge a cycle post-registration
@@ -106,8 +105,8 @@ def test_cycle_detection():
         d.run()
 
 
-def test_unknown_upstream_and_duplicate_rejected():
-    d = _dag()
+def test_unknown_upstream_and_duplicate_rejected(tmp_path_factory):
+    d = _dag(tmp_path_factory)
     d.task("a", lambda c: None)
     with pytest.raises(ValueError, match="unknown task"):
         d.task("b", lambda c: None, upstream=("nope",))
@@ -115,8 +114,8 @@ def test_unknown_upstream_and_duplicate_rejected():
         d.task("a", lambda c: None)
 
 
-def test_no_overlapping_runs():
-    lock_dir = tempfile.mkdtemp(prefix="daglock_")
+def test_no_overlapping_runs(tmp_path_factory):
+    lock_dir = str(tmp_path_factory.mktemp("daglock"))
     started = threading.Event()
     release = threading.Event()
 
@@ -145,13 +144,13 @@ def test_no_overlapping_runs():
     assert d2.run().ok  # and runs fine once the first finished
 
 
-def test_parallel_branches_run_concurrently():
+def test_parallel_branches_run_concurrently(tmp_path_factory):
     gate = threading.Barrier(2, timeout=10)
 
     def side(ctx):
         gate.wait()  # deadlocks unless both branches really overlap
 
-    d = _dag()
+    d = _dag(tmp_path_factory)
     d.task("left", side)
     d.task("right", side)
     d.task("join", lambda c: "done", upstream=("left", "right"))
@@ -159,12 +158,12 @@ def test_parallel_branches_run_concurrently():
     assert rep.ok and rep.tasks["join"].result == "done"
 
 
-def test_parallel_tasks_run_in_the_callers_job_group(spark):
+def test_parallel_tasks_run_in_the_callers_job_group(spark, tmp_path_factory):
     """Pool threads carry the caller's Spark local properties, so every
     task's jobs belong to the caller's job group (and cancelJobGroup
     reaches them), as they do with max_workers=1."""
     sc = spark.sparkContext
-    d = _dag()
+    d = _dag(tmp_path_factory)
     for name in ("a", "b", "c"):
         d.task(name, lambda c: spark.range(10).count())
     sc.setJobGroup("dag-outer-group", "parallel dag run")
@@ -178,8 +177,8 @@ def test_parallel_tasks_run_in_the_callers_job_group(spark):
     assert len(sc.statusTracker().getJobIdsForGroup("dag-outer-group")) >= 3
 
 
-def test_ctx_is_threaded():
-    d = _dag()
+def test_ctx_is_threaded(tmp_path_factory):
+    d = _dag(tmp_path_factory)
     d.task("a", lambda c: c["x"] + 1)
     rep = d.run(ctx={"x": 41})
     assert rep.tasks["a"].result == 42
@@ -212,13 +211,13 @@ def _write_csv(raw_dir: str, name: str, rows: list[str]) -> None:
         f.write(_CSV_HEADER + "\n" + "\n".join(rows) + "\n")
 
 
-def test_uber_dag_end_to_end_and_idempotent_rerun(spark):
+def test_uber_dag_end_to_end_and_idempotent_rerun(spark, tmp_path_factory):
     from lakehouse_v3_spark.pipelines.dags import uber_dag
     from lakehouse_v3_spark.tables import TableManager
 
-    raw = tempfile.mkdtemp(prefix="uber_raw_")
+    raw = str(tmp_path_factory.mktemp("uber_raw"))
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="uber_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("uber_wh")), backend="parquet"
     )
     _write_csv(raw, "day1.csv", _BATCH1)
 
@@ -281,7 +280,7 @@ def test_uber_dag_end_to_end_and_idempotent_rerun(spark):
 # audit fan-out/fan-in DAG end-to-end
 # ---------------------------------------------------------------------------
 
-def test_audit_dag_fan_out_fan_in(spark):
+def test_audit_dag_fan_out_fan_in(spark, tmp_path_factory):
     from lakehouse_v3_spark.audit.config import CompletenessRule, ValidityRule
     from lakehouse_v3_spark.pipelines.dags import audit_dag
     from lakehouse_v3_spark.tables import TableManager
@@ -295,7 +294,7 @@ def test_audit_dag_fan_out_fan_in(spark):
     comp = [CompletenessRule(1, "t", ("s",), ("id",))]
     val = [ValidityRule(7, "t", "v < 0", ("id",))]
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="audit_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("audit_wh")), backend="parquet"
     )
     sent = []
     dag = audit_dag(
@@ -320,7 +319,7 @@ def test_audit_dag_fan_out_fan_in(spark):
     assert tm.read("audit.fact_completeness").count() == 1
 
 
-def test_audit_dag_alert_skips_on_clean_data(spark):
+def test_audit_dag_alert_skips_on_clean_data(spark, tmp_path_factory):
     from lakehouse_v3_spark.audit.config import CompletenessRule, ValidityRule
     from lakehouse_v3_spark.pipelines.dags import audit_dag
     from lakehouse_v3_spark.tables import TableManager
@@ -331,7 +330,7 @@ def test_audit_dag_alert_skips_on_clean_data(spark):
     comp = [CompletenessRule(1, "t", ("s",), ("id",))]
     val = [ValidityRule(7, "t", "v < 0", ("id",))]
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="audit_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("audit_wh")), backend="parquet"
     )
     sent = []
     rep = audit_dag(

@@ -139,7 +139,7 @@ versions = st.dictionaries(
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
 def test_snapshot_diff_classifies_any_version_pair(spark, tmp_path_factory, old, new):
-    """CDC law: for ANY two versions, txn_diff emits exactly the
+    """CDC law: for ANY two versions, diff emits exactly the
     inserts (new-only keys), deletes (old-only keys), and updates
     (changed values) — and nothing for unchanged keys."""
     from lakehouse_v3_spark.tables import TableManager
@@ -151,9 +151,9 @@ def test_snapshot_diff_classifies_any_version_pair(spark, tmp_path_factory, old,
             [(k, v) for k, v in d.items()] or [(None, None)], "k int, v int"
         ).filter(F.col("k").isNotNull())
 
-    tm.txn_overwrite(df_of(old), "p.t")
-    tm.txn_overwrite(df_of(new), "p.t")
-    got = {r.k: r.change_type for r in tm.txn_diff("p.t", 0, 1, ["k"]).collect()}
+    tm.overwrite(df_of(old), "p.t")
+    tm.overwrite(df_of(new), "p.t")
+    got = {r.k: r.change_type for r in tm.diff("p.t", 0, 1, ["k"]).collect()}
     expect = {}
     for k in old.keys() | new.keys():
         if k not in new:

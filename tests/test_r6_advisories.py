@@ -124,10 +124,10 @@ def _fake_fixture(tmpdir: str) -> str:
     return tmpdir
 
 
-def test_lsh_index_path_is_process_independent(spark):
+def test_lsh_index_path_is_process_independent(spark, tmp_path_factory):
     from lakehouse_v3_spark.plans.dedup_queries import _lsh_index_manager
 
-    fix = _fake_fixture(tempfile.mkdtemp(prefix="lshfix_"))
+    fix = _fake_fixture(str(tmp_path_factory.mktemp("lshfix")))
     try:
         tm1, lock1 = _lsh_index_manager(spark, fix)
         tm2, lock2 = _lsh_index_manager(spark, fix)
@@ -138,10 +138,10 @@ def test_lsh_index_path_is_process_independent(spark):
         shutil.rmtree(fix, ignore_errors=True)
 
 
-def test_lsh_index_invalidated_by_mtime_ns_and_superseded_dir_cleaned(spark):
+def test_lsh_index_invalidated_by_mtime_ns_and_superseded_dir_cleaned(spark, tmp_path_factory):
     from lakehouse_v3_spark.plans.dedup_queries import _lsh_index_manager
 
-    fix = _fake_fixture(tempfile.mkdtemp(prefix="lshfix_"))
+    fix = _fake_fixture(str(tmp_path_factory.mktemp("lshfix")))
     doc = os.path.join(fix, "documents.parquet")
     try:
         tm1, _ = _lsh_index_manager(spark, fix)

@@ -16,7 +16,6 @@ audit chain).
 from __future__ import annotations
 
 import os
-import tempfile
 from datetime import datetime, timedelta
 
 import pytest
@@ -166,8 +165,10 @@ def test_runaway_guard_on_absurd_backlog():
 # ScheduledDag: tick, ctx threading, durable state, crash-resume
 # ---------------------------------------------------------------------------
 
-def _counting_dag(seen: list, fail_on: "datetime | None" = None) -> Dag:
-    dag = Dag("sched_t", lock_dir=tempfile.mkdtemp(prefix="daglock_"))
+def _counting_dag(
+    tmp_path_factory, seen: list, fail_on: "datetime | None" = None
+) -> Dag:
+    dag = Dag("sched_t", lock_dir=str(tmp_path_factory.mktemp("daglock")))
 
     def job(ctx):
         if fail_on is not None and ctx["logical_date"] == fail_on:
@@ -184,12 +185,12 @@ def _counting_dag(seen: list, fail_on: "datetime | None" = None) -> Dag:
     return dag
 
 
-def test_tick_runs_oldest_first_and_threads_data_interval():
+def test_tick_runs_oldest_first_and_threads_data_interval(tmp_path_factory):
     seen: list = []
     sd = ScheduledDag(
-        _counting_dag(seen),
+        _counting_dag(tmp_path_factory, seen),
         Schedule(start=D(2024, 5, 1), interval=timedelta(days=1)),
-        state_dir=tempfile.mkdtemp(prefix="schedstate_"),
+        state_dir=str(tmp_path_factory.mktemp("schedstate")),
     )
     out = sd.tick(D(2024, 5, 3, 1, 0))
     assert [lg for lg, _ in out] == [D(2024, 5, 1), D(2024, 5, 2)]
@@ -203,31 +204,33 @@ def test_tick_runs_oldest_first_and_threads_data_interval():
     assert len(seen) == 2
 
 
-def test_crash_resume_from_last_run_state_in_a_new_instance():
-    state = tempfile.mkdtemp(prefix="schedstate_")
+def test_crash_resume_from_last_run_state_in_a_new_instance(tmp_path_factory):
+    state = str(tmp_path_factory.mktemp("schedstate"))
     seen: list = []
     sched = Schedule(start=D(2024, 5, 1), interval=timedelta(days=1))
-    ScheduledDag(_counting_dag(seen), sched, state).tick(D(2024, 5, 2, 2, 0))
+    ScheduledDag(_counting_dag(tmp_path_factory, seen), sched, state).tick(
+        D(2024, 5, 2, 2, 0)
+    )
     assert [x[0] for x in seen] == [D(2024, 5, 1)]
 
     # a NEW process (fresh objects, same state_dir) resumes where the
     # old one stopped: only the newly closed interval runs
     seen2: list = []
-    sd2 = ScheduledDag(_counting_dag(seen2), sched, state)
+    sd2 = ScheduledDag(_counting_dag(tmp_path_factory, seen2), sched, state)
     assert sd2.last_completed() == D(2024, 5, 1)
     out = sd2.tick(D(2024, 5, 4, 2, 0))
     assert [lg for lg, _ in out] == [D(2024, 5, 2), D(2024, 5, 3)]
     assert [x[0] for x in seen2] == [D(2024, 5, 2), D(2024, 5, 3)]
 
 
-def test_failed_run_advances_pointer_but_reports_failure():
+def test_failed_run_advances_pointer_but_reports_failure(tmp_path_factory):
     # depends_on_past=False semantics: a failed logical date does not
     # wedge the schedule; the report carries the failure
     seen: list = []
     sd = ScheduledDag(
-        _counting_dag(seen, fail_on=D(2024, 5, 1)),
+        _counting_dag(tmp_path_factory, seen, fail_on=D(2024, 5, 1)),
         Schedule(start=D(2024, 5, 1), interval=timedelta(days=1)),
-        state_dir=tempfile.mkdtemp(prefix="schedstate_"),
+        state_dir=str(tmp_path_factory.mktemp("schedstate")),
     )
     out = sd.tick(D(2024, 5, 3, 1, 0))
     assert [lg for lg, _ in out] == [D(2024, 5, 1), D(2024, 5, 2)]
@@ -236,14 +239,14 @@ def test_failed_run_advances_pointer_but_reports_failure():
     assert [x[0] for x in seen] == [D(2024, 5, 2)]
 
 
-def test_catchup_false_tick_skips_backlog():
+def test_catchup_false_tick_skips_backlog(tmp_path_factory):
     seen: list = []
     sd = ScheduledDag(
-        _counting_dag(seen),
+        _counting_dag(tmp_path_factory, seen),
         Schedule(
             start=D(2024, 5, 1), interval=timedelta(days=1), catchup=False
         ),
-        state_dir=tempfile.mkdtemp(prefix="schedstate_"),
+        state_dir=str(tmp_path_factory.mktemp("schedstate")),
     )
     out = sd.tick(D(2024, 5, 4, 6, 0))
     assert [lg for lg, _ in out] == [D(2024, 5, 3)]
@@ -271,10 +274,10 @@ _ROWS = [
 ]
 
 
-def _uber_landing() -> str:
+def _uber_landing(tmp_path_factory) -> str:
     """``_ROWS`` in the reference collectors' Hive-style landing layout
     (date=YYYY-MM-DD dirs, airflow/tasks/uber/ingestion.py:147-166)."""
-    raw = tempfile.mkdtemp(prefix="uber_raw_")
+    raw = str(tmp_path_factory.mktemp("uber_raw"))
     by_day: dict[str, list[str]] = {}
     for row in _ROWS:
         by_day.setdefault(row.split(",", 1)[0], []).append(row)
@@ -290,26 +293,26 @@ def _gold_rows(tm, table):
     return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
 
 
-def test_scheduled_uber_backfill_matches_batch_run(spark):
+def test_scheduled_uber_backfill_matches_batch_run(spark, tmp_path_factory):
     from lakehouse_v3_spark.pipelines.dags import scheduled_uber_dag, uber_dag
     from lakehouse_v3_spark.tables import TableManager
 
-    raw = _uber_landing()
+    raw = _uber_landing(tmp_path_factory)
 
     # batch reference run: one uber_dag pass over everything
     tm_batch = TableManager(
-        spark, tempfile.mkdtemp(prefix="uber_wh_b_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("uber_wh_b")), backend="parquet"
     )
     assert uber_dag(spark, raw, tm_batch, retries=0).run().ok
 
     # scheduled backfill: daily schedule, catchup over the 3 closed days
     tm_sched = TableManager(
-        spark, tempfile.mkdtemp(prefix="uber_wh_s_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("uber_wh_s")), backend="parquet"
     )
     sd = ScheduledDag(
         scheduled_uber_dag(spark, raw, tm_sched),
         Schedule(start=D(2024, 5, 1), interval=timedelta(days=1)),
-        state_dir=tempfile.mkdtemp(prefix="schedstate_"),
+        state_dir=str(tmp_path_factory.mktemp("schedstate")),
     )
     out = sd.tick(D(2024, 5, 4, 6, 0))
     assert [lg for lg, _ in out] == [D(2024, 5, 1), D(2024, 5, 2), D(2024, 5, 3)]
@@ -347,7 +350,7 @@ def test_scheduled_uber_backfill_matches_batch_run(spark):
     assert _gold_rows(tm_sched, "uber.gold_booking_stats") == before
 
 
-def test_repeated_uber_tick_and_audit_reuse_generated_code(spark):
+def test_repeated_uber_tick_and_audit_reuse_generated_code(spark, tmp_path_factory):
     """The session's generated-code cache holds the working set of a
     scheduled uber tick plus an audit run: repeating both over a fresh
     copy of the same warehouse compiles only the per-run timestamp
@@ -366,10 +369,10 @@ def test_repeated_uber_tick_and_audit_reuse_generated_code(spark):
     from lakehouse_v3_spark.tables import TableManager
 
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2048"
-    raw = _uber_landing()
+    raw = _uber_landing(tmp_path_factory)
     # history: day 1 through the file-log DAG, as a long-lived
     # deployment would hold it before the next scheduled tick
-    snapshot = tempfile.mkdtemp(prefix="uber_wh_hist_")
+    snapshot = str(tmp_path_factory.mktemp("uber_wh_hist"))
     assert uber_dag(
         spark, os.path.join(raw, "date=2024-05-01"),
         TableManager(spark, snapshot, backend="parquet"), retries=0,
@@ -387,7 +390,7 @@ def test_repeated_uber_tick_and_audit_reuse_generated_code(spark):
     assert compiles.getCount() > before
     per_run = []
     for _ in range(2):
-        wh = os.path.join(tempfile.mkdtemp(prefix="uber_wh_run_"), "wh")
+        wh = os.path.join(str(tmp_path_factory.mktemp("uber_wh_run")), "wh")
         shutil.copytree(snapshot, wh)
         tm = TableManager(spark, wh, backend="parquet")
         before = compiles.getCount()
@@ -407,7 +410,7 @@ def test_repeated_uber_tick_and_audit_reuse_generated_code(spark):
     assert per_run[1] <= 8, per_run
 
 
-def test_concurrent_ticks_run_each_logical_date_exactly_once():
+def test_concurrent_ticks_run_each_logical_date_exactly_once(tmp_path_factory):
     """Two schedulers ticking at once (two cron firings / two hosts on
     shared storage) must not double-run a logical date: the whole tick
     serializes on the state-file flock, and the loser re-reads the
@@ -415,13 +418,13 @@ def test_concurrent_ticks_run_each_logical_date_exactly_once():
     import threading
     import time as _time
 
-    state = tempfile.mkdtemp(prefix="schedstate_")
+    state = str(tmp_path_factory.mktemp("schedstate"))
     runs: list = []
     runs_mu = threading.Lock()
 
     def make_sd():
         dag = Dag(
-            "conc_t", lock_dir=tempfile.mkdtemp(prefix="daglock_")
+            "conc_t", lock_dir=str(tmp_path_factory.mktemp("daglock"))
         )
 
         def job(ctx):
@@ -449,7 +452,7 @@ def test_concurrent_ticks_run_each_logical_date_exactly_once():
     assert sorted(runs) == [D(2024, 5, 1), D(2024, 5, 2), D(2024, 5, 3)]
 
 
-def test_cli_schedule_uber_tick_and_resume(spark, capsys):
+def test_cli_schedule_uber_tick_and_resume(spark, capsys, tmp_path_factory):
     """`python -m lakehouse_v3_spark schedule-uber` — one cron-invokable
     scheduler tick: catchup backfill on the first invocation, durable
     resume (no re-runs) on the second."""
@@ -458,8 +461,8 @@ def test_cli_schedule_uber_tick_and_resume(spark, capsys):
     from lakehouse_v3_spark.__main__ import main
     from lakehouse_v3_spark.tables import TableManager
 
-    raw = tempfile.mkdtemp(prefix="uber_raw_cli_")
-    wh = tempfile.mkdtemp(prefix="uber_wh_cli_")
+    raw = str(tmp_path_factory.mktemp("uber_raw_cli"))
+    wh = str(tmp_path_factory.mktemp("uber_wh_cli"))
     with open(os.path.join(raw, "all.csv"), "w") as f:
         f.write(_CSV_HEADER + "\n" + "\n".join(_ROWS) + "\n")
 
@@ -485,14 +488,14 @@ def test_cli_schedule_uber_tick_and_resume(spark, capsys):
     assert capsys.readouterr().out.strip() == ""
 
 
-def test_scheduled_uber_hourly_intervals_slice_within_a_day(spark):
+def test_scheduled_uber_hourly_intervals_slice_within_a_day(spark, tmp_path_factory):
     """r8 review fix: the interval filter is timestamp-granular
     (Date + Time), so an @hourly schedule ingests each hour's rows in
     its own run instead of skipping every intra-day interval."""
     from lakehouse_v3_spark.pipelines.dags import scheduled_uber_dag
     from lakehouse_v3_spark.tables import TableManager
 
-    raw = tempfile.mkdtemp(prefix="uber_raw_h_")
+    raw = str(tmp_path_factory.mktemp("uber_raw_h"))
     rows = [
         "2024-05-01,08:30:00,HR-001,Completed,Sedan,4.5,250.0,10.0,UPI,,,",
         "2024-05-01,08:45:00,HR-002,Completed,Bike,2.0,80.0,4.0,Cash,,,",
@@ -501,12 +504,12 @@ def test_scheduled_uber_hourly_intervals_slice_within_a_day(spark):
     with open(os.path.join(raw, "d.csv"), "w") as f:
         f.write(_CSV_HEADER + "\n" + "\n".join(rows) + "\n")
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="uber_wh_h_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("uber_wh_h")), backend="parquet"
     )
     sd = ScheduledDag(
         scheduled_uber_dag(spark, raw, tm),
         Schedule(start=D(2024, 5, 1, 8), interval="@hourly"),
-        state_dir=tempfile.mkdtemp(prefix="schedstate_"),
+        state_dir=str(tmp_path_factory.mktemp("schedstate")),
     )
     out = sd.tick(D(2024, 5, 1, 10, 0))  # hours [8,9) and [9,10) closed
     assert [lg for lg, _ in out] == [D(2024, 5, 1, 8), D(2024, 5, 1, 9)]
@@ -520,7 +523,7 @@ def test_scheduled_uber_hourly_intervals_slice_within_a_day(spark):
     assert tm.read("uber.bronze1").count() == 3
 
 
-def test_scheduled_uber_surfaces_unparseable_timestamps(spark):
+def test_scheduled_uber_surfaces_unparseable_timestamps(spark, tmp_path_factory):
     """r8 advisory: rows whose Date/Time fail to_timestamp can belong
     to NO interval — they must be counted and surfaced in the ingest
     result (and the Skip message), never silently vanish from
@@ -528,7 +531,7 @@ def test_scheduled_uber_surfaces_unparseable_timestamps(spark):
     from lakehouse_v3_spark.pipelines.dags import scheduled_uber_dag
     from lakehouse_v3_spark.tables import TableManager
 
-    raw = tempfile.mkdtemp(prefix="uber_raw_bad_")
+    raw = str(tmp_path_factory.mktemp("uber_raw_bad"))
     rows = [
         "2024-05-01,08:30:00,BAD-001,Completed,Sedan,4.5,250.0,10.0,UPI,,,",
         "not-a-date,xx:yy,BAD-002,Completed,Bike,2.0,80.0,4.0,Cash,,,",
@@ -540,12 +543,12 @@ def test_scheduled_uber_surfaces_unparseable_timestamps(spark):
     ) as f:
         f.write(_CSV_HEADER + "\n" + "\n".join(rows) + "\n")
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="uber_wh_bad_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("uber_wh_bad")), backend="parquet"
     )
     sd = ScheduledDag(
         scheduled_uber_dag(spark, raw, tm),
         Schedule(start=D(2024, 5, 1), interval=timedelta(days=1)),
-        state_dir=tempfile.mkdtemp(prefix="schedstate_"),
+        state_dir=str(tmp_path_factory.mktemp("schedstate")),
     )
     out = sd.tick(D(2024, 5, 2, 6, 0))
     assert len(out) == 1 and out[0][1].ok
@@ -571,7 +574,7 @@ def test_scheduled_uber_surfaces_unparseable_timestamps(spark):
     assert "1 unparseable" in (rep.tasks["ingest"].error or "")
 
 
-def test_scheduled_audit_dag_alerts_once_per_closed_interval(spark):
+def test_scheduled_audit_dag_alerts_once_per_closed_interval(spark, tmp_path_factory):
     """r7 verdict item #7: audit engine + fact builder + alerting under
     the scheduler — planted violations produce a FAIL alert exactly
     once per closed interval (reference 001_004_dataaudit.py:149-153
@@ -588,7 +591,7 @@ def test_scheduled_audit_dag_alerts_once_per_closed_interval(spark):
     comp = [CompletenessRule(1, "t", ("s",), ("id",))]
     val = [ValidityRule(7, "t", "v < 0", ("id",))]
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="audit_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("audit_wh")), backend="parquet"
     )
     sent = []
     dag = audit_dag(
@@ -597,7 +600,7 @@ def test_scheduled_audit_dag_alerts_once_per_closed_interval(spark):
     sd = ScheduledDag(
         dag,
         Schedule(start=D(2024, 5, 1), interval="@hourly"),
-        state_dir=tempfile.mkdtemp(prefix="schedstate_"),
+        state_dir=str(tmp_path_factory.mktemp("schedstate")),
     )
     out = sd.tick(D(2024, 5, 1, 2, 0))  # two closed hourly intervals
     assert [lg for lg, _ in out] == [D(2024, 5, 1, 0), D(2024, 5, 1, 1)]
@@ -609,13 +612,13 @@ def test_scheduled_audit_dag_alerts_once_per_closed_interval(spark):
     assert len(sent) == 2
 
 
-def test_interval_pruning_is_conservative_on_odd_keys(spark):
+def test_interval_pruning_is_conservative_on_odd_keys(spark, tmp_path_factory):
     """r9 review: a date= dir whose key is non-canonical must degrade
     to read-and-filter, never silently vanish from every tick —
     unpadded keys prune by PARSED date, unparseable keys are kept."""
     from lakehouse_v3_spark.pipelines.dags import _interval_csv_files
 
-    raw = tempfile.mkdtemp(prefix="uber_raw_odd_")
+    raw = str(tmp_path_factory.mktemp("uber_raw_odd"))
     layout = {
         "date=2024-05-01": "in-interval, canonical",
         "date=2024-5-2": "in-interval, UNPADDED (must parse + match)",
@@ -642,7 +645,7 @@ def test_interval_pruning_is_conservative_on_odd_keys(spark):
 # 3-interval catchup ≡ one batch run, per-interval files_read pruned
 # ---------------------------------------------------------------------------
 
-def test_scheduled_curation_backfill_matches_batch_run(spark):
+def test_scheduled_curation_backfill_matches_batch_run(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from lakehouse_v3_spark.pipelines import curation as C
@@ -661,7 +664,7 @@ def test_scheduled_curation_backfill_matches_batch_run(spark):
         ("2024-05-02", src.filter((F.col("doc_id") > a) & (F.col("doc_id") <= b))),
         ("2024-05-03", src.filter(F.col("doc_id") > b)),
     ]
-    landing = tempfile.mkdtemp(prefix="cur_sched_land_")
+    landing = str(tmp_path_factory.mktemp("cur_sched_land"))
     for day, df in days:
         df.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(landing, f"date={day}", "docs")
@@ -680,7 +683,7 @@ def test_scheduled_curation_backfill_matches_batch_run(spark):
         shutil.rmtree(os.path.join(ddir, "docs"))
 
     # batch reference: one curation_dag pass over a flat landing zone
-    flat = tempfile.mkdtemp(prefix="cur_sched_flat_")
+    flat = str(tmp_path_factory.mktemp("cur_sched_flat"))
     for day, _ in days:
         import shutil
         shutil.copy(
@@ -688,18 +691,18 @@ def test_scheduled_curation_backfill_matches_batch_run(spark):
             os.path.join(flat, f"{day}.parquet"),
         )
     tm_b = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_wh_b_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_wh_b")), backend="parquet"
     )
     assert C.curation_dag(spark, flat, tm_b, retries=0).run().ok
 
     # scheduled backfill: daily schedule, catchup over the 3 closed days
     tm_s = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_wh_s_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_wh_s")), backend="parquet"
     )
     sd = ScheduledDag(
         scheduled_curation_dag(spark, landing, tm_s),
         Schedule(start=D(2024, 5, 1), interval=timedelta(days=1)),
-        state_dir=tempfile.mkdtemp(prefix="cur_schedstate_"),
+        state_dir=str(tmp_path_factory.mktemp("cur_schedstate")),
     )
     out = sd.tick(D(2024, 5, 4, 6, 0))
     assert [lg for lg, _ in out] == [D(2024, 5, 1), D(2024, 5, 2), D(2024, 5, 3)]
@@ -739,7 +742,7 @@ def test_scheduled_curation_backfill_matches_batch_run(spark):
     assert set(rep2.states().values()) == {"skipped"}
 
 
-def test_scheduled_crash_does_not_lose_the_next_interval(spark):
+def test_scheduled_crash_does_not_lose_the_next_interval(spark, tmp_path_factory):
     """r12 ADVICE (medium): interval N's run fails after ingest; the
     pointer still advances (depends_on_past=False). Interval N+1's run
     used to take the resume early-return WITHOUT reading its own date=
@@ -760,8 +763,8 @@ def test_scheduled_crash_does_not_lose_the_next_interval(spark):
         ("2024-06-01", src.filter(F.col("doc_id") <= hi // 2)),
         ("2024-06-02", src.filter(F.col("doc_id") > hi // 2)),
     ]
-    landing = tempfile.mkdtemp(prefix="cur_fold_land_")
-    flat = tempfile.mkdtemp(prefix="cur_fold_flat_")
+    landing = str(tmp_path_factory.mktemp("cur_fold_land"))
+    flat = str(tmp_path_factory.mktemp("cur_fold_flat"))
     for day, df in days:
         ddir = os.path.join(landing, f"date={day}")
         df.coalesce(1).write.mode("overwrite").parquet(
@@ -784,17 +787,17 @@ def test_scheduled_crash_does_not_lose_the_next_interval(spark):
 
     # batch reference over BOTH days
     tm_b = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_fold_wh_b_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_fold_wh_b")), backend="parquet"
     )
     assert C.curation_dag(spark, flat, tm_b, retries=0).run().ok
 
     tm_s = TableManager(
-        spark, tempfile.mkdtemp(prefix="cur_fold_wh_s_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("cur_fold_wh_s")), backend="parquet"
     )
     sd = ScheduledDag(
         scheduled_curation_dag(spark, landing, tm_s),
         Schedule(start=D(2024, 6, 1), interval=timedelta(days=1)),
-        state_dir=tempfile.mkdtemp(prefix="cur_fold_sched_"),
+        state_dir=str(tmp_path_factory.mktemp("cur_fold_sched")),
     )
     # interval 1 closes; its run dies at quality_filter AFTER ingest
     out1 = sd.tick(D(2024, 6, 2, 6, 0), {"_fail_tasks": {"quality_filter"}})

@@ -202,14 +202,14 @@ def test_streaming_merge_into_snapshots(spark, tmp_path):
             return
         # read-modify-write: the commit is pinned to the version read,
         # so a concurrent commit makes it raise instead of being lost
-        ver = tm.txn_version("silver.state")
+        ver = tm.version("silver.state")
         if ver is None:
-            tm.txn_overwrite(batch_df, "silver.state", read_version=None)
+            tm.overwrite(batch_df, "silver.state", read_version=None)
         else:
             merged = merge_upsert(
-                tm.txn_read("silver.state", ver), batch_df, ["user_id"]
+                tm.read("silver.state", ver), batch_df, ["user_id"]
             ).select("user_id", "v")
-            tm.txn_overwrite(merged, "silver.state", read_version=ver)
+            tm.overwrite(merged, "silver.state", read_version=ver)
 
     def drain():
         stream = spark.readStream.schema("user_id long, v string").parquet(str(src))
@@ -228,13 +228,13 @@ def test_streaming_merge_into_snapshots(spark, tmp_path):
         .coalesce(1).write.mode("append").parquet(str(src))
     drain()
 
-    head = {r.user_id: r.v for r in tm.txn_read("silver.state").collect()}
+    head = {r.user_id: r.v for r in tm.read("silver.state").collect()}
     assert head == {1: "a", 2: "B", 3: "c"}
-    v0 = {r.user_id: r.v for r in tm.txn_read("silver.state", 0).collect()}
+    v0 = {r.user_id: r.v for r in tm.read("silver.state", 0).collect()}
     assert v0 == {1: "a", 2: "b"}  # pre-merge state still time-travelable
     changes = {
         r.user_id: r.change_type
-        for r in tm.txn_diff("silver.state", 0, 1, ["user_id"]).collect()
+        for r in tm.diff("silver.state", 0, 1, ["user_id"]).collect()
     }
     assert changes == {2: "update", 3: "insert"}
 

@@ -67,7 +67,7 @@ def test_compact_bounds_file_count(spark, tmp_path):
     after = sum(1 for f in os.listdir(p) if f.endswith(".parquet"))
     assert n == 2 and after == 2
     assert tm.read("s.c").count() == 1000
-    tm.vacuum("s.c")  # no-op clean on parquet backend
+    assert len(tm.vacuum("s.c")) == 1  # the 16-file commit dir
 
 
 def test_last_key_checkpoint(spark, tmp_path):
@@ -115,10 +115,10 @@ def test_watermarks(spark):
 
 
 def test_tblproperties_roundtrip_and_survive_overwrite(spark, tmp_path):
-    """S14 on the parquet backend: properties persist to a sidecar next
-    to the table root, merge on repeated set, and survive the atomic
-    overwrite swap + compaction (they are metadata about the table, not
-    about one write)."""
+    """S14 on the parquet backend: properties live in the commit log,
+    merge on repeated set, and carry over through overwrite +
+    compaction (they are metadata about the table, not about one
+    write)."""
     tm = _tm(spark, tmp_path)
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
     tm.overwrite(df, "bronze.props_t")
@@ -135,8 +135,8 @@ def test_tblproperties_roundtrip_and_survive_overwrite(spark, tmp_path):
 
 
 def test_exists_shallow_marker_check(spark, tmp_path):
-    """exists() must detect flat and partitioned tables from one shallow
-    root listing, and reject an empty dir (no recursive walk)."""
+    """exists() must detect flat and partitioned tables from one listing
+    of the commit log, and reject an empty dir (no recursive walk)."""
     import os
 
     tm = _tm(spark, tmp_path)
@@ -159,39 +159,39 @@ def test_snapshot_time_travel_and_restore(spark, tmp_path):
     from lakehouse_v3_spark.tables import TableManager
 
     tm = TableManager(spark, str(tmp_path / "wh"))
-    v0 = tm.txn_overwrite(
+    v0 = tm.overwrite(
         spark.createDataFrame([(1, "a")], "id long, s string"), "silver.t"
     )
-    v1 = tm.txn_overwrite(
+    v1 = tm.overwrite(
         spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string"), "silver.t"
     )
     assert (v0, v1) == (0, 1)
-    assert tm.txn_version("silver.t") == 1
-    assert tm.txn_read("silver.t").count() == 2          # latest
-    assert tm.txn_read("silver.t", 0).count() == 1        # time travel
+    assert tm.version("silver.t") == 1
+    assert tm.read("silver.t").count() == 2          # latest
+    assert tm.read("silver.t", 0).count() == 1        # time travel
 
-    assert tm.txn_restore("silver.t", 0) == 2             # rollback commit
-    assert tm.txn_read("silver.t").count() == 1
-    assert tm.txn_read("silver.t", 1).count() == 2        # v1 untouched
+    assert tm.restore("silver.t", 0) == 2             # rollback commit
+    assert tm.read("silver.t").count() == 1
+    assert tm.read("silver.t", 1).count() == 2        # v1 untouched
 
-    v3 = tm.txn_overwrite(
+    v3 = tm.overwrite(
         spark.createDataFrame([(9, "z")], "id long, s string"), "silver.t"
     )
-    assert v3 == 3 and tm.txn_read("silver.t").count() == 1
+    assert v3 == 3 and tm.read("silver.t").count() == 1
 
-    tm.txn_restore("silver.t", 0)                         # v4
-    removed = tm.txn_vacuum("silver.t")
+    tm.restore("silver.t", 0)                         # v4
+    removed = tm.vacuum("silver.t")
     # v0's data is live again at the latest version, so it survives;
     # only the v1 and v3 add-sets go
     assert len(removed) == 2
-    assert [r.id for r in tm.txn_read("silver.t").collect()] == [1]
+    assert [r.id for r in tm.read("silver.t").collect()] == [1]
 
     with pytest.raises(FileNotFoundError):
-        tm.txn_read("silver.never")
+        tm.read("silver.never")
     with pytest.raises(FileNotFoundError):
-        tm.txn_restore("silver.t", 99)
+        tm.restore("silver.t", 99)
     with pytest.raises(FileNotFoundError):
-        tm.txn_restore("silver.t", 1)                     # vacuumed
+        tm.restore("silver.t", 1)                     # vacuumed
 
 
 def test_snapshot_diff_cdc(spark, tmp_path):
@@ -200,14 +200,14 @@ def test_snapshot_diff_cdc(spark, tmp_path):
     from lakehouse_v3_spark.tables import TableManager
 
     tm = TableManager(spark, str(tmp_path / "wh"))
-    tm.txn_overwrite(
+    tm.overwrite(
         spark.createDataFrame(
             [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
             "id long, s string, v double",
         ),
         "silver.cdc",
     )
-    tm.txn_overwrite(
+    tm.overwrite(
         spark.createDataFrame(
             [(1, "a", 10.0), (2, "B", 20.0), (4, "d", 40.0)],
             "id long, s string, v double",
@@ -216,7 +216,7 @@ def test_snapshot_diff_cdc(spark, tmp_path):
     )
     changes = {
         r.id: r.change_type
-        for r in tm.txn_diff("silver.cdc", 0, 1, ["id"]).collect()
+        for r in tm.diff("silver.cdc", 0, 1, ["id"]).collect()
     }
     assert changes == {2: "update", 3: "delete", 4: "insert"}
 

@@ -23,6 +23,15 @@ from lakehouse_v3_spark.tables import ConcurrentWriteError, TableManager
 REPO_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _record(mgr, version, op, add, read_version):
+    """A complete commit record for table ``t``, as another writer
+    would claim it (the schema of ``t``'s latest commit)."""
+    return {"version": version, "op": op, "add": add,
+            "readVersion": read_version,
+            "schema": mgr._record("t", mgr.version("t"))["schema"],
+            "properties": {}}
+
+
 @pytest.fixture(
     autouse=True,
     params=["posix_link", "rename_noreplace", "conditional_put"],
@@ -50,110 +59,107 @@ def claim_impl(request, monkeypatch):
 
 def test_txn_append_overwrite_timetravel_vacuum(spark, tmp_path):
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    v0 = mgr.txn_append(spark.range(5).withColumnRenamed("id", "x"), "t")
-    v1 = mgr.txn_append(spark.range(5, 8).withColumnRenamed("id", "x"), "t")
+    v0 = mgr.append(spark.range(5).withColumnRenamed("id", "x"), "t")
+    v1 = mgr.append(spark.range(5, 8).withColumnRenamed("id", "x"), "t")
     assert (v0, v1) == (0, 1)
-    assert mgr.txn_read("t").count() == 8
-    v2 = mgr.txn_overwrite(spark.range(2).withColumnRenamed("id", "x"), "t")
+    assert mgr.read("t").count() == 8
+    v2 = mgr.overwrite(spark.range(2).withColumnRenamed("id", "x"), "t")
     assert v2 == 2
-    assert mgr.txn_read("t").count() == 2
+    assert mgr.read("t").count() == 2
     # time travel to the pre-overwrite state
-    assert mgr.txn_read("t", version=1).count() == 8
+    assert mgr.read("t", version=1).count() == 8
     # vacuum drops the two dirs the overwrite removed
-    removed = mgr.txn_vacuum("t")
+    removed = mgr.vacuum("t")
     assert len(removed) == 2
-    assert mgr.txn_read("t").count() == 2
+    assert mgr.read("t").count() == 2
     with pytest.raises(Exception):
-        mgr.txn_read("t", version=1).count()  # vacuumed away
+        mgr.read("t", version=1).count()  # vacuumed away
 
 
 def test_txn_claim_is_exclusive(spark, tmp_path):
     """The hard-link claim admits exactly one writer per version."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(1), "t")
-    rec = {"version": 1, "op": "append", "add": ["_txn_data/x"],
-           "readVersion": 0}
-    assert mgr._txn_try_commit("t", rec) is True
-    assert mgr._txn_try_commit("t", dict(rec, add=["_txn_data/y"])) is False
+    mgr.append(spark.range(1), "t")
+    rec = _record(mgr, 1, "append", [{"path": "_txn_data/x/a.parquet", "stats": {}}], 0)
+    assert mgr._try_commit("t", rec) is True
+    loser = dict(rec, add=[{"path": "_txn_data/y/a.parquet", "stats": {}}])
+    assert mgr._try_commit("t", loser) is False
     # and the surviving record is the winner's, fully formed
-    _, live = mgr._txn_state("t")
-    assert "_txn_data/x" in live and "_txn_data/y" not in live
+    live = [e["path"] for e in mgr._snapshot("t")[1]]
+    assert "_txn_data/x/a.parquet" in live and "_txn_data/y/a.parquet" not in live
 
 
 def test_append_racing_append_retries(spark, tmp_path):
     """A lost append claim retries at the new tip — both land."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3), "t")
+    mgr.append(spark.range(3), "t")
     # simulate a racer stealing version 1 between snapshot and claim
-    real_try = mgr._txn_try_commit
+    real_try = mgr._try_commit
     stolen = {"done": False}
 
     def steal_once(table, record):
         if not stolen["done"]:
             stolen["done"] = True
-            racer = {"version": record["version"], "op": "append",
-                     "add": [mgr._txn_write_data(spark.range(100, 102), "t")],
-                     "readVersion": 0}
+            racer = _record(mgr, record["version"], "append",
+                            mgr._write_data(spark.range(100, 102), "t"), 0)
             assert real_try(table, racer)
         return real_try(table, record)
 
-    mgr._txn_try_commit = steal_once
+    mgr._try_commit = steal_once
     try:
-        v = mgr.txn_append(spark.range(10, 14), "t")
+        v = mgr.append(spark.range(10, 14), "t")
     finally:
-        mgr._txn_try_commit = real_try
+        mgr._try_commit = real_try
     assert v == 2  # retried past the stolen version
-    assert mgr.txn_read("t").count() == 3 + 2 + 4
+    assert mgr.read("t").count() == 3 + 2 + 4
 
 
 def test_append_racing_overwrite_conflicts_loudly(spark, tmp_path):
     """An append whose snapshot predates a committed OVERWRITE must
     raise ConcurrentWriteError, not silently resurrect removed data."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3), "t")
-    real_try = mgr._txn_try_commit
+    mgr.append(spark.range(3), "t")
+    real_try = mgr._try_commit
     stolen = {"done": False}
 
     def steal_with_overwrite(table, record):
         if not stolen["done"]:
             stolen["done"] = True
-            racer = {"version": record["version"], "op": "overwrite",
-                     "add": [mgr._txn_write_data(spark.range(1), "t")],
-                     "remove": [], "readVersion": 0}
+            racer = _record(mgr, record["version"], "overwrite",
+                            mgr._write_data(spark.range(1), "t"), 0)
             assert real_try(table, racer)
         return real_try(table, record)
 
-    mgr._txn_try_commit = steal_with_overwrite
+    mgr._try_commit = steal_with_overwrite
     try:
         with pytest.raises(ConcurrentWriteError, match="overwrite"):
-            mgr.txn_append(spark.range(10, 14), "t")
+            mgr.append(spark.range(10, 14), "t")
     finally:
-        mgr._txn_try_commit = real_try
+        mgr._try_commit = real_try
 
 
 def test_overwrite_racing_anything_conflicts_loudly(spark, tmp_path):
     """An overwrite NEVER retries: any commit after its snapshot makes
     its remove-set stale."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3), "t")
-    real_try = mgr._txn_try_commit
+    mgr.append(spark.range(3), "t")
+    real_try = mgr._try_commit
     stolen = {"done": False}
 
     def steal_once(table, record):
         if not stolen["done"]:
             stolen["done"] = True
-            racer = {"version": record["version"], "op": "append",
-                     "add": [mgr._txn_write_data(spark.range(5), "t")],
-                     "readVersion": 0}
+            racer = _record(mgr, record["version"], "append",
+                            mgr._write_data(spark.range(5), "t"), 0)
             assert real_try(table, racer)
         return real_try(table, record)
 
-    mgr._txn_try_commit = steal_once
+    mgr._try_commit = steal_once
     try:
         with pytest.raises(ConcurrentWriteError, match="conflicts"):
-            mgr.txn_overwrite(spark.range(9), "t")
+            mgr.overwrite(spark.range(9), "t")
     finally:
-        mgr._txn_try_commit = real_try
+        mgr._try_commit = real_try
 
 
 def test_append_never_lands_above_overwrite_committed_mid_retry(
@@ -166,70 +172,67 @@ def test_append_never_lands_above_overwrite_committed_mid_retry(
     silently, resurrecting removed data; the reordered
     scan-after-version-compute must raise instead."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3), "t")  # v0
-    real_try = mgr._txn_try_commit
+    mgr.append(spark.range(3), "t")  # v0
+    real_try = mgr._try_commit
     state = {"injected": False}
 
     def inject(table, record):
         if record["op"] == "append" and not state["injected"]:
             state["injected"] = True
-            racer = {"version": record["version"], "op": "append",
-                     "add": [mgr._txn_write_data(spark.range(5), "t")],
-                     "readVersion": 0}
+            racer = _record(mgr, record["version"], "append",
+                            mgr._write_data(spark.range(5), "t"), 0)
             assert real_try(table, racer)
             res = real_try(table, record)  # our claim loses
             assert res is False
-            ow = {"version": record["version"] + 1, "op": "overwrite",
-                  "add": [mgr._txn_write_data(spark.range(1), "t")],
-                  "remove": [], "readVersion": record["version"]}
+            ow = _record(mgr, record["version"] + 1, "overwrite",
+                         mgr._write_data(spark.range(1), "t"), record["version"])
             assert real_try(table, ow)  # overwrite lands pre-retry
             return res
         return real_try(table, record)
 
-    mgr._txn_try_commit = inject
+    mgr._try_commit = inject
     try:
         with pytest.raises(ConcurrentWriteError, match="overwrite"):
-            mgr.txn_append(spark.range(10, 14), "t")
+            mgr.append(spark.range(10, 14), "t")
     finally:
-        mgr._txn_try_commit = real_try
+        mgr._try_commit = real_try
     # the overwrite's state is intact: only its single row is live
-    assert mgr.txn_read("t").count() == 1
+    assert mgr.read("t").count() == 1
 
 
 def test_vacuum_retention_spares_inflight_writer(spark, tmp_path):
     """r7 advisory (medium): a writer that has written its data dir
-    but not yet claimed a version must survive txn_vacuum — only
+    but not yet claimed a version must survive vacuum — only
     never-committed dirs OLDER than the retention window are treated
     as orphans. Superseded committed dirs drop at any age."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3).withColumnRenamed("id", "x"), "t")  # v0
-    mgr.txn_overwrite(spark.range(2).withColumnRenamed("id", "x"), "t")  # v1
+    mgr.append(spark.range(3).withColumnRenamed("id", "x"), "t")  # v0
+    mgr.overwrite(spark.range(2).withColumnRenamed("id", "x"), "t")  # v1
 
     # an in-flight writer: data written, claim not yet made
-    inflight_rel = mgr._txn_write_data(
+    inflight = mgr._write_data(
         spark.range(7, 9).withColumnRenamed("id", "x"), "t"
     )
-    removed = mgr.txn_vacuum("t")  # default retention: 7 days (Delta's)
+    removed = mgr.vacuum("t")  # default retention: 7 days (Delta's)
     # the superseded v0 dir is gone; the fresh in-flight dir is spared
     assert len(removed) == 1
-    inflight_name = inflight_rel.split("/", 1)[1]
+    inflight_name = inflight[0]["path"].split("/")[1]
     assert inflight_name not in removed
     # ... so the in-flight writer can still commit, and its rows exist
-    rec = {"version": 2, "op": "append", "add": [inflight_rel],
-           "readVersion": 1}
-    assert mgr._txn_try_commit("t", rec)
-    assert mgr.txn_read("t").count() == 2 + 2
+    rec = _record(mgr, 2, "append", inflight, 1)
+    assert mgr._try_commit("t", rec)
+    assert mgr.read("t").count() == 2 + 2
 
     # an ANCIENT never-committed dir (crashed writer) is reclaimed —
     # older than the 7-day default window (r8 advisory raised it from
     # 10 min: retention must exceed the longest possible write)
-    orphan_rel = mgr._txn_write_data(spark.range(1), "t")
-    orphan_path = f"{mgr.path('t')}/{orphan_rel}"
+    orphan_name = mgr._write_data(spark.range(1), "t")[0]["path"].split("/")[1]
+    orphan_path = f"{mgr.path('t')}/_txn_data/{orphan_name}"
     old = time.time() - 8 * 24 * 3600
     os.utime(orphan_path, (old, old))
-    removed2 = mgr.txn_vacuum("t")
-    assert removed2 == [orphan_rel.split("/", 1)[1]]
-    assert mgr.txn_read("t").count() == 4  # committed state untouched
+    removed2 = mgr.vacuum("t")
+    assert removed2 == [orphan_name]
+    assert mgr.read("t").count() == 4  # committed state untouched
 
 
 def test_claim_backend_probe_fails_loudly_without_primitive(
@@ -274,7 +277,7 @@ def test_claim_backend_probe_fails_loudly_without_primitive(
 
         monkeypatch.setattr(T.os, "mkdir", no_mkdir)
     with pytest.raises(ClaimUnsupportedError, match="conditional-put"):
-        mgr.txn_append(spark.range(1), "t")
+        mgr.append(spark.range(1), "t")
 
 
 def test_claim_backend_is_injectable(spark, tmp_path):
@@ -293,8 +296,8 @@ def test_claim_backend_is_injectable(spark, tmp_path):
         spark, str(tmp_path / "wh"), backend="parquet",
         claim_backend=Recording(),
     )
-    mgr.txn_append(spark.range(2), "t")
-    mgr.txn_overwrite(spark.range(1), "t")
+    mgr.append(spark.range(2), "t")
+    mgr.overwrite(spark.range(1), "t")
     # both commits (+1 probe file) went through the injected backend
     assert sum(c.endswith(".json") for c in calls) == 2
 
@@ -304,11 +307,11 @@ def test_txn_read_merges_evolving_schema(spark, tmp_path):
     that adds a column evolves the table schema; earlier rows read the
     new column as NULL (Delta append semantics)."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3).selectExpr("id AS x"), "t")
-    mgr.txn_append(
+    mgr.append(spark.range(3).selectExpr("id AS x"), "t")
+    mgr.append(
         spark.range(3, 5).selectExpr("id AS x", "id * 10 AS y"), "t"
     )
-    df = mgr.txn_read("t")
+    df = mgr.read("t")
     assert set(df.columns) == {"x", "y"}
     rows = {r.x: r.y for r in df.collect()}
     assert rows == {0: None, 1: None, 2: None, 3: 30, 4: 40}
@@ -321,64 +324,53 @@ def test_txn_compact_loses_race_loudly_not_rows(spark, tmp_path):
     overwrite is pinned to the read version, so the interloper taking
     read_version+1 defeats the claim."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(10), "t")  # v0
-    real_write = mgr._txn_write_data
+    mgr.append(spark.range(10), "t")  # v0
+    real_write = mgr._write_data
     injected = {"done": False}
 
-    def write_then_interlope(df, table):
-        rel = real_write(df, table)
+    def write_then_interlope(df, table, partition_by=None):
+        add = real_write(df, table, partition_by)
         if not injected["done"]:
             injected["done"] = True
             # a concurrent append lands AFTER compact's snapshot but
             # BEFORE its claim (mid-rewrite)
-            mgr._txn_write_data = real_write
+            mgr._write_data = real_write
             try:
-                mgr.txn_append(spark.range(100, 105), "t")  # v1
+                mgr.append(spark.range(100, 105), "t")  # v1
             finally:
-                mgr._txn_write_data = write_then_interlope
-        return rel
+                mgr._write_data = write_then_interlope
+        return add
 
-    mgr._txn_write_data = write_then_interlope
+    mgr._write_data = write_then_interlope
     try:
         with pytest.raises(ConcurrentWriteError):
-            mgr.txn_compact("t")
+            mgr.compact("t")
     finally:
-        mgr._txn_write_data = real_write
+        mgr._write_data = real_write
     # nothing lost: both commits' rows remain live
-    assert mgr.txn_read("t").count() == 15
+    assert mgr.read("t").count() == 15
 
 
 def test_txn_compact_preserves_rows_and_history(spark, tmp_path):
     """OPTIMIZE on the commit log: fewer files, identical content, a
     real commit (pre-compaction versions stay time-travelable until
     vacuumed; version number advances)."""
-    import os as _os
-
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
     for i in range(4):  # 4 appends → ≥4 data dirs, many small files
-        mgr.txn_append(
+        mgr.append(
             spark.range(i * 10, i * 10 + 10).repartition(4), "t"
         )
-    assert mgr.txn_version("t") == 3
+    assert mgr.version("t") == 3
 
-    def live_files():
-        _, live = mgr._txn_state("t")
-        return sum(
-            1
-            for rel in live
-            for f in _os.listdir(f"{mgr.path('t')}/{rel}")
-            if f.endswith(".parquet")
-        )
-
-    before = live_files()
-    v = mgr.txn_compact("t")
-    assert v == 4
-    assert live_files() < before
-    assert sorted(r.id for r in mgr.txn_read("t").collect()) == list(range(40))
+    before = len(mgr.files("t"))
+    assert mgr.compact("t") == 1
+    assert mgr.version("t") == 4
+    assert len(mgr.files("t")) < before
+    assert sorted(r.id for r in mgr.read("t").collect()) == list(range(40))
     # pre-compaction state still readable (time travel)
-    assert mgr.txn_read("t", version=3).count() == 40
+    assert mgr.read("t", version=3).count() == 40
     # and vacuum now reclaims the superseded small-file dirs
-    removed = mgr.txn_vacuum("t")
+    removed = mgr.vacuum("t")
     assert len(removed) == 4
 
 
@@ -387,41 +379,41 @@ def test_txn_restore_copies_no_data(spark, tmp_path):
     version's live set: no new _txn_data dir, old content back, later
     versions still time-travelable."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3), "t")  # v0
-    mgr.txn_append(spark.range(3, 5), "t")  # v1
-    mgr.txn_overwrite(spark.range(100, 107), "t")  # v2
+    mgr.append(spark.range(3), "t")  # v0
+    mgr.append(spark.range(3, 5), "t")  # v1
+    mgr.overwrite(spark.range(100, 107), "t")  # v2
     data_root = f"{mgr.path('t')}/_txn_data"
     dirs_before = sorted(os.listdir(data_root))
-    v = mgr.txn_restore("t", 1)
-    assert v == 3 and mgr.txn_version("t") == 3
+    v = mgr.restore("t", 1)
+    assert v == 3 and mgr.version("t") == 3
     assert sorted(os.listdir(data_root)) == dirs_before
-    assert sorted(r.id for r in mgr.txn_read("t").collect()) == list(range(5))
-    assert mgr.txn_read("t", version=2).count() == 7
+    assert sorted(r.id for r in mgr.read("t").collect()) == list(range(5))
+    assert mgr.read("t", version=2).count() == 7
     # the restore commit is an ordinary overwrite record
-    rec = mgr._txn_read_log("t")[-1]
+    rec = mgr._record("t", 3)
     assert rec["op"] == "overwrite" and rec["readVersion"] == 2
-    assert rec["add"] == mgr._txn_live(mgr._txn_read_log("t"), 1)
+    assert rec["add"] == mgr._snapshot("t", 1)[1]
     # appends after a restore extend the restored set
-    mgr.txn_append(spark.range(50, 51), "t")
-    assert mgr.txn_read("t").count() == 6
+    mgr.append(spark.range(50, 51), "t")
+    assert mgr.read("t").count() == 6
 
 
 def test_txn_restore_to_vacuumed_version_raises(spark, tmp_path):
-    """A version whose files txn_vacuum removed, or one the log never
+    """A version whose files vacuum removed, or one the log never
     held, cannot be restored — FileNotFoundError, and no commit."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_overwrite(spark.range(3), "t")  # v0
-    mgr.txn_overwrite(spark.range(5), "t")  # v1
-    assert len(mgr.txn_vacuum("t")) == 1  # v0's dir
+    mgr.overwrite(spark.range(3), "t")  # v0
+    mgr.overwrite(spark.range(5), "t")  # v1
+    assert len(mgr.vacuum("t")) == 1  # v0's dir
     with pytest.raises(FileNotFoundError, match="vacuumed"):
-        mgr.txn_restore("t", 0)
+        mgr.restore("t", 0)
     for missing in (2, 99, -1):
         with pytest.raises(FileNotFoundError, match="not committed"):
-            mgr.txn_restore("t", missing)
+            mgr.restore("t", missing)
     with pytest.raises(FileNotFoundError):
-        mgr.txn_restore("never", 0)
-    assert mgr.txn_version("t") == 1
-    assert mgr.txn_read("t").count() == 5
+        mgr.restore("never", 0)
+    assert mgr.version("t") == 1
+    assert mgr.read("t").count() == 5
 
 
 def test_txn_vacuum_keep_last_keeps_previous_version(spark, tmp_path):
@@ -429,23 +421,44 @@ def test_txn_vacuum_keep_last_keeps_previous_version(spark, tmp_path):
     time travel and restore to the previous version keep working, only
     older superseded dirs are dropped."""
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_overwrite(spark.range(2), "t")  # v0
-    mgr.txn_append(spark.range(2, 3), "t")  # v1 (v0's dir still live)
-    mgr.txn_overwrite(spark.range(10, 14), "t")  # v2
-    mgr.txn_overwrite(spark.range(20, 25), "t")  # v3
-    live_v1 = {
-        rel.split("/", 1)[1] for rel in mgr._txn_live(mgr._txn_read_log("t"), 1)
-    }
-    removed = mgr.txn_vacuum("t", keep_last=2)
+    mgr.overwrite(spark.range(2), "t")  # v0
+    mgr.append(spark.range(2, 3), "t")  # v1 (v0's dir still live)
+    mgr.overwrite(spark.range(10, 14), "t")  # v2
+    mgr.overwrite(spark.range(20, 25), "t")  # v3
+    live_v1 = {e["path"].split("/")[1] for e in mgr._snapshot("t", 1)[1]}
+    removed = mgr.vacuum("t", keep_last=2)
     assert set(removed) == live_v1  # v0+v1 dirs; v2 and v3 kept
-    assert mgr.txn_read("t", version=2).count() == 4
-    assert mgr.txn_read("t").count() == 5
+    assert mgr.read("t", version=2).count() == 4
+    assert mgr.read("t").count() == 5
     with pytest.raises(Exception):
-        mgr.txn_read("t", version=1).count()
-    assert mgr.txn_restore("t", 2) == 4
-    assert mgr.txn_read("t").count() == 4
+        mgr.read("t", version=1).count()
+    assert mgr.restore("t", 2) == 4
+    assert mgr.read("t").count() == 4
     with pytest.raises(ValueError):
-        mgr.txn_vacuum("t", keep_last=0)
+        mgr.vacuum("t", keep_last=0)
+
+
+def test_vacuum_bounds_the_log(spark, tmp_path):
+    """Vacuum also drops the commit records below the last overwrite
+    the kept versions replay from: 40 appends, a compaction and a
+    vacuum leave one record, and the table reads, versions and appends
+    on as before."""
+    mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
+    for i in range(40):
+        mgr.append(spark.range(i, i + 1, numPartitions=1), "t")
+    mgr.compact("t")  # v40
+    mgr.vacuum("t")
+    tip = f"{40:020d}.json"
+    assert sorted(os.listdir(mgr._log_dir("t"))) in (
+        [tip], [tip, tip + ".claim"]  # ConditionalPutClaim's marker
+    )
+    assert mgr.version("t") == 40
+    assert mgr.read("t").count() == 40
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        mgr.read("t", version=39)
+    assert mgr.append(spark.range(40, 41), "t") == 41
+    assert mgr.read("t").count() == 41
+    assert mgr.vacuum("t") == [] and len(os.listdir(mgr._log_dir("t"))) >= 2
 
 
 # -- the two-OS-process acceptance test ----------------------------------
@@ -478,24 +491,24 @@ _WRITER_SCRIPT = textwrap.dedent(
             df = (spark.range(50)
                   .select(F.lit(marker + "-" + str(b)).alias("batch"),
                           F.col("id")))
-            v = mgr.txn_append(df, "t")
+            v = mgr.append(df, "t")
             print("committed", marker, b, "as v", v, flush=True)
         print("APPENDER_OK", flush=True)
     else:  # conflicted overwrite: snapshot, wait for an append, commit
-        real = mgr._txn_write_data
-        def slow_write(df, table):
-            rel = real(df, table)
+        real = mgr._write_data
+        def slow_write(df, table, partition_by=None):
+            add = real(df, table, partition_by)
             # wait until the other process has committed something
             # beyond our read snapshot
-            base = mgr.txn_version("t")
+            base = mgr.version("t")
             for _ in range(600):
-                if mgr.txn_version("t") != base:
+                if mgr.version("t") != base:
                     break
                 time.sleep(0.1)
-            return rel
-        mgr._txn_write_data = slow_write
+            return add
+        mgr._write_data = slow_write
         try:
-            mgr.txn_overwrite(spark.range(1).select(
+            mgr.overwrite(spark.range(1).select(
                 F.lit("ow").alias("batch"), F.col("id")), "t")
             print("OVERWRITE_LANDED", flush=True)
         except ConcurrentWriteError as e:
@@ -516,7 +529,7 @@ def test_two_process_appends_conflict_and_reads(spark, tmp_path, claim_impl):
     for — both implementations must survive them)."""
     wh = str(tmp_path / "wh")
     mgr = TableManager(spark, wh, backend="parquet")
-    mgr.txn_append(
+    mgr.append(
         spark.range(50).selectExpr("'seed-0' AS batch", "id"), "t"
     )
 
@@ -543,12 +556,12 @@ def test_two_process_appends_conflict_and_reads(spark, tmp_path, claim_impl):
     last_version = -1
     try:
         while any(p.poll() is None for p in procs) and time.time() < deadline:
-            v = mgr.txn_version("t")
+            v = mgr.version("t")
             assert v >= last_version, "committed version went backwards"
             last_version = v
             counts = {
                 r["batch"]: r["n"]
-                for r in mgr.txn_read("t")
+                for r in mgr.read("t")
                 .groupBy("batch").agg(F_count())
                 .collect()
             }
@@ -570,12 +583,12 @@ def test_two_process_appends_conflict_and_reads(spark, tmp_path, claim_impl):
     # all 9 batches (1 seed + 2×4) landed exactly once, 50 rows each
     final = {
         r["batch"]: r["n"]
-        for r in mgr.txn_read("t").groupBy("batch").agg(F_count()).collect()
+        for r in mgr.read("t").groupBy("batch").agg(F_count()).collect()
     }
     assert len(final) == 9, sorted(final)
     assert all(n == 50 for n in final.values())
     # versions are contiguous 0..8 (every claim resolved)
-    assert mgr.txn_version("t") == 8
+    assert mgr.version("t") == 8
 
 
 def F_count():
@@ -601,13 +614,13 @@ def test_claim_probe_is_per_directory(spark, tmp_path):
         spark, str(tmp_path / "wh"), backend="parquet",
         claim_backend=Recording(),
     )
-    mgr.txn_append(spark.range(1), "t1")        # txn-log dir of t1
-    mgr.txn_append(spark.range(1), "t1")        # same dir: no new probe
-    mgr.txn_append(spark.range(1), "t2")        # txn-log dir of t2
-    mgr.txn_overwrite(spark.range(1), "t2")     # same dir: no new probe
+    mgr.append(spark.range(1), "t1")        # txn-log dir of t1
+    mgr.append(spark.range(1), "t1")        # same dir: no new probe
+    mgr.append(spark.range(1), "t2")        # txn-log dir of t2
+    mgr.overwrite(spark.range(1), "t2")     # same dir: no new probe
     assert len(probed) == 2 and len(set(probed)) == 2
-    assert mgr._txn_log_dir("t1") in probed
-    assert mgr._txn_log_dir("t2") in probed
+    assert mgr._log_dir("t1") in probed
+    assert mgr._log_dir("t2") in probed
 
 
 # -- conditional-put (mock object store) fault injection ------------------
@@ -627,28 +640,26 @@ def test_conditional_put_visibility_lag_is_safe(spark, tmp_path, claim_impl):
     if claim_impl != "conditional_put":
         pytest.skip("backend-specific fault injection")
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3), "t")  # v0
+    mgr.append(spark.range(3), "t")  # v0
 
     # racer: claims v1 through a LAGGY backend (ack now, publish late)
     laggy = ConditionalPutClaim(visibility_delay_s=0.6)
-    racer_rel = mgr._txn_write_data(spark.range(100, 105), "t")
-    rec = {"version": 1, "op": "append", "add": [racer_rel],
-           "readVersion": 0}
+    rec = _record(mgr, 1, "append", mgr._write_data(spark.range(100, 105), "t"), 0)
     payload = __import__("json").dumps(rec).encode()
     racer = threading.Thread(
         target=lambda: laggy.put_if_absent(
-            payload, mgr._txn_commit_path("t", 1)
+            payload, mgr._commit_path("t", 1)
         )
     )
     racer.start()
     time.sleep(0.1)  # claim marker is down, object not yet visible
     # competing append: loses the claim on invisible v1 until it
     # publishes, then retries onto v2 — exactly-once
-    v = mgr.txn_append(spark.range(10, 14), "t", max_retries=200_000)
+    v = mgr.append(spark.range(10, 14), "t", max_retries=200_000)
     racer.join()
     assert v == 2
-    assert mgr.txn_version("t") == 2
-    assert mgr.txn_read("t").count() == 3 + 5 + 4  # racer's rows landed too
+    assert mgr.version("t") == 2
+    assert mgr.read("t").count() == 3 + 5 + 4  # racer's rows landed too
 
 
 def test_conditional_put_crash_window_fails_loudly(
@@ -663,7 +674,7 @@ def test_conditional_put_crash_window_fails_loudly(
     if claim_impl != "conditional_put":
         pytest.skip("backend-specific fault injection")
     mgr = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
-    mgr.txn_append(spark.range(3), "t")  # v0
+    mgr.append(spark.range(3), "t")  # v0
 
     class Crash(RuntimeError):
         pass
@@ -672,10 +683,10 @@ def test_conditional_put_crash_window_fails_loudly(
         on_claimed=lambda path: (_ for _ in ()).throw(Crash("died"))
     )
     with pytest.raises(Crash):
-        crasher.put_if_absent(b"{}", mgr._txn_commit_path("t", 1))
+        crasher.put_if_absent(b"{}", mgr._commit_path("t", 1))
     # v1 is claimed forever but never published: appends stall, then
     # raise — the log itself stays clean (v0 only, every record parses)
     with pytest.raises(ConcurrentWriteError, match="lost the commit race"):
-        mgr.txn_append(spark.range(5), "t", max_retries=10)
-    assert mgr.txn_version("t") == 0
-    assert mgr.txn_read("t").count() == 3
+        mgr.append(spark.range(5), "t", max_retries=10)
+    assert mgr.version("t") == 0
+    assert mgr.read("t").count() == 3

@@ -8,7 +8,6 @@ exactly the full-scan answer)."""
 
 from __future__ import annotations
 
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,18 +16,17 @@ from lakehouse_v3_spark.tables import TableManager
 
 
 @pytest.fixture(scope="module")
-def clustered(spark, sf_dir):
+def clustered(spark, sf_dir, tmp_path_factory):
     """lineitem written unclustered into 16 files, then z-clustered on
     (l_orderkey, l_partkey) into ~16 files."""
     tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="zorder_wh_"), backend="parquet"
+        spark, str(tmp_path_factory.mktemp("zorder_wh")), backend="parquet"
     )
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
     )
     n = li.count()
     tm.overwrite(li.repartition(16), "t_unclustered")
-    tm._write_stats("t_unclustered", ["l_orderkey", "l_partkey"])
     tm.overwrite(li.repartition(16), "t")
     n_files = tm.cluster_by(
         "t", ["l_orderkey", "l_partkey"], target_file_rows=max(1, n // 16)
@@ -117,50 +115,47 @@ def test_empty_intersection_reads_zero_files(clustered):
 
 
 def test_stats_manifest_survives_and_is_conservative(clustered):
-    """A column absent from the manifest never prunes (conservative
-    keep), and the sidecar lives NEXT TO the table root so the atomic
-    overwrite swap cannot destroy a fresh manifest mid-write."""
+    """Every commit logs min/max for every column of the files it adds;
+    a predicate column without stats never prunes (conservative keep)."""
     tm, n, _ = clustered
-    files, total = tm.prune_files("t", {"l_quantity": (0.0, 1.0)})
-    assert len(files) == total  # no stats for l_quantity → keep all
-
-
-def test_write_after_cluster_invalidates_stale_manifest(spark, sf_dir):
-    """Correctness guard: a write AFTER cluster_by drops the stats
-    sidecar (a pre-write manifest would prune against a dead file
-    list), so read_skipping fails loudly instead of losing rows; and
-    files the manifest doesn't know are always read."""
-    import json as _json
-    import os as _os
-
-    tm = TableManager(
-        spark, tempfile.mkdtemp(prefix="zstale_wh_"), backend="parquet"
+    files, total = tm.prune_files("t", {"no_such_column": (0.0, 1.0)})
+    assert len(files) == total  # no stats → keep all
+    stats = [e["stats"] for e in tm._snapshot("t")[1]]
+    assert all(
+        set(s) == {"l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"}
+        for s in stats
     )
+
+
+def test_write_after_cluster_invalidates_stale_manifest(spark, sf_dir, tmp_path):
+    """Correctness guard: the stats are per commit, so a write AFTER
+    cluster_by cannot leave a stale manifest — the appended file brings
+    its own min/max and skipping stays exact; and a live file without
+    stats for the predicate column is always read."""
+    tm = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_partkey"
     )
     tm.overwrite(li, "t")
     tm.cluster_by("t", ["l_orderkey"], target_file_rows=max(1, li.count() // 8))
-    assert _os.path.exists(tm._stats_path("t"))
-
-    # an append invalidates the manifest → loud FileNotFoundError
-    tm.append(li.limit(5), "t")
-    assert not _os.path.exists(tm._stats_path("t"))
-    with pytest.raises(FileNotFoundError):
-        tm.read_skipping("t", {"l_orderkey": (0, 10)})
-
-    # re-cluster, then simulate an unknown file sneaking in UNDER a
-    # live manifest: it must be read unconditionally
-    tm.cluster_by("t", ["l_orderkey"], target_file_rows=max(1, li.count() // 8))
-    manifest = _json.load(open(tm._stats_path("t")))
-    victim = sorted(manifest["files"])[0]
-    del manifest["files"][victim]
-    _json.dump(manifest, open(tm._stats_path("t"), "w"))
     mx = tm.read("t").agg(F.max("l_orderkey")).collect()[0][0]
-    files, total = tm.prune_files("t", {"l_orderkey": (mx + 1, None)})
-    # every known file is prunable for an impossible range, but the
-    # unknown file survives pruning
-    assert [f for f in files if f.endswith(victim)] and len(files) == 1
+
+    # an append past the clustered range: its file is the only one a
+    # predicate above the old max can touch, and its rows are found
+    tm.append(li.limit(5).withColumn("l_orderkey", F.col("l_orderkey") + mx), "t")
+    df, n_read, total = tm.read_skipping("t", {"l_orderkey": (mx + 1, None)})
+    assert n_read == 1 and total == len(tm.files("t"))
+    assert df.count() == tm.read("t").filter(F.col("l_orderkey") > mx).count()
+
+    # a live file whose entry lacks stats for the column survives
+    # pruning for an impossible range
+    head, live = tm._snapshot("t")
+    victim = dict(live[0], stats={})
+    rec = dict(head, version=head["version"] + 1, op="overwrite",
+               add=[victim] + live[1:], readVersion=head["version"])
+    assert tm._try_commit("t", rec)
+    files, _ = tm.prune_files("t", {"l_orderkey": (10 * mx, None)})
+    assert files == [f"{tm.path('t')}/{victim['path']}"]
 
 
 def test_cluster_by_rejects_non_parquet_backend(spark, tmp_path):
@@ -180,29 +175,52 @@ def test_cluster_by_rejects_non_parquet_backend(spark, tmp_path):
 
 
 def test_stats_walk_excludes_reserved_subtrees(spark, tmp_path):
-    """r8 advisory: if the txn API and cluster_by are used on the same
-    table path, _txn_data uuid dirs (including superseded versions)
-    must NOT be indexed as table files — neither in the manifest nor
-    in prune_files' conservative on-disk set, or skipping scans would
-    read dead versions' rows."""
+    """r8 advisory: superseded versions' files under _txn_data must
+    never be skipping candidates — pruning works on the live set of
+    the latest commit only, so skipping scans cannot read dead
+    versions' rows."""
     tm = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
     df = spark.range(100).selectExpr("id AS x", "id * 2 AS y")
     tm.overwrite(df, "t")
-    # txn traffic on the same table path: one superseded + one live set
-    tm.txn_append(spark.range(500, 600).selectExpr("id AS x", "id*2 AS y"), "t")
-    tm.txn_overwrite(spark.range(700, 710).selectExpr("id AS x", "id*2 AS y"), "t")
-    tm.txn_restore("t", 0)  # restore commit: the overwrite dir is dead too
-    tm._write_stats("t", ["x"])
-    import json as _json
-
-    with open(tm._stats_path("t"), encoding="utf-8") as f:
-        manifest = _json.load(f)
-    assert all(
-        not rel.startswith(("_txn_data", "_txn_log"))
-        for rel in manifest["files"]
-    ), sorted(manifest["files"])
-    # pruning sees only the 100 table rows — never dead txn versions
+    # one superseded + one live set on the same table
+    tm.append(spark.range(500, 600).selectExpr("id AS x", "id*2 AS y"), "t")
+    tm.overwrite(spark.range(700, 710).selectExpr("id AS x", "id*2 AS y"), "t")
+    tm.restore("t", 0)  # restore commit: the overwrite dir is dead too
+    live = tm.files("t")
+    assert live == [f"{tm.path('t')}/{e['path']}" for e in tm._snapshot("t", 0)[1]]
+    # pruning sees only the 100 table rows — never dead versions
     files, total = tm.prune_files("t", {"x": (0, 99)})
-    assert total == len(manifest["files"])
+    assert total == len(live) and sorted(files) == sorted(live)
     got, n_read, _ = tm.read_skipping("t", {"x": (0, None)})
     assert got.count() == 100
+
+
+def test_decimal_and_date_columns_prune(spark, tmp_path):
+    """Decimal and date columns carry logged min/max too: a decimal
+    bound is widened outward to the nearest float, so a point predicate
+    on a file's exact min or max still reads that file, and a date
+    column prunes on date or ISO-string bounds."""
+    import datetime
+    from decimal import Decimal
+
+    tm = TableManager(spark, str(tmp_path / "wh"), backend="parquet")
+    df = spark.range(40).selectExpr(
+        "id",
+        "CAST(id / 10 + 0.1 AS DECIMAL(12, 2)) AS amt",
+        "DATE_ADD(DATE'2024-01-01', CAST(id AS INT)) AS d",
+    )
+    tm.overwrite(df.repartitionByRange(4, "id"), "s.typed")
+    stats = [e["stats"] for e in tm._snapshot("s.typed")[1]]
+    assert len(stats) == 4 and all({"amt", "d"} <= s.keys() for s in stats)
+
+    for i in (0, 9, 10, 39):  # every file edge and an interior value
+        amt = Decimal(i) / 10 + Decimal("0.1")
+        for preds in (
+            {"amt": (amt.quantize(Decimal("0.01")),) * 2},
+            {"d": (datetime.date(2024, 1, 1) + datetime.timedelta(days=i),) * 2},
+            {"d": ((datetime.date(2024, 1, 1)
+                    + datetime.timedelta(days=i)).isoformat(),) * 2},
+        ):
+            got, read, total = tm.read_skipping("s.typed", preds)
+            assert [r.id for r in got.collect()] == [i], preds
+            assert (read, total) == (1, 4), preds

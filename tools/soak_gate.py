@@ -91,7 +91,7 @@ def main() -> None:
 
     def file_counts() -> dict:
         return {
-            t: sum(1 for _ in tm._data_files(tm.path(t)))
+            t: len(tm.files(t))
             for t in C._MAINTAINED_TABLES
             if tm.exists(t)
         }
