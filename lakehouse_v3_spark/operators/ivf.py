@@ -7,16 +7,18 @@ only shipped a single Lloyd step (plans/ml_extras.py kmeans_lloyd_step)
 and single-cell probing. This module closes r4 verdict item #5.
 
 Design for 100 TB:
-  - Each Lloyd iteration is ONE distributed aggregation job: assignment
-    is an Arrow-batched numpy argmin (k × dim vectorized multiply-adds
-    per batch — no join, no shuffle; see assign_cells for why this
-    beats a codegen expression here), and the centroid update is
-    posexplode → groupBy(cid, dim) with map-side partial aggregation,
-    so the shuffle carries only k × dim × partitions partial sums no
-    matter the corpus size.
+  - Training runs the one loop of operators/train_blocks (``train``):
+    the training frame is projected ONCE into a persisted RDD of numpy
+    blocks, and each Lloyd iteration is one single-stage
+    mapPartitions → collect job over it — exact left-fold argmin
+    assignment plus per-cell int64 micro-unit sums, no shuffle — so
+    only k × dim partial sums per partition reach the driver no matter
+    the corpus size. Corpus-scale ASSIGNMENT (assign_cells) is an
+    Arrow-batched numpy argmin — no join, no shuffle; see assign_cells
+    for why this beats a codegen expression here.
   - The centroids themselves are k × dim scalars — model parameters,
     the same class of driver-side state as a MAX-id watermark — and are
-    re-broadcast as literals each iteration. Nothing row-shaped ever
+    re-broadcast each iteration. Nothing row-shaped ever
     reaches the driver.
   - Convergence is decided in integer MICRO-UNITS (component values are
     rounded to 6 dp each iteration, shift = max |Δ| in 1e-6 units,
@@ -44,22 +46,18 @@ Determinism contract shared with the oracles (plans/ivf_queries.py):
 
 from __future__ import annotations
 
-import math
-import os
-
 # module-level so the pandas_udf type hints (stringified by the
 # __future__ annotations import) resolve via module globals
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..partitioning import training_frame_width as _training_frame_width
 from .train_blocks import (
     _cell_dists_mat,
-    build_blocks as _build_blocks,
-    lloyd_partial_sums as _lloyd_partial_sums,
     make_round6 as _make_round6,
     micro_mean as _micro_mean,
+    train as _train,
+    training_blocks as _training_blocks,
 )
 
 IVF_K = 8
@@ -164,17 +162,6 @@ def probe_cells_expr(vec, cents: list[list[float]], nprobe: int):
     return _probe(vec)
 
 
-def _round_half_away(x: float) -> int:
-    """DuckDB/Spark ROUND(x, 0) semantics (half away from zero) — NOT
-    Python's banker's rounding — so the driver-side shift integers are
-    the same ones the SQL oracle computes."""
-    return int(math.copysign(math.floor(abs(x) + 0.5), x))
-
-
-def _micro(component: float) -> int:
-    return _round_half_away(component * 1e6)
-
-
 # r13: the process-wide memo of converged centroids (keyed on the
 # embeddings file identity) was REMOVED. It meant a bench's timed run
 # — and every catalog query after the first — returned training
@@ -216,81 +203,45 @@ def _seed_cents(e: DataFrame, k: int) -> list[list[float]]:
 
 
 def lloyd_converged(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = IVF_K,
-    tol_micro: int = IVF_TOL_MICRO,
-    max_iter: int = IVF_MAX_ITER,
-) -> tuple[list[list[float]], list[int], int, list[list[float]]]:
-    """Run Lloyd iterations until the max per-component centroid shift
-    drops to ≤ tol_micro micro-units. Returns
-    ``(cents, n_assigned, n_iters, prev_cents)`` where ``cents`` is the
-    converged k × dim centroid list, ``n_assigned`` the final cell
-    sizes, and ``prev_cents`` the centroids of iteration n_iters−1 —
-    callers that must RETURN the converged state as a DataFrame rebuild
-    the final aggregation lazily from prev_cents so their output plan
-    is distributed end-to-end (no createDataFrame of results).
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[list[float]], int, list[list[float]]]:
+    """Run Lloyd iterations (k = IVF_K) until the max per-component
+    centroid shift drops to ≤ IVF_TOL_MICRO micro-units. Returns
+    ``(cents, n_iters, prev_cents)`` where ``cents`` is the converged
+    k × dim centroid list and ``prev_cents`` the centroids of iteration
+    n_iters−1 — callers that must RETURN the converged state as a
+    DataFrame rebuild the final aggregation lazily from prev_cents so
+    their output plan is distributed end-to-end (no createDataFrame of
+    results).
 
-    Raises loudly if max_iter is hit without convergence or any cell
-    empties (both would silently diverge from the oracle otherwise).
-    """
+    Raises loudly if IVF_MAX_ITER is hit without convergence or any
+    cell empties (both would silently diverge from the oracle
+    otherwise)."""
     from ..io_utils import load
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = _seed_cents(e, k)
-    dim = len(cents[0])
+    final, n_iters, prev = _lloyd(e, IVF_K, IVF_TOL_MICRO, IVF_MAX_ITER, False)
+    return final[0], n_iters[0], prev[0]
 
-    # r14 (guide §1.2): the loop iterates over a PERSISTED RDD of numpy
-    # blocks (one single-stage mapPartitions → collect per iteration —
-    # no Catalyst plan, no pandas_udf pickle, no shuffle, no Arrow round
-    # trip), built once at the bytes-derived TRAINING width (r13: a
-    # one-split scan would run everything single-task, full session
-    # parallelism over-shards the tiny per-iteration jobs). Components
-    # are the exact int64 micro sums (= the decimal(30,6) sums, order-
-    # independent) finished with the identical ROUND(sum/n, 6) recipe;
-    # the lockstep harness (tools/probe_train_equiv.py) pins every
-    # iteration bit-identical to the r13 DataFrame loop.
-    blocks = _build_blocks(
-        e.repartition(_training_frame_width(e), "vec_id")
-    ).persist()
-    round6 = _make_round6(spark)
+
+def _lloyd(e: DataFrame, k: int, tol_micro: int, max_iter: int, capped: bool):
+    """Seed, then train Lloyd as model 0 of train_blocks.train (one
+    subspace of width dim) with the kmeans_lloyd_step component rule
+    ROUND(decimal mean, 6)."""
+    seeds = {0: _seed_cents(e, k)}
+    round6 = _make_round6(e.sparkSession)
+    blocks = _training_blocks(e)
     try:
-        prev_cents = cents
-        n_iters = None
-        n_assigned: list[int] = []
-        for it in range(1, max_iter + 1):
-            sums, counts_a = _lloyd_partial_sums(blocks, cents)
-            counts = [int(c) for c in counts_a]
-            if min(counts) == 0:
-                raise RuntimeError(
-                    f"lloyd_converged: empty cell at iteration {it} "
-                    f"(counts={counts}) — undefined vs the oracle"
-                )
-            new = [
-                [
-                    round6(_micro_mean(sums[c][d], counts[c]))
-                    for d in range(dim)
-                ]
-                for c in range(k)
-            ]
-            shift = max(
-                abs(_micro(new[c][d]) - _micro(cents[c][d]))
-                for c in range(k)
-                for d in range(dim)
-            )
-            prev_cents, cents, n_assigned = cents, new, counts
-            if shift <= tol_micro:
-                n_iters = it
-                break
-        if n_iters is None:
-            raise RuntimeError(
-                f"lloyd_converged: no convergence to {tol_micro} micro-units "
-                f"within {max_iter} iterations"
-            )
+        return _train(
+            blocks,
+            seeds,
+            lambda a, n: round6(_micro_mean(a, n)),
+            tol_micro,
+            max_iter,
+            capped,
+        )
     finally:
         blocks.unpersist()
-
-    return (cents, n_assigned, n_iters, prev_cents)
 
 
 CLUSTER_CAP_ITERS = 4  # Lloyd iteration budget for corpus-scaled k
@@ -301,10 +252,8 @@ def lloyd_capped(
     k: int,
     iters: int = CLUSTER_CAP_ITERS,
     tol_micro: int = IVF_TOL_MICRO,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[list[list[float]], int]:
-    """Budget-capped Lloyd over an arbitrary (id, vector) frame — the
+    """Budget-capped Lloyd over a (vec_id, embedding) frame — the
     coarse-quantizer trainer for CORPUS-SCALED k (the SemDeDup cluster
     model, r11 verdict item #1a). Same machinery as
     :func:`lloyd_converged` (seeds = first k vectors in id order at
@@ -332,44 +281,13 @@ def lloyd_capped(
     plans/curation_pipeline.py), which is why the budget must be a
     compile-time constant. Returns ``(cents, n_iters)``.
 
-    Scale shape: identical to :func:`lloyd_converged` — each iteration
-    is one distributed aggregation (Arrow argmin assignment, map-side
-    partial k × dim sums); only k × dim scalars reach the driver."""
-    e = emb.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    )
-    cents = _seed_cents(e, k)
-    dim = len(cents[0])
-
-    # r14: persisted numpy-blocks RDD + single-stage partial-sum job per
-    # iteration, same machinery and equality harness as lloyd_converged
-    blocks = _build_blocks(
-        e.repartition(_training_frame_width(e), "vec_id")
-    ).persist()
-    round6 = _make_round6(e.sparkSession)
-    try:
-        for it in range(1, iters + 1):
-            sums, counts = _lloyd_partial_sums(blocks, cents)
-            new = [
-                [
-                    round6(_micro_mean(sums[c][d], int(counts[c])))
-                    if counts[c]
-                    else cents[c][d]  # empty cells carry over
-                    for d in range(dim)
-                ]
-                for c in range(k)
-            ]
-            shift = max(
-                abs(_micro(new[c][d]) - _micro(cents[c][d]))
-                for c in range(k)
-                for d in range(dim)
-            )
-            cents = new
-            if shift <= tol_micro:
-                return cents, it
-        return cents, iters
-    finally:
-        blocks.unpersist()
+    Scale shape: identical to :func:`lloyd_converged` — the
+    train_blocks loop over a persisted blocks RDD, one shuffle-free
+    job per iteration; only k × dim partial sums per partition reach
+    the driver."""
+    e = emb.select("vec_id", "embedding")
+    final, n_iters, _ = _lloyd(e, k, tol_micro, iters, True)
+    return final[0], n_iters[0]
 
 
 def _lloyd_update(e: DataFrame, cents: list[list[float]]) -> DataFrame:

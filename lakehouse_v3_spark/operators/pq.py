@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 # module-level so stringified pandas_udf type hints resolve (see ivf.py)
 import pandas as pd
 
+from .train_blocks import _cell_dists_mat
+
 PQ_N_SUB = 8  # subspaces
 PQ_K_CODES = 16  # codewords per subspace
 
@@ -90,20 +92,6 @@ def corpus_rows(sf_dir: str, table: str = "embeddings") -> int:
                     os.path.join(dirpath, fn)
                 ).metadata.num_rows
     return total
-
-
-def _seq_sqdist_np(M, cent):
-    """Exact left-fold Σ (M[:,d]-cent[d])² — sequential over dims,
-    vectorized over rows; one accumulator per row, seeded 0.0 (the
-    numpy twin of plans' list_reduce fold — see operators/ivf
-    ._cell_dists_np for why np.dot/np.sum would silently diverge)."""
-    import numpy as np
-
-    acc = np.zeros(M.shape[0], dtype=np.float64)
-    for d, c in enumerate(cent):
-        diff = M[:, d] - c
-        acc = acc + diff * diff
-    return acc
 
 
 def pq_codebooks(
@@ -189,10 +177,7 @@ def _pq_update(
         M = np.vstack(emb.to_numpy()).astype(np.float64)
         out = np.empty((M.shape[0], len(cbs_local)), dtype=np.int32)
         for a, (s, sub) in enumerate(zip(active, cbs_local)):
-            Ms = M[:, s * w : (s + 1) * w]
-            d = np.empty((M.shape[0], len(sub)), dtype=np.float64)
-            for j, cw in enumerate(sub):
-                d[:, j] = _seq_sqdist_np(Ms, cw)
+            d = _cell_dists_mat(M[:, s * w : (s + 1) * w], sub)
             out[:, a] = np.argmin(d, axis=1)  # first min → lowest j
         return pd.Series(list(out))
 
@@ -223,16 +208,8 @@ def _pq_update(
             .cast("long")
             .alias("_am"),
         )
-        # component = half-away-from-zero(Σ/n at 6 dp) computed ENTIRELY
-        # in int64 rational arithmetic — round_half_up(a/n) =
-        # (2a + n) div (2n) for a ≥ 0, mirrored for a < 0. The r6-era
-        # ROUND(decimal_sum/n, 6) recipe rounds a DOUBLE quotient, and
-        # with the small cells of a 64-codeword codebook (~8 members)
-        # the quotient lands on a .xxxxxx5 boundary often enough that
-        # Spark's BigDecimal-expansion ROUND and DuckDB's scaled-double
-        # ROUND disagreed on 3 of 4096 components (measured). Integer
-        # arithmetic has no boundary: both engines compute the same
-        # int64, and micro/1e6 is the same double everywhere.
+        # component = the int64 half-away-from-zero mean of
+        # train_blocks.pq_component (see there for why not ROUND)
         .select(
             "s",
             "j",
@@ -263,19 +240,14 @@ def pq_train_codebooks(
     spark: SparkSession,
     sf_dir: str,
     vec_col: str = "embedding",
-    n_sub: int = PQ_N_SUB,
-    k_codes: int = PQ_TRAIN_K,
-    tol_micro: int = PQ_TRAIN_TOL_MICRO,
-    max_iter: int = PQ_TRAIN_MAX_ITER,
     train_df: DataFrame | None = None,
-    sample_cap: int | None = PQ_TRAIN_SAMPLE_CAP,
 ) -> tuple[list[list[list[float]]], list[int], dict[int, list[list[float]]]]:
-    """TRAINED per-subspace codebooks: Lloyd's k-means run independently
-    in each of the ``n_sub`` subspaces until that subspace's max
-    per-component centroid shift drops to ≤ ``tol_micro`` micro-units
-    (per-subspace stopping — each codebook is a converged k-means, not
-    a snapshot of a jointly-stopped loop). Returns
-    ``(codebooks, n_iters, prev_cbs)``:
+    """TRAINED per-subspace codebooks: Lloyd's k-means (PQ_TRAIN_K
+    codewords) run independently in each of the PQ_N_SUB subspaces
+    until that subspace's max per-component centroid shift drops to ≤
+    PQ_TRAIN_TOL_MICRO micro-units (per-subspace stopping — each
+    codebook is a converged k-means, not a snapshot of a
+    jointly-stopped loop). Returns ``(codebooks, n_iters, prev_cbs)``:
 
     - ``codebooks[s][j]`` — converged codeword j of subspace s;
     - ``n_iters[s]`` — the iteration at which subspace s converged;
@@ -283,18 +255,18 @@ def pq_train_codebooks(
       catalog queries can rebuild the final aggregation LAZILY and
       return a distributed plan (the lloyd_converged convention).
 
-    Training set: above ``sample_cap`` vectors the train set defaults
-    to the DETERMINISTIC sample ``vec_id % ceil(n / sample_cap) == 0``
-    (r7 verdict item #4) — per-iteration cost is then ~constant in
-    corpus size, which is the 100 TB story; below the cap it is the
-    full corpus (bit-identical to the unsampled recipe, so all driver
-    fixtures ≤2000 vectors are unaffected). The same rule is applied
-    to a caller-supplied ``train_df`` (disable with
-    ``sample_cap=None``), and mirrored exactly in the DuckDB oracle by
-    plans/pq_train_sql.train_source_sql. Every iteration is ONE
-    distributed aggregation over all still-active subspaces (converged
-    subspaces drop out of the job — the Arrow closure shrinks as
-    training proceeds).
+    Training set: above PQ_TRAIN_SAMPLE_CAP vectors the train set is
+    the DETERMINISTIC sample ``vec_id % ceil(n / cap) == 0`` (r7
+    verdict item #4) — per-iteration cost is then ~constant in corpus
+    size, which is the 100 TB story; below the cap it is the full
+    corpus, so all driver fixtures ≤2000 vectors train on every
+    vector. The same rule applies to a caller-supplied ``train_df``
+    (which must carry ``vec_id``), and is mirrored exactly in the
+    DuckDB oracle by plans/pq_train_sql.train_source_sql. The subspaces
+    are the models of the one train_blocks loop: every iteration is
+    ONE shuffle-free job over the persisted blocks RDD covering all
+    still-active subspaces, and converged subspaces drop out of later
+    jobs.
 
     Raises loudly on empty codewords or non-convergence (both would
     silently diverge from the DuckDB oracle's unrolled chain).
@@ -306,104 +278,35 @@ def pq_train_codebooks(
     test_pq_unroll_covers_fixtures re-pins it every run.
     """
     from ..io_utils import load
+    from .train_blocks import pq_component, train, training_blocks
 
     e = (
         train_df
         if train_df is not None
         else load(spark, sf_dir, "embeddings").select("vec_id", vec_col)
     )
-    if sample_cap is not None:
-        n = corpus_rows(sf_dir) if train_df is None else e.count()
-        stride = pq_train_stride(n, sample_cap)
-        if stride > 1:
-            e = e.filter((F.col("vec_id") % stride) == 0)
-    seeds = pq_codebooks(
-        spark, e, vec_col=vec_col, n_sub=n_sub, k_codes=k_codes
-    )
-    w = len(seeds[0][0])
-
-    # r14 (guide §1.2): the loop iterates over a PERSISTED RDD of numpy
-    # blocks — one single-stage mapPartitions → collect per iteration
-    # (no Catalyst plan, no pandas_udf pickle, no shuffle, no Arrow),
-    # built once at the bytes-derived training width (r13). The int64
-    # micro partial sums are EXACTLY the decimal(30,6) sums × 1e6 (the
-    # micro matrix is computed by Spark's own decimal cast), and the
-    # component recipe below is the identical (2a+n) DIV (2n) int64
-    # rational — the lockstep harness (tools/probe_train_equiv.py) pins
-    # every iteration bit-identical to the r13 _pq_update loop.
-    from ..partitioning import training_frame_width
-    from .train_blocks import build_blocks, pq_partial_sums
-
-    blocks = build_blocks(
-        e.repartition(training_frame_width(e)), vec_col=vec_col
-    ).persist()
-
-    def _component(am: int, n: int) -> float:
-        rounded = (
-            (2 * am + n) // (2 * n) if am >= 0 else -((-2 * am + n) // (2 * n))
-        )
-        return rounded / 1e6
-
+    n = corpus_rows(sf_dir) if train_df is None else e.count()
+    stride = pq_train_stride(n)
+    if stride > 1:
+        e = e.filter((F.col("vec_id") % stride) == 0)
+    seeds = pq_codebooks(spark, e, vec_col=vec_col, k_codes=PQ_TRAIN_K)
+    blocks = training_blocks(e, vec_col=vec_col)
     try:
-        active: dict[int, list[list[float]]] = {
-            s: seeds[s] for s in range(n_sub)
-        }
-        final: list = [None] * n_sub
-        n_iters: list = [None] * n_sub
-        prev_cbs: dict[int, list[list[float]]] = {}
-        for it in range(1, max_iter + 1):
-            if not active:
-                break
-            merged = pq_partial_sums(blocks, active, w)
-            for s in list(active):
-                sums, counts = merged[s]
-                missing = sorted(
-                    j for j in range(k_codes) if int(counts[j]) == 0
-                )
-                if missing:
-                    raise RuntimeError(
-                        f"pq_train_codebooks: empty codeword(s) {missing} in "
-                        f"subspace {s} at iteration {it} — undefined vs the "
-                        "oracle (grow the training set or lower k_codes)"
-                    )
-                new = [
-                    [
-                        _component(int(sums[j][d]), int(counts[j]))
-                        for d in range(w)
-                    ]
-                    for j in range(k_codes)
-                ]
-                old = active[s]
-                shift = max(
-                    abs(_micro(new[j][d]) - _micro(old[j][d]))
-                    for j in range(k_codes)
-                    for d in range(w)
-                )
-                if shift <= tol_micro:
-                    final[s] = new
-                    n_iters[s] = it
-                    prev_cbs[s] = old
-                    del active[s]
-                else:
-                    active[s] = new
-        if active:
-            raise RuntimeError(
-                f"pq_train_codebooks: subspaces {sorted(active)} did not "
-                f"converge to {tol_micro} micro-units within {max_iter} "
-                "iterations"
-            )
+        final, n_iters, prev_cbs = train(
+            blocks,
+            dict(enumerate(seeds)),
+            pq_component,
+            PQ_TRAIN_TOL_MICRO,
+            PQ_TRAIN_MAX_ITER,
+            capped=False,
+        )
     finally:
         blocks.unpersist()
-
-    return (final, n_iters, prev_cbs)
-
-
-def _micro(component: float) -> int:
-    """Half-away-from-zero micro-units — shared rounding with the SQL
-    oracle's CAST(ROUND(x * 1e6, 0) AS BIGINT) (see operators/ivf)."""
-    import math
-
-    return int(math.copysign(math.floor(abs(component * 1e6) + 0.5), component))
+    return (
+        [final[s] for s in range(PQ_N_SUB)],
+        [n_iters[s] for s in range(PQ_N_SUB)],
+        prev_cbs,
+    )
 
 
 def encode_codes(
@@ -429,10 +332,7 @@ def encode_codes(
         M = np.vstack(emb.to_numpy()).astype(np.float64)
         codes = np.empty((M.shape[0], len(cbs)), dtype=np.int32)
         for s, sub in enumerate(cbs):
-            Ms = M[:, s * w : (s + 1) * w]
-            d = np.empty((M.shape[0], len(sub)), dtype=np.float64)
-            for j, cw in enumerate(sub):
-                d[:, j] = _seq_sqdist_np(Ms, cw)
+            d = _cell_dists_mat(M[:, s * w : (s + 1) * w], sub)
             codes[:, s] = np.argmin(d, axis=1)  # first min → lowest j
         return pd.Series(list(codes))
 
@@ -462,11 +362,7 @@ def residual_struct(cents: list[list[float]], vec_col: str = "embedding"):
         if len(emb) == 0:
             return pd.DataFrame({"cell": [], "rv": []})
         M = np.vstack(emb.to_numpy()).astype(np.float64)
-        n = M.shape[0]
-        dists = np.empty((n, len(cents_local)), dtype=np.float64)
-        for cid, cent in enumerate(cents_local):
-            dists[:, cid] = _seq_sqdist_np(M, cent)
-        cells = np.argmin(dists, axis=1)
+        cells = np.argmin(_cell_dists_mat(M, cents_local), axis=1)
         C = np.asarray(cents_local, dtype=np.float64)[cells]
         R = M - C
         return pd.DataFrame(

@@ -1,4 +1,5 @@
-"""RDD-level iteration kernel for the Lloyd / PQ training loops.
+"""The one training loop (:func:`train`) for the Lloyd coarse
+quantizers and the PQ codebooks, over an RDD of numpy blocks.
 
 The r13 loop ran one DataFrame aggregation per training iteration
 (Arrow-batched argmin assignment → posexplode → decimal groupBy →
@@ -40,8 +41,12 @@ bytes the DataFrame persist held.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..partitioning import training_frame_width
 
 
 def _cell_dists_mat(M, cents: list[list[float]]):
@@ -107,80 +112,87 @@ def build_blocks(df: DataFrame, vec_col: str = "embedding"):
     return proj.rdd.mapPartitions(to_block)
 
 
-def lloyd_partial_sums(blocks, cents: list[list[float]]):
-    """One Lloyd iteration over the persisted blocks RDD: returns
-    (sums int64 k×dim, counts int64 k) — exact micro-unit sums and
-    member counts per cell. Assignment = argmin over the exact
-    left-fold distances with first-minimum (lowest-cid) tie-break,
-    identical to assign_cells."""
+def training_blocks(e: DataFrame, vec_col: str = "embedding"):
+    """The PERSISTED blocks RDD one training call iterates over: ``e``
+    hashed on ``vec_id`` at the bytes-derived training width (r13: a
+    one-split scan would run everything single-task, full session
+    parallelism over-shards the tiny per-iteration jobs). The caller
+    unpersists it when its loop ends."""
+    return build_blocks(
+        e.repartition(training_frame_width(e), "vec_id"), vec_col=vec_col
+    ).persist()
+
+
+def partial_sums(blocks, models: dict[int, list[list[float]]], w: int):
+    """One training iteration over the blocks RDD for every model in
+    ``models`` (key m = the columns ``m*w : (m+1)*w`` of the block —
+    PQ subspace m, or Lloyd as model 0 with ``w = dim``): returns
+    {m: (sums int64 k×w, counts int64 k)}, the exact micro-unit sums
+    and member counts per cell. Assignment = argmin over the exact
+    left-fold distances with first-minimum (lowest-id) tie-break,
+    identical to assign_cells and _pq_update's Arrow UDF."""
     import numpy as np
 
     sc = blocks.context
-    k, dim = len(cents), len(cents[0])
-    cents_b = sc.broadcast([[float(v) for v in c] for c in cents])
-
-    def part(it):
-        sums = np.zeros((k, dim), dtype=np.int64)
-        counts = np.zeros(k, dtype=np.int64)
-        for M, Mm in it:
-            a = np.argmin(_cell_dists_mat(M, cents_b.value), axis=1)
-            np.add.at(sums, a, Mm)  # exact int64 scatter-add
-            counts += np.bincount(a, minlength=k).astype(np.int64)
-        yield (sums, counts)
-
-    try:
-        parts = blocks.mapPartitions(part).collect()
-    finally:
-        cents_b.destroy()
-    sums = np.zeros((k, dim), dtype=np.int64)
-    counts = np.zeros(k, dtype=np.int64)
-    for s, c in parts:
-        sums += s
-        counts += c
-    return sums, counts
-
-
-def pq_partial_sums(blocks, cbs_by_s: dict[int, list[list[float]]], w: int):
-    """One PQ training iteration over the blocks RDD for every ACTIVE
-    subspace: returns {s: (sums int64 k×w, counts int64 k)}. Assignment
-    per subspace = argmin over the exact left-fold subvector distances
-    (first minimum → lowest j), identical to _pq_update's Arrow UDF."""
-    import numpy as np
-
-    sc = blocks.context
-    active = sorted(cbs_by_s)
-    k = len(cbs_by_s[active[0]])
-    cbs_b = sc.broadcast(
-        {s: [[float(x) for x in cw] for cw in cbs_by_s[s]] for s in active}
+    keys = sorted(models)
+    ks = {m: len(models[m]) for m in keys}
+    models_b = sc.broadcast(
+        {m: [[float(x) for x in c] for c in models[m]] for m in keys}
     )
 
-    def part(it):
-        out = {
-            s: (np.zeros((k, w), dtype=np.int64), np.zeros(k, dtype=np.int64))
-            for s in active
+    def zeros():
+        return {
+            m: (np.zeros((ks[m], w), dtype=np.int64), np.zeros(ks[m], dtype=np.int64))
+            for m in keys
         }
+
+    def part(it):
+        out = zeros()
         for M, Mm in it:
-            for s in active:
-                Ms = M[:, s * w : (s + 1) * w]
-                Mms = Mm[:, s * w : (s + 1) * w]
-                a = np.argmin(_cell_dists_mat(Ms, cbs_b.value[s]), axis=1)
-                sums, counts = out[s]
-                np.add.at(sums, a, Mms)
-                counts += np.bincount(a, minlength=k).astype(np.int64)
+            for m in keys:
+                cols = slice(m * w, (m + 1) * w)
+                a = np.argmin(_cell_dists_mat(M[:, cols], models_b.value[m]), axis=1)
+                sums, counts = out[m]
+                np.add.at(sums, a, Mm[:, cols])  # exact int64 scatter-add
+                counts += np.bincount(a, minlength=ks[m]).astype(np.int64)
         yield out
 
     try:
         parts = blocks.mapPartitions(part).collect()
     finally:
-        cbs_b.destroy()
-    merged = {
-        s: (np.zeros((k, w), dtype=np.int64), np.zeros(k, dtype=np.int64))
-        for s in active
-    }
+        models_b.destroy()
+    merged = zeros()
     for p in parts:
-        for s in active:
-            merged[s] = (merged[s][0] + p[s][0], merged[s][1] + p[s][1])
+        for m in keys:
+            sums, counts = merged[m]
+            sums += p[m][0]
+            counts += p[m][1]
     return merged
+
+
+def micro(component: float) -> int:
+    """Half-away-from-zero micro-units — DuckDB/Spark
+    ``CAST(ROUND(x * 1e6, 0) AS BIGINT)``, NOT Python's banker's
+    rounding — so the driver-side shift integers are the same ones the
+    SQL oracles compute."""
+    x = component * 1e6
+    return int(math.copysign(math.floor(abs(x) + 0.5), x))
+
+
+def pq_component(sum_micro: int, n: int) -> float:
+    """PQ codeword component: half-away-from-zero(Σ/n at 6 dp) computed
+    ENTIRELY in int64 rational arithmetic — round_half_up(a/n) =
+    (2a + n) div (2n) for a ≥ 0, mirrored for a < 0. A ROUND of the
+    double quotient lands on a .xxxxxx5 boundary often enough with the
+    small cells of a 64-codeword codebook (~8 members) that Spark's
+    BigDecimal-expansion ROUND and DuckDB's scaled-double ROUND
+    disagreed on 3 of 4096 components (measured r8); integer
+    arithmetic has no boundary, and micro/1e6 is the same double in
+    both engines (plans/pq_train_sql and _pq_update carry the SQL
+    twin)."""
+    a = int(sum_micro)
+    rounded = (2 * a + n) // (2 * n) if a >= 0 else -((-2 * a + n) // (2 * n))
+    return rounded / 1e6
 
 
 def micro_mean(sum_micro: int, n: int) -> float:
@@ -225,3 +237,71 @@ def make_round6(spark):
         return float(d.quantize(q6, rounding=ROUND_HALF_UP))
 
     return round6
+
+
+def train(blocks, seeds: dict, component, tol_micro: int, max_iter: int, capped: bool):
+    """THE training loop (Lloyd coarse quantizers and PQ codebooks
+    alike): advance every model in ``seeds`` (key → k × w codebook, see
+    :func:`partial_sums`) with ONE single-stage ``mapPartitions →
+    collect`` job per iteration over the persisted blocks RDD — no
+    Catalyst plan, no pandas_udf pickle, no shuffle, no Arrow round
+    trip (r14, guide §1.2). The partial sums are the exact int64
+    decimal(30,6) micro sums, so ``component(sum_micro, n)`` sees the
+    same integers the DuckDB oracle's decimal SUM does; the lockstep
+    harness (tools/probe_train_equiv.py) pins every iteration
+    bit-identical to the r13 DataFrame recipe.
+
+    Each model stops on its OWN: once its max micro-unit shift is ≤
+    ``tol_micro`` it is final and drops out of later jobs (a converged
+    k-means, not a snapshot of a jointly-stopped loop). ``capped``
+    picks the two rule sets the oracles replay:
+
+    - ``capped=False`` (lloyd_converged, PQ): an empty cell raises, and
+      so does a model still moving at ``max_iter`` — either would
+      silently diverge from the oracle's unrolled chain;
+    - ``capped=True`` (lloyd_capped): an empty cell keeps its previous
+      centroid, and iteration ``max_iter`` is final whatever its shift.
+
+    Returns ``(final, n_iters, prev)`` keyed like ``seeds``: the final
+    codebook, the iteration it was reached at, and the codebook one
+    iteration earlier (catalog queries rebuild the final aggregation
+    lazily from it)."""
+    w = len(next(iter(seeds.values()))[0])
+    active = dict(seeds)
+    final: dict = {}
+    n_iters: dict = {}
+    prev: dict = {}
+    for it in range(1, max_iter + 1):
+        if not active:
+            break
+        merged = partial_sums(blocks, active, w)
+        for m, old in list(active.items()):
+            sums, counts = merged[m]
+            if not capped and counts.min() == 0:
+                empty = [int(j) for j in (counts == 0).nonzero()[0]]
+                raise RuntimeError(
+                    f"train: empty cell(s) {empty} in model {m} at "
+                    f"iteration {it} — undefined vs the oracle"
+                )
+            new = [
+                [component(int(sums[j][d]), int(counts[j])) for d in range(w)]
+                if counts[j]
+                else list(old[j])  # capped: an empty cell carries over
+                for j in range(len(old))
+            ]
+            shift = max(
+                abs(micro(a) - micro(b))
+                for row_new, row_old in zip(new, old)
+                for a, b in zip(row_new, row_old)
+            )
+            if shift <= tol_micro or (capped and it == max_iter):
+                final[m], n_iters[m], prev[m] = new, it, old
+                del active[m]
+            else:
+                active[m] = new
+    if active:
+        raise RuntimeError(
+            f"train: models {sorted(active)} did not converge to "
+            f"{tol_micro} micro-units within {max_iter} iterations"
+        )
+    return final, n_iters, prev

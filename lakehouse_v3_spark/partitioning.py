@@ -95,25 +95,41 @@ def training_frame_width(df: DataFrame) -> int:
     and keeps full parallelism; bytes-unknown inputs (derived frames)
     fall back to full parallelism too."""
     cap = session_shuffle_partitions(df)
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return cap
-    if not files:
-        return cap
+    total = input_bytes(df)
+    if total is None:
+        return cap  # bytes unknown: keep full width
+    want = -(-total // TRAINING_BYTES_PER_PARTITION)
+    return max(1, min(cap, want))
+
+
+def local_bytes(paths) -> int | None:
+    """Summed on-disk size of ``paths`` (``file://`` URIs or plain
+    local paths), or None when any of them is on a non-local store (no
+    cheap size) or cannot be stat'ed. Each caller picks its own
+    fallback for None."""
     import os
 
     total = 0
-    for f in files:
+    for f in paths:
         p = f[7:] if f.startswith("file://") else f
         if "://" in p:
-            return cap  # non-local store: no cheap size, keep full width
+            return None
         try:
             total += os.path.getsize(p)
         except OSError:
-            return cap
-    want = -(-total // TRAINING_BYTES_PER_PARTITION)
-    return max(1, min(cap, want))
+            return None
+    return total
+
+
+def input_bytes(df: DataFrame) -> int | None:
+    """On-disk bytes of the files a frame scans (:func:`local_bytes` of
+    its ``inputFiles()``); None when unknowable — a derived frame with
+    no file scan, or a non-local store."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    return local_bytes(files) if files else None
 
 
 PER_GROUP_WINDOW_BYTES = 256 * 1024 * 1024
@@ -144,22 +160,8 @@ def fits_per_group_window(df: DataFrame) -> bool:
     limit = int(
         os.environ.get("SPARK_GRAFT_GROUP_WINDOW_BYTES", PER_GROUP_WINDOW_BYTES)
     )
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return False
-    if not files:
-        return False
-    total = 0
-    for f in files:
-        p = f[7:] if f.startswith("file://") else f
-        if "://" in p:
-            return False  # non-local store: no cheap size — scale shape
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            return False
-    return total <= limit
+    total = input_bytes(df)
+    return total is not None and total <= limit
 
 
 # r14: training_loop_conf (the r13 AQE-off + 8-partition-reduce session

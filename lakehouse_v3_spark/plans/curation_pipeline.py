@@ -560,9 +560,9 @@ def semdedup_cluster_model(spark, sf_dir):
     semantic stage consume; the oracle replays the full training loop
     (dynamic-k chain, carry-over CTEs, COALESCE(first-converged, cap)).
 
-    Scale shape: each Lloyd iteration is ONE distributed aggregation
-    (Arrow argmin assignment — no shuffle; posexplode → map-side
-    partial k×dim sums); assignment is a shuffle-free projection; the
+    Scale shape: each Lloyd iteration is ONE shuffle-free job over a
+    persisted numpy-blocks RDD (the train_blocks loop, k×dim partial
+    sums per partition); assignment is a shuffle-free projection; the
     summary groupBy carries ~k rows. k grows with the corpus, so at
     100 TB this is the honest cluster-first SemDeDup trainer, not a
     fixture-label stand-in."""

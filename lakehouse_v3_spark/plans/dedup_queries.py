@@ -670,7 +670,9 @@ def _lsh_index_manager(spark, sf_dir):
 
     Cross-process build/append races are serialized by
     ``_lsh_index_lock`` (flock on a sibling lock file — see the query
-    body); overwrite's atomic rename remains the last line of defense.
+    body); behind it, overwrite is an optimistic txn-log commit, so a
+    racing writer that slips past the lock loses its claim with
+    ConcurrentWriteError instead of tearing the table.
     Returns (TableManager, lock_path)."""
     import hashlib
     import os

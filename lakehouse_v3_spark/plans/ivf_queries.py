@@ -213,22 +213,23 @@ def kmeans_converged_centroids(spark, sf_dir):
     max 60. Output = the converged centroids in long form
     (cid, dim, n_assigned, component) + the iteration count.
 
-    Scale shape (operators/ivf.py): each iteration is one distributed
-    aggregation — flat-codegen argmin assignment (no join/shuffle for
-    assignment), posexplode → groupBy(cid, dim) with map-side partial
-    aggregation, k × dim scalars to the driver (model parameters, the
-    watermark class of driver state). The RETURNED plan is itself the
-    final distributed aggregation rebuilt from the pre-convergence
-    centroids — not a createDataFrame of collected results.
+    Scale shape (operators/ivf.py): training is the train_blocks loop —
+    one shuffle-free mapPartitions → collect job per iteration over a
+    persisted numpy-blocks RDD, k × dim partial sums per partition to
+    the driver (model parameters, the watermark class of driver
+    state). The RETURNED plan is the final distributed aggregation
+    (_lloyd_update: Arrow argmin, posexplode → groupBy(cid, dim))
+    rebuilt from the pre-convergence centroids — not a createDataFrame
+    of collected results.
 
     Measured convergence: 13 / 19 / 31 / 24 / 9 iterations at
     sf0.001 / 0.01 / 0.1 / 1 / 5 — bigger samples have smoother means,
     so the tolerance is reached FASTER at scale; at 100 TB the
     iteration count is the small end, and each iteration's cost is one
-    corpus scan with a k·dim·partitions-row shuffle."""
+    pass over the persisted blocks with no shuffle."""
     from ..operators.ivf import _lloyd_update
 
-    cents, n_assigned, n_iters, prev_cents = lloyd_converged(spark, sf_dir)
+    _, n_iters, prev_cents = lloyd_converged(spark, sf_dir)
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return _lloyd_update(e, prev_cents).withColumn("n_iters", F.lit(n_iters))
 
@@ -312,7 +313,7 @@ def knn_ivf_converged_nprobe(spark, sf_dir):
     rows) broadcasts; scoring touches only matching cells; top-k is a
     window per query. Cells are disjoint, so no candidate is scored
     twice."""
-    cents, _, _, _ = lloyd_converged(spark, sf_dir)
+    cents, _, _ = lloyd_converged(spark, sf_dir)
     e = load(spark, sf_dir, "embeddings")
     corpus = assign_cells(
         e.filter(F.col("vec_id") >= 10).select("vec_id", "embedding"), cents
@@ -396,7 +397,7 @@ def knn_ivf_nprobe_recall_audit(spark, sf_dir):
     mirrors knn_lsh_recall_audit: one corpus scan for cell assignment,
     broadcast probe lists, |Q|·5-row overlap joins; the brute-force
     side exists only for the audit."""
-    cents, _, _, _ = lloyd_converged(spark, sf_dir)
+    cents, _, _ = lloyd_converged(spark, sf_dir)
     e = load(spark, sf_dir, "embeddings")
     q_raw = e.filter(F.col("vec_id") < 10)
     c_raw = e.filter(F.col("vec_id") >= 10)
@@ -588,7 +589,7 @@ def _ivfpq_spark(spark, sf_dir, residual: bool):
         residual_struct,
     )
 
-    cents, _, _, _ = lloyd_converged(spark, sf_dir)
+    cents, _, _ = lloyd_converged(spark, sf_dir)
     e = load(spark, sf_dir, "embeddings")
     corpus_raw = e.filter(F.col("vec_id") >= 10).select(
         F.col("vec_id").alias("corpus_id"), "embedding"
@@ -1075,7 +1076,7 @@ def ivfpq_residual_quantization_audit(spark, sf_dir):
         residual_struct,
     )
 
-    cents, _, _, _ = lloyd_converged(spark, sf_dir)
+    cents, _, _ = lloyd_converged(spark, sf_dir)
     e = load(spark, sf_dir, "embeddings")
     corpus_raw = e.filter(F.col("vec_id") >= 10).select("vec_id", "embedding")
 

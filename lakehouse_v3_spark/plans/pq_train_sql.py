@@ -74,7 +74,7 @@ def train_source_sql(
 def sq_fold(a: str, b: str, w: int = _W) -> str:
     """0.0-seeded left-fold Σ (a[d]-b[d])² over a width-w subspace —
     both operands already-DOUBLE lists (the DuckDB twin of
-    operators/pq._seq_sqdist_np)."""
+    train_blocks._cell_dists_mat)."""
     return (
         f"list_reduce(list_prepend(0.0::DOUBLE, "
         f"list_transform(range(1, {w + 1}), "

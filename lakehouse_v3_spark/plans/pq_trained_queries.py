@@ -52,17 +52,16 @@ def pq_trained_codebooks(spark, sf_dir):
     at sf0.001 — see ivfpq_residual_quantization_audit for the
     oracle-checked numbers).
 
-    Scale shape (operators/pq._pq_update): each iteration is ONE
-    distributed aggregation over all still-active subspaces —
-    Arrow-batched numpy argmin assignment (no join/shuffle),
-    posexplode → groupBy(s, j, dim) with map-side partials, so the
-    shuffle carries 8 × 64 × 8 × partitions partial sums regardless of
-    corpus size; converged subspaces drop out of later jobs. The
-    RETURNED plan rebuilds the final aggregation lazily from each
-    subspace's pre-convergence codebook — distributed end-to-end, no
-    createDataFrame of results. At 100 TB training runs on a
-    deterministic sample (train_df param); the model is 8×64×8 scalars
-    — watermark-class driver state.
+    Scale shape: training is the train_blocks loop — each iteration is
+    ONE shuffle-free job over a persisted numpy-blocks RDD covering all
+    still-active subspaces, returning 8 × 64 × 8 partial sums per
+    partition regardless of corpus size; converged subspaces drop out
+    of later jobs. The RETURNED plan (operators/pq._pq_update: Arrow
+    argmin, posexplode → groupBy(s, j, dim)) rebuilds the final
+    aggregation lazily from each subspace's pre-convergence codebook —
+    distributed end-to-end, no createDataFrame of results. At 100 TB
+    training runs on a deterministic sample; the model is 8×64×8
+    scalars — watermark-class driver state.
 
     Measured convergence (max subspace): 15 / 10 / 19 iterations at
     sf0.001 / 0.01 / 0.1 (re-measured r8) — depth is NOT monotone in

@@ -65,16 +65,18 @@ def _stream_state_partitions(spark, nbytes: int) -> int:
 
 
 def _source_bytes(path: str) -> int:
-    """Total bytes of the parquet file(s) feeding a file-source stream."""
+    """Total bytes of the parquet file(s) feeding a file-source stream
+    (0 when unknowable: the state width then falls to its floor)."""
     import glob
     import os
 
-    if os.path.isfile(path):
-        return os.path.getsize(path)
-    return sum(
-        os.path.getsize(p)
-        for p in glob.glob(os.path.join(path, "*.parquet"))
+    from ..partitioning import local_bytes
+
+    files = (
+        [path] if os.path.isfile(path)
+        else glob.glob(os.path.join(path, "*.parquet"))
     )
+    return local_bytes(files) or 0
 
 
 class _stream_run_partitions:

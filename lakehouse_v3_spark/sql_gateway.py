@@ -80,11 +80,21 @@ class _Budget:
     interruptTag does not track plain DataFrame actions — verified on
     Spark 4.1."""
 
+    # the thread-local properties setJobGroup writes; __exit__ puts the
+    # caller's values back, so a keep-alive handler thread does not
+    # carry this statement's cancellable group into its next statement
+    _GROUP_PROPS = (
+        "spark.jobGroup.id",
+        "spark.job.description",
+        "spark.job.interruptOnCancel",
+    )
+
     def __init__(self, spark, timeout_ms: int | None):
         self.spark = spark
         self.timeout_ms = timeout_ms
         self._timer: threading.Timer | None = None
         self._timed_out = threading.Event()
+        self._saved: dict[str, str | None] = {}
 
     @property
     def timed_out(self) -> bool:
@@ -94,6 +104,7 @@ class _Budget:
         if self.timeout_ms is None:
             return self
         sc = self.spark.sparkContext
+        self._saved = {k: sc.getLocalProperty(k) for k in self._GROUP_PROPS}
         group = f"sqlgw-{threading.get_ident()}-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(
             group,
@@ -117,10 +128,9 @@ class _Budget:
         if self._timer is not None:
             self._timer.cancel()
         if self.timeout_ms is not None:
-            try:
-                self.spark.sparkContext.clearJobGroup()
-            except Exception:
-                pass
+            sc = self.spark.sparkContext
+            for k, v in self._saved.items():
+                sc.setLocalProperty(k, v)  # None clears the property
         return False
 
 

@@ -344,3 +344,37 @@ def test_hung_pinned_cursor_force_dropped_after_hard_ttl(spark):
         # registry still serves new statements
         ok = _post(gw.url, {"sql": "SELECT 1 AS x"})
         assert ok["rows"] == [[1]]
+
+
+def test_timed_budget_restores_the_threads_job_group(spark):
+    """A keep-alive handler thread runs many statements: each timed
+    statement's cancellable ``sqlgw-…`` group must be gone from the
+    thread afterwards, leaving whatever group (or none) it had before."""
+    from lakehouse_v3_spark.sql_gateway import _Budget
+
+    sc = spark.sparkContext
+    keys = _Budget._GROUP_PROPS
+    before = {k: sc.getLocalProperty(k) for k in keys}
+
+    def props():
+        return {k: sc.getLocalProperty(k) for k in keys}
+
+    def run_timed():
+        with _Budget(spark, 60_000):
+            assert sc.getLocalProperty("spark.jobGroup.id").startswith("sqlgw-")
+            spark.range(3).count()
+
+    try:
+        for k in keys:
+            sc.setLocalProperty(k, None)
+        run_timed()
+        assert props() == {k: None for k in keys}
+
+        sc.setJobGroup("caller-group", "caller description")
+        mine = props()
+        run_timed()
+        assert props() == mine
+        assert mine["spark.jobGroup.id"] == "caller-group"
+    finally:
+        for k, v in before.items():
+            sc.setLocalProperty(k, v)

@@ -22,11 +22,8 @@ def old_lloyd(spark, sf_dir, k=8, tol_micro=2000, max_iter=60):
     from pyspark.sql import functions as F
 
     from lakehouse_v3_spark.io_utils import load
-    from lakehouse_v3_spark.operators.ivf import (
-        _lloyd_update,
-        _micro,
-        _seed_cents,
-    )
+    from lakehouse_v3_spark.operators.ivf import _lloyd_update, _seed_cents
+    from lakehouse_v3_spark.operators.train_blocks import micro
     from lakehouse_v3_spark.partitioning import training_frame_width
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -46,7 +43,7 @@ def old_lloyd(spark, sf_dir, k=8, tol_micro=2000, max_iter=60):
             for r in rows:
                 new[r["cid"]][r["dim"]] = float(r["component"])
             shift = max(
-                abs(_micro(new[cc][d]) - _micro(cents[cc][d]))
+                abs(micro(new[cc][d]) - micro(cents[cc][d]))
                 for cc in range(k)
                 for d in range(dim)
             )
@@ -87,7 +84,7 @@ def main() -> None:
             _, it = old_lloyd(spark, sf_dir)
             iters[arm] = it
         elif arm == "lloyd_new":
-            _, _, it, _ = lloyd_converged(spark, sf_dir)
+            _, it, _ = lloyd_converged(spark, sf_dir)
             iters[arm] = it
         elif arm == "pq_new":
             _, n_iters, _ = pq_train_codebooks(spark, sf_dir)

@@ -33,12 +33,12 @@ def lloyd_old_iter(e, cents):
 
 def lloyd_new_iter(blocks, cents, round6):
     from lakehouse_v3_spark.operators.train_blocks import (
-        lloyd_partial_sums,
         micro_mean,
+        partial_sums,
     )
 
     k, dim = len(cents), len(cents[0])
-    sums, counts = lloyd_partial_sums(blocks, cents)
+    sums, counts = partial_sums(blocks, {0: cents}, dim)[0]
     new = [
         [
             round6(micro_mean(sums[c][d], int(counts[c])))
@@ -53,18 +53,18 @@ def lloyd_new_iter(blocks, cents, round6):
 
 def check_lloyd(spark, sf_dir, k, max_iter=60, tol_micro=2000) -> int:
     from lakehouse_v3_spark.io_utils import load
-    from lakehouse_v3_spark.operators.ivf import _micro, _seed_cents
+    from lakehouse_v3_spark.operators.ivf import _seed_cents
     from lakehouse_v3_spark.operators.train_blocks import (
-        build_blocks,
         make_round6,
+        micro,
+        training_blocks,
     )
     from lakehouse_v3_spark.partitioning import training_frame_width
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = _seed_cents(e, k)
-    ew = e.repartition(training_frame_width(e), "vec_id")
-    ed = ew.persist()
-    blocks = build_blocks(ew).persist()
+    ed = e.repartition(training_frame_width(e), "vec_id").persist()
+    blocks = training_blocks(e)
     round6 = make_round6(spark)
     mismatches = 0
     try:
@@ -91,7 +91,7 @@ def check_lloyd(spark, sf_dir, k, max_iter=60, tol_micro=2000) -> int:
                 print(f"  (empty cell at it={it}, k={k} — stopping lloyd)")
                 break
             shift = max(
-                abs(_micro(old[c][d]) - _micro(cents[c][d]))
+                abs(micro(old[c][d]) - micro(cents[c][d]))
                 for c in range(k)
                 for d in range(len(cents[0]))
             )
@@ -114,15 +114,16 @@ def check_pq(spark, sf_dir, max_iter=60, tol_micro=10000) -> int:
     from lakehouse_v3_spark.operators.pq import (
         PQ_TRAIN_K,
         PQ_TRAIN_SAMPLE_CAP,
-        _micro,
         _pq_update,
         corpus_rows,
         pq_codebooks,
         pq_train_stride,
     )
     from lakehouse_v3_spark.operators.train_blocks import (
-        build_blocks,
-        pq_partial_sums,
+        micro,
+        partial_sums,
+        pq_component,
+        training_blocks,
     )
     from lakehouse_v3_spark.partitioning import training_frame_width
 
@@ -133,14 +134,12 @@ def check_pq(spark, sf_dir, max_iter=60, tol_micro=10000) -> int:
     seeds = pq_codebooks(spark, e, k_codes=PQ_TRAIN_K)
     w = len(seeds[0][0])
     k = PQ_TRAIN_K
-    ew = e.repartition(training_frame_width(e))
-    vecs = ew.select("embedding").persist()
-    blocks = build_blocks(ew).persist()
-
-    def comp(am, n):
-        return (
-            ((2 * am + n) // (2 * n)) if am >= 0 else -((-2 * am + n) // (2 * n))
-        ) / 1e6
+    vecs = (
+        e.repartition(training_frame_width(e), "vec_id")
+        .select("embedding")
+        .persist()
+    )
+    blocks = training_blocks(e)
 
     active = {s: seeds[s] for s in range(len(seeds))}
     mismatches = 0
@@ -155,14 +154,14 @@ def check_pq(spark, sf_dir, max_iter=60, tol_micro=10000) -> int:
                     float(r["component"]),
                     int(r["n_assigned"]),
                 )
-            merged = pq_partial_sums(blocks, active, w)
+            merged = partial_sums(blocks, active, w)
             for s in sorted(active):
                 sums, counts = merged[s]
                 for j in range(k):
                     for d in range(w):
                         o = by_s[s].get((j, d))
                         n_val = (
-                            (comp(int(sums[j][d]), int(counts[j])), int(counts[j]))
+                            (pq_component(sums[j][d], int(counts[j])), int(counts[j]))
                             if counts[j]
                             else None
                         )
@@ -182,7 +181,7 @@ def check_pq(spark, sf_dir, max_iter=60, tol_micro=10000) -> int:
                 new = [[got[(j, d)][0] for d in range(w)] for j in range(k)]
                 old_cb = active[s]
                 shift = max(
-                    abs(_micro(new[j][d]) - _micro(old_cb[j][d]))
+                    abs(micro(new[j][d]) - micro(old_cb[j][d]))
                     for j in range(k)
                     for d in range(w)
                 )
