@@ -666,7 +666,10 @@ def _lsh_index_manager(spark, sf_dir):
       with tools/gen_sf.py on a fast disk) cannot serve a stale index;
     - superseded dirs (same path-hash, different content-hash) are
       deleted under the lock, so regenerating a fixture reclaims the
-      old index's disk.
+      old index's disk;
+    - the lock file records its fixture dir, and every call sweeps the
+      dirs and lock of any fixture dir that no longer exists (tests
+      build fixtures under throwaway temp paths).
 
     Cross-process build/append races are serialized by
     ``_lsh_index_lock`` (flock on a sibling lock file — see the query
@@ -682,16 +685,55 @@ def _lsh_index_manager(spark, sf_dir):
     from ..tables import TableManager
 
     st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    ph = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    fixture = os.path.abspath(sf_dir)
+    ph = hashlib.md5(fixture.encode()).hexdigest()[:8]
     ch = hashlib.md5(f"{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:8]
     tmp = tempfile.gettempdir()
     lock_path = os.path.join(tmp, f"lsh_index_{ph}.lock")
     wh = os.path.join(tmp, f"lsh_index_{ph}_{ch}")
     with _lsh_index_lock(lock_path):
+        with open(lock_path, "w") as f:
+            f.write(fixture)
         for old in os.listdir(tmp):
             if old.startswith(f"lsh_index_{ph}_") and old != os.path.basename(wh):
                 shutil.rmtree(os.path.join(tmp, old), ignore_errors=True)
+            elif old.startswith("lsh_index_") and old.endswith(".lock"):
+                _reap_orphan_lsh_index(tmp, old)
     return TableManager(spark, wh, backend="parquet"), lock_path
+
+
+def _reap_orphan_lsh_index(tmp, lock_name):
+    """Delete the index dirs and the lock file ``lock_name`` of a fixture
+    dir that no longer exists. A lock without a recorded dir, or one
+    another process holds, is left alone."""
+    import os
+    import shutil
+
+    try:
+        import fcntl
+    except ImportError:  # pragma: no cover - non-POSIX
+        return
+    lock_path = os.path.join(tmp, lock_name)
+    try:
+        with open(lock_path) as f:
+            fixture = f.read()
+        fd = os.open(lock_path, os.O_RDWR)
+    except OSError:  # reaped by a concurrent caller
+        return
+    try:
+        if not fixture or os.path.exists(fixture):
+            return
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except OSError:
+            return
+        prefix = lock_name[: -len(".lock")] + "_"
+        for name in os.listdir(tmp):
+            if name.startswith(prefix):
+                shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+        os.unlink(lock_path)
+    finally:
+        os.close(fd)
 
 
 @_contextmanager

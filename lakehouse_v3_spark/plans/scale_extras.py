@@ -62,7 +62,8 @@ def _parquet_reanchor(df: DataFrame) -> DataFrame:
     root = spark.sparkContext.getCheckpointDir() or tempfile.gettempdir()
     path = os.path.join(root, f"_stats_reset_{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(path)
-    out = spark.read.parquet(path)
+    # the writer fixed the schema: no footer-inference job on read-back
+    out = spark.read.schema(df.schema).parquet(path)
     _REANCHOR_DIRS.append(path)
     while len(_REANCHOR_DIRS) > _REANCHOR_KEEP:
         old = _REANCHOR_DIRS.pop(0)

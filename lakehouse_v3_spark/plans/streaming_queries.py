@@ -238,12 +238,15 @@ def stream_tws_distinct_type_counts(spark, sf_dir):
     )
     sink_root = spark.sparkContext.getCheckpointDir() or tempfile.gettempdir()
     sink_dir = os.path.join(sink_root, f"tws_sink_{uuid.uuid4().hex}")
+    # the returned (lazy) DataFrame reads from sink_dir — every sink
+    # dir lives until process exit (atexit above) so EVERY DataFrame
+    # this query has ever returned stays collectable; registered before
+    # the drain, so a failed one's partial sink goes too
+    _TWS_SINK_DIRS.append(sink_dir)
 
     def _sink_batch(df, bid):
         # distributed append: one parquet table keyed by (batch_id, user)
-        df.withColumn("_bid", F.lit(int(bid))).write.mode("append").parquet(
-            sink_dir
-        )
+        _stamped(df, bid).write.mode("append").parquet(sink_dir)
 
     try:
         # the streaming file source wants a DIRECTORY; events.parquet is
@@ -259,9 +262,11 @@ def stream_tws_distinct_type_counts(spark, sf_dir):
             with _stream_run_partitions(
                 spark, _source_bytes(f"{sf_dir}/events.parquet")
             ):
+                counts = distinct_type_counts(
+                    stream.select("user_id", "event_type")
+                )
                 q = (
-                    distinct_type_counts(stream.select("user_id", "event_type"))
-                    .writeStream.outputMode("update")
+                    counts.writeStream.outputMode("update")
                     .foreachBatch(_sink_batch)
                     .option("checkpointLocation", ckpt)
                     .trigger(availableNow=True)
@@ -274,17 +279,12 @@ def stream_tws_distinct_type_counts(spark, sf_dir):
         else:
             spark.conf.set(prov_key, old_prov)
 
-    # the returned (lazy) DataFrame reads from sink_dir — every sink
-    # dir lives until process exit (atexit above) so EVERY DataFrame
-    # this query has ever returned stays collectable
-    _TWS_SINK_DIRS.append(sink_dir)
-
     # update mode re-emits a key on every batch that touches it; the
     # LAST emission per user is the final accumulated state — a
     # distributed window over the sunk table, not a driver concat
     from pyspark.sql import Window
 
-    emissions = spark.read.parquet(sink_dir)
+    emissions = _read_sink(spark, sink_dir, counts)
     w = Window.partitionBy("user_id").orderBy(F.col("_bid").desc())
     return (
         emissions.withColumn("_rn", F.row_number().over(w))
@@ -312,6 +312,25 @@ def _events_stream(spark, sf_dir):
     )
 
 
+def _stamped(df, bid):
+    """One micro-batch stamped with its batch id as ``_bid``. The cast
+    keeps one file schema in a sink: ``F.lit`` of a Python int is an
+    ``int`` below 2^31 and a ``bigint`` above it."""
+    return df.withColumn("_bid", F.lit(int(bid)).cast("long"))
+
+
+def _read_sink(spark, sink_dir: str, drained):
+    """The sink of the streaming frame ``drained`` as a batch frame, read
+    with the schema its ``_stamped`` batches were written with, so
+    planning the read starts no schema-inference job."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType(
+        drained.schema.fields + [StructField("_bid", LongType())]
+    )
+    return spark.read.schema(schema).parquet(sink_dir)
+
+
 def _drain_to_parquet(
     spark, streaming_df, output_mode: str, tag: str, source_bytes: int = 0
 ):
@@ -320,7 +339,7 @@ def _drain_to_parquet(
     parquet sink dir — the production return path shared by all
     streaming catalog queries: update/append-mode output goes to a
     lakehouse table via foreachBatch, never through the driver. Returns
-    the sink dir; the lazy result must be read from it (dirs live until
+    the sink as a lazy batch frame (:func:`_read_sink`; dirs live until
     process exit via the atexit hook above, so returned DataFrames stay
     collectable)."""
     import os
@@ -329,11 +348,10 @@ def _drain_to_parquet(
 
     sink_root = spark.sparkContext.getCheckpointDir() or tempfile.gettempdir()
     sink_dir = os.path.join(sink_root, f"{tag}_sink_{uuid.uuid4().hex}")
+    _TWS_SINK_DIRS.append(sink_dir)  # before the drain: see the TWS query
 
     def _sink_batch(df, bid):
-        df.withColumn("_bid", F.lit(int(bid))).write.mode("append").parquet(
-            sink_dir
-        )
+        _stamped(df, bid).write.mode("append").parquet(sink_dir)
 
     with tempfile.TemporaryDirectory(prefix=f"{tag}_ckpt_") as ckpt:
         # scale-adaptive state partitions for the whole drain (every
@@ -350,8 +368,7 @@ def _drain_to_parquet(
                 .start()
             )
             q.awaitTermination()
-    _TWS_SINK_DIRS.append(sink_dir)
-    return sink_dir
+    return _read_sink(spark, sink_dir, streaming_df)
 
 
 # ---------------------------------------------------------------------------
@@ -419,14 +436,13 @@ def stream_stream_interval_join(spark, sf_dir):
         ),
     ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
 
-    sink_dir = _drain_to_parquet(
+    return _drain_to_parquet(
         spark,
         joined,
         "append",
         "ssjoin",
         source_bytes=_source_bytes(f"{sf_dir}/events.parquet"),
-    )
-    return spark.read.parquet(sink_dir).select(
+    ).select(
         "user_id", "click_id", "purchase_id", "click_ts", "purchase_ts"
     )
 
@@ -469,7 +485,7 @@ def stream_state_running_totals(spark, sf_dir):
     from ..streaming.stateful import running_user_totals_exact
 
     ev = _events_stream(spark, sf_dir).select("user_id", "value")
-    sink_dir = _drain_to_parquet(
+    emissions = _drain_to_parquet(
         spark,
         running_user_totals_exact(ev),
         "update",
@@ -479,7 +495,6 @@ def stream_state_running_totals(spark, sf_dir):
 
     from pyspark.sql import Window
 
-    emissions = spark.read.parquet(sink_dir)
     w = Window.partitionBy("user_id").orderBy(F.col("_bid").desc())
     return (
         emissions.withColumn("_rn", F.row_number().over(w))
@@ -534,6 +549,7 @@ def stream_dedup_within_watermark(spark, sf_dir):
     # guide §1.2: per-task work after plan shape).
     src_root = spark.sparkContext.getCheckpointDir() or tempfile.gettempdir()
     dup_dir = os.path.join(src_root, f"dedup_src_{uuid.uuid4().hex}")
+    _TWS_SINK_DIRS.append(dup_dir)  # clean up with the sinks at exit
 
     ev = load(spark, sf_dir, "events")
     ev.write.parquet(dup_dir)
@@ -550,10 +566,9 @@ def stream_dedup_within_watermark(spark, sf_dir):
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    sink_dir = _drain_to_parquet(
+    sink = _drain_to_parquet(
         spark, stream, "append", "sdedup", source_bytes=_source_bytes(dup_dir)
     )
-    _TWS_SINK_DIRS.append(dup_dir)  # clean up with the sinks at exit
-    return spark.read.parquet(sink_dir).select(
+    return sink.select(
         "event_id", "user_id", "event_type", "value"
     )

@@ -94,6 +94,7 @@ class _Budget:
         self.timeout_ms = timeout_ms
         self._timer: threading.Timer | None = None
         self._timed_out = threading.Event()
+        self._done = threading.Event()
         self._saved: dict[str, str | None] = {}
 
     @property
@@ -113,11 +114,18 @@ class _Budget:
         )
 
         def _interrupt():
+            # cancelJobGroup reaches only the group's ACTIVE jobs; a job
+            # submitted after the budget lapsed (the statement was still
+            # planning, or starts its next job) would run to the end, so
+            # keep cancelling until the statement returns
             self._timed_out.set()
-            try:
-                sc.cancelJobGroup(group)
-            except Exception:
-                pass
+            while True:
+                try:
+                    sc.cancelJobGroup(group)
+                except Exception:
+                    pass
+                if self._done.wait(0.05):
+                    return
 
         self._timer = threading.Timer(self.timeout_ms / 1000, _interrupt)
         self._timer.daemon = True
@@ -125,6 +133,7 @@ class _Budget:
         return self
 
     def __exit__(self, *exc) -> bool:
+        self._done.set()
         if self._timer is not None:
             self._timer.cancel()
         if self.timeout_ms is not None:

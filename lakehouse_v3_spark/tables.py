@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from .io_utils import local_frame
+from .io_utils import as_nullable, local_frame
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -293,21 +293,6 @@ def _delta_available() -> bool:
         return True
     except ImportError:
         return False
-
-
-def _nullable(node):
-    """A schema's JSON with every field, element and value nullable —
-    what Spark's file scans read (``asNullable``), so a log-planned
-    read has the schema a footer-inferred one had."""
-    if isinstance(node, dict):
-        return {
-            k: True if k in ("nullable", "containsNull", "valueContainsNull")
-            else _nullable(v)
-            for k, v in node.items()
-        }
-    if isinstance(node, list):
-        return [_nullable(v) for v in node]
-    return node
 
 
 def _merge_schema(old: dict | None, new: dict | None) -> dict | None:
@@ -740,7 +725,7 @@ class TableManager:
             return self.version(table)
         add = self._write_data(df, table, partition_by)
         return self._commit_on_tip(
-            table, "append", add, _nullable(df.schema.jsonValue()), {},
+            table, "append", add, as_nullable(df.schema.jsonValue()), {},
             self.version(table), max_retries,
         )
 
@@ -773,7 +758,7 @@ class TableManager:
         props = {} if read_version is None else self._record(table, read_version)["properties"]
         add = self._write_data(df, table, partition_by)
         return self._commit_overwrite(
-            table, add, read_version, _nullable(df.schema.jsonValue()), props
+            table, add, read_version, as_nullable(df.schema.jsonValue()), props
         )
 
     def merge(self, source: DataFrame, table: str, key: list[str]) -> int:

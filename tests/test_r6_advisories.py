@@ -158,6 +158,32 @@ def test_lsh_index_invalidated_by_mtime_ns_and_superseded_dir_cleaned(spark, tmp
         shutil.rmtree(tm2.warehouse_dir, ignore_errors=True)
 
 
+def test_lsh_index_entries_of_a_deleted_fixture_are_swept(
+    spark, tmp_path, monkeypatch
+):
+    """Each lock file records its fixture dir; once that dir is gone,
+    the next call (for any fixture) removes its index dirs and lock."""
+    import tempfile
+
+    from lakehouse_v3_spark.plans.dedup_queries import _lsh_index_manager
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    gone = _fake_fixture(str(tmp_path / "gone"))
+    kept = _fake_fixture(str(tmp_path / "kept"))
+    tm_gone, lock_gone = _lsh_index_manager(spark, gone)
+    os.makedirs(tm_gone.warehouse_dir, exist_ok=True)  # a built index
+    assert open(lock_gone).read() == gone
+    shutil.rmtree(gone)
+    tm_kept, lock_kept = _lsh_index_manager(spark, kept)
+    assert not os.path.exists(tm_gone.warehouse_dir)
+    assert not os.path.exists(lock_gone)
+    assert sorted(os.listdir(scratch)) == sorted(
+        os.path.basename(p) for p in (lock_kept, tm_kept.warehouse_dir)
+    )
+
+
 # -- 5. ngram_jaccard_pairs block contract ------------------------------
 
 

@@ -109,23 +109,45 @@ def test_bad_limit_is_http_400(gateway):
         assert body["error"] == "bad_request"
 
 
-def test_statement_timeout_cancels_and_returns_408(gateway):
+@pytest.fixture(scope="module")
+def gw_sleep(spark):
+    """``gw_sleep(x)``: a Python UDF that returns ``x`` after 5 s, so a
+    statement over it cannot finish within a short budget on any host."""
+
+    def sleepy(x):
+        import time
+
+        time.sleep(5)
+        return x
+
+    spark.udf.register("gw_sleep", sleepy, "long")
+    return "SELECT SUM(gw_sleep(id)) AS n FROM range(4)"
+
+
+def test_statement_timeout_cancels_and_returns_408(gateway, gw_sleep):
     """Trino-parity statement budget (r6 verdict item #8): a query that
     exceeds timeout_ms is INTERRUPTED server-side (session-tag
     cancellation) and the client gets a structured 408 — then the very
     next statement on the same gateway runs normally (the cancel did
     not poison the session or leak its tag)."""
-    slow = (
-        "SELECT COUNT(*) AS n FROM gw_orders a "
-        "CROSS JOIN gw_orders b CROSS JOIN gw_orders c"
-    )
     with pytest.raises(urllib.error.HTTPError) as ei:
-        _post(gateway.url, {"sql": slow, "timeout_ms": 800})
+        _post(gateway.url, {"sql": gw_sleep, "timeout_ms": 800})
     assert ei.value.code == 408
     body = json.loads(ei.value.read())
     assert body["error"] == "statement_timeout"
     ok = _post(gateway.url, {"sql": "SELECT 41 + 1 AS x"})
     assert ok["rows"] == [[42]]
+
+
+def test_statement_budget_cancels_jobs_submitted_after_it_lapses(
+    gateway, gw_sleep
+):
+    """A 1 ms budget lapses while the statement is still planning, so
+    its job starts after the deadline; cancelling only the jobs active
+    at the deadline would let it run its 5 s."""
+    with pytest.raises(urllib.error.HTTPError) as ei:
+        _post(gateway.url, {"sql": gw_sleep, "timeout_ms": 1})
+    assert ei.value.code == 408
 
 
 def test_concurrent_clients_no_conf_bleed(gateway):

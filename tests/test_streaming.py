@@ -275,3 +275,52 @@ def test_tws_catalog_query_return_path_is_distributed(spark):
         .collect()
     }
     assert got == exp
+
+
+def test_tws_drain_failure_restores_session_confs(spark, sf_dir, monkeypatch):
+    """The TWS query sets the RocksDB provider and narrows the shuffle
+    partitions for its drain. When the drain raises, while planning or
+    inside a micro-batch, both confs read what they did before, the
+    partial sink is still removed at exit, and the next streaming drain
+    runs."""
+    import glob
+    import os
+    import tempfile
+
+    import pytest
+
+    from lakehouse_v3_spark.io_utils import load
+    from lakehouse_v3_spark.plans import load_all
+    from lakehouse_v3_spark.plans import streaming_queries as sq
+    from lakehouse_v3_spark.streaming import stateful
+
+    keys = (
+        "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.shuffle.partitions",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    queries = load_all()
+
+    def raise_at_plan(df):
+        raise RuntimeError("injected TWS failure")
+
+    def raise_in_batch(df):
+        return df.select(
+            "user_id", F.raise_error(F.lit("injected TWS failure")).alias("x")
+        )
+
+    sinks = os.path.join(tempfile.gettempdir(), "tws_sink_*")
+    old_sinks = set(glob.glob(sinks))
+    for broken in (raise_at_plan, raise_in_batch):
+        monkeypatch.setattr(stateful, "distinct_type_counts", broken)
+        with pytest.raises(Exception, match="injected TWS failure"):
+            queries["stream_tws_distinct_type_counts"].fn(spark, sf_dir)
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+    monkeypatch.undo()
+    assert set(glob.glob(sinks)) - old_sinks <= set(sq._TWS_SINK_DIRS)
+
+    got = queries["stream_state_running_totals"].fn(spark, sf_dir)
+    want = load(spark, sf_dir, "events").groupBy("user_id").count()
+    assert {(r.user_id, r.n_events) for r in got.collect()} == {
+        (r.user_id, r["count"]) for r in want.collect()
+    }
