@@ -159,6 +159,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.schema(schema).parquet(path)
     else:
         if name == "events":
+            # permanent, not a conf_window: the scan reads it when it runs
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
     if name == "events":

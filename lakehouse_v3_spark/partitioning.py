@@ -151,17 +151,12 @@ def fits_per_group_window(df: DataFrame) -> bool:
     few MB (measured r14 at sf0.1: window_ntile_ranks 0.30 s plain vs
     1.97 s fused; pack_sequences_greedy 0.36 vs 1.30 s — identical
     values, pinned by test). Below the threshold (total scan bytes ≤
-    ``SPARK_GRAFT_GROUP_WINDOW_BYTES``, default 256 MiB — a one-task
+    ``PER_GROUP_WINDOW_BYTES``, 256 MiB — a one-task
     sort of ≤ a few hundred MB is routine) the plain window is the
     better plan at ANY deployment size; above it, or whenever the input
     size is unknowable (derived frames), the scale shape is used."""
-    import os
-
-    limit = int(
-        os.environ.get("SPARK_GRAFT_GROUP_WINDOW_BYTES", PER_GROUP_WINDOW_BYTES)
-    )
     total = input_bytes(df)
-    return total is not None and total <= limit
+    return total is not None and total <= PER_GROUP_WINDOW_BYTES
 
 
 # r14: training_loop_conf (the r13 AQE-off + 8-partition-reduce session

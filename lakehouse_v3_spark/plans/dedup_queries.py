@@ -669,7 +669,8 @@ def _lsh_index_manager(spark, sf_dir):
       old index's disk;
     - the lock file records its fixture dir, and every call sweeps the
       dirs and lock of any fixture dir that no longer exists (tests
-      build fixtures under throwaway temp paths).
+      build fixtures under throwaway temp paths), and of any empty lock
+      (written before locks recorded a dir) older than a day.
 
     Cross-process build/append races are serialized by
     ``_lsh_index_lock`` (flock on a sibling lock file — see the query
@@ -702,12 +703,19 @@ def _lsh_index_manager(spark, sf_dir):
     return TableManager(spark, wh, backend="parquet"), lock_path
 
 
+# An empty lock this old was written by code that did not record its
+# fixture dir; a fresh one may belong to a caller about to write it.
+_EMPTY_LSH_LOCK_AGE_S = 24 * 3600
+
+
 def _reap_orphan_lsh_index(tmp, lock_name):
     """Delete the index dirs and the lock file ``lock_name`` of a fixture
-    dir that no longer exists. A lock without a recorded dir, or one
-    another process holds, is left alone."""
+    dir that no longer exists, or of an empty lock (no recorded dir)
+    older than a day. A fresh empty lock, or one another process holds,
+    is left alone."""
     import os
     import shutil
+    import time
 
     try:
         import fcntl
@@ -717,11 +725,14 @@ def _reap_orphan_lsh_index(tmp, lock_name):
     try:
         with open(lock_path) as f:
             fixture = f.read()
+            age = time.time() - os.fstat(f.fileno()).st_mtime
         fd = os.open(lock_path, os.O_RDWR)
     except OSError:  # reaped by a concurrent caller
         return
     try:
-        if not fixture or os.path.exists(fixture):
+        if fixture and os.path.exists(fixture):
+            return
+        if not fixture and age <= _EMPTY_LSH_LOCK_AGE_S:
             return
         try:
             fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)

@@ -11,8 +11,6 @@ exact shuffles.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -20,56 +18,12 @@ from ..io_utils import load, local_frame
 from ..partitioning import fan_out_scan
 from ..operators.dedup import md5_int
 from ..operators.similarity import near_dup_pairs
+from ..session import conf_window
 from . import dsum, register
-
-# Serializes session-conf planning windows (bloom_runtime_filter_join)
-# against each other; see the in-function comment for the contract with
-# concurrent gateway traffic.
-_PLAN_CONF_LOCK = threading.Lock()
 
 # ---------------------------------------------------------------------------
 # Connected components over near-dup pairs (iterative, driver-bounded)
 # ---------------------------------------------------------------------------
-
-
-# Ring of parquet re-anchor dirs created by the PUBLIC-API fallback in
-# _stats_reset_checkpoint. The CC loop only ever references the last
-# one or two checkpoints, so older dirs are best-effort deleted once
-# more than _REANCHOR_KEEP newer ones exist (keeps a long fallback-mode
-# loop from accumulating one scratch dir per iteration).
-_REANCHOR_DIRS: list[str] = []
-_REANCHOR_KEEP = 4
-
-
-def _parquet_reanchor(df: DataFrame) -> DataFrame:
-    """Public-API lineage + statistics re-anchor: materialize to a
-    scratch parquet dir and read it back. The fresh file relation gets
-    real file-size statistics (fully detached from the origin plan's
-    estimate) and truncated lineage — the classic manual-checkpoint
-    pattern for iterative algorithms. Used only when the private
-    ``internalCreateDataFrame`` constructor is unavailable; costs one
-    disk round-trip per call instead of an in-memory block pin.
-
-    Scratch root: the SparkContext checkpoint dir if set (REQUIRED on a
-    multi-node cluster — a driver-local tempdir is not visible to
-    executors), else the local tempdir (fine on local[*])."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    spark = df.sparkSession
-    root = spark.sparkContext.getCheckpointDir() or tempfile.gettempdir()
-    path = os.path.join(root, f"_stats_reset_{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(path)
-    # the writer fixed the schema: no footer-inference job on read-back
-    out = spark.read.schema(df.schema).parquet(path)
-    _REANCHOR_DIRS.append(path)
-    while len(_REANCHOR_DIRS) > _REANCHOR_KEEP:
-        old = _REANCHOR_DIRS.pop(0)
-        if "://" not in old:  # only best-effort clean local paths
-            shutil.rmtree(old, ignore_errors=True)
-    return out
 
 
 def _stats_reset_checkpoint(df: DataFrame) -> DataFrame:
@@ -89,38 +43,29 @@ def _stats_reset_checkpoint(df: DataFrame) -> DataFrame:
     choices still come from AQE's RUNTIME shuffle statistics, so no join
     strategy degrades.
 
-    If the private constructor moves on a future Spark version, the
-    fallback is a PUBLIC-API parquet re-anchor (``_parquet_reanchor``)
-    with the same O(1)-planning property — never a plain
-    localCheckpoint, whose preserved stats would silently re-introduce
-    the squaring. ``tests/test_scale_ops.py::
-    test_stats_reset_private_api_present`` fails (not skips) the day
-    the private path disappears, so the bump is loud."""
+    The constructor is private, so the call fails loudly if it moves:
+    ``tests/test_scale_ops.py::test_stats_reset_private_api_present``
+    fails (not skips) on a Spark bump that removes it, and a failing
+    call here raises ``RuntimeError`` naming the API. A plain
+    localCheckpoint is never substituted: its preserved stats would
+    silently re-introduce the squaring."""
     spark = df.sparkSession
-    # Probe BEFORE localCheckpoint: if the private constructor is gone
-    # (future Spark bump), checkpointing first would materialize and pin
-    # a block-manager RDD that nothing ever unpersists — a per-iteration
-    # executor-memory leak in fallback mode (ADVICE r4).
-    try:
-        # py4j raises Py4JError (not AttributeError) for a missing JVM
-        # member, so a plain hasattr could propagate — catch broadly.
-        getattr(spark._jsparkSession, "internalCreateDataFrame")
-    except Exception:
-        return _parquet_reanchor(df)
     ckpt = df.localCheckpoint()
     try:
         jdf = ckpt._jdf
         fresh = spark._jsparkSession.internalCreateDataFrame(
             jdf.queryExecution().toRdd(), jdf.schema(), False
         )
-        return DataFrame(fresh, spark)
-    except Exception:  # pragma: no cover - call-shape change mid-version
-        # release the orphaned checkpoint blocks before falling back
-        try:
-            ckpt._jdf.unpersist()
-        except Exception:
-            pass
-        return _parquet_reanchor(df)
+    except Exception as exc:  # pragma: no cover - fires on API move
+        # release the checkpoint blocks nothing will read
+        ckpt.unpersist()
+        raise RuntimeError(
+            "_stats_reset_checkpoint: the private constructor "
+            "SparkSession.internalCreateDataFrame(rdd, schema, false) is "
+            "gone or changed shape; iterative plans would re-grow their "
+            f"size estimates without it. Cause: {exc!r}"
+        ) from exc
+    return DataFrame(fresh, spark)
 
 
 def connected_components(
@@ -1149,37 +1094,17 @@ def bloom_runtime_filter_join(spark, sf_dir):
         # hint alone does NOT do this: the rule checks sizes, not hints
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    # The conf window is session-global, NOT thread-safe: any query
-    # planned concurrently on the same session (e.g. via the
-    # multi-threaded SqlGateway) inherits the relaxed thresholds for
-    # the window's duration — never a correctness issue (the confs only
-    # bias plan CHOICE: bloom injection on, broadcast off), but a
-    # concurrently-planned small join could pick SMJ instead of
-    # broadcast. _PLAN_CONF_LOCK serializes the catalog's own
-    # conf-window users; gateway traffic that must never observe the
-    # window should plan on a cloned session (r6 advisory, documented
-    # contract).
-    with _PLAN_CONF_LOCK:
-        saved = {k: spark.conf.get(k, None) for k in confs}
-        try:
-            # inside the try: a set that throws part-way still restores
-            # the keys already set
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            # force planning NOW, inside the conf window; the Dataset
-            # caches its QueryExecution so later actions reuse this
-            # plan. Private-API pin: guarded by a fails-loudly probe —
-            # _pin_executed_plan raises if the py4j call shape ever
-            # stops returning an executed plan (r6 verdict item: a
-            # silent miss here would replan WITHOUT the bloom filter
-            # after the confs restore — correct but silently slower).
-            _pin_executed_plan(joined)
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
+    # The confs are session-wide while the window is open: a join
+    # planned concurrently on the session (SqlGateway threads) may pick
+    # SMJ over broadcast, never different values (see conf_window).
+    with conf_window(spark, confs):
+        # force planning NOW, inside the conf window; the Dataset
+        # caches its QueryExecution so later actions reuse this plan.
+        # Private-API pin: _pin_executed_plan raises if the py4j call
+        # shape ever stops returning an executed plan (a silent miss
+        # would replan WITHOUT the bloom filter after the confs restore
+        # — correct but silently slower).
+        _pin_executed_plan(joined)
     return joined
 
 

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io_utils import load
+from ..session import conf_window
 from ..streaming.ingest import windowed_event_counts
 from . import register
 
@@ -35,7 +36,11 @@ import atexit as _atexit
 _atexit.register(_tws_sink_cleanup)
 
 
-def _stream_state_partitions(spark, nbytes: int) -> int:
+# Source bytes per state-store partition of a streaming drain.
+STREAM_BYTES_PER_PART = 512 * 1024
+
+
+def _stream_state_partitions(spark, nbytes: int | None) -> int:
     """Scale-adaptive state-store partition count for one streaming run.
 
     Structured Streaming pins its state-store partition count to
@@ -48,79 +53,36 @@ def _stream_state_partitions(spark, nbytes: int) -> int:
     identical output rows (r13, guide §1/§2: the fixed cost scales with
     the partition COUNT, so derive the count from the data).
 
-    One partition per ``SPARK_GRAFT_STREAM_BYTES_PER_PART`` (default
-    512 KiB) of source input, capped at the session's configured
-    shuffle partitions: a production-sized source (GBs+ per trigger)
-    hits the cap and keeps the cluster's full configured parallelism;
-    only a tiny source shrinks. State is hash-partitioned by key, so
-    the count never changes streaming VALUES, only task granularity.
+    One partition per ``STREAM_BYTES_PER_PART`` (512 KiB) of source
+    input, capped at the session's configured shuffle partitions: a
+    production-sized source (GBs+ per trigger) hits the cap and keeps
+    the cluster's full configured parallelism; only a tiny source
+    shrinks. An unknown size (``None``) gets the cap. State is
+    hash-partitioned by key, so the count never changes streaming
+    VALUES, only task granularity.
     """
-    import os
-
-    per_part = int(
-        os.environ.get("SPARK_GRAFT_STREAM_BYTES_PER_PART", 512 * 1024)
-    )
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(cap, (nbytes + per_part - 1) // per_part))
+    if nbytes is None:
+        return cap
+    return max(1, min(cap, -(-nbytes // STREAM_BYTES_PER_PART)))
 
 
-def _source_bytes(path: str) -> int:
-    """Total bytes of the parquet file(s) feeding a file-source stream
-    (0 when unknowable: the state width then falls to its floor)."""
+def _source_bytes(path: str) -> int | None:
+    """Total bytes of the parquet file(s) feeding a file-source stream;
+    None for a path with a scheme or whose size cannot be read."""
     import glob
     import os
 
     from ..partitioning import local_bytes
 
+    if "://" in path:
+        return None
     files = (
         [path] if os.path.isfile(path)
         else glob.glob(os.path.join(path, "*.parquet"))
     )
-    return local_bytes(files) or 0
+    return local_bytes(files)
 
-
-class _stream_run_partitions:
-    """Context manager: set shuffle partitions (= state partitions) for
-    the duration of one streaming drain, then restore the session value.
-    The batch plan of whatever the caller builds from the SINK afterwards
-    runs under the restored session setting.
-
-    NOT concurrency-safe by design (r13 verdict item): it mutates a
-    session-wide conf, so two windows racing on ONE SparkSession would
-    restore each other's values and run under the wrong width. The
-    bench/oracle drivers run queries serially; the guard below turns an
-    accidental concurrent use into a loud error instead of a silent
-    misconfiguration (a cross-session alternative —
-    ``SparkSession.newSession()`` per drain — was rejected: streaming
-    queries registered on a child session outlive the window and the
-    fixture sinks are session-scoped)."""
-
-    _lock = __import__("threading").Lock()
-
-    def __init__(self, spark, nbytes: int):
-        self._spark = spark
-        self._n = _stream_state_partitions(spark, nbytes)
-
-    def __enter__(self):
-        if not self._lock.acquire(blocking=False):
-            raise RuntimeError(
-                "_stream_run_partitions: concurrent session-conf windows "
-                "on one SparkSession — run streaming drains serially or "
-                "scope them to separate sessions"
-            )
-        try:
-            self._old = self._spark.conf.get("spark.sql.shuffle.partitions")
-            self._spark.conf.set("spark.sql.shuffle.partitions", str(self._n))
-        except BaseException:
-            # __exit__ never runs when __enter__ raises
-            self._lock.release()
-            raise
-        return self._n
-
-    def __exit__(self, *exc):
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._old)
-        self._lock.release()
-        return False
 
 _TUMBLING_ORACLE = """
 SELECT time_bucket(INTERVAL '1 hour', ts)            AS window_start,
@@ -213,84 +175,41 @@ def stream_tws_distinct_type_counts(spark, sf_dir):
     PRODUCTION-SHAPED return path (r4 verdict item #4): every update-mode
     micro-batch emission is SUNK DISTRIBUTED — foreachBatch appends the
     batch (stamped with its batch_id) to a parquet table, exactly how a
-    real deployment lands update-mode output in a lakehouse table. The
-    final answer is a distributed last-emission-per-key window
-    (row_number over batch_id desc) over that table. Nothing flows
+    real deployment lands update-mode output in a lakehouse table
+    (:func:`_drain_to_parquet`, with the RocksDB provider set for the
+    drain only). The final answer is a distributed last-emission-per-key
+    window (:func:`_last_emission`) over that table. Nothing flows
     through the driver: no toPandas(), no createDataFrame — at 10⁹ keys
     the result path is a shuffle on user_id, same as any other query.
-    On a multi-node cluster the sink root must be shared storage; like
-    _parquet_reanchor, the SparkContext checkpoint dir is preferred
-    when set."""
-    import os
-    import tempfile
-    import uuid
-
+    On a multi-node cluster the sink root must be shared storage; the
+    SparkContext checkpoint dir is preferred when set."""
     from ..streaming.stateful import distinct_type_counts
 
     if distinct_type_counts is None:  # pragma: no cover - pre-4.0 Spark
         raise RuntimeError("transformWithStateInPandas unavailable on this Spark")
 
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    old_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    sink_root = spark.sparkContext.getCheckpointDir() or tempfile.gettempdir()
-    sink_dir = os.path.join(sink_root, f"tws_sink_{uuid.uuid4().hex}")
-    # the returned (lazy) DataFrame reads from sink_dir — every sink
-    # dir lives until process exit (atexit above) so EVERY DataFrame
-    # this query has ever returned stays collectable; registered before
-    # the drain, so a failed one's partial sink goes too
-    _TWS_SINK_DIRS.append(sink_dir)
-
-    def _sink_batch(df, bid):
-        # distributed append: one parquet table keyed by (batch_id, user)
-        _stamped(df, bid).write.mode("append").parquet(sink_dir)
-
-    try:
-        # the streaming file source wants a DIRECTORY; events.parquet is
-        # a single file, so stream the fixture dir with a glob filter
-        stream = (
-            spark.readStream.schema(
-                "user_id long, event_type string, value double, ts timestamp"
-            )
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
+    # the streaming file source wants a DIRECTORY; events.parquet is a
+    # single file, so stream the fixture dir with a glob filter
+    stream = (
+        spark.readStream.schema(
+            "user_id long, event_type string, value double, ts timestamp"
         )
-        with tempfile.TemporaryDirectory(prefix="tws_ckpt_") as ckpt:
-            with _stream_run_partitions(
-                spark, _source_bytes(f"{sf_dir}/events.parquet")
-            ):
-                counts = distinct_type_counts(
-                    stream.select("user_id", "event_type")
-                )
-                q = (
-                    counts.writeStream.outputMode("update")
-                    .foreachBatch(_sink_batch)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-    finally:
-        if old_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, old_prov)
-
-    # update mode re-emits a key on every batch that touches it; the
-    # LAST emission per user is the final accumulated state — a
-    # distributed window over the sunk table, not a driver concat
-    from pyspark.sql import Window
-
-    emissions = _read_sink(spark, sink_dir, counts)
-    w = Window.partitionBy("user_id").orderBy(F.col("_bid").desc())
-    return (
-        emissions.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "n_types", "n_events")
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
     )
+    counts = distinct_type_counts(stream.select("user_id", "event_type"))
+    emissions = _drain_to_parquet(
+        spark,
+        counts,
+        "update",
+        "tws",
+        source_bytes=_source_bytes(f"{sf_dir}/events.parquet"),
+        confs={
+            "spark.sql.streaming.stateStore.providerClass": "org.apache."
+            "spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        },
+    )
+    return _last_emission(emissions).select("user_id", "n_types", "n_events")
 
 
 # ---------------------------------------------------------------------------
@@ -332,7 +251,12 @@ def _read_sink(spark, sink_dir: str, drained):
 
 
 def _drain_to_parquet(
-    spark, streaming_df, output_mode: str, tag: str, source_bytes: int = 0
+    spark,
+    streaming_df,
+    output_mode: str,
+    tag: str,
+    source_bytes: int | None,
+    confs: dict[str, str] | None = None,
 ):
     """Run ``streaming_df`` to completion under availableNow, landing
     every micro-batch (stamped with its batch_id as ``_bid``) in a fresh
@@ -341,25 +265,33 @@ def _drain_to_parquet(
     lakehouse table via foreachBatch, never through the driver. Returns
     the sink as a lazy batch frame (:func:`_read_sink`; dirs live until
     process exit via the atexit hook above, so returned DataFrames stay
-    collectable)."""
+    collectable).
+
+    The drain runs in one session-conf window: the state width derived
+    from ``source_bytes`` (:func:`_stream_state_partitions`) plus the
+    caller's ``confs``. Every micro-batch is planned inside
+    ``awaitTermination``, so the window covers them all; whatever the
+    caller builds from the sink afterwards plans under the restored
+    session confs."""
     import os
     import tempfile
     import uuid
 
     sink_root = spark.sparkContext.getCheckpointDir() or tempfile.gettempdir()
     sink_dir = os.path.join(sink_root, f"{tag}_sink_{uuid.uuid4().hex}")
-    _TWS_SINK_DIRS.append(sink_dir)  # before the drain: see the TWS query
+    # the returned (lazy) DataFrame reads from sink_dir — every sink
+    # dir lives until process exit (atexit above) so EVERY DataFrame a
+    # query has ever returned stays collectable; registered before the
+    # drain, so a failed one's partial sink goes too
+    _TWS_SINK_DIRS.append(sink_dir)
 
     def _sink_batch(df, bid):
         _stamped(df, bid).write.mode("append").parquet(sink_dir)
 
+    n = _stream_state_partitions(spark, source_bytes)
+    window = {"spark.sql.shuffle.partitions": str(n), **(confs or {})}
     with tempfile.TemporaryDirectory(prefix=f"{tag}_ckpt_") as ckpt:
-        # scale-adaptive state partitions for the whole drain (every
-        # micro-batch is planned inside awaitTermination, so the
-        # temporary setting covers them all); 0 bytes = caller opted out
-        with _stream_run_partitions(
-            spark, source_bytes or 2**63
-        ):
+        with conf_window(spark, window):
             q = (
                 streaming_df.writeStream.outputMode(output_mode)
                 .foreachBatch(_sink_batch)
@@ -369,6 +301,19 @@ def _drain_to_parquet(
             )
             q.awaitTermination()
     return _read_sink(spark, sink_dir, streaming_df)
+
+
+def _last_emission(emissions):
+    """The last update-mode emission per user from a drained sink.
+    Update mode re-emits a key on every batch that touches it, so the
+    row with the highest ``_bid`` is the final accumulated state — a
+    distributed window over the sunk table, not a driver concat."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(F.col("_bid").desc())
+    return emissions.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") == 1
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -492,14 +437,8 @@ def stream_state_running_totals(spark, sf_dir):
         "aipws",
         source_bytes=_source_bytes(f"{sf_dir}/events.parquet"),
     )
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("_bid").desc())
-    return (
-        emissions.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "n_events", "total_value")
+    return _last_emission(emissions).select(
+        "user_id", "n_events", "total_value"
     )
 
 

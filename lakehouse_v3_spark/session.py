@@ -11,18 +11,65 @@ long-lived driver compiles each query once rather than once per run.
 Delta Lake / S3A / Hive are optional in this environment; the factory
 gates them behind availability checks so the same code runs on a real
 cluster (with the jars present) and in the local test harness.
+
+One session serves the whole catalog, the DAGs and the gateway, so a
+query that needs a conf changed for a while changes it only through
+:func:`conf_window`, which restores it afterwards. All windows share one
+lock, taken without blocking: a second window opened while one is open
+(another thread, or a nested window) raises instead of silently
+restoring the other's values.
 """
 
 from __future__ import annotations
 
 import os
 import sys
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_CONF_WINDOW_LOCK = threading.Lock()
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+@contextmanager
+def conf_window(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body, then restore each key:
+    a key unset before is unset again, the rest get their old values,
+    also when a set or the body raises.
+
+    The confs are session-wide, so anything planned on the session while
+    the window is open sees them (a concurrent gateway statement may
+    pick another join strategy; values never change). Windows run
+    serially: one module-level lock, and a window opened while another
+    is open raises ``RuntimeError`` rather than wait, so a window opened
+    inside a ``foreachBatch`` callback of another cannot deadlock."""
+    if not _CONF_WINDOW_LOCK.acquire(blocking=False):
+        raise RuntimeError(
+            "concurrent session-conf windows on one SparkSession: run "
+            "them serially or scope them to separate sessions"
+        )
+    try:
+        saved = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            # inside the try: a set that throws part-way still restores
+            # the keys already set
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    finally:
+        _CONF_WINDOW_LOCK.release()
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:

@@ -175,6 +175,7 @@ def register_synthetic_source(spark) -> None:
     ensure_package_shipped(spark)  # workers unpickle this module by reference
     # Spark refuses a reader that implements pushFilters() while the
     # Python filter-pushdown feature flag is off — enable it with the
-    # registration so every consumer gets a working scan.
+    # registration so every consumer gets a working scan. Permanent,
+    # not a conf_window: the scan reads it when it runs.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(SyntheticEventsDataSource)

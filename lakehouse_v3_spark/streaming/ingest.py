@@ -16,19 +16,23 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import conf_window
+
 
 def csv_file_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """S1: incremental CSV discovery (header, recursive, inferred
-    schema). Sets streaming schema inference itself so the operator also
-    works on sessions not built by session.get_spark (reference relies on
-    the session conf, uber/csv_to_delta.py:119-120)."""
-    spark.conf.set("spark.sql.streaming.schemaInference", "true")
-    return (
+    schema). Turns streaming schema inference on for the ``load`` only
+    (the source infers its schema there), so the operator also works on
+    sessions not built by session.get_spark and leaves the session conf
+    as it found it (reference sets it for its whole job,
+    uber/csv_to_delta.py:119-120)."""
+    reader = (
         spark.readStream.format("csv")
         .option("header", "true")
         .option("recursiveFileLookup", "true")
-        .load(source_dir)
     )
+    with conf_window(spark, {"spark.sql.streaming.schemaInference": "true"}):
+        return reader.load(source_dir)
 
 
 def run_foreach_batch(

@@ -25,6 +25,12 @@ from lakehouse_v3_spark.audit.engine import PK_SAMPLE_CAP
 from lakehouse_v3_spark.audit.facts import explode_results_to_fact, latest_run_failures
 
 
+def _plan_text(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def _status_of(results, rule_id):
     row = [
         r
@@ -154,3 +160,28 @@ def test_send_alert_skips_when_no_failures(spark):
     sent = []
     msg = send_alert(report, transport=sent.append, recipients=("ops@example.com",))
     assert msg is None and sent == []
+
+
+def test_fact_explode_without_ids_matches_default_minus_id(spark, sf_dir):
+    from lakehouse_v3_spark.io_utils import load
+
+    tables = {"orders": load(spark, sf_dir, "orders")}
+    rules = [
+        ValidityRule(1, "orders", "o_totalprice <= 0", ("o_orderkey",)),
+    ]
+    results = run_validity_rules(spark, tables, rules)
+    with_ids = explode_results_to_fact(results)
+    without = explode_results_to_fact(results, assign_ids=False)
+
+    assert "cd_fact_id" in with_ids.columns
+    assert "cd_fact_id" not in without.columns
+    cols = [c for c in with_ids.columns if c != "cd_fact_id"]
+    assert sorted(map(tuple, with_ids.select(*cols).collect())) == sorted(
+        map(tuple, without.select(*cols).collect())
+    )
+    # the point of the flag: no eager job (dense ids run counts +
+    # localCheckpoint at build time, collapsing the plan to a bare RDD
+    # scan) — the id-free plan must still be LAZY, i.e. carry the
+    # explode (Generate) stage instead of a checkpoint scan
+    assert "Generate" in _plan_text(without)
+    assert "Generate" not in _plan_text(with_ids)

@@ -22,6 +22,12 @@ def _plan(spark, sf_dir, name) -> str:
     return buf.getvalue()
 
 
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def test_q1_pushdown_and_pruning(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q1_pricing_summary")
     # shipdate filter reaches the parquet scan
@@ -335,6 +341,26 @@ def test_flagship_has_no_distinct_expand(spark, sf_dir):
     assert "count(distinct" not in plan.lower()
 
 
+def test_setsim_checkpoint_runs_explode_once_and_preserves_values(
+    spark, sf_dir
+):
+    from lakehouse_v3_spark.io_utils import load
+    from lakehouse_v3_spark.plans.dedup_queries import _setsim_join
+
+    d = load(spark, sf_dir, "documents")
+    out_ck = _setsim_join(d, checkpoint=True)
+    out_raw = _setsim_join(d, checkpoint=False)
+    # the checkpointed plan reads the materialized shingle set: the
+    # scan-side explode ran ONCE at build, so the final plan carries no
+    # Generate (explode) and no parquet scan of documents
+    plan = _explain(out_ck)
+    assert "Generate" not in plan
+    assert plan.count("Scan ExistingRDD") >= 1
+    # un-checkpointed plan re-derives the explode per branch
+    assert "Generate" in _explain(out_raw)
+    assert out_ck.collect() == out_raw.collect()
+
+
 def test_setsim_prefix_join_is_equi_join(spark, sf_dir):
     """The prefix-filtered set-similarity join must stay an equi
     hash/merge join on the hashed shingle key — a nested-loop or
@@ -423,30 +449,6 @@ def test_bloom_runtime_filter_injected(spark, sf_dir):
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == before, (
         "query leaked its planning-time conf overrides into the session"
     )
-
-
-def test_bloom_conf_window_restores_when_conf_set_raises(
-    spark, sf_dir, failing_conf_session
-):
-    """A conf.set that throws part-way through the bloom join's conf
-    window must restore the keys already set and free the plan-conf
-    lock: the session conf is unchanged afterwards."""
-    from lakehouse_v3_spark.plans.scale_extras import _PLAN_CONF_LOCK
-
-    keys = (
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold",
-    )
-    before = {k: spark.conf.get(k, None) for k in keys}
-    # the first set lands, the second raises
-    with pytest.raises(RuntimeError, match="injected"):
-        load_all()["bloom_runtime_filter_join"].fn(
-            failing_conf_session(2), sf_dir
-        )
-    assert _PLAN_CONF_LOCK.acquire(blocking=False), "plan-conf lock held"
-    _PLAN_CONF_LOCK.release()
-    assert {k: spark.conf.get(k, None) for k in keys} == before
 
 
 def test_bloom_pin_fails_loudly(spark, sf_dir):

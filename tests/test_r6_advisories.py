@@ -184,6 +184,34 @@ def test_lsh_index_entries_of_a_deleted_fixture_are_swept(
     )
 
 
+def test_lsh_index_old_empty_lock_is_swept_and_fresh_one_kept(
+    spark, tmp_path, monkeypatch
+):
+    """A lock written without a fixture dir is reaped with its index
+    dirs once it is over a day old; a fresh empty lock may belong to a
+    caller about to write its dir, so it stays."""
+    from lakehouse_v3_spark.plans.dedup_queries import _lsh_index_manager
+
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    old_lock = scratch / "lsh_index_0000aaaa.lock"
+    old_lock.write_text("")
+    old_dir = scratch / "lsh_index_0000aaaa_11112222"
+    old_dir.mkdir()
+    two_days_ago = time.time() - 2 * 24 * 3600
+    os.utime(old_lock, (two_days_ago, two_days_ago))
+    fresh_lock = scratch / "lsh_index_0000bbbb.lock"
+    fresh_lock.write_text("")
+
+    tm, lock = _lsh_index_manager(spark, _fake_fixture(str(tmp_path / "fx")))
+    assert not old_lock.exists() and not old_dir.exists()
+    assert fresh_lock.exists()
+    assert set(os.listdir(scratch)) - {os.path.basename(tm.warehouse_dir)} == {
+        fresh_lock.name, os.path.basename(lock)
+    }
+
+
 # -- 5. ngram_jaccard_pairs block contract ------------------------------
 
 

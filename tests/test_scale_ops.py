@@ -323,9 +323,8 @@ def test_stats_reset_private_api_present(spark):
     """_stats_reset_checkpoint's fast path uses the PRIVATE JVM
     constructor internalCreateDataFrame to strip origin statistics from
     a localCheckpoint. This test exercises that exact call chain
-    directly and FAILS (never skips) if a Spark bump moves it — the
-    fallback is correct but pays a disk round-trip per CC iteration, so
-    the regression must be loud (r3 verdict item)."""
+    directly and FAILS (never skips) if a Spark bump moves it — there
+    is no fallback, so the regression must be loud (r3 verdict item)."""
     df = spark.range(10).selectExpr("id", "id * 2 AS v")
     ckpt = df.localCheckpoint()
     jdf = ckpt._jdf
@@ -343,52 +342,6 @@ def test_stats_reset_private_api_present(spark):
 
     out = _stats_reset_checkpoint(df)
     assert "Scan ExistingRDD" in out._jdf.queryExecution().executedPlan().toString()
-
-
-def test_stats_reset_fallback_parquet_reanchor(spark, monkeypatch, tmp_path):
-    """With the private constructor unavailable, _stats_reset_checkpoint
-    must fall back to the PUBLIC parquet re-anchor — which both
-    preserves values and keeps the plan-size estimate BOUNDED across
-    iterative self-join rounds (a plain localCheckpoint fallback would
-    let the estimate square per round). Also: the scratch-dir ring keeps
-    at most _REANCHOR_KEEP dirs."""
-    import os
-
-    from lakehouse_v3_spark.plans import scale_extras as se
-
-    class _NoInternal:
-        """Delegates to the real JVM session but hides the private
-        constructor, simulating a Spark bump that removed it."""
-
-        def __init__(self, real):
-            self._real = real
-
-        def __getattr__(self, name):
-            if name == "internalCreateDataFrame":
-                raise AttributeError(name)
-            return getattr(self._real, name)
-
-    monkeypatch.setattr(spark, "_jsparkSession", _NoInternal(spark._jsparkSession))
-    if True:
-        monkeypatch.setattr(spark.sparkContext.__class__, "getCheckpointDir",
-                            lambda self: str(tmp_path), raising=False)
-        df = spark.range(50).selectExpr("id AS nid", "id AS comp")
-        cur = se._stats_reset_checkpoint(df)
-        assert "parquet" in cur._jdf.queryExecution().executedPlan().toString().lower()
-        sizes = []
-        for _ in range(6):
-            nxt = cur.alias("a").join(cur.alias("b"), F.col("a.nid") == F.col("b.nid")).select(
-                F.col("a.nid").alias("nid"),
-                F.least(F.col("a.comp"), F.col("b.comp")).alias("comp"),
-            )
-            cur = se._stats_reset_checkpoint(nxt)
-            stats = cur._jdf.queryExecution().optimizedPlan().stats()
-            sizes.append(int(str(stats.sizeInBytes())))
-        # bounded, not squaring: every round's estimate is file-sized
-        assert max(sizes) < 10 * min(sizes), sizes
-        assert sorted(r.nid for r in cur.collect()) == list(range(50))
-        ring = [d for d in os.listdir(tmp_path) if d.startswith("_stats_reset_")]
-        assert len(ring) <= se._REANCHOR_KEEP
 
 
 def test_lsh_star_candidates_preserve_connectivity(spark):

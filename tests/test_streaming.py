@@ -4,6 +4,7 @@ and watermarked windowed aggregation on a stream."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_v3_spark.ids import max_id_seed, with_dense_id
@@ -19,7 +20,22 @@ def _write_csv(path, rows):
     path.write_text("booking_id,status,value\n" + "\n".join(rows))
 
 
-def test_csv_stream_ingest_incremental(spark, tmp_path):
+@pytest.fixture
+def no_stream_schema_inference(spark):
+    """Streaming schema inference off on the session for one test."""
+    key = "spark.sql.streaming.schemaInference"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    yield key
+    if saved is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, saved)
+
+
+def test_csv_stream_ingest_incremental(
+    spark, tmp_path, no_stream_schema_inference
+):
     src = tmp_path / "bronze1"
     src.mkdir()
     _write_csv(src / "day1.csv", ["B1,Completed,10.5", "B2,Cancelled,0.0"])
@@ -40,6 +56,8 @@ def test_csv_stream_ingest_incremental(spark, tmp_path):
         tm.append(out, "bronze2.bookings")
 
     stream = csv_file_stream(spark, str(src))
+    # inference was on for the load only; the stream starts without it
+    assert spark.conf.get(no_stream_schema_inference) == "false"
     run_foreach_batch(stream, process, str(tmp_path / "ckpt"))
     t1 = tm.read("bronze2.bookings")
     assert t1.count() == 2
@@ -287,8 +305,6 @@ def test_tws_drain_failure_restores_session_confs(spark, sf_dir, monkeypatch):
     import os
     import tempfile
 
-    import pytest
-
     from lakehouse_v3_spark.io_utils import load
     from lakehouse_v3_spark.plans import load_all
     from lakehouse_v3_spark.plans import streaming_queries as sq
@@ -324,3 +340,22 @@ def test_tws_drain_failure_restores_session_confs(spark, sf_dir, monkeypatch):
     assert {(r.user_id, r.n_events) for r in got.collect()} == {
         (r.user_id, r["count"]) for r in want.collect()
     }
+
+
+def test_stream_state_partitions_scales_with_source_and_caps(spark):
+    from lakehouse_v3_spark.plans.streaming_queries import (
+        _source_bytes,
+        _stream_state_partitions,
+    )
+
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # tiny source: 1 partition, never 0
+    assert _stream_state_partitions(spark, 1) == 1
+    assert _stream_state_partitions(spark, 0) == 1
+    # 512 KiB per partition: 1.5 MiB -> 3
+    assert _stream_state_partitions(spark, 3 * 512 * 1024) == min(cap, 3)
+    # huge source: capped at the session's configured parallelism
+    assert _stream_state_partitions(spark, 2**63) == cap
+    # a size that cannot be read is not "empty": full width, every caller
+    assert _source_bytes("s3a://b/x") is None
+    assert _stream_state_partitions(spark, None) == cap
