@@ -9,10 +9,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..ids import with_dense_id
 
-_CONFIG_SCHEMA = (
+# DDL of the result log's two JSON payload columns
+CONFIG_SCHEMA = (
     "rule_id BIGINT, `table` STRING, kind STRING, pk_columns ARRAY<STRING>, rule STRING"
 )
-_CHECKED_SCHEMA = (
+CHECKED_SCHEMA = (
     "number_of_violated_rows BIGINT, pk_result ARRAY<STRING>, note STRING"
 )
 
@@ -45,8 +46,8 @@ def _explode(results: DataFrame) -> DataFrame:
         "cd_dataaudit_result",
         "nr_status",
         "dt_checked_at",
-        F.from_json("ds_configuration", _CONFIG_SCHEMA).alias("cfg"),
-        F.from_json("ds_checked_value", _CHECKED_SCHEMA).alias("chk"),
+        F.from_json("ds_configuration", CONFIG_SCHEMA).alias("cfg"),
+        F.from_json("ds_checked_value", CHECKED_SCHEMA).alias("chk"),
     )
     return parsed.select(
         "cd_dataaudit_result",

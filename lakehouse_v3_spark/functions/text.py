@@ -22,6 +22,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.dedup import md5_int
+
 # Lexicons chosen from the fixture corpus vocabulary so scores spread
 # across the ±0.1 label thresholds (the reference ships finance lexicons;
 # the operator is lexicon-agnostic).
@@ -66,21 +68,14 @@ def sentiment_label(score: Column) -> Column:
     )
 
 
-def token_int(col: Column, mod: int = 1_000_000) -> Column:
-    """Deterministic cross-engine token→int: first 8 hex digits of md5,
-    parsed base-16, mod ``mod``. DuckDB equivalent:
-    ('0x' || substr(md5(x),1,8))::BIGINT % mod."""
-    return (F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % mod)
-
-
 def rolling_fingerprint(token_arr: Column, mult: int = 1009, prime: int = 1_000_000_007) -> Column:
     """Polynomial rolling hash over a token array:
-    acc = (acc * mult + token_int(tok)) % prime. Order-sensitive document
-    fingerprint; intermediates stay < 2^63 in both engines."""
+    acc = (acc * mult + md5_int(tok, 1_000_000)) % prime. Order-sensitive
+    document fingerprint; intermediates stay < 2^63 in both engines."""
     return F.aggregate(
         token_arr,
         F.lit(0).cast("long"),
-        lambda acc, x: (acc * mult + token_int(x)) % prime,
+        lambda acc, x: (acc * mult + md5_int(x, mod=1_000_000)) % prime,
     )
 
 

@@ -39,7 +39,6 @@ def with_dense_id(
     order_cols: list[str],
     id_col: str = "cd_id",
     offset: int = 0,
-    num_partitions: int | None = None,
     materialize: bool = True,
 ) -> DataFrame:
     """Add ``id_col`` = offset + dense rank 1..N of ``order_cols`` ordering.
@@ -66,7 +65,7 @@ def with_dense_id(
        survive executor churn.
     """
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # The persist is CORRECTNESS, not caching: Spark's RangePartitioner
     # seeds its boundary sampling from the RDD id (byteswap32(-rdd.id-1)
     # in core), so two independent actions over an unpersisted
@@ -127,7 +126,6 @@ def with_grouped_cumsum(
     order_cols: list[str],
     value_col: str,
     out_col: str = "cum",
-    num_partitions: int | None = None,
     materialize: bool = True,
 ) -> DataFrame:
     """Add ``out_col`` = running sum of ``value_col`` (inclusive of the
@@ -174,7 +172,7 @@ def with_grouped_cumsum(
     :func:`with_dense_id` applies verbatim.
     """
     spark = df.sparkSession
-    n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     keys = [F.col(c) for c in group_cols + order_cols]
     part = (
         df.repartitionByRange(n, *keys)

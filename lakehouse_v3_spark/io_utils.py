@@ -176,12 +176,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view (for spark.sql queries)."""
-    for name in TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
     """A DataFrame over driver-side ``rows`` (tuples, lists, dicts or
     Rows), planned as a JVM ``LocalRelation``.

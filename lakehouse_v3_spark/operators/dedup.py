@@ -17,7 +17,7 @@ Scale notes (100 TB corpora):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # MinHash parameters — shared with the DuckDB oracle SQL (plans/dedup_queries).
@@ -41,10 +41,14 @@ MINHASH_SEEDS = [
 BAND_SIZE = 4
 
 
-def md5_int(col, mod: int = MINHASH_PRIME):
-    """First 8 hex digits of md5 → BIGINT % mod (DuckDB:
-    ('0x' || substr(md5(x),1,8))::BIGINT % mod)."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long") % mod
+def md5_int(col, mod: int | None = MINHASH_PRIME, hex_digits: int = 8):
+    """First ``hex_digits`` hex digits of md5 → BIGINT, then % ``mod``
+    unless it is None (DuckDB: ('0x' || substr(md5(x), 1, hex_digits))
+    ::BIGINT % mod). The one Spark md5-prefix hash: 8 digits for
+    shingle and bucket hashes, 15 (60 bits) for shingle keys, 4 for
+    SimHash token bits."""
+    h = F.conv(F.substring(F.md5(col), 1, hex_digits), 16, 10).cast("long")
+    return h if mod is None else h % mod
 
 
 def word_shingles(tok_arr, k: int = 3):
@@ -283,7 +287,7 @@ def simhash16(tok_arr):
     token-count-weighted sum of (±1 per token bit i) is positive.
     Generated per-bit so the identical expression renders in SQL for the
     oracle (plans/dedup_queries.simhash_sql)."""
-    t16 = F.transform(tok_arr, lambda x: F.conv(F.substring(F.md5(x), 1, 4), 16, 10).cast("long"))
+    t16 = F.transform(tok_arr, lambda x: md5_int(x, mod=None, hex_digits=4))
 
     # One traversal: per token, a 16-wide ±1 contribution array, summed
     # elementwise into a 16-counter accumulator. (The per-bit F.aggregate

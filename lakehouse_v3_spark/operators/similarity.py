@@ -154,9 +154,6 @@ def near_dup_pairs(
     block_col: str | None = None,
     threshold: float = 0.4,
     allow_all_pairs: bool = False,
-    salt_parts: int | None = None,
-    dim: int | None = None,
-    strategy: str = "gemm",
     block_row_cap: int = BLOCK_ROW_CAP,
     strip_cells: int = STRIP_CELLS,
 ) -> DataFrame:
@@ -169,45 +166,31 @@ def near_dup_pairs(
     with ``allow_all_pairs=True`` (mirrors ``knn_bruteforce``'s
     ``max_query_rows`` guard).
 
-    ``strategy="gemm"`` (default): per-block Arrow batches → a chunked
-    ``V @ V.T`` in numpy. Blocked dense pairwise similarity IS a matrix
-    multiply; expressing it row-at-a-time in SQL expressions costs
-    ~50-200 µs per pair (measured: 64-dim pair join at 20M pairs never
-    finished inside 10 min on 32 cores), while BLAS does the same block
-    in ~0.4 s single-threaded. This is the documented Pandas-escape-
-    hatch case: a kernel the built-in operators genuinely can't express
-    efficiently. Blocks at or under ``block_row_cap`` rows run as ONE
-    task; a bigger block is hash-split into m = ⌈|block|/cap⌉ chunks
-    and its pair space decomposes into the m(m+1)/2 (chunk_i, chunk_j)
-    rectangle tasks (i ≤ j), each materializing at most ~2·cap vectors
-    — so per-task memory is CAPPED and a skewed block gains
-    parallelism instead of becoming one giant task (r11 verdict item
-    #1b: previously only the SCORE matrix was chunked; the block's V
-    itself landed whole on one executor). Pair semantics are identical
-    (every in-block pair falls in exactly one rectangle; the score is
-    the same BLAS dot either way — pinned by the chunked≡unchunked
-    equivalence test). The score matrix is additionally built in
-    ≤2048-row strips inside each task. Cosines are float64 with
-    numpy's summation order — equal to the SQL fold within ulps
-    (tolerance-checked vs the oracle, and threshold flips would need a
-    cosine within 1e-12 of the threshold). The per-strip score matrix
-    is bounded at STRIP_CELLS cells against the ACTUAL right side
+    Per-block Arrow batches → a chunked ``V @ V.T`` in numpy. Blocked
+    dense pairwise similarity IS a matrix multiply; expressing it
+    row-at-a-time in SQL expressions costs ~50-200 µs per pair
+    (measured: 64-dim pair join at 20M pairs never finished inside 10
+    min on 32 cores), while BLAS does the same block in ~0.4 s
+    single-threaded. This is the documented Pandas-escape-hatch case: a
+    kernel the built-in operators genuinely can't express efficiently.
+    Blocks at or under ``block_row_cap`` rows run as ONE task; a bigger
+    block is hash-split into m = ⌈|block|/cap⌉ chunks and its pair
+    space decomposes into the m(m+1)/2 (chunk_i, chunk_j) rectangle
+    tasks (i ≤ j, :func:`_chunked_pair_tasks`), each materializing at
+    most ~2·cap vectors — so per-task memory is CAPPED and a skewed
+    block gains parallelism instead of becoming one giant task (r11
+    verdict item #1b). Pair semantics are identical (every in-block
+    pair falls in exactly one rectangle; the score is the same BLAS dot
+    either way — pinned by the chunked≡unchunked equivalence test).
+    Cosines are float64 with numpy's summation order — equal to the
+    oracle's left-fold SQL within ulps (tolerance-checked vs the
+    oracle, and threshold flips would need a cosine within 1e-12 of the
+    threshold). The score matrix is built in strips bounded at
+    ``strip_cells`` cells against the ACTUAL right side
     (``_strip_rows``), so it can never dominate the task's memory the
     way a fixed 2048-row strip against a cap-sized chunk did
-    (2048 × 65,536 float64 ≈ 1.07 GB — r12 ADVICE #5).
-
-    ``strategy="sql"``: the all-JVM expression path (bit-identical,
-    left-fold summation). The blocked self-join is SALTED: side A gets
-    ``hash(id) % S``, side B is replicated across all S salts, and the
-    join key is (block, salt) with an explicit fixed-width repartition.
-    Without this the join's parallelism is capped at the number of
-    distinct blocks — and worse, AQE coalesces the shuffle by BYTES, so
-    this compute-bound join over a few MB of vectors collapses to a
-    handful of tasks (observed at sf1: 10 label blocks → 4 tasks, one
-    straggler). ``dim`` (vector width known at plan time) unrolls the
-    pair dot-product into a flat codegen expression instead of
-    interpreted zip_with/aggregate lambdas. Use when bit-exactness
-    against another engine matters more than throughput."""
+    (2048 × 65,536 float64 ≈ 1.07 GB — r12 ADVICE #5). A zero vector
+    never pairs, at any threshold: its cosine is undefined."""
     if block_col is None and not allow_all_pairs:
         raise ValueError(
             "near_dup_pairs without block_col is an unrestricted O(n^2) "
@@ -215,53 +198,78 @@ def near_dup_pairs(
             "the pair fan-out, or allow_all_pairs=True to opt in "
             "explicitly for a small input"
         )
-    if strategy == "gemm":
-        return _near_dup_pairs_gemm(
-            df, id_col, vec_col, block_col, threshold, block_row_cap,
-            strip_cells,
-        )
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        # norm once per vector (n), not once per pair (Σ block²); the
-        # expression matches cosine()'s exactly so results stay
-        # bit-identical to the per-pair formulation / the oracle
-        l2_norm(F.col(vec_col)).alias("_na"),
-        *([F.col(block_col).alias("_block")] if block_col else []),
+    src = df.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        (F.col(block_col) if block_col else F.lit(0)).alias("_block"),
     )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        l2_norm(F.col(vec_col)).alias("_nb"),
-        *([F.col(block_col).alias("_block")] if block_col else []),
-    )
-    if block_col:
-        sc = df.sparkSession.sparkContext
-        n_salt = salt_parts or max(1, sc.defaultParallelism)
-        a = a.withColumn("_salt", F.pmod(F.hash(F.col("id_a")), F.lit(n_salt)))
-        b = b.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        n_parts = max(sc.defaultParallelism, n_salt)
-        a = a.repartition(n_parts, "_block", "_salt")
-        b = b.repartition(n_parts, "_block", "_salt")
-        joined = a.join(b, on=["_block", "_salt"], how="inner")
-    else:
-        joined = a.crossJoin(b)
-    pairs = joined.filter(F.col("id_a") < F.col("id_b"))
-    # pair-dot is the Σ block² hot path: with a known vector width, emit
-    # the flat codegen form (bit-identical sum order, ~100× faster)
-    if dim is not None:
-        pair_dot = dot_product_unrolled(F.col("_va"), F.col("_vb"), dim)
-    else:
-        pair_dot = dot_product(F.col("_va"), F.col("_vb"))
+    thr = float(threshold)
+    cells = int(strip_cells)
+
+    def task_pairs(pdf):
+        import numpy as np
+
+        is_left = pdf["_left"].to_numpy(dtype=bool)
+        out_a, out_b, out_s = [], [], []
+        # the TASK KEY decides the shape (not the data: a rectangle
+        # task whose right chunk hashed empty must emit nothing, not
+        # re-run the triangle its left chunk already ran in (c, c))
+        if int(pdf["_ci"].iloc[0]) == int(pdf["_cj"].iloc[0]):
+            # triangular task (c, c): all pairs within one chunk
+            ids, V, norms, zero = _stack_norm(pdf)
+            strip = _strip_rows(len(ids), cells)
+            for s in range(0, len(ids), strip):
+                e = min(s + strip, len(ids))
+                scores = (V[s:e] @ V.T) / np.outer(norms[s:e], norms)
+                # value comparison (not position) ⇒ id_a < id_b holds
+                # for any input order and silently drops duplicate-id
+                # pairs, as the oracle's a.id < b.id join predicate does.
+                # zero-norm rows never pair at ANY threshold (r12 ADVICE #4)
+                mask = (
+                    (scores >= thr)
+                    & (ids[None, :] > ids[s:e, None])
+                    & ~zero[None, :]
+                    & ~zero[s:e, None]
+                )
+                r, c = np.nonzero(mask)
+                if r.size:
+                    out_a.append(ids[s + r])
+                    out_b.append(ids[c])
+                    out_s.append(scores[r, c])
+        elif is_left.any() and not is_left.all():
+            # rectangle task (i, j), i < j: left-chunk × right-chunk
+            ids_l, VL, nl, zl = _stack_norm(pdf[is_left])
+            ids_r, VR, nr, zr = _stack_norm(pdf[~is_left])
+            strip = _strip_rows(len(ids_r), cells)
+            for s in range(0, len(ids_l), strip):
+                e = min(s + strip, len(ids_l))
+                scores = (VL[s:e] @ VR.T) / np.outer(nl[s:e], nr)
+                mask = (
+                    (scores >= thr)
+                    & (ids_r[None, :] != ids_l[s:e, None])
+                    & ~zr[None, :]
+                    & ~zl[s:e, None]
+                )
+                r, c = np.nonzero(mask)
+                if r.size:
+                    xa, xb = ids_l[s + r], ids_r[c]
+                    out_a.append(np.minimum(xa, xb))
+                    out_b.append(np.maximum(xa, xb))
+                    out_s.append(scores[r, c])
+        return _emit_pairs(out_a, out_b, out_s)
+
+    from ..partitioning import pin_grouped_python_parallelism
+
+    # pin the task exchange at full parallelism: AQE's byte-based
+    # coalescing sizes partitions for JVM work and would serialize the
+    # numpy GEMM tasks through 1-2 Python workers on a small corpus
+    # (r13, guide §4); same single exchange, values unchanged
     return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            (pair_dot / (F.col("_na") * F.col("_nb"))).alias("cosine_sim"),
+        pin_grouped_python_parallelism(
+            _chunked_pair_tasks(src, block_row_cap), "_block", "_ci", "_cj"
         )
-        .filter(F.col("cosine_sim") >= threshold)
+        .groupBy("_block", "_ci", "_cj")
+        .applyInPandas(task_pairs, schema=_pair_out_schema(df, id_col))
     )
 
 
@@ -337,9 +345,9 @@ def _stack_norm(pdf_slice, vec_field="_v"):
     the ``zero`` mask (r12 ADVICE #4) is what actually excludes zero
     vectors from pairing: a clamped zero vector's cosine is exactly
     0.0, which would PAIR with everything under a threshold ≤ 0,
-    whereas the SQL path's 0/0 is NULL and never pairs at any
-    threshold — kernels must mask these rows out of the ≥-threshold
-    comparison, not rely on 0.0 < threshold."""
+    whereas a zero vector's cosine is undefined and must never pair at
+    any threshold — kernels must mask these rows out of the
+    ≥-threshold comparison, not rely on 0.0 < threshold."""
     import numpy as np
 
     ids = pdf_slice["_id"].to_numpy()
@@ -362,96 +370,6 @@ def _emit_pairs(out_a, out_b, out_s):
             "id_b": np.concatenate(out_b),
             "cosine_sim": np.concatenate(out_s),
         }
-    )
-
-
-def _near_dup_pairs_gemm(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    block_col: str | None,
-    threshold: float,
-    block_row_cap: int = BLOCK_ROW_CAP,
-    strip_cells: int = STRIP_CELLS,
-) -> DataFrame:
-    """Blocked pairwise cosine via numpy GEMM over the rectangle-task
-    decomposition (see :func:`near_dup_pairs` and
-    :func:`_chunked_pair_tasks`): per task at most ~2·cap vectors cross
-    the Python boundary, the triangular task reuses one matrix, and the
-    O(pairs) score matrix is built in ≤2048-row strips."""
-    src = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        (F.col(block_col) if block_col else F.lit(0)).alias("_block"),
-    )
-    thr = float(threshold)
-    cells = int(strip_cells)
-
-    def task_pairs(pdf):
-        import numpy as np
-
-        is_left = pdf["_left"].to_numpy(dtype=bool)
-        out_a, out_b, out_s = [], [], []
-        # the TASK KEY decides the shape (not the data: a rectangle
-        # task whose right chunk hashed empty must emit nothing, not
-        # re-run the triangle its left chunk already ran in (c, c))
-        if int(pdf["_ci"].iloc[0]) == int(pdf["_cj"].iloc[0]):
-            # triangular task (c, c): all pairs within one chunk
-            ids, V, norms, zero = _stack_norm(pdf)
-            strip = _strip_rows(len(ids), cells)
-            for s in range(0, len(ids), strip):
-                e = min(s + strip, len(ids))
-                scores = (V[s:e] @ V.T) / np.outer(norms[s:e], norms)
-                # value comparison (not position) ⇒ id_a < id_b holds
-                # for any input order and silently drops duplicate-id
-                # pairs, matching the SQL path's join predicate exactly.
-                # zero-norm rows never pair at ANY threshold (the SQL
-                # path's 0/0 is NULL there — r12 ADVICE #4)
-                mask = (
-                    (scores >= thr)
-                    & (ids[None, :] > ids[s:e, None])
-                    & ~zero[None, :]
-                    & ~zero[s:e, None]
-                )
-                r, c = np.nonzero(mask)
-                if r.size:
-                    out_a.append(ids[s + r])
-                    out_b.append(ids[c])
-                    out_s.append(scores[r, c])
-        elif is_left.any() and not is_left.all():
-            # rectangle task (i, j), i < j: left-chunk × right-chunk
-            ids_l, VL, nl, zl = _stack_norm(pdf[is_left])
-            ids_r, VR, nr, zr = _stack_norm(pdf[~is_left])
-            strip = _strip_rows(len(ids_r), cells)
-            for s in range(0, len(ids_l), strip):
-                e = min(s + strip, len(ids_l))
-                scores = (VL[s:e] @ VR.T) / np.outer(nl[s:e], nr)
-                mask = (
-                    (scores >= thr)
-                    & (ids_r[None, :] != ids_l[s:e, None])
-                    & ~zr[None, :]
-                    & ~zl[s:e, None]
-                )
-                r, c = np.nonzero(mask)
-                if r.size:
-                    xa, xb = ids_l[s + r], ids_r[c]
-                    out_a.append(np.minimum(xa, xb))
-                    out_b.append(np.maximum(xa, xb))
-                    out_s.append(scores[r, c])
-        return _emit_pairs(out_a, out_b, out_s)
-
-    from ..partitioning import pin_grouped_python_parallelism
-
-    # pin the task exchange at full parallelism: AQE's byte-based
-    # coalescing sizes partitions for JVM work and would serialize the
-    # numpy GEMM tasks through 1-2 Python workers on a small corpus
-    # (r13, guide §4); same single exchange, values unchanged
-    return (
-        pin_grouped_python_parallelism(
-            _chunked_pair_tasks(src, block_row_cap), "_block", "_ci", "_cj"
-        )
-        .groupBy("_block", "_ci", "_cj")
-        .applyInPandas(task_pairs, schema=_pair_out_schema(df, id_col))
     )
 
 

@@ -77,7 +77,7 @@ Scale shape (the 100 TB argument, stage by stage):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import STOPWORDS, tokens
@@ -225,16 +225,27 @@ def decontaminate(
     return corpus.join(contaminated, "doc_id", "left_anti")
 
 
+def md5_split(id_col: Column) -> Column:
+    """80/10/10 train/val/test label from the md5 bucket of the id
+    (DuckDB: oracle_sql.MD5_SPLIT_CASE)."""
+    bucket = md5_int(id_col.cast("string"), mod=100)
+    return F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+
+
+def mod10_split(id_col: Column) -> Column:
+    """80/10/10 train/val/test label from ``id % 10`` — the embedding
+    leakage queries' split (DuckDB: oracle_sql.mod10_split_case)."""
+    return (
+        F.when(id_col % 10 < 8, "train").when(id_col % 10 == 8, "val").otherwise("test")
+    )
+
+
 def assign_split(docs: DataFrame) -> DataFrame:
     """Stage S — deterministic 80/10/10 split as a pure function of the
     id (split_train_val_test's exact hash rule): membership is stable
     under re-runs and incremental arrivals, which RNG splitters can't
     guarantee."""
-    bucket = md5_int(F.col("doc_id").cast("string"), mod=100)
-    return docs.withColumn(
-        "split",
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test"),
-    )
+    return docs.withColumn("split", md5_split(F.col("doc_id")))
 
 
 def cross_split_train_drops(pairs: DataFrame, docs_split: DataFrame) -> DataFrame:

@@ -169,11 +169,5 @@ def register(
 def load_all() -> dict[str, QueryDef]:
     """Import every query module (idempotent) and return the registry."""
     for mod in _MODULES:
-        try:
-            importlib.import_module(f"{__name__}.{mod}")
-        except ModuleNotFoundError as e:
-            # Tolerate not-yet-written modules during incremental build-out,
-            # but never mask a genuine import error inside a module.
-            if f"plans.{mod}" not in str(e):
-                raise
+        importlib.import_module(f"{__name__}.{mod}")
     return REGISTRY

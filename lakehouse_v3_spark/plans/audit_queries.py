@@ -12,12 +12,9 @@ from pyspark.sql import functions as F
 
 from ..audit.config import CompletenessRule, ValidityRule
 from ..audit.engine import run_completeness_rules, run_validity_rules
-from ..audit.facts import explode_results_to_fact
+from ..audit.facts import CHECKED_SCHEMA, CONFIG_SCHEMA, explode_results_to_fact
 from ..io_utils import load
 from . import register
-
-_CFG = "rule_id BIGINT, `table` STRING, kind STRING, pk_columns ARRAY<STRING>, rule STRING"
-_CHK = "number_of_violated_rows BIGINT, pk_result ARRAY<STRING>, note STRING"
 
 # The demo rule corpus (mirrors the reference's validity_config.py:55-331
 # shape: predicates SELECT VIOLATIONS).
@@ -30,8 +27,8 @@ _VALIDITY_RULES = [
 
 
 def _parse_results(results):
-    cfg = F.from_json("ds_configuration", _CFG).alias("cfg")
-    chk = F.from_json("ds_checked_value", _CHK).alias("chk")
+    cfg = F.from_json("ds_configuration", CONFIG_SCHEMA).alias("cfg")
+    chk = F.from_json("ds_checked_value", CHECKED_SCHEMA).alias("chk")
     return results.select(cfg, chk, "nr_status").select(
         F.col("cfg.rule_id").alias("rule_id"),
         F.col("cfg.table").alias("table_name"),

@@ -14,8 +14,11 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..io_utils import load
+from ..operators.dedup import md5_int
 from . import register
+from .oracle_sql import TOKS
 
 # ---------------------------------------------------------------------------
 # SCD Type-2 dimension history (versioned upsert with current flags)
@@ -78,8 +81,7 @@ _PACK_BUDGET = 256
 _PACK_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, lang,
-         len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '')) AS n_tok
+         len({TOKS}) AS n_tok
   FROM documents
 ),
 packed AS (
@@ -129,9 +131,7 @@ def pack_sequences_greedy(spark, sf_dir):
     toks = d.select(
         "doc_id",
         "lang",
-        F.size(F.filter(F.split(F.lower("text"), "[^a-z]+"), lambda x: x != "")).alias(
-            "n_tok"
-        ),
+        F.size(tokens(F.col("text"))).alias("n_tok"),
     )
     if fits_per_group_window(d):
         # size-derived dispatch (r14, guide §2): a few-MB table packs
@@ -375,7 +375,6 @@ def drift_decile_train_val(spark, sf_dir):
     insensitive to the 1-ulp interpolation formula and stay bit-stable
     across engines. The 9 boundaries ride into the scan as literals:
     the assignment pass is a pure projection, no join at all."""
-    from ..operators.dedup import md5_int
     from ..operators.quantiles import exact_percentiles
 
     o = load(spark, sf_dir, "orders")
@@ -416,8 +415,7 @@ WITH t AS (
   SELECT doc_id,
          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
            % {N_SHARDS} AS shard,
-         len(list_filter(string_split_regex(lower(text), '[^a-z]+'),
-                         x -> x <> '')) AS n_tok,
+         len({TOKS}) AS n_tok,
          ('0x' || substr(md5(text), 1, 8))::BIGINT AS th
   FROM documents
 ),
@@ -457,17 +455,14 @@ _SHARD_DOC = """Deterministic output sharding — the final write step of a
 
 @register("shard_assign_deterministic", oracle=_SHARD_ORACLE, doc=_SHARD_DOC)
 def shard_assign_deterministic(spark, sf_dir):
-    from ..operators.dedup import md5_int
     # (docstring: _SHARD_DOC, assigned below — see the register(doc=) note)
 
     d = load(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
         md5_int(F.col("doc_id").cast("string"), N_SHARDS).alias("shard"),
-        F.size(
-            F.filter(F.split(F.lower("text"), "[^a-z]+"), lambda x: x != "")
-        ).alias("n_tok"),
-        F.conv(F.substring(F.md5("text"), 1, 8), 16, 10).cast("long").alias("th"),
+        F.size(tokens(F.col("text"))).alias("n_tok"),
+        md5_int(F.col("text"), mod=None).alias("th"),
     )
     tot = t.agg(F.count(F.lit(1)).cast("double").alias("n"))
     return (

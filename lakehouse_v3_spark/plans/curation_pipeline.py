@@ -6,9 +6,11 @@ deterministic split → cross-split leakage drop → gold summary.
 
 The oracle SQL is GENERATED from the same constants as the Spark
 stages (thresholds from pipelines/curation.py, minhash seeds/bands from
-operators/dedup.py, stopwords from functions/text.py), so both engines
-run the identical funnel — the oracle is a true independent
-re-execution of the whole pipeline, not of one operator.
+operators/dedup.py, stopwords from functions/text.py) and from the
+shared DuckDB rule fragments in plans/oracle_sql.py (tokenizer, md5
+shingle hash, splits, cosine/distance folds, the Lloyd iteration), so
+both engines run the identical funnel — the oracle is a true
+independent re-execution of the whole pipeline, not of one operator.
 
 Also here: ``split_leakage_apply`` (r9 verdict item #2) — the
 embedding-space drop-list applicator closing ``split_leakage_audit``'s
@@ -36,11 +38,20 @@ from ..pipelines.curation import (
     MAX_TOKENS,
     MIN_TOKENS,
     NEAR_DUP_JACCARD,
+    mod10_split,
     run_funnel,
 )
 from . import register
-from .ivf_queries import _SHIFT_EXPR, _iter_body, _sqdist
-from .similarity_queries import _cos
+from .oracle_sql import (
+    MD5_8,
+    MD5_SPLIT_CASE,
+    SHIFT_EXPR,
+    TOKS,
+    cos,
+    iter_body,
+    mod10_split_case,
+    sqdist,
+)
 
 
 def _cluster_chain() -> str:
@@ -48,7 +59,7 @@ def _cluster_chain() -> str:
     (operators/ivf.py lloyd_capped — r11 verdict item #1a) in DuckDB:
     dynamic corpus-scaled k (⌈count/{target}⌉ as a scalar subquery),
     the SAME per-iteration assignment+update SQL as the IVF oracles
-    (shared via ivf_queries._iter_body so the formulations cannot
+    (shared via oracle_sql.iter_body so the formulations cannot
     drift), EMPTY-CELL CARRY-OVER (a cid absent from an update keeps
     its previous centroid row), and converged-or-capped selection:
     t = first iteration with micro-shift ≤ tol, else the cap. Defines
@@ -72,7 +83,7 @@ def _cluster_chain() -> str:
         WHERE rn <= (SELECT k FROM ckk)))""",
     ]
     for i in range(1, CLUSTER_CAP_ITERS + 1):
-        update, _ = _iter_body(f"cc{i - 1}")
+        update, _ = iter_body(f"cc{i - 1}")
         parts.append(f"ccu{i} AS MATERIALIZED ({update})")
         parts.append(
             f"cc{i} AS MATERIALIZED (SELECT cid, dim, component FROM ccu{i} "
@@ -80,7 +91,7 @@ def _cluster_chain() -> str:
             f"WHERE p.cid NOT IN (SELECT DISTINCT cid FROM ccu{i}))"
         )
         parts.append(
-            f"cs{i} AS (SELECT {i} AS i, {_SHIFT_EXPR} AS shift "
+            f"cs{i} AS (SELECT {i} AS i, {SHIFT_EXPR} AS shift "
             f"FROM cc{i} n JOIN cc{i - 1} p USING (cid, dim))"
         )
     shifts = " UNION ALL ".join(
@@ -105,7 +116,6 @@ def _cluster_chain() -> str:
     )
     return ",\n".join(parts)
 
-_TOKS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 
@@ -127,9 +137,8 @@ def _funnel_ctes(embed: bool = False, embed_prefilter: bool = False) -> str:
     _SEMDEDUP_SF_ORACLE margin argument: float32 cosine error for 64
     dims ≤ ~1e-5, so no true pair is dropped; the exact double fold
     decides)."""
-    md5_8 = f"(('0x' || substr(md5(shingle), 1, 8))::BIGINT % {MINHASH_PRIME})"
     sig_lines = ",\n    ".join(
-        f"MIN(({a} * {md5_8} + {b}) % {MINHASH_PRIME}) AS mh{j}"
+        f"MIN(({a} * {MD5_8} + {b}) % {MINHASH_PRIME}) AS mh{j}"
         for j, (a, b) in enumerate(MINHASH_SEEDS)
     )
     n_bands = len(MINHASH_SEEDS) // BAND_SIZE
@@ -150,11 +159,6 @@ def _funnel_ctes(embed: bool = False, embed_prefilter: bool = False) -> str:
         "list_transform(range(1, len(t) - 6), i -> "
         "t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3] || ' ' || "
         "t[i+4] || ' ' || t[i+5] || ' ' || t[i+6] || ' ' || t[i+7])"
-    )
-    split_case = (
-        "CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train' "
-        "WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'val' "
-        "ELSE 'test' END"
     )
     corpus_src = "m" if embed else "n"
     embed_block = ""
@@ -188,7 +192,7 @@ ecass AS MATERIALIZED (  -- cluster assignment: exact-fold argmin,
     SELECT d.vec_id, d.cid,
            row_number() OVER (PARTITION BY d.vec_id
                               ORDER BY d.dist, d.cid) AS rn
-    FROM (SELECT mv.vec_id, w.cid, {_sqdist("mv.embedding", "w.cv")} AS dist
+    FROM (SELECT mv.vec_id, w.cid, {sqdist("mv.embedding", "w.cv")} AS dist
           FROM ecand mv CROSS JOIN ccw w) d
   ) WHERE rn = 1
 ),
@@ -199,10 +203,10 @@ emem AS MATERIALIZED (
 epairs AS MATERIALIZED (  -- emb near-dup pairs, CLUSTER-blocked
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM emem a JOIN emem b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE {pre}{_cos('a.embedding', 'b.embedding')} >= 0.4
+  WHERE {pre}{cos('a.embedding', 'b.embedding')} >= 0.4
 ),
 escored AS MATERIALIZED (  -- own-cluster centroid cosines, endpoints only
-  SELECT mv.vec_id, {_cos('mv.embedding', 'w.cv')} AS ccos
+  SELECT mv.vec_id, {cos('mv.embedding', 'w.cv')} AS ccos
   FROM emem mv JOIN ccw w ON w.cid = mv.cluster
   WHERE mv.vec_id IN (SELECT id_a FROM epairs UNION SELECT id_b FROM epairs)
 ),
@@ -227,7 +231,7 @@ m AS MATERIALIZED (  -- stage M: semantic prune
     )"""
     return f"""
 WITH toks0 AS (
-  SELECT doc_id, lang, text, {_TOKS} AS t FROM documents
+  SELECT doc_id, lang, text, {TOKS} AS t FROM documents
 ),
 q AS (  -- stage Q: quality gate (text_quality_score's exact rule)
   SELECT * FROM toks0
@@ -306,7 +310,7 @@ d AS (
   WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
 ),
 s AS MATERIALIZED (  -- stage S: deterministic md5 80/10/10 split
-  SELECT *, {split_case} AS split FROM d
+  SELECT *, {MD5_SPLIT_CASE} AS split FROM d
 ),
 lp AS (  -- stage L: cross-split verified pairs among live docs
   SELECT p.id_a, p.id_b, a.split AS sa, b.split AS sb
@@ -396,16 +400,11 @@ def curation_funnel_counts(spark, sf_dir):
 # split_leakage_apply: the embedding-space drop-list applicator
 # ---------------------------------------------------------------------------
 
-_APPLY_SPLIT_CASE = (
-    "CASE WHEN {id} % 10 < 8 THEN 'train' "
-    "WHEN {id} % 10 = 8 THEN 'val' ELSE 'test' END"
-)
-
 _APPLY_TAIL = f"""
 sp AS (
   SELECT id_a, id_b,
-         {_APPLY_SPLIT_CASE.format(id='id_a')} AS sa,
-         {_APPLY_SPLIT_CASE.format(id='id_b')} AS sb
+         {mod10_split_case('id_a')} AS sa,
+         {mod10_split_case('id_b')} AS sb
   FROM pairs
 ),
 drops AS (
@@ -413,7 +412,7 @@ drops AS (
   FROM sp WHERE sa <> sb AND (sa = 'train' OR sb = 'train')
 ),
 base AS (
-  SELECT vec_id, {_APPLY_SPLIT_CASE.format(id='vec_id')} AS split
+  SELECT vec_id, {mod10_split_case('vec_id')} AS split
   FROM embeddings
 )
 SELECT split,
@@ -430,7 +429,7 @@ WITH pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM embeddings a
   JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE {_cos('a.embedding', 'b.embedding')} >= 0.4
+  WHERE {cos('a.embedding', 'b.embedding')} >= 0.4
 ),{_APPLY_TAIL}"""
 
 # big-SF variant: float32 native-cosine prefilter at (tau - 1e-3), exact
@@ -446,7 +445,7 @@ pairs AS (
   FROM v a
   JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE array_cosine_similarity(a.arr, b.arr) >= 0.4 - 1e-3
-    AND {_cos('a.embedding', 'b.embedding')} >= 0.4
+    AND {cos('a.embedding', 'b.embedding')} >= 0.4
 ),{_APPLY_TAIL}"""
 
 
@@ -468,19 +467,14 @@ def split_leakage_apply(spark, sf_dir):
     pair set (broadcast-sized), applied with one left_anti-shaped
     LEFT JOIN + one ≤3-row aggregation. The corpus never shuffles."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    pairs = near_dup_pairs(
-        e, "vec_id", block_col="label", threshold=0.4, dim=64
-    ).select("id_a", "id_b")
-
-    def split(c):
-        return (
-            F.when(c % 10 < 8, "train").when(c % 10 == 8, "val").otherwise("test")
-        )
+    pairs = near_dup_pairs(e, "vec_id", block_col="label", threshold=0.4).select(
+        "id_a", "id_b"
+    )
 
     sp = pairs.select(
         "id_a", "id_b",
-        split(F.col("id_a")).alias("sa"),
-        split(F.col("id_b")).alias("sb"),
+        mod10_split(F.col("id_a")).alias("sa"),
+        mod10_split(F.col("id_b")).alias("sb"),
     ).filter(F.col("sa") != F.col("sb"))
     drops = (
         sp.filter((F.col("sa") == "train") | (F.col("sb") == "train"))
@@ -492,7 +486,7 @@ def split_leakage_apply(spark, sf_dir):
         .distinct()
         .withColumn("_dropped", F.lit(1))
     )
-    base = e.select("vec_id", split(F.col("vec_id")).alias("split"))
+    base = e.select("vec_id", mod10_split(F.col("vec_id")).alias("split"))
     return (
         base.join(F.broadcast(drops), "vec_id", "left")
         .groupBy("split")
@@ -536,7 +530,7 @@ call AS (
     SELECT d.vec_id, d.cid,
            row_number() OVER (PARTITION BY d.vec_id
                               ORDER BY d.dist, d.cid) AS rn
-    FROM (SELECT e.vec_id, w.cid, {_sqdist("e.embedding", "w.cv")} AS dist
+    FROM (SELECT e.vec_id, w.cid, {sqdist("e.embedding", "w.cv")} AS dist
           FROM embeddings e CROSS JOIN ccw w) d
   ) WHERE rn = 1
 )

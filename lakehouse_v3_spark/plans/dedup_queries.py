@@ -26,15 +26,15 @@ from ..operators.dedup import (
     jaccard_verify,
     lsh_bands,
     lsh_candidate_pairs,
+    md5_int,
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash16,
     word_shingles,
 )
 from . import register
+from .oracle_sql import MD5_8, TOKS
 
-_TOKS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
-_MD5_8 = "(('0x' || substr(md5(shingle), 1, 8))::BIGINT % {p})".format(p=MINHASH_PRIME)
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +71,7 @@ def dedup_exact_content(spark, sf_dir):
 
 def _minhash_oracle() -> str:
     sig_lines = ",\n    ".join(
-        f"MIN(({a} * {_MD5_8} + {b}) % {MINHASH_PRIME}) AS mh{j}"
+        f"MIN(({a} * {MD5_8} + {b}) % {MINHASH_PRIME}) AS mh{j}"
         for j, (a, b) in enumerate(MINHASH_SEEDS)
     )
     n_bands = len(MINHASH_SEEDS) // BAND_SIZE
@@ -85,8 +85,8 @@ def _minhash_oracle() -> str:
     # candidate blow-up LSH exists to avoid (bench: 157 s). Bigrams keep
     # buckets small and candidates sparse.
     shingles = (
-        f"list_transform(range(1, greatest(len({_TOKS}) - 1, 0) + 1), "
-        f"i -> concat_ws(' ', {_TOKS}[i], {_TOKS}[i+1]))"
+        f"list_transform(range(1, greatest(len({TOKS}) - 1, 0) + 1), "
+        f"i -> concat_ws(' ', {TOKS}[i], {TOKS}[i+1]))"
     )
     return f"""
 WITH reps AS (
@@ -191,8 +191,8 @@ _NGRAM_ORACLE = f"""
 WITH sets AS (
   SELECT DISTINCT doc_id, lang,
          ('0x' || substr(md5(unnest(list_distinct(list_transform(
-           range(1, greatest(len({_TOKS}) - 2, 0) + 1),
-           i -> concat_ws(' ', {_TOKS}[i], {_TOKS}[i+1], {_TOKS}[i+2]))))), 1, 15))::BIGINT
+           range(1, greatest(len({TOKS}) - 2, 0) + 1),
+           i -> concat_ws(' ', {TOKS}[i], {TOKS}[i+1], {TOKS}[i+2]))))), 1, 15))::BIGINT
            AS shingle
   FROM documents WHERE lang = 'de'
 ),
@@ -238,9 +238,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     # for the exchange
     d = load(spark, sf_dir, "documents").filter(F.col("lang") == "de")
     sh = word_shingles(tokens(F.col("text")), k=3)
-    sh_h = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    )
+    sh_h = F.transform(sh, lambda s: md5_int(s, mod=None, hex_digits=15))
     sets = (
         d.select("doc_id", "lang", F.explode(F.array_distinct(sh_h)).alias("shingle"))
         .distinct()
@@ -263,7 +261,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def _simhash_oracle() -> str:
-    t16 = f"list_transform({_TOKS}, x -> ('0x' || substr(md5(x), 1, 4))::BIGINT)"
+    t16 = f"list_transform({TOKS}, x -> ('0x' || substr(md5(x), 1, 4))::BIGINT)"
     bit_terms = []
     for bit in range(16):
         contrib = (
@@ -387,9 +385,9 @@ def _setsim_oracle(where: str = "") -> str:
     return f"""
 WITH sets AS (
   SELECT DISTINCT doc_id, ('0x' || substr(md5(unnest(list_distinct(list_transform(
-           range(1, greatest(len({_TOKS}) - 4, 0) + 1),
-           i -> concat_ws(' ', {_TOKS}[i], {_TOKS}[i+1], {_TOKS}[i+2],
-                          {_TOKS}[i+3], {_TOKS}[i+4]))))), 1, 15))::BIGINT
+           range(1, greatest(len({TOKS}) - 4, 0) + 1),
+           i -> concat_ws(' ', {TOKS}[i], {TOKS}[i+1], {TOKS}[i+2],
+                          {TOKS}[i+3], {TOKS}[i+4]))))), 1, 15))::BIGINT
            AS shingle
   FROM documents {where}
 ),
@@ -424,9 +422,9 @@ def _setsim_prefix_sf_oracle() -> str:
     return f"""
 WITH sets AS MATERIALIZED (
   SELECT DISTINCT doc_id, ('0x' || substr(md5(unnest(list_distinct(list_transform(
-           range(1, greatest(len({_TOKS}) - 4, 0) + 1),
-           i -> concat_ws(' ', {_TOKS}[i], {_TOKS}[i+1], {_TOKS}[i+2],
-                          {_TOKS}[i+3], {_TOKS}[i+4]))))), 1, 15))::BIGINT
+           range(1, greatest(len({TOKS}) - 4, 0) + 1),
+           i -> concat_ws(' ', {TOKS}[i], {TOKS}[i+1], {TOKS}[i+2],
+                          {TOKS}[i+3], {TOKS}[i+4]))))), 1, 15))::BIGINT
            AS shingle
   FROM documents
 ),
@@ -523,9 +521,7 @@ def _setsim_join(d, checkpoint: bool = True, fan: bool = True):
     if fan:
         d = fan_out_scan(d, "doc_id")
     sh = word_shingles(tokens(F.col("text")), k=5)
-    sh_h = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
-    )
+    sh_h = F.transform(sh, lambda s: md5_int(s, mod=None, hex_digits=15))
     sets = d.select(
         "doc_id", F.explode(F.array_distinct(sh_h)).alias("shingle")
     ).distinct()
@@ -598,7 +594,7 @@ _INC_TAU = 0.5
 
 def _minhash_incremental_oracle() -> str:
     sig_lines = ",\n    ".join(
-        f"MIN(({a} * {_MD5_8} + {b}) % {MINHASH_PRIME}) AS mh{j}"
+        f"MIN(({a} * {MD5_8} + {b}) % {MINHASH_PRIME}) AS mh{j}"
         for j, (a, b) in enumerate(MINHASH_SEEDS)
     )
     n_bands = len(MINHASH_SEEDS) // BAND_SIZE
@@ -608,8 +604,8 @@ def _minhash_incremental_oracle() -> str:
         for b in range(n_bands)
     )
     shingles = (
-        f"list_transform(range(1, greatest(len({_TOKS}) - 1, 0) + 1), "
-        f"i -> concat_ws(' ', {_TOKS}[i], {_TOKS}[i+1]))"
+        f"list_transform(range(1, greatest(len({TOKS}) - 1, 0) + 1), "
+        f"i -> concat_ws(' ', {TOKS}[i], {TOKS}[i+1]))"
     )
     return f"""
 WITH sets AS (

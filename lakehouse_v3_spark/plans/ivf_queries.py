@@ -40,6 +40,7 @@ from ..operators.ivf import (
 )
 from ..operators.similarity import knn_bruteforce
 from . import register
+from .oracle_sql import SHIFT_EXPR, cos, fold_sum, iter_body, sqdist, sqflat
 
 # Must exceed the max measured iteration count of EVERY fixture the
 # driver or gates can run the primary (unrolled) oracle at — measured:
@@ -51,59 +52,6 @@ from . import register
 # pins _N_UNROLL > the fixture-measured max.
 _N_UNROLL = 36
 _NPROBE = 3
-
-
-def _dot(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(range(1, len({a}) + 1), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def _cos(a: str, b: str) -> str:
-    return f"{_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
-
-
-def _sqdist(emb: str, cv: str) -> str:
-    """Left-fold Σ (emb[j]-cv[j])² — the DuckDB twin of
-    operators.ivf._cell_dists_np (same 0.0 seed, same index order —
-    the Arrow UDF does the identical sequential fold, vectorized over
-    rows)."""
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(range(1, len({emb}) + 1), "
-        f"j -> ({emb}[j]::DOUBLE - {cv}[j]) * ({emb}[j]::DOUBLE - {cv}[j]))), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def _iter_body(prev: str) -> tuple[str, str]:
-    """(assign+update SQL producing (cid, dim, n_assigned, component)
-    from centroid table/CTE ``prev``, wide-centroid SQL for ``prev``) —
-    shared verbatim between the unrolled primary chain and the
-    early-exit sf_oracle loop so the two formulations cannot drift."""
-    wide = f"SELECT cid, list(component ORDER BY dim) AS cv FROM {prev} GROUP BY cid"
-    update = f"""
-SELECT cid, CAST(dim AS INT) AS dim, COUNT(*) AS n_assigned,
-       ROUND(CAST(SUM(CAST(CAST(val AS DOUBLE) AS DECIMAL(30,6))) AS DOUBLE)
-             / COUNT(*), 6) AS component
-FROM (
-  SELECT a.cid, unnest(range(len(e.embedding))) AS dim, unnest(e.embedding) AS val
-  FROM (
-    SELECT vec_id, cid FROM (
-      SELECT d.vec_id, d.cid,
-             row_number() OVER (PARTITION BY d.vec_id ORDER BY d.dist, d.cid) AS rn
-      FROM (
-        SELECT e2.vec_id, w.cid, {_sqdist("e2.embedding", "w.cv")} AS dist
-        FROM embeddings e2 CROSS JOIN ({wide}) w
-      ) d
-    ) WHERE rn = 1
-  ) a JOIN embeddings e USING (vec_id)
-)
-GROUP BY cid, dim
-"""
-    return update, wide
 
 
 # seeds = first k vectors in vec_id order, cid = rank − 1: the
@@ -119,21 +67,16 @@ FROM (SELECT rn, unnest(range(len(embedding))) AS dim,
       WHERE rn <= {IVF_K})
 """
 
-_SHIFT_EXPR = (
-    "MAX(ABS(CAST(ROUND(n.component * 1e6, 0) AS BIGINT)"
-    " - CAST(ROUND(p.component * 1e6, 0) AS BIGINT)))"
-)
-
 
 def _lloyd_chain(n_unroll: int = _N_UNROLL) -> str:
     """Unrolled WITH-clause body: c0..cN centroid tables, s1..sN integer
     shifts, tsel = first converged iteration, cents = its centroids."""
     parts = [f"c0 AS MATERIALIZED ({_C0_SQL})"]
     for i in range(1, n_unroll + 1):
-        update, _ = _iter_body(f"c{i - 1}")
+        update, _ = iter_body(f"c{i - 1}")
         parts.append(f"c{i} AS MATERIALIZED ({update})")
         parts.append(
-            f"s{i} AS (SELECT {i} AS i, {_SHIFT_EXPR} AS shift "
+            f"s{i} AS (SELECT {i} AS i, {SHIFT_EXPR} AS shift "
             f"FROM c{i} n JOIN c{i - 1} p USING (cid, dim))"
         )
     shifts = " UNION ALL ".join(f"SELECT * FROM s{i}" for i in range(1, n_unroll + 1))
@@ -154,16 +97,16 @@ def _lloyd_chain(n_unroll: int = _N_UNROLL) -> str:
 
 def _duckdb_lloyd_converged(con) -> int:
     """Early-exit twin of the unrolled chain for the big-SF gates: the
-    same per-iteration SQL (shared via _iter_body) against temp tables,
+    same per-iteration SQL (oracle_sql.iter_body) against temp tables,
     stopping at the first iteration whose micro-shift ≤ tol. Leaves the
     converged (cid, dim, n_assigned, component) in temp table _km_cents
     and returns the iteration count."""
     con.execute(f"CREATE OR REPLACE TEMP TABLE _km_prev AS {_C0_SQL}")
     for it in range(1, IVF_MAX_ITER + 1):
-        update, _ = _iter_body("_km_prev")
+        update, _ = iter_body("_km_prev")
         con.execute(f"CREATE OR REPLACE TEMP TABLE _km_new AS {update}")
         shift = con.execute(
-            f"SELECT {_SHIFT_EXPR} FROM _km_new n JOIN _km_prev p USING (cid, dim)"
+            f"SELECT {SHIFT_EXPR} FROM _km_new n JOIN _km_prev p USING (cid, dim)"
         ).fetchone()[0]
         con.execute(
             "CREATE OR REPLACE TEMP TABLE _km_prev AS "
@@ -248,13 +191,13 @@ q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
 corp AS MATERIALIZED (SELECT vec_id AS nid, embedding AS nv FROM embeddings WHERE vec_id >= 10),
 qprobe AS (
   SELECT qid, cid, row_number() OVER (PARTITION BY qid ORDER BY dist, cid) AS pr
-  FROM (SELECT q.qid, cw.cid, {_sqdist("q.qv", "cw.cv")} AS dist
+  FROM (SELECT q.qid, cw.cid, {sqdist("q.qv", "cw.cv")} AS dist
         FROM q CROSS JOIN cw)
 ),
 cass AS MATERIALIZED (
   SELECT nid, cid FROM (
     SELECT nid, cid, row_number() OVER (PARTITION BY nid ORDER BY dist, cid) AS rn
-    FROM (SELECT corp.nid, cw.cid, {_sqdist("corp.nv", "cw.cv")} AS dist
+    FROM (SELECT corp.nid, cw.cid, {sqdist("corp.nv", "cw.cv")} AS dist
           FROM corp CROSS JOIN cw)
   ) WHERE rn = 1
 )
@@ -267,7 +210,7 @@ FROM (
          row_number() OVER (PARTITION BY s.qid
                             ORDER BY s.cosine_sim DESC, s.nid) AS rank
   FROM (
-    SELECT p.qid, ca.nid, {_cos("q.qv", "corp.nv")} AS cosine_sim
+    SELECT p.qid, ca.nid, {cos("q.qv", "corp.nv")} AS cosine_sim
     FROM qprobe p
     JOIN cass ca ON ca.cid = p.cid AND p.pr <= {_NPROBE}
     JOIN corp ON corp.nid = ca.nid
@@ -341,7 +284,7 @@ _AUDIT_SELECT = f"""
   SELECT qid, nid FROM (
     SELECT q.qid, corp.nid,
            row_number() OVER (PARTITION BY q.qid
-                              ORDER BY {_cos("q.qv", "corp.nv")} DESC, corp.nid) AS rank
+                              ORDER BY {cos("q.qv", "corp.nv")} DESC, corp.nid) AS rank
     FROM corp CROSS JOIN q
   ) WHERE rank <= 5
 ),
@@ -450,19 +393,6 @@ def knn_ivf_nprobe_recall_audit(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _sqflat64(a: str, b: str) -> str:
-    """Flat exact left-fold Σ (a[d]-b[d])² over the FULL vector — the
-    rerank's ground-truth squared-L2 (same text as
-    similarity_queries._sqflat; duplicated to avoid an import cycle)."""
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(range(1, len({a}) + 1), "
-        f"d -> ({a}[d]::DOUBLE - {b}[d]::DOUBLE) * "
-        f"({a}[d]::DOUBLE - {b}[d]::DOUBLE))), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
 # rerank budget — same corpus-proportional formula as knn_pq_adc
 _IVFPQ_RERANK = (
     "(SELECT GREATEST(100, CAST(CEIL(COUNT(*) / 20.0) AS BIGINT)) FROM corp)"
@@ -499,8 +429,7 @@ cand AS (
 ),
 padc AS MATERIALIZED (
   SELECT qid, nid,
-         list_reduce(list_prepend(0.0::DOUBLE, list(ds ORDER BY s)),
-                     (acc, x) -> acc + x) AS adc
+         {fold_sum("list(ds ORDER BY s)")} AS adc
   FROM (
     SELECT c.qid, c.nid, e.s, {sq_fold(_QSUB_IVF, 'b.cw')} AS ds
     FROM cand c
@@ -517,7 +446,7 @@ pshort AS (
   ) WHERE r <= {_IVFPQ_RERANK}
 ),
 prr AS (
-  SELECT s.qid, s.nid, s.adc, {_sqflat64('q.qv', 'corp.nv')} AS l2
+  SELECT s.qid, s.nid, s.adc, {sqflat('q.qv', 'corp.nv')} AS l2
   FROM pshort s
   JOIN corp ON corp.nid = s.nid
   JOIN q ON q.qid = s.qid
@@ -730,7 +659,7 @@ acass AS MATERIALIZED (
            row_number() OVER (PARTITION BY vec_id
                               ORDER BY dist, cid) AS rn
     FROM (SELECT e2.vec_id, cwv.cid,
-                 {_sqdist("e2.embedding", "cwv.cv")} AS dist
+                 {sqdist("e2.embedding", "cwv.cv")} AS dist
           FROM embeddings e2 CROSS JOIN cw cwv)
   ) WHERE rn = 1
 ),
@@ -782,8 +711,7 @@ rcand AS (
 ),
 radc AS MATERIALIZED (
   SELECT qid, nid,
-         list_reduce(list_prepend(0.0::DOUBLE, list(ds ORDER BY s)),
-                     (acc, x) -> acc + x) AS adc
+         {fold_sum("list(ds ORDER BY s)")} AS adc
   FROM (
     SELECT c.qid, c.nid, e.s, {sq_fold(qrsub, 'b.cw')} AS ds
     FROM rcand c
@@ -800,7 +728,7 @@ rshort AS (
   ) WHERE r <= {_IVFPQ_RERANK}
 ),
 prr AS (
-  SELECT s.qid, s.nid, s.adc, {_sqflat64('q.qv', 'corp.nv')} AS l2
+  SELECT s.qid, s.nid, s.adc, {sqflat('q.qv', 'corp.nv')} AS l2
   FROM rshort s
   JOIN corp ON corp.nid = s.nid
   JOIN q ON q.qid = s.qid
@@ -840,7 +768,7 @@ def _rivfpq_sf_oracle(con, sf_dir):
         "  SELECT vec_id, cid, row_number() OVER "
         "    (PARTITION BY vec_id ORDER BY dist, cid) AS rn"
         "  FROM (SELECT e2.vec_id, cwv.cid, "
-        + _sqdist("e2.embedding", "cwv.cv")
+        + sqdist("e2.embedding", "cwv.cv")
         + " AS dist FROM embeddings e2 CROSS JOIN _rcw cwv)"
         ") WHERE rn = 1"
     )
@@ -919,8 +847,8 @@ CAST(CASE WHEN am >= 0 THEN (2 * am + n) // (2 * n)
 def _quant_audit_ctes() -> str:
     from .pq_train_sql import sq_fold
 
-    err_raw = _sqflat64("corp.nv", "rc.recon")
-    err_res = _sqflat64("corp.nv", "rr.recon")
+    err_raw = sqflat("corp.nv", "rc.recon")
+    err_res = sqflat("corp.nv", "rr.recon")
     return f"""
 pcbw AS (SELECT s, j, list(component ORDER BY dim) AS cw
          FROM pqcb GROUP BY s, j),
@@ -1015,7 +943,7 @@ def _quant_sf_oracle(con, sf_dir):
         "  SELECT vec_id, cid, row_number() OVER "
         "    (PARTITION BY vec_id ORDER BY dist, cid) AS rn"
         "  FROM (SELECT e2.vec_id, cwv.cid, "
-        + _sqdist("e2.embedding", "cwv.cv")
+        + sqdist("e2.embedding", "cwv.cv")
         + " AS dist FROM embeddings e2 CROSS JOIN _rcw cwv)"
         ") WHERE rn = 1"
     )

@@ -13,17 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..io_utils import load, local_frame
 from ..operators.dedup import md5_int, word_shingles
 from ..partitioning import fan_out_scan as _fan_out_scan
 from . import register
-
-# identical token arrays on both engines (same as text/dedup modules)
-_TOKS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
-
-
-def _spark_toks(col):
-    return F.filter(F.split(F.lower(col), "[^a-z]+"), lambda x: x != "")
+from .oracle_sql import TOKS
 
 
 # ---------------------------------------------------------------------------
@@ -32,7 +27,7 @@ def _spark_toks(col):
 # ---------------------------------------------------------------------------
 
 _DECON_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
 ngr AS (
   SELECT doc_id,
          list_transform(range(1, len(t) - 6), i ->
@@ -70,7 +65,7 @@ def decontaminate_ngram_overlap(spark, sf_dir):
     # NO scan fan-out here (r13, measured): interleaved A/B at sf0.1
     # put fan at 1.18 s vs off 1.07 s min — the broadcast build + probe
     # join dominate; the 8-gram explode is too light to pay an exchange
-    docs = d.select("doc_id", _spark_toks(F.col("text")).alias("toks"))
+    docs = d.select("doc_id", tokens(F.col("text")).alias("toks"))
     ngrams = docs.select(
         "doc_id", F.explode(word_shingles(F.col("toks"), 8)).alias("ng")
     )
@@ -101,7 +96,7 @@ _CHUNK_SIZE = 16
 _CHUNK_STRIDE = 12  # 4-token overlap between consecutive chunks
 
 _CHUNK_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
 starts AS (
   SELECT doc_id, t, unnest(range(1, len(t) + 1, {_CHUNK_STRIDE})) AS s
   FROM toks WHERE len(t) > 0
@@ -136,7 +131,7 @@ _CHUNK_DOC = """Context-window chunking: split each document's token stream into
 @register("chunk_fixed_token_windows", oracle=_CHUNK_ORACLE, doc=_CHUNK_DOC)
 def chunk_fixed_token_windows(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    docs = d.select("doc_id", _spark_toks(F.col("text")).alias("toks")).filter(
+    docs = d.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
         F.size("toks") > 0
     )
     starts = docs.select(
@@ -155,9 +150,7 @@ def chunk_fixed_token_windows(spark, sf_dir):
         "doc_id",
         ((F.col("s") - 1) / _CHUNK_STRIDE + 1).cast("long").alias("chunk_idx"),
         F.size("chunk").cast("long").alias("n_tokens"),
-        F.conv(F.substring(F.md5(F.concat_ws(" ", F.col("chunk"))), 1, 8), 16, 10)
-        .cast("long")
-        .alias("chunk_hash"),
+        md5_int(F.concat_ws(" ", F.col("chunk")), mod=None).alias("chunk_hash"),
     )
 
 
@@ -169,7 +162,7 @@ chunk_fixed_token_windows.__doc__ = _CHUNK_DOC
 # ---------------------------------------------------------------------------
 
 _REPEAT_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
 grams AS (
   SELECT doc_id, t,
          list_transform(range(1, len(t) - 1), i ->
@@ -195,7 +188,7 @@ def text_repetition_ratio(spark, sf_dir):
     fraction for docs too short to have trigrams, mirroring SQL
     semantics on both engines."""
     d = load(spark, sf_dir, "documents")
-    docs = d.select("doc_id", _spark_toks(F.col("text")).alias("toks")).filter(
+    docs = d.select("doc_id", tokens(F.col("text")).alias("toks")).filter(
         F.size("toks") > 0
     )
     # stage the trigram array as a column too: it is referenced three
@@ -342,7 +335,7 @@ _VOCAB_K = 50
 
 _VOCAB_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS tok FROM documents
+  SELECT doc_id, unnest({TOKS}) AS tok FROM documents
 ),
 vocab AS (
   SELECT tok FROM (
@@ -372,7 +365,7 @@ def text_vocab_oov_rate(spark, sf_dir):
     the vocab side then BROADCASTS back onto the token stream — the
     corpus is never shuffled a second time."""
     d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_spark_toks(F.col("text"))).alias("tok"))
+    toks = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
     vocab = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -401,7 +394,7 @@ _DUPFRAC_K = 5  # 5-word shingles
 # 32-bit md5 prefix of each shingle, identical on both engines — the
 # shuffle key is 8 bytes instead of a ~30-byte shingle string
 _DUPFRAC_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
 sh AS (
   SELECT DISTINCT doc_id,
          ('0x' || substr(md5(ng), 1, 8))::BIGINT AS h
@@ -446,7 +439,7 @@ def dup_ngram_doc_fraction(spark, sf_dir):
     # core (r13, guide §2; the distinct's exchange is REUSED by both of
     # sh's consumers, so this adds no extra shuffle of the postings)
     toks = _fan_out_scan(d, "doc_id").select(
-        "doc_id", _spark_toks(F.col("text")).alias("t")
+        "doc_id", tokens(F.col("text")).alias("t")
     )
     sh = (
         toks.select(
@@ -457,7 +450,7 @@ def dup_ngram_doc_fraction(spark, sf_dir):
         )
         .select(
             "doc_id",
-            F.conv(F.substring(F.md5("ng"), 1, 8), 16, 10).cast("long").alias("h"),
+            md5_int(F.col("ng"), mod=None).alias("h"),
         )
         .distinct()
     )
@@ -533,8 +526,6 @@ def datamix_epoch_upsample(spark, sf_dir):
     rate arithmetic. Scale shape: rates are a tiny broadcast; the
     explode multiplies rows map-side with no shuffle; the only shuffle
     is the final per-source summary."""
-    from ..operators.dedup import md5_int
-
     d = load(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     tok = d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -577,7 +568,7 @@ def datamix_epoch_upsample(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _BPE_ORACLE = f"""
-WITH toks AS (SELECT {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT {TOKS} AS t FROM documents),
 words AS (SELECT unnest(t) AS w FROM toks),
 vocab AS (SELECT w, COUNT(*) AS cnt FROM words GROUP BY w),
 pairs AS (
@@ -621,7 +612,7 @@ def bpe_merge_pair_counts(spark, sf_dir):
     # NO scan fan-out here (r13, measured on the sibling bpe trainers):
     # the corpus collapses to the word-frequency vocab immediately, so
     # per-row explode work is too light to pay for an extra exchange.
-    words = d.select(F.explode(_spark_toks(F.col("text"))).alias("w"))
+    words = d.select(F.explode(tokens(F.col("text"))).alias("w"))
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
     # single-char words have no pairs; Spark's sequence(1, 0) DESCENDS
     # ([1, 0]) rather than returning empty, so filter them out before
@@ -657,7 +648,7 @@ def _bpe_train_oracle(k: int) -> str:
     intermediate is MATERIALIZED — a data-dependent CTE referenced
     twice must not be inlined twice."""
     parts = [
-        f"""WITH toks AS (SELECT {_TOKS} AS t FROM documents),
+        f"""WITH toks AS (SELECT {TOKS} AS t FROM documents),
 words AS (SELECT unnest(t) AS w FROM toks),
 vocab AS (SELECT w, COUNT(*) AS cnt FROM words GROUP BY w),
 syms0 AS MATERIALIZED (
@@ -726,7 +717,7 @@ def bpe_train_merges(spark, sf_dir):
     # light to pay for an extra exchange — interleaved A/B at sf0.1:
     # fan 3.77 s vs off 3.72 s min (a wash; medians favored off). The
     # loop cost is the per-round job count, not scan parallelism.
-    words = d.select(F.explode(_spark_toks(F.col("text"))).alias("w"))
+    words = d.select(F.explode(tokens(F.col("text"))).alias("w"))
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
     # narrow the per-round working set (r14, guide §2): the symbolization
     # frame is DICTIONARY-sized (|vocab| rows — MBs even for a 100 TB
@@ -816,7 +807,7 @@ SPAN_K = 5  # span order: a K-token window repeated across docs is cut
 
 
 _SPAN_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
 g AS (
   SELECT doc_id, CAST(u.i AS BIGINT) AS s,
          ('0x' || substr(md5(array_to_string(t[u.i:u.i + {SPAN_K - 1}], ' ')),
@@ -867,7 +858,7 @@ def _span_occurrences(toks):
     return g.select(
         "doc_id",
         (F.col("p0") + 1).cast("long").alias("s"),
-        F.conv(F.substring(F.md5("ng"), 1, 15), 16, 10).cast("long").alias("h"),
+        md5_int(F.col("ng"), mod=None, hex_digits=15).alias("h"),
     )
 
 
@@ -880,7 +871,7 @@ def _span_removal_lazy(spark, sf_dir, occ=None):
     # text (md5 over the filtered token sequence) scan-side — fan out
     # so a one-split layout doesn't serialize it (r13, guide §2)
     toks = _fan_out_scan(d, "doc_id").select(
-        "doc_id", _spark_toks(F.col("text")).alias("t")
+        "doc_id", tokens(F.col("text")).alias("t")
     ).filter(F.size("t") >= 1)
     if occ is None:
         occ = _span_occurrences(toks)
@@ -963,7 +954,7 @@ def dedup_span_removal(spark, sf_dir):
     Hash collisions (~2^-60 per pair) are identical on both engines, so
     parity is exact."""
     d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _spark_toks(F.col("text")).alias("t")).filter(
+    toks = d.select("doc_id", tokens(F.col("text")).alias("t")).filter(
         F.size("t") >= 1
     )
     # fan out BEFORE the persist: the tokenize + posexplode + md5 of
@@ -999,7 +990,7 @@ def _bpe_encode_oracle(k: int) -> str:
     the BPE token count summed. Same MATERIALIZED discipline as
     _bpe_train_oracle."""
     parts = [
-        f"""WITH dtoks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+        f"""WITH dtoks AS (SELECT doc_id, {TOKS} AS t FROM documents),
 words AS (SELECT unnest(t) AS w FROM dtoks),
 vocab AS (SELECT w, COUNT(*) AS cnt FROM words GROUP BY w),
 syms0 AS MATERIALIZED (
@@ -1064,7 +1055,7 @@ def bpe_encode_corpus(spark, sf_dir):
     # put fan at 2.64 s vs off 2.33 s min — the encode join + per-doc
     # rollup dominate and the extra exchange costs more than the
     # parallel explode saves (same verdict as bpe_train_merges).
-    wtok = d.select("doc_id", F.explode(_spark_toks(F.col("text"))).alias("w"))
+    wtok = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("w"))
     vocab = wtok.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
     prev = vocab.select(
         "w",
@@ -1146,7 +1137,7 @@ DSIR_KEEP_FRAC = 10  # keep top 1/10 of source docs
 
 
 _DSIR_ORACLE = f"""
-WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS tok FROM documents),
+WITH toks AS (SELECT doc_id, unnest({TOKS}) AS tok FROM documents),
 b AS (
   SELECT doc_id,
          ('0x' || substr(md5(tok), 1, 8))::BIGINT % {DSIR_BUCKETS} AS bk
@@ -1191,7 +1182,7 @@ def _dsir_lazy(spark, sf_dir, k: int, b=None):
     if b is None:
         d = load(spark, sf_dir, "documents")
         toks = d.select(
-            "doc_id", F.explode(_spark_toks(F.col("text"))).alias("tok")
+            "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
         )
         b = toks.select(
             "doc_id", md5_int(F.col("tok"), DSIR_BUCKETS).alias("bk")
@@ -1268,7 +1259,7 @@ def dsir_importance_select(spark, sf_dir):
     identical, plan swap only."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(_spark_toks(F.col("text"))).alias("tok")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("tok")
     )
     b = toks.select(
         "doc_id", md5_int(F.col("tok"), DSIR_BUCKETS).alias("bk")
@@ -1294,7 +1285,7 @@ def dsir_importance_select(spark, sf_dir):
 
 _RULES_ORACLE = f"""
 WITH t AS (
-  SELECT doc_id, {_TOKS} AS toks FROM documents
+  SELECT doc_id, {TOKS} AS toks FROM documents
 ),
 sig AS (
   SELECT doc_id,
@@ -1358,7 +1349,7 @@ def quality_rule_stack(spark, sf_dir):
     )
     sig = d.select(
         "doc_id",
-        _spark_toks(F.col("text")).alias("toks"),
+        tokens(F.col("text")).alias("toks"),
     ).select(
         "doc_id",
         F.size("toks").alias("n_tok"),
@@ -1432,7 +1423,7 @@ WINNOW_W = 4  # winnowing window (guarantee: matches of >= w+k-1 tokens hit)
 
 
 _WINNOW_ORACLE = f"""
-WITH toks AS (SELECT doc_id, {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
 h AS (
   SELECT doc_id,
          list_transform(range(1, len(t) - {WINNOW_K} + 2), i ->
@@ -1510,7 +1501,7 @@ def winnow_fingerprint_overlap(spark, sf_dir):
     # no-op on a production layout whose scan already has splits.
     toks = (
         _fan_out_scan(d, "doc_id")
-        .select("doc_id", _spark_toks(F.col("text")).alias("t"))
+        .select("doc_id", tokens(F.col("text")).alias("t"))
         .filter(F.size("t") >= WINNOW_K)
     )
     # gh (the gram-hash array) MUST be re-bound to a lambda variable

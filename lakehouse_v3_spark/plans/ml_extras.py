@@ -21,10 +21,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from ..io_utils import load
 from . import register
-from .text_queries import _TOKS
-from ..functions.text import tokens
+from .oracle_sql import TOKS, fold_sum
 
 # ---------------------------------------------------------------------------
 # Unigram-LM document quality score (perplexity-gate shape)
@@ -32,7 +32,7 @@ from ..functions.text import tokens
 
 _LM_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS token FROM documents
+  SELECT doc_id, unnest({TOKS}) AS token FROM documents
 ),
 freq AS (SELECT token, COUNT(*) AS tf FROM toks GROUP BY token),
 tot AS (SELECT CAST(SUM(tf) AS DOUBLE) AS total FROM freq),
@@ -106,7 +106,7 @@ def lm_unigram_doc_score(spark, sf_dir):
 
 _BIGRAM_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKS} AS ts FROM documents
+  SELECT doc_id, {TOKS} AS ts FROM documents
 ),
 big AS (
   SELECT doc_id,
@@ -207,6 +207,11 @@ def lm_bigram_doc_score(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 _KMEANS_K = 8
+_KMEANS_DIST = fold_sum(
+    "list_transform(range(1, len(e.embedding) + 1), "
+    "i -> (e.embedding[i]::DOUBLE - c.cvec[i]::DOUBLE) "
+    "* (e.embedding[i]::DOUBLE - c.cvec[i]::DOUBLE))"
+)
 
 _KMEANS_ORACLE = f"""
 WITH c AS (
@@ -214,11 +219,7 @@ WITH c AS (
 ),
 d AS (
   SELECT e.vec_id, e.embedding, c.cid,
-         list_reduce(list_prepend(0.0::DOUBLE,
-           list_transform(range(1, len(e.embedding) + 1),
-             i -> (e.embedding[i]::DOUBLE - c.cvec[i]::DOUBLE)
-                * (e.embedding[i]::DOUBLE - c.cvec[i]::DOUBLE))),
-           (acc, x) -> acc + x) AS dist
+         {_KMEANS_DIST} AS dist
   FROM embeddings e CROSS JOIN c
 ),
 best AS (

@@ -48,6 +48,7 @@ from ..operators.pq import (
     PQ_TRAIN_SAMPLE_CAP,
     PQ_TRAIN_TOL_MICRO,
 )
+from .oracle_sql import SHIFT_EXPR, fold_sum
 
 PQ_UNROLL = 24
 _W = 8  # subspace width on the 64-dim fixtures
@@ -74,12 +75,11 @@ def train_source_sql(
 def sq_fold(a: str, b: str, w: int = _W) -> str:
     """0.0-seeded left-fold Σ (a[d]-b[d])² over a width-w subspace —
     both operands already-DOUBLE lists (the DuckDB twin of
-    train_blocks._cell_dists_mat)."""
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
+    train_blocks._cell_dists_mat and the numpy kernels in
+    operators/pq.py)."""
+    return fold_sum(
         f"list_transform(range(1, {w + 1}), "
-        f"d -> ({a}[d] - {b}[d]) * ({a}[d] - {b}[d]))), "
-        f"(acc, x) -> acc + x)"
+        f"d -> ({a}[d] - {b}[d]) * ({a}[d] - {b}[d]))"
     )
 
 
@@ -148,12 +148,6 @@ FROM (
 """
 
 
-_SHIFT_EXPR = (
-    "MAX(ABS(CAST(ROUND(n.component * 1e6, 0) AS BIGINT)"
-    " - CAST(ROUND(p.component * 1e6, 0) AS BIGINT)))"
-)
-
-
 def train_chain(
     prefix: str = "pq",
     source: str = "embeddings",
@@ -187,7 +181,7 @@ def train_chain(
             f"{p}c{i} AS MATERIALIZED ({iter_body(f'{p}c{i - 1}', f'{p}subv')})"
         )
         parts.append(
-            f"{p}s{i} AS (SELECT {i} AS i, n.s, {_SHIFT_EXPR} AS shift "
+            f"{p}s{i} AS (SELECT {i} AS i, n.s, {SHIFT_EXPR} AS shift "
             f"FROM {p}c{i} n JOIN {p}c{i - 1} p USING (s, j, dim) GROUP BY n.s)"
         )
     shifts = " UNION ALL ".join(
@@ -256,7 +250,7 @@ def duckdb_pq_train(
             + iter_body("_pqt_prev", "_pqt_subv")
         )
         rows = con.execute(
-            f"SELECT n.s, {_SHIFT_EXPR} AS shift FROM _pqt_new n "
+            f"SELECT n.s, {SHIFT_EXPR} AS shift FROM _pqt_new n "
             "JOIN _pqt_prev p USING (s, j, dim) GROUP BY n.s"
         ).fetchall()
         newly = [int(s) for s, shift in rows if shift <= tol_micro]

@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 from ..functions.text import tokens
 from ..io_utils import load
 from . import register
+from .oracle_sql import TOKS
 
-_TOKS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
 
 # ---------------------------------------------------------------------------
 # TF-IDF: top-3 salient terms per document (bounded to doc_id < 50)
@@ -21,7 +21,7 @@ _TOKS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
 _TFIDF_ORACLE = f"""
 WITH tf AS (
   SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest({_TOKS}) AS token FROM documents)
+  FROM (SELECT doc_id, unnest({TOKS}) AS token FROM documents)
   GROUP BY doc_id, token
 ),
 df AS (
@@ -130,7 +130,7 @@ _BM25_K1, _BM25_B = 1.2, 0.75
 
 _BM25_ORACLE = f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS token FROM documents
+  SELECT doc_id, unnest({TOKS}) AS token FROM documents
 ),
 dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM toks GROUP BY doc_id),
 stats AS (

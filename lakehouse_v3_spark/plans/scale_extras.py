@@ -18,8 +18,10 @@ from ..io_utils import load, local_frame
 from ..partitioning import fan_out_scan
 from ..operators.dedup import md5_int
 from ..operators.similarity import near_dup_pairs
+from ..pipelines.curation import md5_split
 from ..session import conf_window
 from . import dsum, register
+from .oracle_sql import MD5_SPLIT_CASE, cos
 
 # ---------------------------------------------------------------------------
 # Connected components over near-dup pairs (iterative, driver-bounded)
@@ -149,22 +151,12 @@ def connected_components(
     return labels.select(F.col("nid").alias(id_col), F.col("comp").alias("component"))
 
 
-def _cc_dot(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(range(1, len({a}) + 1), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
 _CC_ORACLE = f"""
 WITH RECURSIVE pairs AS (
   SELECT a.vec_id AS src, b.vec_id AS dst
   FROM embeddings a JOIN embeddings b
     ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE {_cc_dot('a.embedding', 'b.embedding')}
-        / (sqrt({_cc_dot('a.embedding', 'a.embedding')})
-           * sqrt({_cc_dot('b.embedding', 'b.embedding')})) >= 0.4
+  WHERE {cos('a.embedding', 'b.embedding')} >= 0.4
 ),
 edges AS (
   SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs
@@ -208,9 +200,7 @@ JOIN (SELECT vec_id, label, CAST(embedding AS FLOAT[64]) AS arr, embedding
       FROM embeddings) b
   ON a.label = b.label AND a.vec_id < b.vec_id
 WHERE array_cosine_similarity(a.arr, b.arr) >= 0.4 - 1e-3
-  AND {_cc_dot('a.embedding', 'b.embedding')}
-      / (sqrt({_cc_dot('a.embedding', 'a.embedding')})
-         * sqrt({_cc_dot('b.embedding', 'b.embedding')})) >= 0.4
+  AND {cos('a.embedding', 'b.embedding')} >= 0.4
 """)
     con.execute(
         "CREATE OR REPLACE TEMP TABLE _cc_edges AS "
@@ -258,7 +248,7 @@ def components_near_dup_clusters(spark, sf_dir):
     dedup. Iterative label propagation on Spark; the DuckDB oracle
     recomputes it as a recursive-CTE transitive closure."""
     e = load(spark, sf_dir, "embeddings")
-    pairs = near_dup_pairs(e, "vec_id", block_col="label", threshold=0.4, dim=64)
+    pairs = near_dup_pairs(e, "vec_id", block_col="label", threshold=0.4)
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     return connected_components(e.select("vec_id"), edges, "vec_id")
 
@@ -698,12 +688,9 @@ def dedup_keep_best_doc(spark, sf_dir):
 # Deterministic train/val/test split
 # ---------------------------------------------------------------------------
 
-_SPLIT_ORACLE = """
+_SPLIT_ORACLE = f"""
 WITH assigned AS (
-  SELECT lang,
-         CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 80 THEN 'train'
-              WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90 THEN 'val'
-              ELSE 'test' END AS split
+  SELECT lang, {MD5_SPLIT_CASE} AS split
   FROM documents
 )
 SELECT lang, split, CAST(COUNT(*) AS BIGINT) AS n_docs
@@ -719,11 +706,7 @@ def split_train_val_test(spark, sf_dir):
     old one between splits), which RNG-based splitters cannot
     guarantee. The counts-per-(lang, split) output audits the ratios."""
     d = load(spark, sf_dir, "documents")
-    bucket = md5_int(F.col("doc_id").cast("string"), mod=100)
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
-    return d.groupBy("lang", split.alias("split")).agg(
+    return d.groupBy("lang", md5_split(F.col("doc_id")).alias("split")).agg(
         F.count(F.lit(1)).alias("n_docs")
     )
 

@@ -17,19 +17,10 @@ from pyspark.sql import functions as F
 from ..io_utils import load
 from ..operators.pq import exact_l2_distance
 from ..operators.similarity import cosine, knn_bruteforce, near_dup_pairs
+from ..pipelines.curation import mod10_split
 from . import register
-
-
-def _dot(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(range(1, len({a}) + 1), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-def _cos(a: str, b: str) -> str:
-    return f"{_dot(a, b)} / (sqrt({_dot(a, a)}) * sqrt({_dot(b, b)}))"
+from .oracle_sql import cos, fold_sum, mod10_split_case, sqflat
+from .pq_train_sql import sq_fold
 
 
 # ---------------------------------------------------------------------------
@@ -41,7 +32,7 @@ _KNN_ORACLE = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10),
 c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id >= 10),
 scored AS (
-  SELECT qid, cid, {_cos('qv', 'cv')} AS cosine_sim
+  SELECT qid, cid, {cos('qv', 'cv')} AS cosine_sim
   FROM c, q
 ),
 ranked AS (
@@ -77,7 +68,7 @@ _IVF_ORACLE = f"""
 WITH q AS (SELECT vec_id AS qid, embedding AS qv, label FROM embeddings WHERE vec_id < 10),
 c AS (SELECT vec_id AS cid, embedding AS cv, label FROM embeddings WHERE vec_id >= 10),
 scored AS (
-  SELECT qid, cid, {_cos('qv', 'cv')} AS cosine_sim
+  SELECT qid, cid, {cos('qv', 'cv')} AS cosine_sim
   FROM c JOIN q ON c.label = q.label
 ),
 ranked AS (
@@ -113,10 +104,10 @@ def knn_ivf_cells(spark, sf_dir):
 
 _NEARDUP_ORACLE = f"""
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       {_cos('a.embedding', 'b.embedding')} AS cosine_sim
+       {cos('a.embedding', 'b.embedding')} AS cosine_sim
 FROM embeddings a
 JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {_cos('a.embedding', 'b.embedding')} >= 0.4
+WHERE {cos('a.embedding', 'b.embedding')} >= 0.4
 """
 
 
@@ -140,9 +131,9 @@ cand AS (
   FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE array_cosine_similarity(a.arr, b.arr) >= 0.4 - 1e-3
 )
-SELECT id_a, id_b, {_cos('ea', 'eb')} AS cosine_sim
+SELECT id_a, id_b, {cos('ea', 'eb')} AS cosine_sim
 FROM cand
-WHERE {_cos('ea', 'eb')} >= 0.4
+WHERE {cos('ea', 'eb')} >= 0.4
 """
 
 
@@ -155,9 +146,7 @@ def embedding_near_dup(spark, sf_dir):
     O(n²) into Σ cell² — with LSH bucketing as the drop-in block for
     unlabeled corpora."""
     e = load(spark, sf_dir, "embeddings")
-    # dim=64 (the fixture embedding width) switches the pair-dot to the
-    # flat codegen expression — same left-fold sum, no interpreted HOF
-    return near_dup_pairs(e, "vec_id", block_col="label", threshold=0.4, dim=64)
+    return near_dup_pairs(e, "vec_id", block_col="label", threshold=0.4)
 
 
 # ---------------------------------------------------------------------------
@@ -189,10 +178,8 @@ def _bucket_sql(vec: str) -> str:
     terms = []
     for j, plane in enumerate(_PLANES):
         lit = "[" + ", ".join(f"{x:.3f}::DOUBLE" for x in plane) + "]"
-        dot = (
-            f"list_reduce(list_prepend(0.0::DOUBLE, "
-            f"list_transform(range(1, len({vec}) + 1), i -> {vec}[i]::DOUBLE * ({lit})[i])), "
-            f"(acc, x) -> acc + x)"
+        dot = fold_sum(
+            f"list_transform(range(1, len({vec}) + 1), i -> {vec}[i]::DOUBLE * ({lit})[i])"
         )
         terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << j} ELSE 0 END)")
     return " + ".join(terms)
@@ -215,7 +202,7 @@ WITH bucketed AS (
 q AS (SELECT vec_id AS qid, embedding AS qv, bucket FROM bucketed WHERE vec_id < 10),
 c AS (SELECT vec_id AS cid, embedding AS cv, bucket FROM bucketed WHERE vec_id >= 10),
 scored AS (
-  SELECT qid, cid, {_cos('qv', 'cv')} AS cosine_sim
+  SELECT qid, cid, {cos('qv', 'cv')} AS cosine_sim
   FROM c JOIN q USING (bucket)
 ),
 ranked AS (
@@ -265,7 +252,7 @@ bf AS (
   SELECT qid, cid FROM (
     SELECT qid, cid,
            ROW_NUMBER() OVER (PARTITION BY qid
-                              ORDER BY {_cos('qv', 'cv')} DESC, cid) AS rank
+                              ORDER BY {cos('qv', 'cv')} DESC, cid) AS rank
     FROM c, q
   ) WHERE rank <= 5
 ),
@@ -381,7 +368,7 @@ bf AS (
   SELECT qid, cid FROM (
     SELECT q.qid, c.cid,
            ROW_NUMBER() OVER (PARTITION BY q.qid
-                              ORDER BY {_cos('q.qv', 'c.cv')} DESC, c.cid) AS rank
+                              ORDER BY {cos('q.qv', 'c.cv')} DESC, c.cid) AS rank
     FROM c, q
   ) WHERE rank <= 5
 ),
@@ -389,7 +376,7 @@ ivf AS (
   SELECT qid, cid FROM (
     SELECT q.qid, c.cid,
            ROW_NUMBER() OVER (PARTITION BY q.qid
-                              ORDER BY {_cos('q.qv', 'c.cv')} DESC, c.cid) AS rank
+                              ORDER BY {cos('q.qv', 'c.cv')} DESC, c.cid) AS rank
     FROM c JOIN q ON c.label = q.label
   ) WHERE rank <= 5
 ),
@@ -450,39 +437,9 @@ def knn_ivf_recall_audit(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Product-quantization ADC top-k (operators/pq.py)
-# ---------------------------------------------------------------------------
-
-
-def _sq8(a: str, b: str) -> str:
-    """Left-fold Σ (a[d]-b[d])² over an 8-dim subspace; both operands
-    are already-DOUBLE lists. Same 0.0 seed + index order as the numpy
-    kernels in operators/pq.py."""
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(range(1, 9), "
-        f"d -> ({a}[d] - {b}[d]) * ({a}[d] - {b}[d]))), "
-        f"(acc, x) -> acc + x)"
-    )
-
-
-# ---------------------------------------------------------------------------
 # Trained PQ-ADC with exact rerank (r6 verdict item #1; codebook
 # training chain shared via plans/pq_train_sql.py)
 # ---------------------------------------------------------------------------
-
-
-def _sqflat(a: str, b: str) -> str:
-    """Flat exact left-fold Σ (a[d]-b[d])² over the FULL vector — the
-    ground-truth squared-L2 the rerank and the audits use (one 0.0-
-    seeded fold over all 64 dims, distinct from ADC's nested fold)."""
-    return (
-        f"list_reduce(list_prepend(0.0::DOUBLE, "
-        f"list_transform(range(1, len({a}) + 1), "
-        f"d -> ({a}[d]::DOUBLE - {b}[d]::DOUBLE) * "
-        f"({a}[d]::DOUBLE - {b}[d]::DOUBLE))), "
-        f"(acc, x) -> acc + x)"
-    )
 
 
 _QSUB = (
@@ -513,18 +470,17 @@ enc AS MATERIALIZED (
   SELECT vec_id, s, j AS code FROM (
     SELECT v.vec_id, v.s, b.j,
            ROW_NUMBER() OVER (PARTITION BY v.vec_id, v.s
-                              ORDER BY {_sq8('v.sv', 'b.cw')}, b.j) AS rn
+                              ORDER BY {sq_fold('v.sv', 'b.cw')}, b.j) AS rn
     FROM pqsubv v JOIN cbw b ON b.s = v.s
     WHERE v.vec_id >= 10
   ) WHERE rn = 1
 ),
 adc AS MATERIALIZED (
   SELECT query_id, corpus_id,
-         list_reduce(list_prepend(0.0::DOUBLE, list(ds ORDER BY s)),
-                     (acc, x) -> acc + x) AS adc
+         {fold_sum("list(ds ORDER BY s)")} AS adc
   FROM (
     SELECT q.vec_id AS query_id, e.vec_id AS corpus_id, e.s,
-           {_sq8(_QSUB, 'b.cw')} AS ds
+           {sq_fold(_QSUB, 'b.cw')} AS ds
     FROM qset q, enc e
     JOIN cbw b ON b.s = e.s AND b.j = e.code
     JOIN ss ON ss.s = e.s
@@ -546,7 +502,7 @@ shortr AS (
 ),
 rr AS (
   SELECT s.query_id, s.corpus_id, s.adc,
-         {_sqflat('q.embedding', 'c.embedding')} AS l2
+         {sqflat('q.embedding', 'c.embedding')} AS l2
   FROM shortr s
   JOIN corpus c ON c.vec_id = s.corpus_id
   JOIN qset q ON q.vec_id = s.query_id
@@ -684,7 +640,7 @@ bf5 AS (
   SELECT query_id, corpus_id FROM (
     SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
            ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                              ORDER BY {_sqflat('q.embedding', 'c.embedding')},
+                              ORDER BY {sqflat('q.embedding', 'c.embedding')},
                                        c.vec_id) AS rn
     FROM qset q, corpus c
   ) WHERE rn <= 5
@@ -819,14 +775,14 @@ cent AS (
   SELECT label, list(cmean ORDER BY pos) AS centroid FROM cmeans GROUP BY label
 ),
 scored AS (
-  SELECT e.vec_id, e.label, {_cos('e.embedding', 'c.centroid')} AS ccos
+  SELECT e.vec_id, e.label, {cos('e.embedding', 'c.centroid')} AS ccos
   FROM embeddings e JOIN cent c ON e.label = c.label
 ),
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM embeddings a
   JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE {_cos('a.embedding', 'b.embedding')} >= 0.4
+  WHERE {cos('a.embedding', 'b.embedding')} >= 0.4
 ),
 dropped AS (
   SELECT DISTINCT CASE WHEN sa.ccos > sb.ccos THEN sa.vec_id
@@ -855,7 +811,7 @@ _SEMDEDUP_SF_ORACLE = _SEMDEDUP_ORACLE.replace(
   FROM embeddings a
   JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE {cos} >= 0.4
-)""".format(cos=_cos('a.embedding', 'b.embedding')),
+)""".format(cos=cos('a.embedding', 'b.embedding')),
     """fv AS MATERIALIZED (
   SELECT vec_id, label, CAST(embedding AS FLOAT[64]) AS arr, embedding
   FROM embeddings
@@ -866,7 +822,7 @@ pairs AS (
   JOIN fv b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE array_cosine_similarity(a.arr, b.arr) >= 0.4 - 1e-3
     AND {cos} >= 0.4
-)""".format(cos=_cos('a.embedding', 'b.embedding')),
+)""".format(cos=cos('a.embedding', 'b.embedding')),
 )
 
 
@@ -933,9 +889,9 @@ def semdedup_centroid_prune(spark, sf_dir):
     scored = e.join(F.broadcast(centroid), "label").select(
         "vec_id", "label", c_cos.alias("ccos")
     )
-    pairs = near_dup_pairs(
-        e, "vec_id", block_col="label", threshold=0.4, dim=64
-    ).select("id_a", "id_b")
+    pairs = near_dup_pairs(e, "vec_id", block_col="label", threshold=0.4).select(
+        "id_a", "id_b"
+    )
     sa = scored.select(F.col("vec_id").alias("id_a"), F.col("ccos").alias("ca"))
     sb = scored.select(F.col("vec_id").alias("id_b"), F.col("ccos").alias("cb"))
     dropped = (
@@ -959,22 +915,17 @@ def semdedup_centroid_prune(spark, sf_dir):
 # Split leakage audit: near-dup pairs crossing train/val/test (round 9)
 # ---------------------------------------------------------------------------
 
-_LEAK_SPLIT_CASE = (
-    "CASE WHEN {id} % 10 < 8 THEN 'train' "
-    "WHEN {id} % 10 = 8 THEN 'val' ELSE 'test' END"
-)
-
 _LEAK_ORACLE = f"""
 WITH pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM embeddings a
   JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE {_cos('a.embedding', 'b.embedding')} >= 0.4
+  WHERE {cos('a.embedding', 'b.embedding')} >= 0.4
 ),
 sp AS (
   SELECT id_a, id_b,
-         {_LEAK_SPLIT_CASE.format(id='id_a')} AS sa,
-         {_LEAK_SPLIT_CASE.format(id='id_b')} AS sb
+         {mod10_split_case('id_a')} AS sa,
+         {mod10_split_case('id_b')} AS sb
   FROM pairs
 ),
 crossed AS (
@@ -1005,12 +956,12 @@ pairs AS (
   FROM v a
   JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
   WHERE array_cosine_similarity(a.arr, b.arr) >= 0.4 - 1e-3
-    AND {_cos('a.embedding', 'b.embedding')} >= 0.4
+    AND {cos('a.embedding', 'b.embedding')} >= 0.4
 ),
 sp AS (
   SELECT id_a, id_b,
-         {_LEAK_SPLIT_CASE.format(id='id_a')} AS sa,
-         {_LEAK_SPLIT_CASE.format(id='id_b')} AS sb
+         {mod10_split_case('id_a')} AS sa,
+         {mod10_split_case('id_b')} AS sb
   FROM pairs
 ),
 crossed AS (
@@ -1053,19 +1004,14 @@ def split_leakage_audit(spark, sf_dir):
     second scan of the corpus — the audit costs ONE aggregation over
     the pair set, grouped on a ≤3-row key)."""
     e = load(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
-    pairs = near_dup_pairs(
-        e, "vec_id", block_col="label", threshold=0.4, dim=64
-    ).select("id_a", "id_b")
-
-    def split(c):
-        return (
-            F.when(c % 10 < 8, "train").when(c % 10 == 8, "val").otherwise("test")
-        )
+    pairs = near_dup_pairs(e, "vec_id", block_col="label", threshold=0.4).select(
+        "id_a", "id_b"
+    )
 
     sp = pairs.select(
         "id_a", "id_b",
-        split(F.col("id_a")).alias("sa"),
-        split(F.col("id_b")).alias("sb"),
+        mod10_split(F.col("id_a")).alias("sa"),
+        mod10_split(F.col("id_b")).alias("sb"),
     ).filter(F.col("sa") != F.col("sb"))
     lo_first = F.col("sa") <= F.col("sb")
     crossed = sp.select(

@@ -18,18 +18,16 @@ from ..functions.text import (
     rolling_fingerprint,
     sentiment_label,
     sentiment_score_udf,
-    token_int,
     tokens,
 )
 from ..io_utils import load
 from . import register
+from .oracle_sql import TOKS
 
 _POS_SQL = ", ".join(f"'{w}'" for w in POSITIVE_WORDS)
 _NEG_SQL = ", ".join(f"'{w}'" for w in NEGATIVE_WORDS)
 _STOP_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
-# DuckDB-side token list of lowered text, empties removed
-_TOKS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
 
 
 # ---------------------------------------------------------------------------
@@ -39,8 +37,8 @@ _TOKS = "list_filter(string_split_regex(lower(text), '[^a-z]+'), x -> x <> '')"
 _SENTIMENT_ORACLE = f"""
 WITH counts AS (
   SELECT doc_id,
-         len(list_filter({_TOKS}, x -> x IN ({_POS_SQL}))) AS pos,
-         len(list_filter({_TOKS}, x -> x IN ({_NEG_SQL}))) AS neg
+         len(list_filter({TOKS}, x -> x IN ({_POS_SQL}))) AS pos,
+         len(list_filter({TOKS}, x -> x IN ({_NEG_SQL}))) AS neg
   FROM documents
 ),
 scored AS (
@@ -77,10 +75,10 @@ def f1_sentiment_udf(spark, sf_dir):
 _TOKSTATS_ORACLE = f"""
 SELECT doc_id,
        n_chars,
-       len({_TOKS})                                         AS n_tokens,
-       len(list_distinct({_TOKS}))                          AS n_distinct_tokens,
-       CASE WHEN len({_TOKS}) = 0 THEN 0.0
-            ELSE CAST(len(list_distinct({_TOKS})) AS DOUBLE) / len({_TOKS})
+       len({TOKS})                                         AS n_tokens,
+       len(list_distinct({TOKS}))                          AS n_distinct_tokens,
+       CASE WHEN len({TOKS}) = 0 THEN 0.0
+            ELSE CAST(len(list_distinct({TOKS})) AS DOUBLE) / len({TOKS})
        END                                                  AS type_token_ratio
 FROM documents
 """
@@ -112,10 +110,10 @@ def text_token_stats(spark, sf_dir):
 _QUALITY_ORACLE = f"""
 WITH feat AS (
   SELECT doc_id,
-         len({_TOKS}) AS n_tokens,
-         len(list_filter({_TOKS}, x -> x IN ({_STOP_SQL}))) AS n_stop,
-         CASE WHEN len({_TOKS}) = 0 THEN 0.0
-              ELSE CAST(length(replace(text, ' ', '')) AS DOUBLE) / len({_TOKS}) END
+         len({TOKS}) AS n_tokens,
+         len(list_filter({TOKS}, x -> x IN ({_STOP_SQL}))) AS n_stop,
+         CASE WHEN len({TOKS}) = 0 THEN 0.0
+              ELSE CAST(length(replace(text, ' ', '')) AS DOUBLE) / len({TOKS}) END
            AS mean_token_len
   FROM documents
 )
@@ -179,7 +177,7 @@ _LANG_LEX = {
 
 def _lang_hits_sql(lang: str) -> str:
     words = ", ".join(f"'{w}'" for w in _LANG_LEX[lang])
-    return f"len(list_filter({_TOKS}, x -> x IN ({words})))"
+    return f"len(list_filter({TOKS}, x -> x IN ({words})))"
 
 
 _LANGID_ORACLE = f"""
@@ -236,7 +234,7 @@ _FPRINT_ORACLE = f"""
 WITH norm AS (
   SELECT doc_id,
          trim(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g')) AS norm_text,
-         {_TOKS} AS toks
+         {TOKS} AS toks
   FROM documents
 )
 SELECT doc_id,
@@ -370,7 +368,7 @@ def json_struct_parse(spark, sf_dir):
 
 _EXPLODE_ORACLE = f"""
 SELECT token, COUNT(*) AS freq
-FROM (SELECT unnest({_TOKS}) AS token FROM documents)
+FROM (SELECT unnest({TOKS}) AS token FROM documents)
 GROUP BY token
 ORDER BY freq DESC, token
 LIMIT 20

@@ -3,12 +3,17 @@ oracle at sf0.001 (fast; the driver uses sf0.01)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from lakehouse_v3_spark.oracle_harness import check_query
 from lakehouse_v3_spark.plans import load_all
 
 NAMES = sorted(load_all().keys())
+PACKAGE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "lakehouse_v3_spark"
+)
 
 
 @pytest.mark.parametrize("name", NAMES)
@@ -68,3 +73,47 @@ def test_sf_oracle_equivalent_to_primary(name):
         fast = run_oracle(qd.sf_oracle, sf)
     errs = compare_frames(fast, primary, rtol=qd.rtol)
     assert not errs, f"{name}: " + "; ".join(errs)
+
+
+# Each rule a Spark plan shares with its DuckDB oracle, keyed by a
+# literal only the rule's homes may hold: (Spark home, DuckDB home),
+# paths relative to the package; None where one engine has no text.
+_RULE_HOMES = {
+    # letter-run tokenizer
+    "[^a-z]+": ("functions/text.py", "plans/oracle_sql.py"),
+    # md5 hex prefix -> BIGINT
+    "F.conv(F.substring(F.md5(": ("operators/dedup.py", None),
+    # 0.0-seeded left-fold sum
+    "list_reduce(list_prepend(0.0::DOUBLE": (None, "plans/oracle_sql.py"),
+    # id % 10 split
+    "% 10 < 8": ("pipelines/curation.py", "plans/oracle_sql.py"),
+}
+
+
+def _rule_copies(sources: dict[str, str]) -> dict[str, list[str]]:
+    """literal -> the modules outside its homes that spell it out."""
+    return {
+        lit: sorted(p for p, src in sources.items() if lit in src and p not in homes)
+        for lit, homes in _RULE_HOMES.items()
+    }
+
+
+def test_each_cross_engine_rule_has_one_home():
+    """The tokenizer, the md5-prefix hash, the vector fold and the
+    split are each written once per engine; every other plan imports
+    them, so a Spark plan and its oracle cannot drift apart."""
+    sources = {}
+    for dirpath, _, names in os.walk(PACKAGE_DIR):
+        for fn in names:
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path, encoding="utf-8") as f:
+                    sources[os.path.relpath(path, PACKAGE_DIR)] = f.read()
+    for lit in _RULE_HOMES:
+        # positive control: a planted copy is found
+        planted = dict(sources, **{"plans/planted.py": f"x = {lit!r}"})
+        assert "plans/planted.py" in _rule_copies(planted)[lit]
+    assert _rule_copies(sources) == {lit: [] for lit in _RULE_HOMES}
+    # each home really holds its rule
+    for lit, homes in _RULE_HOMES.items():
+        assert all(lit in sources[h] for h in homes if h)

@@ -3,17 +3,14 @@
 1. with_grouped_cumsum refuses NULL group keys loudly (r11 verdict
    item #3 — the equi-join on the broadcast offsets would silently
    drop those rows otherwise).
-2. Zero-norm embedding vectors never pair and never emit NaN in the
-   GEMM kernels (r11 ADVICE low — 0/0 was NaN: silently unpairable
-   plus a RuntimeWarning per chunk on executors).
-3. mad_robust_outliers excludes NULL values identically on BOTH
+2. mad_robust_outliers excludes NULL values identically on BOTH
    engines (r11 ADVICE low — the oracle used to rank NULLs into n
    while the Spark path dropped them in the histogram refinement).
+
+The zero-norm GEMM pins (r11 ADVICE low) live in test_near_dup.py.
 """
 
 from __future__ import annotations
-
-import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -40,48 +37,6 @@ def test_grouped_cumsum_non_null_groups_still_work(spark):
         for r in with_grouped_cumsum(df, ["g"], ["o"], "v").collect()
     }
     assert rows == {("a", 1): 10, ("a", 3): 40, ("b", 2): 20}
-
-
-def _zero_norm_frame(spark):
-    return spark.createDataFrame(
-        [
-            (1, 0, [0.0, 0.0, 0.0, 0.0]),   # zero vector
-            (2, 0, [1.0, 0.0, 0.0, 0.0]),
-            (3, 0, [1.0, 1e-9, 0.0, 0.0]),  # near-dup of 2
-        ],
-        "doc_id LONG, label INT, embedding ARRAY<FLOAT>",
-    )
-
-
-def test_near_dup_pairs_gemm_zero_norm_never_pairs(spark):
-    from lakehouse_v3_spark.operators.similarity import near_dup_pairs
-
-    df = _zero_norm_frame(spark)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in near_dup_pairs(
-                df, "doc_id", block_col="label", threshold=0.9
-            ).collect()
-        }
-    assert pairs == {(2, 3)}
-
-
-def test_near_dup_pairs_probe_zero_norm_never_pairs(spark):
-    from lakehouse_v3_spark.operators.similarity import near_dup_pairs_probe
-
-    df = _zero_norm_frame(spark)
-    batch = df.filter(F.col("doc_id") == 3)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in near_dup_pairs_probe(
-                batch, df, "doc_id", block_col="label", threshold=0.9
-            ).collect()
-        }
-    assert pairs == {(2, 3)}
 
 
 def test_mad_null_values_excluded_on_both_engines(spark, tmp_path):

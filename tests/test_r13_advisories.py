@@ -1,114 +1,13 @@
-"""Round-13 advisory fixes (ADVICE.md r12): zero-norm masking at any
-threshold, the score-strip memory bound, FunnelStages dict-view
-consistency, and the interval-scoped pending-fold ingest; plus the
-r12 verdict items on the cluster-model trainer (K_MAX cap, explicit
-centroid broadcast, id-space-agnostic Lloyd seeding)."""
+"""Round-13 advisory fixes (ADVICE.md r12): FunnelStages dict-view
+consistency and the interval-scoped pending-fold ingest; plus the r12
+verdict items on the cluster-model trainer (K_MAX cap, explicit
+centroid broadcast, id-space-agnostic Lloyd seeding). The zero-norm
+and score-strip pins live in test_near_dup.py."""
 
 from __future__ import annotations
 
-import warnings
-
 import pytest
 from pyspark.sql import functions as F
-
-
-def _zero_norm_frame(spark):
-    return spark.createDataFrame(
-        [
-            (1, 0, [0.0, 0.0, 0.0, 0.0]),   # zero vector
-            (2, 0, [1.0, 0.0, 0.0, 0.0]),
-            (3, 0, [1.0, 1e-9, 0.0, 0.0]),  # near-dup of 2
-            (4, 0, [-1.0, 0.0, 0.0, 0.0]),  # anti-parallel to 2
-        ],
-        "doc_id LONG, label INT, embedding ARRAY<FLOAT>",
-    )
-
-
-def test_zero_norm_never_pairs_even_at_nonpositive_threshold(spark):
-    """r12 ADVICE #4: the zero-norm clamp made a zero vector's cosine
-    exactly 0.0, which PAIRS with everything when threshold <= 0 —
-    the SQL path's 0/0 is NULL and never pairs at any threshold. The
-    mask must exclude zero-norm rows from the comparison itself."""
-    from lakehouse_v3_spark.operators.similarity import near_dup_pairs
-
-    df = _zero_norm_frame(spark)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in near_dup_pairs(
-                df, "doc_id", block_col="label", threshold=-1.0
-            ).collect()
-        }
-    # every non-zero pair survives at threshold -1; NOTHING involving
-    # the zero vector (id 1) does
-    assert pairs == {(2, 3), (2, 4), (3, 4)}
-
-
-def test_probe_zero_norm_never_pairs_at_nonpositive_threshold(spark):
-    from lakehouse_v3_spark.operators.similarity import near_dup_pairs_probe
-
-    df = _zero_norm_frame(spark)
-    batch = df.filter(F.col("doc_id").isin(1, 3))
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in near_dup_pairs_probe(
-                batch, df, "doc_id", block_col="label", threshold=-1.0
-            ).collect()
-        }
-    assert pairs == {(2, 3), (3, 4)}
-    assert not any(1 in p for p in pairs)
-
-
-def test_strip_rows_bounds_score_matrix_cells():
-    """r12 ADVICE #5: strip_rows × right_cols ≤ STRIP_CELLS, so the
-    float64 score strip stays ~64 MB instead of the 1.07 GB a fixed
-    2048-row strip allocates against a cap-sized right chunk."""
-    from lakehouse_v3_spark.operators.similarity import (
-        BLOCK_ROW_CAP,
-        STRIP_CELLS,
-        _strip_rows,
-    )
-
-    assert _strip_rows(BLOCK_ROW_CAP) * BLOCK_ROW_CAP <= STRIP_CELLS
-    assert _strip_rows(BLOCK_ROW_CAP) == STRIP_CELLS // BLOCK_ROW_CAP
-    # small right sides keep the legacy 2048-row strip (GEMM efficiency)
-    assert _strip_rows(10) == 2048
-    assert _strip_rows(0) == 2048    # degenerate: no division by zero
-    # never returns 0 rows even for absurd widths
-    assert _strip_rows(10 * STRIP_CELLS) == 1
-
-
-def test_strip_bound_preserves_pair_results(spark):
-    """Chunk the strips hard (STRIP_CELLS so small every strip is one
-    row) and assert identical pairs/scores to the default config."""
-    from lakehouse_v3_spark.operators import similarity as S
-
-    rows = [
-        (i, i % 2, [float((i * 7 + d * 3) % 11) for d in range(8)])
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id LONG, label INT, embedding ARRAY<FLOAT>"
-    )
-    want = {
-        (r["id_a"], r["id_b"]): r["cosine_sim"]
-        for r in S.near_dup_pairs(
-            df, "doc_id", block_col="label", threshold=0.8
-        ).collect()
-    }
-    assert want, "fixture must produce at least one pair"
-    got = {
-        (r["id_a"], r["id_b"]): r["cosine_sim"]
-        for r in S.near_dup_pairs(
-            df, "doc_id", block_col="label", threshold=0.8, strip_cells=1
-        ).collect()
-    }
-    assert got.keys() == want.keys()
-    for k in want:
-        assert got[k] == pytest.approx(want[k], abs=1e-12)
 
 
 # ---------------------------------------------------------------------------

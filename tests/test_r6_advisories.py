@@ -124,38 +124,44 @@ def _fake_fixture(tmpdir: str) -> str:
     return tmpdir
 
 
-def test_lsh_index_path_is_process_independent(spark, tmp_path_factory):
+def _private_tempdir(tmp_path, monkeypatch):
+    """Point the index cache and its lock files at a per-test dir, so
+    no ``lsh_index_*`` entry is left in the system temp dir."""
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    return scratch
+
+
+def test_lsh_index_path_is_process_independent(spark, tmp_path, monkeypatch):
     from lakehouse_v3_spark.plans.dedup_queries import _lsh_index_manager
 
-    fix = _fake_fixture(str(tmp_path_factory.mktemp("lshfix")))
-    try:
-        tm1, lock1 = _lsh_index_manager(spark, fix)
-        tm2, lock2 = _lsh_index_manager(spark, fix)
-        assert tm1.warehouse_dir == tm2.warehouse_dir
-        assert str(os.getpid()) not in os.path.basename(tm1.warehouse_dir)
-        assert lock1 == lock2
-    finally:
-        shutil.rmtree(fix, ignore_errors=True)
+    _private_tempdir(tmp_path, monkeypatch)
+    fix = _fake_fixture(str(tmp_path / "lshfix"))
+    tm1, lock1 = _lsh_index_manager(spark, fix)
+    tm2, lock2 = _lsh_index_manager(spark, fix)
+    assert tm1.warehouse_dir == tm2.warehouse_dir
+    assert str(os.getpid()) not in os.path.basename(tm1.warehouse_dir)
+    assert lock1 == lock2
 
 
-def test_lsh_index_invalidated_by_mtime_ns_and_superseded_dir_cleaned(spark, tmp_path_factory):
+def test_lsh_index_invalidated_by_mtime_ns_and_superseded_dir_cleaned(
+    spark, tmp_path, monkeypatch
+):
     from lakehouse_v3_spark.plans.dedup_queries import _lsh_index_manager
 
-    fix = _fake_fixture(str(tmp_path_factory.mktemp("lshfix")))
+    _private_tempdir(tmp_path, monkeypatch)
+    fix = _fake_fixture(str(tmp_path / "lshfix"))
     doc = os.path.join(fix, "documents.parquet")
-    try:
-        tm1, _ = _lsh_index_manager(spark, fix)
-        os.makedirs(tm1.warehouse_dir, exist_ok=True)  # simulate a built index
-        # same-second regeneration: bump mtime by ONE NANOSECOND — the
-        # old int(st_mtime) fingerprint cannot see this
-        st = os.stat(doc)
-        os.utime(doc, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
-        tm2, _ = _lsh_index_manager(spark, fix)
-        assert tm2.warehouse_dir != tm1.warehouse_dir, "stale index would be served"
-        assert not os.path.exists(tm1.warehouse_dir), "superseded dir not cleaned"
-    finally:
-        shutil.rmtree(fix, ignore_errors=True)
-        shutil.rmtree(tm2.warehouse_dir, ignore_errors=True)
+    tm1, _ = _lsh_index_manager(spark, fix)
+    os.makedirs(tm1.warehouse_dir, exist_ok=True)  # simulate a built index
+    # same-second regeneration: bump mtime by ONE NANOSECOND — the
+    # old int(st_mtime) fingerprint cannot see this
+    st = os.stat(doc)
+    os.utime(doc, ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+    tm2, _ = _lsh_index_manager(spark, fix)
+    assert tm2.warehouse_dir != tm1.warehouse_dir, "stale index would be served"
+    assert not os.path.exists(tm1.warehouse_dir), "superseded dir not cleaned"
 
 
 def test_lsh_index_entries_of_a_deleted_fixture_are_swept(
@@ -163,13 +169,9 @@ def test_lsh_index_entries_of_a_deleted_fixture_are_swept(
 ):
     """Each lock file records its fixture dir; once that dir is gone,
     the next call (for any fixture) removes its index dirs and lock."""
-    import tempfile
-
     from lakehouse_v3_spark.plans.dedup_queries import _lsh_index_manager
 
-    scratch = tmp_path / "tmp"
-    scratch.mkdir()
-    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    scratch = _private_tempdir(tmp_path, monkeypatch)
     gone = _fake_fixture(str(tmp_path / "gone"))
     kept = _fake_fixture(str(tmp_path / "kept"))
     tm_gone, lock_gone = _lsh_index_manager(spark, gone)
@@ -192,9 +194,7 @@ def test_lsh_index_old_empty_lock_is_swept_and_fresh_one_kept(
     caller about to write its dir, so it stays."""
     from lakehouse_v3_spark.plans.dedup_queries import _lsh_index_manager
 
-    scratch = tmp_path / "tmp"
-    scratch.mkdir()
-    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    scratch = _private_tempdir(tmp_path, monkeypatch)
     old_lock = scratch / "lsh_index_0000aaaa.lock"
     old_lock.write_text("")
     old_dir = scratch / "lsh_index_0000aaaa_11112222"
