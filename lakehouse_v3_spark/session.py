@@ -8,6 +8,22 @@ and a generated-code cache large enough to hold every whole-stage class
 one scheduled tick, audit run and gateway round compile, so a
 long-lived driver compiles each query once rather than once per run.
 
+Python workers (every UDF, UDTF, ``mapInArrow``/``applyInPandas``
+worker, the stateful-stream workers) and the driver's Arrow sockets
+talk to the JVM over Unix domain sockets
+(``spark.python.unix.domain.socket.enabled``): over loopback TCP each
+task's result waited on a delayed ACK (~40 ms per Python-boundary
+task on a reused worker). Spark binds its ``.<uuid>.sock`` files in
+``spark.python.unix.domain.socket.dir``, by default the JVM's
+``java.io.tmpdir``, and a process that exits without ``spark.stop()``
+leaves them there. So each new context on a ``local`` master gets a
+private dir from ``tempfile.mkdtemp`` (under ``tempfile.gettempdir()``,
+removed at interpreter exit). A socket path must fit ``sun_path``
+(107 bytes): when the temp dir is too deep for that the private dir
+goes under ``/tmp``, and when even that does not fit the flag stays
+off (TCP). ``spark://`` masters keep Spark's default dir, the
+executor's own tmpdir. ``extra_conf`` can turn the flag off.
+
 Delta Lake / S3A / Hive are optional in this environment; the factory
 gates them behind availability checks so the same code runs on a real
 cluster (with the jars present) and in the local test harness.
@@ -22,15 +38,25 @@ restoring the other's values.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 import threading
+import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _CONF_WINDOW_LOCK = threading.Lock()
+
+# A socket path holds at most 107 bytes (sun_path is 108 with its NUL);
+# Spark and PySpark name each socket "<dir>/.<uuid4>.sock".
+SUN_PATH_MAX = 107
+_SOCK_NAME_BYTES = len(f"/.{uuid.UUID(int=0)}.sock")
 
 
 def default_parallelism() -> int:
@@ -72,6 +98,23 @@ def conf_window(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
         _CONF_WINDOW_LOCK.release()
 
 
+def private_socket_dir(bases: tuple[str, ...] | None = None) -> str | None:
+    """A new, empty dir for one context's Unix domain sockets, removed at
+    interpreter exit: under the first of ``bases`` (default: the temp
+    dir, then ``/tmp``) where a socket path in it fits ``sun_path``.
+    ``None`` when none does."""
+    for base in bases or (tempfile.gettempdir(), "/tmp"):
+        try:
+            d = tempfile.mkdtemp(prefix="spark-uds-", dir=base)
+        except OSError:
+            continue
+        if len(os.fsencode(d)) + _SOCK_NAME_BYTES <= SUN_PATH_MAX:
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
+            return d
+        os.rmdir(d)
+    return None
+
+
 def ensure_package_shipped(spark: SparkSession) -> None:
     """Ship this package to executors via ``addPyFile`` (once per context).
 
@@ -87,9 +130,6 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_lakehouse_pkg_shipped", False):
         return
-    import atexit
-    import shutil
-    import tempfile
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -186,6 +226,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.unix.domain.socket.enabled", "true")
         # Static: the JVM's first codegen sizes this LRU of compiled
         # whole-stage classes for the life of the process.
         # Measured working sets (seed 7 of the medallion_ticks bench):
@@ -224,12 +265,26 @@ def get_spark(
             .config("spark.pyspark.python", sys.executable)
             .config("spark.pyspark.driver.python", sys.executable)
         )
+    if master.startswith("local") and SparkContext._active_spark_context is None:
+        # a new local context: its sockets go in a private dir (a reused
+        # context keeps the dir it started with)
+        sock_dir = private_socket_dir()
+        if sock_dir is None:
+            builder = builder.config("spark.python.unix.domain.socket.enabled", "false")
+        else:
+            builder = builder.config("spark.python.unix.domain.socket.dir", sock_dir)
     if metastore_dir:
         builder = (
             builder.config("spark.sql.warehouse.dir", f"{metastore_dir}/warehouse")
             .config(
                 "spark.hadoop.javax.jdo.option.ConnectionURL",
                 f"jdbc:derby:;databaseName={metastore_dir}/metastore_db;create=true",
+            )
+            # Hive's session makes "<java.io.tmpdir>/<uuid>_resources"
+            # by default and never removes it
+            .config(
+                "spark.hadoop.hive.downloaded.resources.dir",
+                f"{metastore_dir}/hive_resources",
             )
             .enableHiveSupport()
         )

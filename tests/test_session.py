@@ -39,6 +39,130 @@ def test_shipped_package_dir_removed_at_exit(tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# Python workers over Unix domain sockets
+# ---------------------------------------------------------------------------
+
+_UDS = "spark.python.unix.domain.socket.enabled"
+_UDS_DIR = "spark.python.unix.domain.socket.dir"
+
+# exits without spark.stop(): the socket dir must go at interpreter exit
+_SOCKET_SCRIPT = """
+from lakehouse_v3_spark.session import get_spark
+spark = get_spark(master="local[1]", driver_memory="1g")
+conf = spark.sparkContext.getConf()
+rows = spark.range(3).mapInPandas(lambda it: it, "id long").collect()
+assert sorted(r.id for r in rows) == [0, 1, 2], rows
+print(repr((conf.get({uds!r}), conf.get({uds_dir!r}))))
+""".format(uds=_UDS, uds_dir=_UDS_DIR)
+
+
+def _sockets_under(root) -> list[str]:
+    return [
+        os.path.join(d, f)
+        for d, _dirs, files in os.walk(root)
+        for f in files
+        if f.endswith(".sock")
+    ]
+
+
+def test_socket_dir_removed_at_exit_without_stop(tmp_path_factory):
+    # a short temp dir, so the private socket dir fits under it; the
+    # JVM's own temp dir (Spark's default socket dir) is there too
+    tmp = tmp_path_factory.mktemp("uds")
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp),
+        PYTHONPATH=REPO_DIR,
+        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={tmp}",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _SOCKET_SCRIPT],
+        env=env,
+        cwd=str(tmp),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    enabled, sock_dir = ast.literal_eval(out.stdout.strip().splitlines()[-1])
+    assert enabled == "true"
+    assert os.path.basename(sock_dir).startswith("spark-uds-")
+    assert not os.path.exists(sock_dir)
+    assert not list(tmp.glob("spark-uds-*"))
+    assert not _sockets_under(tmp)
+
+
+def test_private_socket_dir_fits_sun_path(tmp_path_factory, monkeypatch):
+    """The socket dir goes under the first base where a socket path fits
+    107 bytes; a base too deep falls back to /tmp."""
+    import tempfile
+    import uuid
+
+    from lakehouse_v3_spark.session import SUN_PATH_MAX, private_socket_dir
+
+    def sock_path(d: str) -> str:
+        return os.path.join(d, f".{uuid.uuid4()}.sock")
+
+    # dir = base + "/spark-uds-" + 8 random chars; socket = dir + 43
+    fits = SUN_PATH_MAX - len("/spark-uds-") - 8 - len(sock_path("")) - 1
+    root = str(tmp_path_factory.mktemp("s"))
+    if len(os.fsencode(root)) + 1 >= fits:
+        pytest.skip(f"pytest's temp dir {root} is deeper than the limit")
+
+    def base_of_length(n: int) -> str:
+        # "<root>/<x...>" exactly n bytes long
+        d = os.path.join(root, "x" * (n - len(os.fsencode(root)) - 1))
+        os.makedirs(d, exist_ok=True)
+        assert len(os.fsencode(d)) == n
+        return d
+
+    chosen = private_socket_dir((base_of_length(fits),))
+    assert chosen is not None
+    assert len(os.fsencode(sock_path(chosen))) == SUN_PATH_MAX
+    os.rmdir(chosen)
+    too_deep = base_of_length(fits + 1)
+    assert private_socket_dir((too_deep,)) is None
+    assert os.listdir(too_deep) == []  # the trial dir is not left behind
+
+    monkeypatch.setattr(tempfile, "tempdir", too_deep)
+    chosen = private_socket_dir()
+    try:
+        assert os.path.dirname(chosen) == "/tmp"
+        assert len(os.fsencode(sock_path(chosen))) <= SUN_PATH_MAX
+    finally:
+        os.rmdir(chosen)
+
+
+_TCP_SCRIPT = """
+from pyspark.sql import functions as F
+from lakehouse_v3_spark.session import get_spark
+spark = get_spark(master="local[1]", driver_memory="1g",
+                  extra_conf={{{uds!r}: "false"}})
+plus1 = F.udf(lambda x: x + 1, "long")
+rows = spark.range(3).select(plus1("id").alias("y")).collect()
+print(repr((spark.sparkContext.getConf().get({uds!r}),
+            sorted(r.y for r in rows))))
+spark.stop()
+""".format(uds=_UDS)
+
+
+def test_extra_conf_turns_unix_sockets_off(tmp_path):
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=REPO_DIR)
+    out = subprocess.run(
+        [sys.executable, "-c", _TCP_SCRIPT],
+        env=env,
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    enabled, ys = ast.literal_eval(out.stdout.strip().splitlines()[-1])
+    assert (enabled, ys) == ("false", [1, 2, 3])
+    assert not _sockets_under(tmp_path)
+
+
+# ---------------------------------------------------------------------------
 # conf_window: the one temporary session-conf change
 # ---------------------------------------------------------------------------
 

@@ -254,6 +254,11 @@ def test_register_persistent_survives_session(tmp_path):
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = _METASTORE_PHASE_SCRIPT.format(repo=repo)
+    # the JVM's temp dir, where Hive's session would leave its
+    # "<uuid>_resources" dir unless it is pointed into the metastore dir
+    jtmp = tmp_path / "jtmp"
+    jtmp.mkdir()
+    env = dict(os.environ, JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={jtmp}")
     for phase in ("write", "read"):
         out = subprocess.run(
             [sys.executable, "-c", script, str(tmp_path / "ms"), phase],
@@ -261,9 +266,11 @@ def test_register_persistent_survives_session(tmp_path):
             text=True,
             timeout=300,
             cwd=str(tmp_path),  # derby.log etc. land here, not in the repo
+            env=env,
         )
         assert out.returncode == 0, out.stderr[-2000:]
         assert "REGISTERED_ROWS=2" in out.stdout, (phase, out.stdout[-500:])
+    assert not list(jtmp.glob("*_resources"))
 
 
 _METASTORE_URI_SCRIPT = """
