@@ -34,12 +34,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    # driver_oracle=False oracles are tolerance-based (QueryDef.rtol,
-    # e.g. a sketch estimate vs the exact count) — valid for the repo's
-    # own gate but not for the driver's strict value-hash compare, so
-    # the driver gets a rows-only check for those.
+    # rtol oracles are tolerance-based (QueryDef.rtol, e.g. a sketch
+    # estimate vs the exact count) — valid for the repo's own gate but
+    # not for the driver's strict value-hash compare, so the driver
+    # gets a rows-only check for those.
     return {
         name: qd.oracle
         for name, qd in load_all().items()
-        if qd.oracle is not None and qd.driver_oracle
+        if qd.oracle is not None and qd.rtol is None
     }

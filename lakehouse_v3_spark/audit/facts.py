@@ -18,26 +18,24 @@ CHECKED_SCHEMA = (
 )
 
 
-def explode_results_to_fact(
-    results: DataFrame, existing_max_id: int = 0, assign_ids: bool = True
-) -> DataFrame:
+def explode_results_to_fact(results: DataFrame, assign_ids: bool = True) -> DataFrame:
     """One fact row per violated PK (explode_outer keeps PASS rows with a
-    NULL pk), with dense surrogate ids continuing after the existing fact
-    table's max (reference: 004...:101-103 ROW_NUMBER + max_id).
+    NULL pk), with dense surrogate ids 1..N (reference: 004...:101-103
+    ROW_NUMBER). The audit DAG overwrites its fact tables every run, so
+    each run's ids start at 1.
 
     ``assign_ids=False`` skips the dense-id assignment (an EAGER
     range-partition + counts + checkpoint pass): callers that consume
     only the exploded fact columns — not ``cd_fact_id`` — should not pay
     for ids they drop (guide §1.2: don't compute what you throw away).
-    The warehouse DAG, which appends to the persisted fact table, keeps
-    the default."""
+    The warehouse DAG, which persists the fact table, keeps the
+    default."""
     if not assign_ids:
         return _explode(results)
     return with_dense_id(
         _explode(results),
         ["cd_dataaudit_result", "violated_pk"],
         id_col="cd_fact_id",
-        offset=existing_max_id,
     )
 
 

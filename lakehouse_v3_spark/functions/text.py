@@ -68,14 +68,15 @@ def sentiment_label(score: Column) -> Column:
     )
 
 
-def rolling_fingerprint(token_arr: Column, mult: int = 1009, prime: int = 1_000_000_007) -> Column:
+def rolling_fingerprint(token_arr: Column) -> Column:
     """Polynomial rolling hash over a token array:
-    acc = (acc * mult + md5_int(tok, 1_000_000)) % prime. Order-sensitive
-    document fingerprint; intermediates stay < 2^63 in both engines."""
+    acc = (acc * 1009 + md5_int(tok, 1_000_000)) % 1_000_000_007.
+    Order-sensitive document fingerprint; intermediates stay < 2^63 in
+    both engines."""
     return F.aggregate(
         token_arr,
         F.lit(0).cast("long"),
-        lambda acc, x: (acc * mult + md5_int(x, mod=1_000_000)) % prime,
+        lambda acc, x: (acc * 1009 + md5_int(x, mod=1_000_000)) % 1_000_000_007,
     )
 
 

@@ -57,11 +57,12 @@ class LastKeyCheckpoint:
         )
         self.tm.append(df, self.table)
 
-    def filter_new_keys(self, keys: DataFrame, key_col: str = "path") -> DataFrame:
+    def filter_new_keys(self, keys: DataFrame) -> DataFrame:
+        """Rows of ``keys`` whose ``path`` sorts after the last key."""
         last = self.get()
         if last is None:
             return keys
-        return keys.filter(F.col(key_col) > F.lit(last))
+        return keys.filter(F.col("path") > F.lit(last))
 
 
 class FileLogCheckpoint:
@@ -72,15 +73,15 @@ class FileLogCheckpoint:
         self.tm = tm
         self.table = f"_control.file_log_{name}"
 
-    def new_files(self, listing: DataFrame, path_col: str = "path") -> DataFrame:
+    def new_files(self, listing: DataFrame) -> DataFrame:
         if not self.tm.exists(self.table):
             return listing
-        log = self.tm.read(self.table).select(path_col)
-        return listing.join(log, on=path_col, how="left_anti")
+        log = self.tm.read(self.table).select("path")
+        return listing.join(log, on="path", how="left_anti")
 
-    def record(self, files: DataFrame, path_col: str = "path") -> None:
+    def record(self, files: DataFrame) -> None:
         self.tm.append(
-            files.select(path_col).withColumn("logged_at", F.lit(_utcnow())),
+            files.select("path").withColumn("logged_at", F.lit(_utcnow())),
             self.table,
         )
 

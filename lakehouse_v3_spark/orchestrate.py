@@ -477,7 +477,7 @@ class ScheduledDag:
             f.write(logical.isoformat())
         os.replace(tmp, self._state_path)
 
-    def tick(self, now: datetime, ctx=None, max_workers: int = 1):
+    def tick(self, now: datetime, ctx=None):
         """Run everything due at ``now``; returns the list of
         (logical_date, DagRunReport).
 
@@ -505,7 +505,7 @@ class ScheduledDag:
                 run_ctx["data_interval_end"] = self.schedule._interval_of(
                     logical
                 )
-                report = self.dag.run(run_ctx, max_workers=max_workers)
+                report = self.dag.run(run_ctx)
                 self._record(logical)
                 out.append((logical, report))
         return out

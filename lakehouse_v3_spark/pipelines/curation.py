@@ -96,6 +96,7 @@ from ..operators.dedup import (
 from ..orchestrate import Dag, Skip
 from ..partitioning import fan_out_scan
 from ..tables import TableManager
+from .maintenance import maintain_task
 
 # Funnel thresholds — shared with the DuckDB oracle in
 # plans/curation_pipeline.py (import them there; never re-type).
@@ -166,17 +167,15 @@ def verified_pairs(docs: DataFrame, min_jaccard: float) -> DataFrame:
     )
 
 
-def near_dup_drop(
-    docs: DataFrame, pairs: DataFrame, threshold: float = NEAR_DUP_JACCARD
-) -> DataFrame:
+def near_dup_drop(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Stage N — greedy keep-min near-dup drop: any doc appearing as the
-    GREATER id of a verified pair with jaccard ≥ ``threshold`` is
+    GREATER id of a verified pair with jaccard ≥ NEAR_DUP_JACCARD is
     dropped. Pairwise-deterministic and SQL-replayable; the standard
     keep-first approximation of connected-components dedup (the exact
     CC variant is components_near_dup_clusters — at pipeline scale the
     greedy form avoids the iterative job entirely)."""
     drops = (
-        pairs.filter(F.col("jaccard") >= threshold)
+        pairs.filter(F.col("jaccard") >= NEAR_DUP_JACCARD)
         .select(F.col("id_b").alias("doc_id"))
         .distinct()
     )
@@ -193,9 +192,7 @@ def ngrams8(df: DataFrame) -> DataFrame:
     )
 
 
-def decontaminate(
-    docs: DataFrame, all_docs: DataFrame, materialize: bool = False
-) -> DataFrame:
+def decontaminate(docs: DataFrame, all_docs: DataFrame) -> DataFrame:
     """Stage D — benchmark decontamination (decontaminate_ngram_overlap's
     rule): docs with doc_id % EVAL_MOD == 0 stand in for the held-out
     eval set and are removed from the corpus outright; any surviving doc
@@ -204,24 +201,25 @@ def decontaminate(
     external — earlier funnel stages don't shrink it); it is tiny and
     broadcast, so the corpus is never shuffled.
 
-    ``materialize=True`` localCheckpoints the (tiny) contaminated-id
-    set: the stage's output appears several times in downstream plans
-    (split/leakage reference it per join side), and without truncation
-    every occurrence re-runs the corpus 8-gram explode — the one
-    expensive part of this stage."""
-    ngrams_of = ngrams8
+    The (tiny) contaminated-id set is localCheckpointed: the stage's
+    output appears several times in downstream plans (split/leakage
+    reference it per join side), and without truncation every
+    occurrence re-runs the corpus 8-gram explode — the one expensive
+    part of this stage."""
 
     ev = (
-        ngrams_of(all_docs.filter(F.col("doc_id") % EVAL_MOD == 0))
+        ngrams8(all_docs.filter(F.col("doc_id") % EVAL_MOD == 0))
         .select("ng")
         .distinct()
     )
     corpus = docs.filter(F.col("doc_id") % EVAL_MOD != 0)
     contaminated = (
-        ngrams_of(corpus).join(F.broadcast(ev), "ng").select("doc_id").distinct()
+        ngrams8(corpus)
+        .join(F.broadcast(ev), "ng")
+        .select("doc_id")
+        .distinct()
+        .localCheckpoint()
     )
-    if materialize:
-        contaminated = contaminated.localCheckpoint()
     return corpus.join(contaminated, "doc_id", "left_anti")
 
 
@@ -282,18 +280,17 @@ def cross_split_train_drops(pairs: DataFrame, docs_split: DataFrame) -> DataFram
 def leakage_drop(
     docs_split: DataFrame,
     pairs: DataFrame,
-    threshold: float = LEAK_JACCARD,
     materialize: bool = False,
 ) -> DataFrame:
     """Stage L — close split_leakage_audit's loop (r9 verdict item #2):
-    for every verified pair with jaccard ≥ ``threshold`` whose two
+    for every verified pair with jaccard ≥ LEAK_JACCARD whose two
     LIVE endpoints land in different splits, drop the TRAIN side and
     keep val/test (the published remediation: eval splits stay intact,
     the contaminating train doc goes). val↔test pairs are counted by
     the audit but dropped from neither side. ONE aggregation over the
     bounded pair set; the corpus pays a broadcast-able left_anti."""
     train_side = cross_split_train_drops(
-        pairs.filter(F.col("jaccard") >= threshold), docs_split
+        pairs.filter(F.col("jaccard") >= LEAK_JACCARD), docs_split
     )
     if materialize:
         # the drop set is pair-bounded (tiny); truncating it here keeps
@@ -519,13 +516,11 @@ def gold_summary(final_docs: DataFrame) -> DataFrame:
     )
 
 
-def pack_corpus(
-    final_docs: DataFrame, budget: int = PACK_BUDGET, materialize: bool = True
-) -> DataFrame:
+def pack_corpus(final_docs: DataFrame, materialize: bool = True) -> DataFrame:
     """Stage P — the funnel's LAST step: pack the surviving corpus into
-    fixed ``budget``-token training bins per (split, lang), in
+    fixed PACK_BUDGET-token training bins per (split, lang), in
     deterministic doc_id order (pack_sequences_greedy's exact cumsum
-    rule: bin = tokens-before-this-doc DIV budget). Output is the
+    rule: bin = tokens-before-this-doc DIV PACK_BUDGET). Output is the
     per-document shard assignment a sequence writer consumes —
     (doc_id, split, lang, n_tok, bin) — reproducible across engines,
     re-runs and partitionings because it is a pure cumsum in a total
@@ -557,97 +552,43 @@ def pack_corpus(
         materialize=materialize,
     )
     out = packed.withColumn(
-        "bin", ((F.col("_cum") - F.col("n_tok")) / budget).cast("long")
+        "bin", ((F.col("_cum") - F.col("n_tok")) / PACK_BUDGET).cast("long")
     ).drop("_cum")
     if not materialize:
         out._lh_pinned = packed._lh_pinned
     return out
 
 
-class FunnelStages(dict):
-    """:func:`run_funnel`'s return value — a plain dict of stage
-    DataFrames, except that EAGER-at-construction stages (``packed``:
-    pack_corpus's grouped cumsum runs a driver partials job plus an
-    eager localCheckpoint the moment it is BUILT) are stored as
-    zero-arg thunks and materialized on first ``[...]`` access (r11
-    ADVICE #2 — every run_funnel caller used to execute the whole
-    funnel through pack even when only ``gold``/counts were consumed,
-    roughly doubling each catalog query's cost).
-
-    EVERY dict view is consistent with the extended key set (r12
-    ADVICE #3): get/items/values/iteration/len see lazy keys too —
-    ``items()``/``values()`` force pending thunks (they hand out the
-    VALUES, so laziness is spent either way), while
-    ``keys()``/``in``/``len``/iteration stay thunk-free. The one
-    remaining intentional gap: ``dict(fs)``/``copy.copy`` go through
-    C-level fast paths that bypass these overrides, so snapshot with
-    ``dict(fs.items())`` if lazy entries must be included."""
-
-    def __init__(self, *a, **kw):
-        super().__init__(*a, **kw)
-        self._thunks: dict = {}
-
-    def put_lazy(self, key, thunk) -> None:
-        self._thunks[key] = thunk
-
-    def __getitem__(self, key):
-        if not super().__contains__(key) and key in self._thunks:
-            self[key] = self._thunks.pop(key)()
-        return super().__getitem__(key)
-
-    def __contains__(self, key) -> bool:
-        return super().__contains__(key) or key in self._thunks
-
-    def keys(self):
-        return list(super().keys()) + list(self._thunks)
-
-    def __iter__(self):
-        return iter(self.keys())
-
-    def __len__(self) -> int:
-        return super().__len__() + len(self._thunks)
-
-    def get(self, key, default=None):
-        return self[key] if key in self else default
-
-    def items(self):
-        return [(k, self[k]) for k in self.keys()]
-
-    def values(self):
-        return [self[k] for k in self.keys()]
-
-
 def run_funnel(
     docs: DataFrame,
-    materialize_pairs: bool = False,
     embeddings: "DataFrame | None" = None,
-) -> "FunnelStages":
-    """Compose the full funnel lazily; returns every intermediate frame
-    keyed by stage name (the catalog queries and the DAG tasks both
-    build from this single definition, so they can never drift).
-    ``packed`` is a LAZY entry (see :class:`FunnelStages`): building
-    it costs a driver partials job + localCheckpoint, so it runs only
-    when a caller actually indexes it.
+) -> dict[str, DataFrame]:
+    """Compose the full funnel; returns every intermediate frame keyed
+    by stage name (the catalog queries and the DAG tasks both build
+    from this single definition, so they can never drift). The last
+    stage, :func:`pack_corpus`, is not built here (it runs a driver
+    partials job + localCheckpoint at construction): callers that want
+    it pack ``["leakage"]`` themselves.
 
-    ``materialize_pairs=True`` localCheckpoints the funnel's SHARED
-    intermediates — the verified pair sets (text MinHash + embedding
-    GEMM), the exact-dedup survivor corpus, the cluster-assigned member
-    vectors, and every tiny decision set (semantic drops, contaminated
-    ids, cross-split train drops). This is the one-query catalog
-    composition's execution strategy (the DAG persists the same
-    intermediates as tables instead, which serves the same purpose
-    durably). Without truncation the composed plan re-executes each
-    shared subtree once per downstream reference — the r13 plan audit
-    measured the embed funnel's physical plan at 224 Exchange nodes and
-    80 ArrowEvalPython (assign_cells) nodes, i.e. the quality→dedup
-    chain and the cluster-assignment UDF ran dozens of times inside one
-    query (guide §2.4: remove shuffles outright; §5: cut lineage where
+    The funnel's SHARED intermediates are localCheckpointed — the
+    verified pair sets (text MinHash + embedding GEMM), the exact-dedup
+    survivor corpus, the cluster-assigned member vectors, and every
+    tiny decision set (semantic drops, contaminated ids, cross-split
+    train drops). This is the one-query catalog composition's execution
+    strategy (the DAG persists the same intermediates as tables
+    instead, which serves the same purpose durably). Without truncation
+    the composed plan re-executes each shared subtree once per
+    downstream reference — the r13 plan audit measured the embed
+    funnel's physical plan at 224 Exchange nodes and 80
+    ArrowEvalPython (assign_cells) nodes, i.e. the quality→dedup chain
+    and the cluster-assignment UDF ran dozens of times inside one query
+    (guide §2.4: remove shuffles outright; §5: cut lineage where
     recomputation is the expensive path). With truncation every stage
     body runs exactly once, which is also the honest 100 TB shape: the
     corpus-width frames are materialized once per stage (exactly what
     the warehouse DAG does durably), and every other checkpoint is
-    pair-bounded or id-width. Values are identical either way —
-    localCheckpoint is an execution boundary, not a semantic one.
+    pair-bounded or id-width. localCheckpoint is an execution boundary,
+    not a semantic one.
 
     ``embeddings`` (the external (vec_id, embedding) feature table,
     vec_id ≡ doc_id) composes the embedding-side stages beside their
@@ -665,28 +606,24 @@ def run_funnel(
 
     extra returned stages: ``emb_pairs``, ``semantic``."""
     q = quality_filter(docs)
-    e = exact_dedup(q)
-    if materialize_pairs:
-        # the exact-dedup survivor corpus feeds the minhash pair job,
-        # the near-dup stage and (through it) every stage below; one
-        # checkpoint here makes the tokenize→hash→dedup chain run once
-        # instead of once per downstream plan reference. Fan out BEFORE
-        # the checkpoint (r13, guide §2): the semi-join output inherits
-        # the scan's split count (ONE task on a one-file layout), and
-        # the checkpoint would otherwise pin that width for the minhash
-        # job — the funnel's expensive step — and every stage below.
-        e = fan_out_scan(e, "doc_id").localCheckpoint()
-    pairs = verified_pairs(e.select("doc_id", "text"), LEAK_JACCARD)
-    if materialize_pairs:
-        pairs = pairs.localCheckpoint()
+    # the exact-dedup survivor corpus feeds the minhash pair job, the
+    # near-dup stage and (through it) every stage below; one checkpoint
+    # here makes the tokenize→hash→dedup chain run once instead of once
+    # per downstream plan reference. Fan out BEFORE the checkpoint (r13,
+    # guide §2): the semi-join output inherits the scan's split count
+    # (ONE task on a one-file layout), and the checkpoint would
+    # otherwise pin that width for the minhash job — the funnel's
+    # expensive step — and every stage below.
+    e = fan_out_scan(exact_dedup(q), "doc_id").localCheckpoint()
+    pairs = verified_pairs(e.select("doc_id", "text"), LEAK_JACCARD).localCheckpoint()
     n = near_dup_drop(e, pairs)
-    out = FunnelStages(
-        ingest=docs,
-        quality=q,
-        exact_dedup=e,
-        pairs=pairs,
-        near_dup=n,
-    )
+    out = {
+        "ingest": docs,
+        "quality": q,
+        "exact_dedup": e,
+        "pairs": pairs,
+        "near_dup": n,
+    }
     if embeddings is not None:
         # cluster model first (honest SemDeDup): corpus-scaled capped
         # Lloyd over the FULL feature table — runs k·iters small jobs
@@ -695,36 +632,28 @@ def run_funnel(
         # GEMM block key and the ccos reference
         cents = emb_cluster_model(embeddings)
         cdf = centroid_frame(docs.sparkSession, cents)
-        member_vecs = emb_member_vectors(n, embeddings)
-        if materialize_pairs:
-            # fan out BEFORE assign_cells so the Arrow argmin runs at
-            # full width instead of the scan's split count (r13)
-            member_vecs = fan_out_scan(member_vecs, "doc_id")
-        members = emb_clustered(member_vecs, cents)
-        if materialize_pairs:
-            # one assign_cells (Arrow argmin) pass total: the member
-            # table feeds both the GEMM pair job and the centroid-cosine
-            # scoring — unmaterialized, the UDF re-runs per reference
-            members = members.localCheckpoint()
-        epairs = emb_pairs_full(members)
-        if materialize_pairs:
-            epairs = epairs.localCheckpoint()
+        # fan out BEFORE assign_cells so the Arrow argmin runs at full
+        # width instead of the scan's split count (r13); one
+        # assign_cells pass total: the member table feeds both the GEMM
+        # pair job and the centroid-cosine scoring — unmaterialized,
+        # the UDF re-runs per reference
+        member_vecs = fan_out_scan(emb_member_vectors(n, embeddings), "doc_id")
+        members = emb_clustered(member_vecs, cents).localCheckpoint()
+        epairs = emb_pairs_full(members).localCheckpoint()
         scored = emb_scored(members, cdf)
-        sdrops = semantic_drops(epairs, scored)
-        if materialize_pairs:
-            sdrops = sdrops.localCheckpoint()  # pair-bounded (tiny)
+        # pair-bounded (tiny)
+        sdrops = semantic_drops(epairs, scored).localCheckpoint()
         m = n.join(sdrops, "doc_id", "left_anti")
         out["emb_pairs"] = epairs
         out["semantic"] = m
     else:
         m = n
-    d = decontaminate(m, docs, materialize=materialize_pairs)
+    d = decontaminate(m, docs)
     s = assign_split(d)
-    l = leakage_drop(s, pairs, materialize=materialize_pairs)
+    l = leakage_drop(s, pairs, materialize=True)
     if embeddings is not None:
-        edrops = cross_split_train_drops(out["emb_pairs"], s)
-        if materialize_pairs:
-            edrops = edrops.localCheckpoint()  # pair-bounded (tiny)
+        # pair-bounded (tiny)
+        edrops = cross_split_train_drops(out["emb_pairs"], s).localCheckpoint()
         l = l.join(edrops, "doc_id", "left_anti")
     out.update(
         {
@@ -734,7 +663,6 @@ def run_funnel(
             "gold": gold_summary(l),
         }
     )
-    out.put_lazy("packed", lambda: pack_corpus(l))
     return out
 
 
@@ -830,7 +758,6 @@ _OVERWRITTEN_TABLES = (
     "curation.gold_summary",
     "curation.gold_funnel",
 )
-MAINTAIN_FILE_BOUND = 64  # compact a table when its data files exceed this
 
 _STATE_TABLES = (
     "curation.state_watermark",
@@ -1522,32 +1449,6 @@ def curation_dag(
         tm.overwrite(funnel, "curation.gold_funnel")
         return {name: n for _, (name, n) in zip(rows, rows)}
 
-    def maintain(ctx):
-        """State-table maintenance (r11 verdict item #2 / "What's
-        missing" #3): every append-only table takes one small file-set
-        per tick, so a month of daily ticks is hundreds of file-sets
-        per table — the classic small-file problem. This task counts
-        each table's live data files (from its commit log, no Spark
-        job) and, when a table exceeds MAINTAIN_FILE_BOUND, rewrites it
-        to ⌈rows/1M⌉ files (TableManager.compact — the OPTIMIZE
-        analogue); every table the DAG writes is vacuumed (the
-        overwritten ones included) — the reference's own VACUUM
-        discipline (uber/drop_dup.py:96-101) applied to the state
-        layer. The bound IS the cadence: steady-state ticks read a few
-        logs and Skip; every ~bound ticks one table pays one
-        deterministic overwrite (idempotent under crash-retry — a
-        replay just compacts again or finds the count low). Compaction
-        never changes table CONTENTS, so incremental ≡ full-recompute
-        holds across it (pinned by test_curation). The body is the
-        shared :func:`~.maintenance.run_maintain` (r12 verdict item
-        #4 lifted it into a factory the domain + audit DAGs attach
-        too); the bound is read at CALL time so tests can patch it."""
-        from .maintenance import run_maintain
-
-        return run_maintain(
-            tm, _MAINTAINED_TABLES, MAINTAIN_FILE_BOUND, _OVERWRITTEN_TABLES
-        )
-
     def _staged(name: str, body):
         """Per-stage consumption wrapper (r11 ADVICE high): run iff the
         current delta tick hasn't been consumed by THIS stage yet, and
@@ -1612,11 +1513,15 @@ def curation_dag(
             retry_delay=retry_delay,
             trigger_rule="none_failed",
         )
-    # maintenance rides every run (not _staged — it keys on file
-    # counts, not batch consumption) and self-skips under the bound
+    # maintenance (r11 verdict item #2) rides every run (not _staged —
+    # it keys on file counts, not batch consumption) and self-skips
+    # under the bound: every append-only table takes one small file-set
+    # per tick, and the shared maintain task compacts one past
+    # maintenance.MAINTAIN_FILE_BOUND and vacuums every table the DAG
+    # writes — the reference's VACUUM discipline (uber/drop_dup.py)
     dag.task(
         "maintain",
-        maintain,
+        maintain_task(tm, _MAINTAINED_TABLES, vacuum_only=_OVERWRITTEN_TABLES),
         upstream=("pack", "gold_summary"),
         retries=retries,
         retry_delay=retry_delay,

@@ -4,9 +4,9 @@ bronze layer, an accumulating state/index table — grows linearly in
 file count with run count until something compacts it. The reference
 runs VACUUM on its uber zone after every dedup pass
 (spark/jobs/uber/drop_dup.py:96-101); round 12 gave the curation DAG a
-``maintain`` task with that discipline, and this module lifts the body
-into a factory every DAG attaches (curation, uber, scheduled uber,
-audit).
+``maintain`` task with that discipline, and this module's
+:func:`maintain_task` is the one task body every DAG attaches
+(curation, uber, scheduled uber, audit).
 
 Design (unchanged from the r12 curation task, now shared):
 
@@ -64,18 +64,14 @@ def run_maintain(
     return {"compacted": compacted}
 
 
-def maintain_task(
-    tm: TableManager, tables, file_bound: "int | None" = None, vacuum_only=()
-):
+def maintain_task(tm: TableManager, tables, vacuum_only=()):
     """Task-body factory for a DAG ``maintain`` task over ``tables``
-    (and ``vacuum_only``, see :func:`run_maintain`).
-    ``file_bound=None`` resolves the module's MAINTAIN_FILE_BOUND at
-    CALL time (so tests can monkeypatch the global); an explicit int
-    pins it."""
+    (and ``vacuum_only``, see :func:`run_maintain`). The bound is the
+    module's MAINTAIN_FILE_BOUND, read at CALL time (so tests can
+    monkeypatch the global)."""
     tables, vacuum_only = tuple(tables), tuple(vacuum_only)
 
     def maintain(ctx):
-        bound = MAINTAIN_FILE_BOUND if file_bound is None else int(file_bound)
-        return run_maintain(tm, tables, bound, vacuum_only)
+        return run_maintain(tm, tables, MAINTAIN_FILE_BOUND, vacuum_only)
 
     return maintain

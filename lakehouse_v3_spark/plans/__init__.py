@@ -65,6 +65,12 @@ class QueryDef:
     # compared crosswise — a false mismatch or false pass. The current
     # rtol query keys on o_orderpriority (unique); keep any future one
     # keyed the same way.
+    #
+    # An rtol oracle stays OUT of __spark_entry__.oracle_sql(): the
+    # driver's compare is a strict value-hash that cannot express a
+    # tolerance, so it would mis-report there. The driver then records
+    # a rows-only check; the repo gate (tests/test_oracle_parity.py,
+    # tools/sf_gate.py) still value-checks within rtol.
     rtol: float | None = None
     # Optional FASTER oracle formulation for the big-SF repo gates
     # (tools/sf_gate.py) only. A handful of deliberately-naive primary
@@ -81,13 +87,6 @@ class QueryDef:
     # connection the gate's timeout watchdog can interrupt. The driver
     # and the pytest sf0.001 parity gate always use the primary oracle.
     sf_oracle: "str | Callable | None" = None
-    # False → keep this oracle OUT of __spark_entry__.oracle_sql(): the
-    # driver's compare is a strict value-hash that cannot express a
-    # tolerance, so rtol-based oracles would mis-report as mismatches
-    # there. The driver then records a rows-only check; the repo gate
-    # (tests/test_oracle_parity.py, tools/sf_gate.py) still value-checks
-    # within rtol.
-    driver_oracle: bool = True
 
 
 REGISTRY: dict[str, QueryDef] = {}
@@ -126,7 +125,6 @@ def register(
     oracle: str | None = None,
     doc: str = "",
     rtol: float | None = None,
-    driver_oracle: bool = True,
     sf_oracle=None,
 ):
     """Decorator: add a (spark, sf_dir) -> DataFrame callable to the catalog.
@@ -158,7 +156,6 @@ def register(
             oracle=oracle,
             doc=doc or (fn.__doc__ or ""),
             rtol=rtol,
-            driver_oracle=driver_oracle,
             sf_oracle=sf_oracle,
         )
         return fn

@@ -371,7 +371,7 @@ def curation_pipeline_gold(spark, sf_dir):
     (incremental ingest, per-stage tables, idempotent re-runs) is
     pipelines/curation.curation_dag, tested in tests/test_curation.py."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    return run_funnel(docs, materialize_pairs=True)["gold"]
+    return run_funnel(docs)["gold"]
 
 
 @register("curation_funnel_counts", oracle=_FUNNEL_ORACLE)
@@ -382,7 +382,7 @@ def curation_funnel_counts(spark, sf_dir):
     here before they poison a training run). Same composed funnel as
     curation_pipeline_gold; six single-row aggregations unioned."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    f = run_funnel(docs, materialize_pairs=True)
+    f = run_funnel(docs)
     branches = [
         f[name]
         .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -610,4 +610,4 @@ def curation_embed_gold(spark, sf_dir):
     pinned DAG ≡ this composition by tests/test_curation.py."""
     docs = load(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     emb = load(spark, sf_dir, "embeddings")
-    return run_funnel(docs, materialize_pairs=True, embeddings=emb)["gold"]
+    return run_funnel(docs, embeddings=emb)["gold"]

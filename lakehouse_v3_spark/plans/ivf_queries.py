@@ -68,21 +68,22 @@ FROM (SELECT rn, unnest(range(len(embedding))) AS dim,
 """
 
 
-def _lloyd_chain(n_unroll: int = _N_UNROLL) -> str:
+def _lloyd_chain() -> str:
     """Unrolled WITH-clause body: c0..cN centroid tables, s1..sN integer
-    shifts, tsel = first converged iteration, cents = its centroids."""
+    shifts (N = _N_UNROLL), tsel = first converged iteration, cents =
+    its centroids."""
     parts = [f"c0 AS MATERIALIZED ({_C0_SQL})"]
-    for i in range(1, n_unroll + 1):
+    for i in range(1, _N_UNROLL + 1):
         update, _ = iter_body(f"c{i - 1}")
         parts.append(f"c{i} AS MATERIALIZED ({update})")
         parts.append(
             f"s{i} AS (SELECT {i} AS i, {SHIFT_EXPR} AS shift "
             f"FROM c{i} n JOIN c{i - 1} p USING (cid, dim))"
         )
-    shifts = " UNION ALL ".join(f"SELECT * FROM s{i}" for i in range(1, n_unroll + 1))
+    shifts = " UNION ALL ".join(f"SELECT * FROM s{i}" for i in range(1, _N_UNROLL + 1))
     allc = " UNION ALL ".join(
         f"SELECT {i} AS i, cid, dim, n_assigned, component FROM c{i}"
-        for i in range(1, n_unroll + 1)
+        for i in range(1, _N_UNROLL + 1)
     )
     parts.append(f"shifts AS ({shifts})")
     parts.append(

@@ -54,31 +54,28 @@ PQ_UNROLL = 24
 _W = 8  # subspace width on the 64-dim fixtures
 
 
-def train_source_sql(
-    source: str = "embeddings",
-    vec: str = "embedding",
-    cap: int = PQ_TRAIN_SAMPLE_CAP,
-) -> str:
+def train_source_sql(source: str = "embeddings", vec: str = "embedding") -> str:
     """The oracle twin of operators/pq's deterministic training sample
     (r7 verdict item #4): ``vec_id % ceil(n / cap) == 0`` with the
-    SAME exact-integer ceil — ``(COUNT(*) + cap - 1) // cap``. Below
-    the cap the stride is 1 and the expression reduces to the full
-    corpus (bit-identical to the unsampled recipe on every driver
-    fixture). Returns a parenthesized subquery usable wherever the
-    chain builders take a ``source``."""
+    SAME exact-integer ceil — ``(COUNT(*) + cap - 1) // cap``, cap =
+    PQ_TRAIN_SAMPLE_CAP. Below the cap the stride is 1 and the
+    expression reduces to the full corpus (bit-identical to the
+    unsampled recipe on every driver fixture). Returns a parenthesized
+    subquery usable wherever the chain builders take a ``source``."""
+    cap = PQ_TRAIN_SAMPLE_CAP
     return (
         f"(SELECT vec_id, {vec} FROM {source} WHERE vec_id % "
         f"(SELECT (COUNT(*) + {cap - 1}) // {cap} FROM {source}) = 0)"
     )
 
 
-def sq_fold(a: str, b: str, w: int = _W) -> str:
-    """0.0-seeded left-fold Σ (a[d]-b[d])² over a width-w subspace —
+def sq_fold(a: str, b: str) -> str:
+    """0.0-seeded left-fold Σ (a[d]-b[d])² over a width-_W subspace —
     both operands already-DOUBLE lists (the DuckDB twin of
     train_blocks._cell_dists_mat and the numpy kernels in
     operators/pq.py)."""
     return fold_sum(
-        f"list_transform(range(1, {w + 1}), "
+        f"list_transform(range(1, {_W + 1}), "
         f"d -> ({a}[d] - {b}[d]) * ({a}[d] - {b}[d]))"
     )
 
@@ -94,11 +91,10 @@ FROM {source} t, (SELECT unnest(range(0, {PQ_N_SUB})) AS s) ss
 """
 
 
-def c0_sql(source: str = "embeddings", vec: str = "embedding",
-           k: int = PQ_TRAIN_K) -> str:
-    """Seed codebooks: subvector s of the k LOWEST-vec_id vectors of
-    ``source``, codeword index j = rank within those seeds (for a
-    full contiguous-id corpus this is exactly ``vec_id < k`` with
+def c0_sql(source: str = "embeddings", vec: str = "embedding") -> str:
+    """Seed codebooks: subvector s of the k = PQ_TRAIN_K LOWEST-vec_id
+    vectors of ``source``, codeword index j = rank within those seeds
+    (for a full contiguous-id corpus this is exactly ``vec_id < k`` with
     j = vec_id — the original recipe; for a sampled train set the
     seeds are the k lowest surviving ids). Components 6-dp rounded
     (same seed recipe as the coarse quantizer); Spark twin:
@@ -109,7 +105,7 @@ SELECT CAST(ss.s AS INT) AS s, CAST(sd.j AS INT) AS j,
        ROUND(CAST(sd.v[ss.s*{_W} + dd.dim + 1] AS DOUBLE), 6) AS component
 FROM (SELECT vec_id, {vec} AS v,
              row_number() OVER (ORDER BY vec_id) - 1 AS j
-      FROM {source} src_t ORDER BY vec_id LIMIT {k}) sd,
+      FROM {source} src_t ORDER BY vec_id LIMIT {PQ_TRAIN_K}) sd,
      (SELECT unnest(range(0, {PQ_N_SUB})) AS s) ss,
      (SELECT unnest(range(0, {_W})) AS dim) dd
 """
@@ -152,31 +148,24 @@ def train_chain(
     prefix: str = "pq",
     source: str = "embeddings",
     vec: str = "embedding",
-    n_unroll: int = PQ_UNROLL,
-    tol_micro: int = PQ_TRAIN_TOL_MICRO,
-    sample_cap: int | None = PQ_TRAIN_SAMPLE_CAP,
 ) -> str:
     """Unrolled WITH-clause body ending in ``{prefix}cb`` =
     (s, j, dim, n_assigned, component, n_iters): each subspace's
     codebook snapshotted at its own first converged iteration. If any
-    subspace never converges within the unroll it is ABSENT from
-    ``{prefix}cb`` → fewer rows → the gate fails LOUDLY (the _N_UNROLL
-    lesson from r5). ``prefix`` namespaces the CTEs so two chains
+    subspace never converges within the PQ_UNROLL unrolled iterations
+    it is ABSENT from ``{prefix}cb`` → fewer rows → the gate fails
+    LOUDLY (the _N_UNROLL lesson from r5). ``prefix`` namespaces the CTEs so two chains
     (raw + residual) can coexist in one statement. The training
     source is the deterministic ``train_source_sql`` sample of
-    ``source`` (stride 1 = full corpus below ``sample_cap``) — the
-    same rows operators/pq.pq_train_codebooks trains on."""
+    ``source`` (stride 1 = full corpus below PQ_TRAIN_SAMPLE_CAP) —
+    the same rows operators/pq.pq_train_codebooks trains on."""
     p = prefix
-    src = (
-        train_source_sql(source, vec, sample_cap)
-        if sample_cap is not None
-        else source
-    )
+    src = train_source_sql(source, vec)
     parts = [
         f"{p}subv AS MATERIALIZED ({subv_sql(src, vec)})",
         f"{p}c0 AS MATERIALIZED ({c0_sql(src, vec)})",
     ]
-    for i in range(1, n_unroll + 1):
+    for i in range(1, PQ_UNROLL + 1):
         parts.append(
             f"{p}c{i} AS MATERIALIZED ({iter_body(f'{p}c{i - 1}', f'{p}subv')})"
         )
@@ -185,16 +174,16 @@ def train_chain(
             f"FROM {p}c{i} n JOIN {p}c{i - 1} p USING (s, j, dim) GROUP BY n.s)"
         )
     shifts = " UNION ALL ".join(
-        f"SELECT * FROM {p}s{i}" for i in range(1, n_unroll + 1)
+        f"SELECT * FROM {p}s{i}" for i in range(1, PQ_UNROLL + 1)
     )
     allc = " UNION ALL ".join(
         f"SELECT {i} AS i, s, j, dim, n_assigned, component FROM {p}c{i}"
-        for i in range(1, n_unroll + 1)
+        for i in range(1, PQ_UNROLL + 1)
     )
     parts.append(f"{p}shifts AS ({shifts})")
     parts.append(
         f"{p}tsel AS (SELECT s, MIN(i) AS t FROM {p}shifts "
-        f"WHERE shift <= {tol_micro} GROUP BY s)"
+        f"WHERE shift <= {PQ_TRAIN_TOL_MICRO} GROUP BY s)"
     )
     parts.append(
         f"{p}cb AS (SELECT u.s, u.j, u.dim, u.n_assigned, u.component, "
@@ -209,9 +198,6 @@ def duckdb_pq_train(
     source_sql: str = "SELECT vec_id, embedding FROM embeddings",
     vec: str = "embedding",
     out_table: str = "_pq_cb",
-    tol_micro: int = PQ_TRAIN_TOL_MICRO,
-    max_iter: int = PQ_TRAIN_MAX_ITER,
-    sample_cap: int | None = PQ_TRAIN_SAMPLE_CAP,
 ) -> dict[int, int]:
     """Early-exit twin of the unrolled chain for the big-SF gates: the
     same per-iteration SQL against temp tables, each subspace frozen
@@ -219,18 +205,13 @@ def duckdb_pq_train(
     same deterministic training sample as the unrolled chain. Returns
     {subspace: n_iters}."""
     con.execute(f"CREATE OR REPLACE TEMP TABLE _pqt_all AS {source_sql}")
-    if sample_cap is not None:
-        con.execute(
-            "CREATE OR REPLACE TEMP TABLE _pqt_src AS "
-            "SELECT * FROM _pqt_all WHERE vec_id % "
-            f"(SELECT (COUNT(*) + {sample_cap - 1}) // {sample_cap} "
-            "FROM _pqt_all) = 0"
-        )
-    else:
-        con.execute(
-            "CREATE OR REPLACE TEMP TABLE _pqt_src AS "
-            "SELECT * FROM _pqt_all"
-        )
+    cap = PQ_TRAIN_SAMPLE_CAP
+    con.execute(
+        "CREATE OR REPLACE TEMP TABLE _pqt_src AS "
+        "SELECT * FROM _pqt_all WHERE vec_id % "
+        f"(SELECT (COUNT(*) + {cap - 1}) // {cap} "
+        "FROM _pqt_all) = 0"
+    )
     con.execute(
         "CREATE OR REPLACE TEMP TABLE _pqt_subv AS "
         + subv_sql("_pqt_src", vec)
@@ -244,7 +225,7 @@ def duckdb_pq_train(
         "n_iters INT)"
     )
     done: dict[int, int] = {}
-    for it in range(1, max_iter + 1):
+    for it in range(1, PQ_TRAIN_MAX_ITER + 1):
         con.execute(
             "CREATE OR REPLACE TEMP TABLE _pqt_new AS "
             + iter_body("_pqt_prev", "_pqt_subv")
@@ -253,7 +234,7 @@ def duckdb_pq_train(
             f"SELECT n.s, {SHIFT_EXPR} AS shift FROM _pqt_new n "
             "JOIN _pqt_prev p USING (s, j, dim) GROUP BY n.s"
         ).fetchall()
-        newly = [int(s) for s, shift in rows if shift <= tol_micro]
+        newly = [int(s) for s, shift in rows if shift <= PQ_TRAIN_TOL_MICRO]
         for s in newly:
             done[s] = it
             con.execute(
@@ -277,5 +258,5 @@ def duckdb_pq_train(
     raise RuntimeError(
         f"duckdb_pq_train: subspaces "
         f"{sorted(set(range(PQ_N_SUB)) - set(done))} did not converge "
-        f"within {max_iter} iterations"
+        f"within {PQ_TRAIN_MAX_ITER} iterations"
     )

@@ -609,7 +609,6 @@ GROUP BY o_orderpriority
     "approx_count_distinct_hll_sketch_only",
     oracle=_HLL_SKETCH_ORACLE,
     rtol=0.05,
-    driver_oracle=False,
 )
 def approx_count_distinct_hll_sketch_only(spark, sf_dir):
     """The HLL distinct count in the form you'd actually RUN at 100 TB:
@@ -624,8 +623,8 @@ def approx_count_distinct_hll_sketch_only(spark, sf_dir):
     the gate compares within rtol=5% (HLL at rsd=2% sits well inside;
     both sides are deterministic for fixed data, so the check is
     stable). The driver's value-hash cannot express a tolerance, so
-    this oracle is repo-side only (driver records rows-only) —
-    declared via driver_oracle=False, visible to the judge here."""
+    this oracle is repo-side only (driver records rows-only): every
+    rtol oracle is kept out of ``__spark_entry__.oracle_sql()``."""
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.approx_count_distinct("o_custkey", rsd=0.02)
@@ -831,12 +830,12 @@ def mv_incremental_merge(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _z_terms_sql(xe: str, ye: str, bits: int = 8) -> str:
-    """Bit-interleave expression (Morton/Z-order), valid in both Spark SQL
-    and DuckDB: z = ... y3 x3 y2 x2 y1 x1 y0 x0."""
+def _z_terms_sql(xe: str, ye: str) -> str:
+    """8-bit bit-interleave expression (Morton/Z-order), valid in both
+    Spark SQL and DuckDB: z = y7 x7 ... y1 x1 y0 x0."""
     return " + ".join(
         f"((({xe} >> {i}) & 1) << {2 * i}) + ((({ye} >> {i}) & 1) << {2 * i + 1})"
-        for i in range(bits)
+        for i in range(8)
     )
 
 

@@ -154,17 +154,18 @@ def embedding_near_dup(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _hyperplanes(n_planes: int = 6, dim: int = 64) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes shared by both engines:
+def _hyperplanes() -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes shared by both engines,
+    6 planes over 64 dims:
     plane[j][d] = (md5int(f"{j}:{d}") % 2001 - 1000) / 1000 ∈ [-1, 1].
     Generated once in Python and inlined as literals, so Spark and the
     oracle use bit-identical coefficients."""
     import hashlib
 
     out = []
-    for j in range(n_planes):
+    for j in range(6):
         row = []
-        for d in range(dim):
+        for d in range(64):
             h = int(hashlib.md5(f"{j}:{d}".encode()).hexdigest()[:8], 16)
             row.append((h % 2001 - 1000) / 1000.0)
         out.append(row)

@@ -185,9 +185,6 @@ def stream_tws_distinct_type_counts(spark, sf_dir):
     SparkContext checkpoint dir is preferred when set."""
     from ..streaming.stateful import distinct_type_counts
 
-    if distinct_type_counts is None:  # pragma: no cover - pre-4.0 Spark
-        raise RuntimeError("transformWithStateInPandas unavailable on this Spark")
-
     # the streaming file source wants a DIRECTORY; events.parquet is a
     # single file, so stream the fixture dir with a glob filter
     stream = (

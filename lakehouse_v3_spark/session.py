@@ -18,8 +18,8 @@ task on a reused worker). Spark binds its ``.<uuid>.sock`` files in
 ``java.io.tmpdir``, and a process that exits without ``spark.stop()``
 leaves them there. So each new context on a ``local`` master gets a
 private dir from ``tempfile.mkdtemp`` (under ``tempfile.gettempdir()``,
-removed at interpreter exit). A socket path must fit ``sun_path``
-(107 bytes): when the temp dir is too deep for that the private dir
+removed at interpreter exit). Spark refuses a socket dir longer than
+61 characters: when the temp dir is too deep for that the private dir
 goes under ``/tmp``, and when even that does not fit the flag stays
 off (TCP). ``spark://`` masters keep Spark's default dir, the
 executor's own tmpdir. ``extra_conf`` can turn the flag off.
@@ -44,7 +44,6 @@ import shutil
 import sys
 import tempfile
 import threading
-import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -53,10 +52,10 @@ from pyspark.sql import SparkSession
 
 _CONF_WINDOW_LOCK = threading.Lock()
 
-# A socket path holds at most 107 bytes (sun_path is 108 with its NUL);
-# Spark and PySpark name each socket "<dir>/.<uuid4>.sock".
-SUN_PATH_MAX = 107
-_SOCK_NAME_BYTES = len(f"/.{uuid.UUID(int=0)}.sock")
+# Spark's check on spark.python.unix.domain.socket.dir: at most 61
+# characters. A socket, "<dir>/.<uuid4>.sock", then takes at most 104
+# bytes, within sun_path's 107.
+SOCKET_DIR_MAX = 61
 
 
 def default_parallelism() -> int:
@@ -101,14 +100,14 @@ def conf_window(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
 def private_socket_dir(bases: tuple[str, ...] | None = None) -> str | None:
     """A new, empty dir for one context's Unix domain sockets, removed at
     interpreter exit: under the first of ``bases`` (default: the temp
-    dir, then ``/tmp``) where a socket path in it fits ``sun_path``.
+    dir, then ``/tmp``) where its path fits SOCKET_DIR_MAX.
     ``None`` when none does."""
     for base in bases or (tempfile.gettempdir(), "/tmp"):
         try:
             d = tempfile.mkdtemp(prefix="spark-uds-", dir=base)
         except OSError:
             continue
-        if len(os.fsencode(d)) + _SOCK_NAME_BYTES <= SUN_PATH_MAX:
+        if len(d) <= SOCKET_DIR_MAX:
             atexit.register(shutil.rmtree, d, ignore_errors=True)
             return d
         os.rmdir(d)

@@ -1,11 +1,16 @@
-"""Custom stateful streaming operators via applyInPandasWithState
-(SURVEY.md §2.9 'not present' row — the extension point for operators
-Spark's built-in windowed aggs can't express).
+"""Custom stateful streaming operators (SURVEY.md §2.9 'not present'
+row — the extension point for operators Spark's built-in windowed aggs
+can't express).
 
-running_user_totals: per-key running event count + value sum that
-persists across micro-batches (GroupState), emitting one updated row
-per key per batch. The same callable works under availableNow batch
-draining and continuous triggers.
+running_user_totals_exact: per-key running event count + exact-decimal
+value sum that persists across micro-batches (applyInPandasWithState
+GroupState), emitting one updated row per key per batch. The same
+callable works under availableNow batch draining and continuous
+triggers.
+
+distinct_type_counts: per-key distinct event-type counts held in
+MapState (transformWithStateInPandas, Spark 4.0+ — the catalog already
+requires 4.0 through ``pyspark.sql.datasource``).
 """
 
 from __future__ import annotations
@@ -15,40 +20,6 @@ from typing import Any, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
-STATE_SCHEMA = "n long, total double"
-
-
-def _update_totals(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 6)]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Stateful per-user running totals over a stream:
-    groupBy(user_id).applyInPandasWithState with update-mode output."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            _update_totals,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
 
 EXACT_OUTPUT_SCHEMA = "user_id long, n_events long, total_value double"
 EXACT_STATE_SCHEMA = "n long, total string"
@@ -119,72 +90,69 @@ def running_user_totals_exact(events: DataFrame) -> DataFrame:
 # transformWithStateInPandas (Spark 4 arbitrary stateful processing)
 # ---------------------------------------------------------------------------
 
-try:  # the processor base class landed in Spark 4.0
-    # The TWS Python↔JVM state-server protocol is protobuf; this
-    # container has no google.protobuf wheel, so fall back to the
-    # vendored mini wire-format runtime (lakehouse_v3_spark/vendor).
-    # Running at module import means every process that unpickles the
-    # processor class (executor workers, the TWS driver worker) gets
-    # the path fix before pyspark's lazy StateMessage_pb2 import.
-    from ..vendor import ensure_protobuf
+# The TWS Python↔JVM state-server protocol is protobuf; without a
+# google.protobuf wheel, fall back to the vendored mini wire-format
+# runtime (lakehouse_v3_spark/vendor). Running at module import means
+# every process that unpickles the processor class (executor workers,
+# the TWS driver worker) gets the path fix before pyspark's lazy
+# StateMessage_pb2 import.
+from ..vendor import ensure_protobuf  # noqa: E402
 
-    ensure_protobuf()
+ensure_protobuf()
 
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
+from pyspark.sql.streaming.stateful_processor import (  # noqa: E402
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
-    class DistinctTypeCounts(StatefulProcessor):
-        """Per-user distinct-event-type counts held in MapState across
-        micro-batches — the Spark-4 ``transformWithStateInPandas``
-        successor to applyInPandasWithState. MapState gives point
-        lookups/updates per (user, event_type) without deserializing the
-        whole per-key state each batch, which is what keeps a 100 TB
-        keyspace's state store incremental (RocksDB-backed on a real
-        cluster)."""
 
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._counts = handle.getMapState(
-                "type_counts", "event_type string", "n long"
-            )
+class DistinctTypeCounts(StatefulProcessor):
+    """Per-user distinct-event-type counts held in MapState across
+    micro-batches — the Spark-4 ``transformWithStateInPandas``
+    successor to applyInPandasWithState. MapState gives point
+    lookups/updates per (user, event_type) without deserializing the
+    whole per-key state each batch, which is what keeps a 100 TB
+    keyspace's state store incremental (RocksDB-backed on a real
+    cluster)."""
 
-        def handleInputRows(self, key, rows, timerValues):
-            # ONE streamed iterator() read of the key's map, then point
-            # updateValue writes for the touched types only (r14): the
-            # previous shape paid containsKey + getValue per type PLUS
-            # full keys() and values() iterations — ~35+ state-server
-            # RPC round trips per user per batch, which dominated the
-            # drain (the emission needs n_types/n_events over ALL types
-            # anyway, so one full read is the floor). State content and
-            # emitted values are identical.
-            counts = {k[0]: v[0] for k, v in self._counts.iterator()}
-            for pdf in rows:
-                for etype, c in pdf["event_type"].value_counts().items():
-                    nxt = counts.get(etype, 0) + int(c)
-                    counts[etype] = nxt
-                    self._counts.updateValue((etype,), (nxt,))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_types": [len(counts)],
-                    "n_events": [sum(counts.values())],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    def distinct_type_counts(events: DataFrame) -> DataFrame:
-        """Per-user distinct event-type running counts over a stream via
-        transformWithStateInPandas (update mode, processing-time)."""
-        return events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=DistinctTypeCounts(),
-            outputStructType="user_id long, n_types long, n_events long",
-            outputMode="Update",
-            timeMode="None",
+    def init(self, handle: StatefulProcessorHandle) -> None:
+        self._counts = handle.getMapState(
+            "type_counts", "event_type string", "n long"
         )
 
-except ImportError:  # pragma: no cover - older Spark
-    DistinctTypeCounts = None  # type: ignore[assignment]
-    distinct_type_counts = None  # type: ignore[assignment]
+    def handleInputRows(self, key, rows, timerValues):
+        # ONE streamed iterator() read of the key's map, then point
+        # updateValue writes for the touched types only (r14): the
+        # previous shape paid containsKey + getValue per type PLUS
+        # full keys() and values() iterations — ~35+ state-server
+        # RPC round trips per user per batch, which dominated the
+        # drain (the emission needs n_types/n_events over ALL types
+        # anyway, so one full read is the floor). State content and
+        # emitted values are identical.
+        counts = {k[0]: v[0] for k, v in self._counts.iterator()}
+        for pdf in rows:
+            for etype, c in pdf["event_type"].value_counts().items():
+                nxt = counts.get(etype, 0) + int(c)
+                counts[etype] = nxt
+                self._counts.updateValue((etype,), (nxt,))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_types": [len(counts)],
+                "n_events": [sum(counts.values())],
+            }
+        )
+
+    def close(self) -> None:
+        pass
+
+
+def distinct_type_counts(events: DataFrame) -> DataFrame:
+    """Per-user distinct event-type running counts over a stream via
+    transformWithStateInPandas (update mode, processing-time)."""
+    return events.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=DistinctTypeCounts(),
+        outputStructType="user_id long, n_types long, n_events long",
+        outputMode="Update",
+        timeMode="None",
+    )

@@ -1010,14 +1010,15 @@ class TableManager:
     # per-file min/max in the log, and let point/range predicates on
     # ANY clustered column touch a small fraction of files.
 
-    def _zvalue(self, df: DataFrame, cols: list[str], bits: int = 8):
-        """Morton z-value column: each col is rank-binned into 2^bits
+    def _zvalue(self, df: DataFrame, cols: list[str]):
+        """Morton z-value column: each col is rank-binned into 2^8
         quantile buckets (edges via distributed approxQuantile — no
         global sort, no single-partition window), then the bin bits of
         all cols are interleaved. Quantile binning (not min/max
         scaling) keeps buckets balanced under skew; NULL sorts to bin
         0. Everything after the edge computation is JVM-side
         expressions inside codegen."""
+        bits = 8
         n_bins = 1 << bits
         probs = [i / n_bins for i in range(1, n_bins)]
         # ONE distributed pass computes every column's edge set
@@ -1053,7 +1054,6 @@ class TableManager:
         table: str,
         cols: list[str],
         target_file_rows: int = 1_000_000,
-        bits: int = 8,
     ) -> int:
         """OPTIMIZE ZORDER BY analogue: rewrite ``table`` range-
         partitioned + sorted by the Morton z-value of ``cols`` into
@@ -1061,7 +1061,7 @@ class TableManager:
         min/max like any other. Returns the file count.
 
         Scale shape: one approxQuantile pass per clustered column
-        (distributed, driver holds 2^bits edges), one z-keyed range
+        (distributed, driver holds 2^8 edges), one z-keyed range
         shuffle, per-partition sort — no global window, no driver data
         path. 100 TB tables re-cluster incrementally per partition in
         production; the semantics per file are identical."""
@@ -1069,7 +1069,7 @@ class TableManager:
 
         def zorder(df: DataFrame, n: int) -> DataFrame:
             return (
-                df.withColumn("_zv", self._zvalue(df, cols, bits=bits))
+                df.withColumn("_zv", self._zvalue(df, cols))
                 .repartitionByRange(n, F.col("_zv"))
                 .sortWithinPartitions("_zv")
                 .drop("_zv")

@@ -11,6 +11,7 @@ import os
 from pyspark.sql import functions as F
 
 from lakehouse_v3_spark.pipelines import curation as C
+from lakehouse_v3_spark.pipelines import maintenance as M
 from lakehouse_v3_spark.tables import TableManager
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -103,6 +104,22 @@ def test_decontaminate_eval_overlap(spark):
     assert kept == {2}  # 29 removed as eval, 1 dropped as contaminated
 
 
+def test_run_funnel_packed_is_lazy(spark, monkeypatch):
+    """r11 ADVICE #2: building the funnel and collecting its gold stage
+    must NOT run the pack stage (pack_corpus runs a driver partials job
+    + localCheckpoint at build time); callers pack ``["leakage"]``."""
+    docs = spark.createDataFrame(
+        [(i, "en", "alpha beta gamma delta epsilon zeta eta theta iota kappa")
+         for i in range(1, 6)],
+        "doc_id LONG, lang STRING, text STRING",
+    )
+    calls = []
+    real = C.pack_corpus
+    monkeypatch.setattr(C, "pack_corpus", lambda *a, **k: calls.append(1) or real(*a, **k))
+    C.run_funnel(docs)["gold"].collect()
+    assert not calls
+
+
 # ---------------------------------------------------------------------------
 # the orchestrated DAG: run → skip-rerun → incremental, DAG ≡ run_funnel
 # ---------------------------------------------------------------------------
@@ -118,7 +135,7 @@ def _funnel_table(tm) -> dict[str, int]:
 
 
 def _expected_counts(docs) -> dict[str, int]:
-    f = C.run_funnel(docs, materialize_pairs=True)
+    f = C.run_funnel(docs)
     return {
         name: f[name].count()
         for name in (
@@ -165,9 +182,7 @@ def test_curation_dag_end_to_end_skip_and_incremental(spark, tmp_path_factory):
     }
     gold_fn = {
         (r.lang, r.split): (r.n_docs, r.n_tokens)
-        for r in C.run_funnel(
-            tm.read("curation.bronze_docs"), materialize_pairs=True
-        )["gold"].collect()
+        for r in C.run_funnel(tm.read("curation.bronze_docs"))["gold"].collect()
     }
     assert gold_tbl == gold_fn
     # every gold_corpus survivor carries a split, and no train survivor
@@ -187,9 +202,9 @@ def test_curation_dag_end_to_end_skip_and_incremental(spark, tmp_path_factory):
     }
     packed_fn = {
         r.doc_id: (r.split, r.lang, r.n_tok, r.bin)
-        for r in C.run_funnel(
-            tm.read("curation.bronze_docs"), materialize_pairs=True
-        )["packed"].collect()
+        for r in C.pack_corpus(
+            C.run_funnel(tm.read("curation.bronze_docs"))["leakage"]
+        ).collect()
     }
     assert packed_tbl == packed_fn
     import collections
@@ -249,7 +264,7 @@ def _funnel_tables_equal_full(spark, tm):
     """Assert every silver/gold table equals the pure run_funnel
     composition over the full bronze — the incremental ≡ full-recompute
     property (frame-level, not just counts)."""
-    f = C.run_funnel(tm.read("curation.bronze_docs"), materialize_pairs=True)
+    f = C.run_funnel(tm.read("curation.bronze_docs"))
     for table, stage in (
         ("curation.silver_quality", "quality"),
         ("curation.silver_exact", "exact_dedup"),
@@ -280,7 +295,7 @@ def _funnel_tables_equal_full(spark, tm):
         for r in tm.read("curation.gold_packed").collect()
     } == {
         r.doc_id: (r.split, r.lang, r.n_tok, r.bin)
-        for r in f["packed"].collect()
+        for r in C.pack_corpus(f["leakage"]).collect()
     }
     assert {
         (r.lang, r.split): (r.n_docs, r.n_tokens)
@@ -436,9 +451,7 @@ def test_embedding_stages_dag_equals_funnel(spark, tmp_path_factory):
             assert sem["batch_docs"] < tm.read("curation.silver_neardup").count()
     _assert_overwrites_vacuumed(tm)
 
-    f = C.run_funnel(
-        tm.read("curation.bronze_docs"), materialize_pairs=True, embeddings=emb
-    )
+    f = C.run_funnel(tm.read("curation.bronze_docs"), embeddings=emb)
     # maintained emb pair set == full cluster-blocked GEMM pair job:
     # MEMBERSHIP exactly (ids), scores to 1e-9 (rectangle vs full-matrix
     # BLAS may differ in low bits; downstream consumes membership only)
@@ -471,7 +484,7 @@ def test_embedding_stages_dag_equals_funnel(spark, tmp_path_factory):
         for r in tm.read("curation.gold_packed").collect()
     } == {
         r.doc_id: (r.split, r.lang, r.n_tok, r.bin)
-        for r in f["packed"].collect()
+        for r in C.pack_corpus(f["leakage"]).collect()
     }
 
 # ---------------------------------------------------------------------------
@@ -584,7 +597,7 @@ def test_redelivery_rebuild_dedupes_bronze(spark, tmp_path_factory):
 # ---------------------------------------------------------------------------
 
 def test_maintain_bounds_state_table_file_counts(spark, monkeypatch, tmp_path_factory):
-    monkeypatch.setattr(C, "MAINTAIN_FILE_BOUND", 10)
+    monkeypatch.setattr(M, "MAINTAIN_FILE_BOUND", 10)
     landing = str(tmp_path_factory.mktemp("cur_maint_land"))
     tm = TableManager(
         spark, str(tmp_path_factory.mktemp("cur_maint_wh")), backend="parquet"
@@ -719,7 +732,6 @@ def test_cluster_model_retrains_when_feature_table_outgrows(spark, tmp_path_fact
     # the refreshed run == full recompute with the grown feature table
     f = C.run_funnel(
         tm.read("curation.bronze_docs").dropDuplicates(["doc_id"]),
-        materialize_pairs=True,
         embeddings=emb,
     )
     assert _ids(tm, "curation.silver_clean") == {

@@ -117,3 +117,45 @@ def test_each_cross_engine_rule_has_one_home():
     # each home really holds its rule
     for lit, homes in _RULE_HOMES.items():
         assert all(lit in sources[h] for h in homes if h)
+
+
+# mad_robust_outliers excludes NULL values identically on BOTH engines
+# (r11 ADVICE low — the oracle used to rank NULLs into n while the Spark
+# path dropped them in the histogram refinement)
+
+
+def test_mad_null_values_excluded_on_both_engines(spark, tmp_path):
+    """Events with NULL values: the Spark query and the DuckDB oracle
+    must agree (the fixture is NULL-free, so only this synthetic table
+    exercises the alignment)."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    rows = [
+        (1, "a", 1.0), (2, "a", 2.0), (3, "a", None), (4, "a", 100.0),
+        (5, "b", 5.0), (6, "b", None), (7, "b", 7.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id LONG, event_type STRING, value DOUBLE"
+    ).withColumn("ts", F.timestamp_micros(F.col("event_id") * 1_000_000))
+    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+
+    qd = load_all()["mad_robust_outliers"]
+    got = {
+        r["event_type"]: (r["n"], r["med"], r["mad"], r["n_outliers"])
+        for r in qd.fn(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"'{tmp_path}/events.parquet/*.parquet'"
+        )
+        want = {
+            r[0]: (r[1], r[2], r[3], r[4])
+            for r in con.execute(qd.oracle).fetchall()
+        }
+    finally:
+        con.close()
+    assert got == want
+    assert got["a"][0] == 3  # NULL row excluded from n on both sides

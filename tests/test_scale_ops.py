@@ -6,11 +6,12 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
 from pyspark.sql import functions as F
 
 
 def test_stateful_running_totals_across_batches(spark, tmp_path):
-    from lakehouse_v3_spark.streaming.stateful import running_user_totals
+    from lakehouse_v3_spark.streaming.stateful import running_user_totals_exact
 
     src = tmp_path / "stream_src"
     src.mkdir()
@@ -26,7 +27,7 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
         # foreachBatch sink: supports checkpoint recovery (memory doesn't)
         stream = spark.readStream.schema("user_id long, value double").parquet(str(src))
         q = (
-            running_user_totals(stream)
+            running_user_totals_exact(stream)
             .writeStream.outputMode("update")
             .foreachBatch(lambda df, _id: collected.extend(df.collect()))
             .option("checkpointLocation", ckpt)
@@ -47,17 +48,25 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
     assert r2[1] == (3, 17.0)  # accumulated across batches
     assert r2[3] == (1, 7.0)
 
+    # a NULL and a NaN value: n_events counts both rows (COUNT(*)),
+    # total_value skips both (SQL SUM skips NULL; a NaN would poison
+    # the running decimal for good)
+    collected.clear()
+    b3 = spark.createDataFrame(
+        [(1, None), (1, float("nan"))], "user_id long, value double"
+    )
+    b3.coalesce(1).write.mode("append").parquet(str(src))
+    run_once()
+    r3 = {r.user_id: (r.n_events, r.total_value) for r in collected}
+    assert r3 == {1: (5, 17.0)}
+
 
 def test_transform_with_state_distinct_types(spark, tmp_path):
     """Spark-4 transformWithStateInPandas: MapState-backed per-user
     distinct-type counts accumulate across micro-batches through the
     checkpoint (the modern successor to applyInPandasWithState)."""
-    import pytest
-
     from lakehouse_v3_spark.streaming.stateful import distinct_type_counts
 
-    if distinct_type_counts is None:
-        pytest.skip("transformWithStateInPandas unavailable on this Spark")
     # the TWS state-server protocol needs google.protobuf on the Python
     # workers; this container has no wheel, so the vendored mini
     # wire-format runtime (lakehouse_v3_spark/vendor) must satisfy the
@@ -411,3 +420,33 @@ def test_ngram_jaccard_refuses_without_opt_in(spark):
         ngram_jaccard_pairs(sets, "doc_id")
     out = ngram_jaccard_pairs(sets, "doc_id", allow_quadratic=True).collect()
     assert [(r.id_a, r.id_b, r.jaccard) for r in out] == [(1, 2, 0.5)]
+
+
+# ---------------------------------------------------------------------------
+# with_grouped_cumsum refuses NULL group keys loudly (r11 verdict item
+# #3 — the equi-join on the broadcast offsets would silently drop those
+# rows otherwise)
+# ---------------------------------------------------------------------------
+
+
+def test_grouped_cumsum_null_group_key_raises(spark):
+    from lakehouse_v3_spark.ids import with_grouped_cumsum
+
+    df = spark.createDataFrame(
+        [("a", 1, 10), (None, 2, 20), ("a", 3, 30)], "g STRING, o INT, v INT"
+    )
+    with pytest.raises(ValueError, match="NULL group key"):
+        with_grouped_cumsum(df, ["g"], ["o"], "v")
+
+
+def test_grouped_cumsum_non_null_groups_still_work(spark):
+    from lakehouse_v3_spark.ids import with_grouped_cumsum
+
+    df = spark.createDataFrame(
+        [("a", 1, 10), ("b", 2, 20), ("a", 3, 30)], "g STRING, o INT, v INT"
+    )
+    rows = {
+        (r["g"], r["o"]): r["cum"]
+        for r in with_grouped_cumsum(df, ["g"], ["o"], "v").collect()
+    }
+    assert rows == {("a", 1): 10, ("a", 3): 40, ("b", 2): 20}

@@ -93,32 +93,34 @@ def test_socket_dir_removed_at_exit_without_stop(tmp_path_factory):
 
 
 def test_private_socket_dir_fits_sun_path(tmp_path_factory, monkeypatch):
-    """The socket dir goes under the first base where a socket path fits
-    107 bytes; a base too deep falls back to /tmp."""
+    """The socket dir goes under the first base where its path fits
+    Spark's 61-character limit (which also keeps every socket path
+    within sun_path's 107 bytes); a base too deep falls back to /tmp."""
     import tempfile
     import uuid
 
-    from lakehouse_v3_spark.session import SUN_PATH_MAX, private_socket_dir
+    from lakehouse_v3_spark.session import SOCKET_DIR_MAX, private_socket_dir
 
     def sock_path(d: str) -> str:
         return os.path.join(d, f".{uuid.uuid4()}.sock")
 
-    # dir = base + "/spark-uds-" + 8 random chars; socket = dir + 43
-    fits = SUN_PATH_MAX - len("/spark-uds-") - 8 - len(sock_path("")) - 1
+    # dir = base + "/spark-uds-" + 8 random chars
+    fits = SOCKET_DIR_MAX - len("/spark-uds-") - 8
     root = str(tmp_path_factory.mktemp("s"))
-    if len(os.fsencode(root)) + 1 >= fits:
+    if len(root) + 1 >= fits:
         pytest.skip(f"pytest's temp dir {root} is deeper than the limit")
 
     def base_of_length(n: int) -> str:
-        # "<root>/<x...>" exactly n bytes long
-        d = os.path.join(root, "x" * (n - len(os.fsencode(root)) - 1))
+        # "<root>/<x...>" exactly n characters long
+        d = os.path.join(root, "x" * (n - len(root) - 1))
         os.makedirs(d, exist_ok=True)
-        assert len(os.fsencode(d)) == n
+        assert len(d) == n
         return d
 
     chosen = private_socket_dir((base_of_length(fits),))
     assert chosen is not None
-    assert len(os.fsencode(sock_path(chosen))) == SUN_PATH_MAX
+    assert len(chosen) == SOCKET_DIR_MAX
+    assert len(os.fsencode(sock_path(chosen))) <= 107
     os.rmdir(chosen)
     too_deep = base_of_length(fits + 1)
     assert private_socket_dir((too_deep,)) is None
@@ -128,7 +130,7 @@ def test_private_socket_dir_fits_sun_path(tmp_path_factory, monkeypatch):
     chosen = private_socket_dir()
     try:
         assert os.path.dirname(chosen) == "/tmp"
-        assert len(os.fsencode(sock_path(chosen))) <= SUN_PATH_MAX
+        assert len(chosen) <= SOCKET_DIR_MAX
     finally:
         os.rmdir(chosen)
 

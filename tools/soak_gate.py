@@ -155,11 +155,7 @@ def main() -> None:
         creep = late / early if early else 1.0
         flat_ok = creep <= args.creep_factor
 
-        f = C.run_funnel(
-            tm.read("curation.bronze_docs"),
-            materialize_pairs=True,
-            embeddings=emb,
-        )
+        f = C.run_funnel(tm.read("curation.bronze_docs"), embeddings=emb)
         checks = [
             ("curation.silver_quality", f["quality"], ["doc_id"]),
             ("curation.silver_exact", f["exact_dedup"], ["doc_id"]),
@@ -168,7 +164,7 @@ def main() -> None:
             ("curation.silver_clean", f["decontaminate"], ["doc_id"]),
             ("curation.gold_split", f["split"], ["doc_id", "split"]),
             ("curation.gold_corpus", f["leakage"], ["doc_id", "split"]),
-            ("curation.gold_packed", f["packed"], None),
+            ("curation.gold_packed", C.pack_corpus(f["leakage"]), None),
             ("curation.gold_summary", f["gold"], None),
         ]
         if args.embed:
